@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -140,7 +138,7 @@ object Bench {
   }
 
   /** 1-minute load average from /proc/loadavg; -1 if unreadable. */
-  private def load1(): Double =
+  private[graft] def load1(): Double =
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.trim.split("\\s+")(0).toDouble finally src.close()
@@ -182,41 +180,17 @@ object Bench {
     // env-provided path must not break the contract line the driver
     // parses (the defect class Verify.jsonEscape exists for)
     val sfJson = Verify.jsonEscape(sfDir)
-    // experiment knobs (default off; the driver run never sets them):
-    //  - SPARK_GRAFT_PERIODIC_GC=30s probes the "driver-heap accretion
-    //    by slot ~140 inflates q83/q137" hypothesis
-    //  - SPARK_GRAFT_HOIST=q83_...,q137_... runs the named queries in
-    //    slots 1..n instead of alphabetical position, probing whether
-    //    their in-bench inflation is slot-dependent
-    val extraConf = sys.env.get("SPARK_GRAFT_PERIODIC_GC")
-      .map(v => Map("spark.cleaner.periodicGC.interval" -> v))
-      .getOrElse(Map.empty[String, String])
-    val spark = GraftSession.local(GraftSession.envCpus(), extraConf = extraConf)
+    val spark = GraftSession.local(GraftSession.envCpus())
     spark.sparkContext.setLogLevel("ERROR")
-    StreamCensus.maybeInstall(spark) // SPARK_GRAFT_STREAM_CENSUS=1 (stderr)
+    val qs = SparkEntry.queries.toSeq.sortBy(_._1)
 
-    val hoist = sys.env.get("SPARK_GRAFT_HOIST")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-    val alpha = SparkEntry.queries.toSeq.sortBy(_._1)
-    val qs = alpha.filter(q => hoist.contains(q._1)) ++
-      alpha.filterNot(q => hoist.contains(q._1))
-
-    // (seconds, bytes left in the storage pool by the query's persists);
-    // -1 sec marks a failed pass
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long) = {
-      spark.catalog.clearCache() // identical (empty) storage state per run
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return (-1.0, 0L) }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val cached = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
-      (sec, cached)
-    }
+    // a failed pass has sec -1 (see Dev.Pass)
+    def timeOne(fn: Dev.Query): Dev.Pass = Dev.timedPass(spark, fn, sfDir)
 
     val swept = qs.map { case (name, fn) =>
       val load = load1() // host contention sample, taken as this query starts
       val base = Seq(timeOne(fn), timeOne(fn), timeOne(fn), timeOne(fn))
-      val ok0 = base.map(_._1).drop(1).filter(_ >= 0) // pass 0 is warmup
+      val ok0 = base.map(_.sec).drop(1).filter(_ >= 0) // pass 0 is warmup
       // variance retry (the r15 mid-run-burst defense the start gate
       // can't give): a transient co-tenant burst shows up as timed
       // passes that disagree; when max/min > 1.6x, two extra passes
@@ -225,8 +199,7 @@ object Bench {
         if (ok0.nonEmpty && ok0.max > ok0.min * 1.6) Seq(timeOne(fn), timeOne(fn))
         else Seq.empty
       val all = base ++ extra
-      val ok = all.map(_._1).drop(1).filter(_ >= 0)
-      (name, all, if (ok.isEmpty) -1.0 else ok.min, load)
+      (name, all, Dev.best(all.map(_.sec).drop(1)), load)
     }
 
     // RECONCILIATION (closes the r16 gap): the start gate + variance
@@ -274,8 +247,7 @@ object Bench {
         if (gateMax > 0 && load1() > gateMax) reconLoaded += 1
         val extra = Seq(timeOne(fnMap(name)), timeOne(fnMap(name)))
         val merged = all ++ extra
-        val ok = merged.map(_._1).drop(1).filter(_ >= 0)
-        (name, merged, if (ok.isEmpty) -1.0 else ok.min, load)
+        (name, merged, Dev.best(merged.map(_.sec).drop(1)), load)
       case m => m
     }
     val reconciled = suspects.size
@@ -294,10 +266,10 @@ object Bench {
     // full names) goes to BENCH_DETAIL.json on disk AND an earlier
     // stdout line, both outside the tail window by design.
     val passes = fmtMap(measured.map { case (n, all, _, _) =>
-      n -> all.map(p => if (p._1 < 0) -1L else math.round(p._1 * 1000)).mkString("[", ",", "]")
+      n -> all.map(p => if (p.sec < 0) -1L else math.round(p.sec * 1000)).mkString("[", ",", "]")
     })
     val cacheBytes = fmtMap(measured.collect {
-      case (n, all, _, _) if all.map(_._2).max > 0L => n -> all.map(_._2).max.toString
+      case (n, all, _, _) if all.map(_.cachedBytes).max > 0L => n -> all.map(_.cachedBytes).max.toString
     })
     def s2(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))

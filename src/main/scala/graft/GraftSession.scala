@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place for the engine's recommended session configuration — the
-  * settings every entry point (Verify/Bench/Explain, and a production
+  * settings every entry point (Verify/Bench/Dev, and a production
   * submit) should share, with the 100 TB reasoning attached to each
   * knob instead of scattered per-main. `local[cpus]` here is the test
   * harness; on a cluster the same `configure` applies to the builder
@@ -42,8 +42,8 @@ object GraftSession {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
 
   /** Local harness session: `local[cpus]` with shuffle partitions = cpus.
-    * `extraConf` lets a harness layer experiment knobs (e.g. Bench's
-    * periodic-GC probe) on top of the standard config.
+    * `extraConf` lets a harness layer extra settings on top of the
+    * standard config.
     */
   def local(cpus: Int, ui: Boolean = false,
             extraConf: Map[String, String] = Map.empty): SparkSession = {

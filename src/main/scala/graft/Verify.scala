@@ -7,8 +7,6 @@ object Verify {
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's correctness.
-    * Shared with [[VerifyOne]] so the single-query dev loop validates
-    * with EXACTLY the escaping the real run uses.
     */
   private[graft] def jsonEscape(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""

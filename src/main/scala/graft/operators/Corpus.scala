@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -275,34 +275,42 @@ object Corpus {
     * still fires for DERIVED bounded graphs (q123's record-linkage
     * match graph scales with the dirty BATCH, not the corpus) and
     * correctly yields to the distributed loop for corpus-scale ones.
-    * SPARK_GRAFT_GRAPH_LOCAL_MAX overrides; 0 disables every local
-    * path (the A/B and scale-test knob).
+    * Each gated operator takes a `localMax` (0 disables the local
+    * path; specs pass it explicitly).
     */
-  private[graft] val GraphLocalMaxRows: Long =
-    sys.env.get("SPARK_GRAFT_GRAPH_LOCAL_MAX").flatMap(_.toLongOption)
-      .getOrElse(4L << 20)
+  private[graft] val GraphLocalMaxRows: Long = 4L << 20
 
-  /** Collect a 2-long-column frame if it fits `maxRows`, else None —
-    * the limit-guarded take behind every local graph solve.
+  /** Wording of a bounded probe's route line:
+    * `[graft] <name> probe: <n> <unit> <= <max> — <local>`, or
+    * `... > <max> <unit> — <distributed>` over budget.
     */
-  private[graft] def takeBounded(
-      df: DataFrame, maxRows: Long): Option[Array[(Long, Long)]] = {
+  private[graft] final case class ProbeLabel(
+      name: String, unit: String, local: String, distributed: String)
+
+  private val GraphProbe = ProbeLabel("graph-local", "rows", "local solve", "distributed path")
+
+  /** Collect `df` as `T` if it fits `maxRows`, else None — the
+    * limit-guarded take behind every driver-local solve: an over-budget
+    * frame pays one truncated scan, never a full collect. The route
+    * line (stderr, the bloom-budget discipline) puts the
+    * local-vs-distributed evidence in the run's own log.
+    */
+  private[graft] def takeBounded[T: Encoder](
+      df: DataFrame, maxRows: Long, label: ProbeLabel): Option[Array[T]] = {
     if (maxRows <= 0 || maxRows >= Int.MaxValue - 1) return None
-    val s = df.sparkSession
-    import s.implicits._
-    val rows = df.limit(maxRows.toInt + 1).as[(Long, Long)].collect()
-    // route line (stderr, the bloom-budget discipline): the scale
-    // canary's local-vs-distributed evidence reads off the run itself
-    if (rows.length > maxRows) {
-      System.err.println(
-        s"[graft] graph-local probe: > $maxRows rows — distributed path")
-      None
-    } else {
-      System.err.println(
-        s"[graft] graph-local probe: ${rows.length} rows <= $maxRows — local solve")
-      Some(rows)
-    }
+    val rows = df.limit(maxRows.toInt + 1).as[T].collect()
+    val fits = rows.length <= maxRows
+    System.err.println(s"[graft] ${label.name} probe: " +
+      (if (fits) s"${rows.length} ${label.unit} <= $maxRows — ${label.local}"
+       else s"> $maxRows ${label.unit} — ${label.distributed}"))
+    if (fits) Some(rows) else None
   }
+
+  /** [[takeBounded]] of a 2-long-column node or edge frame, the shape
+    * every local graph solve collects.
+    */
+  private[graft] def takeBounded(df: DataFrame, maxRows: Long): Option[Array[(Long, Long)]] =
+    takeBounded(df, maxRows, GraphProbe)(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
 
   /** Driver-local connected components: union-find with min-NODE-id
     * labels — exactly the fixpoint [[ccDistributed]]'s min-label

@@ -3,7 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.streaming.UpsertSink
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -761,33 +761,12 @@ object Curation {
     * BPE trainers run the merge loop single-node over exactly this
     * word-frequency dict (Sennrich's reference implementation
     * included), so the local path is the production algorithm, not a
-    * local-mode tune. SPARK_GRAFT_BPE_LOCAL_MAX overrides; 0 disables.
+    * local-mode tune. `localMax` = 0 disables the local loop.
     */
-  private[graft] val BpeLocalMaxWords: Long =
-    sys.env.get("SPARK_GRAFT_BPE_LOCAL_MAX").flatMap(_.toLongOption)
-      .getOrElse(1L << 20)
+  private[graft] val BpeLocalMaxWords: Long = 1L << 20
 
-  /** Collect the (seq, freq) dict if it fits `maxRows`, else None —
-    * the limit-guarded probe behind the local merge loop (the
-    * Corpus.takeBounded pattern for a string-keyed frame).
-    */
-  private def bpeDictBounded(
-      dict: DataFrame, maxRows: Long): Option[Array[(String, Long)]] = {
-    if (maxRows <= 0 || maxRows >= Int.MaxValue - 1) return None
-    val s = dict.sparkSession
-    import s.implicits._
-    val rows = dict.limit(maxRows.toInt + 1).as[(String, Long)].collect()
-    // route line (stderr, the Corpus.takeBounded discipline)
-    if (rows.length > maxRows) {
-      System.err.println(
-        s"[graft] bpe-local probe: > $maxRows words — distributed merge loop")
-      None
-    } else {
-      System.err.println(
-        s"[graft] bpe-local probe: ${rows.length} words <= $maxRows — local merge loop")
-      Some(rows)
-    }
-  }
+  private val BpeProbe =
+    Corpus.ProbeLabel("bpe-local", "words", "local merge loop", "distributed merge loop")
 
   /** Driver-local BPE merge loop — [[bpeMergeRowsDistributed]]'s
     * per-round dynamics over the collected dict: pair counts weight by
@@ -803,7 +782,8 @@ object Curation {
   private[graft] def bpeMergeRowsLocal(
       dict: DataFrame, merges: Int,
       maxRows: Long): Option[Seq[(Long, String, Long)]] =
-    bpeDictBounded(dict, maxRows).map { rows =>
+    Corpus.takeBounded(dict, maxRows, BpeProbe)(
+        Encoders.tuple(Encoders.STRING, Encoders.scalaLong)).map { rows =>
       var words = rows
       val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
       var r = 0
@@ -3060,7 +3040,7 @@ object Curation {
     require(batches.nonEmpty, "exactSubstrUpsertReplay needs at least one batch")
     val s = batches.head.sparkSession
     // phase labels (guide §1.5): every action below runs under a
-    // description naming its batch + phase so the UI/JobProfile can
+    // description naming its batch + phase so the UI/`Dev jobs` can
     // attribute the replay's many small jobs
     def phase[A](label: String)(body: => A): A = {
       s.sparkContext.setJobDescription(label)
@@ -3147,9 +3127,17 @@ object Curation {
             planted.withColumn("b", lit(v.toLong))
               .write.partitionBy("b").mode("append").parquet(rawDir))
         }
+        // a failed merge stays the exception thrown; an append that
+        // also failed rides along as suppressed instead of masking it
         try phase(s"q219 b$v: rewrite+sink merge")(
           UpsertSink.merge(s, sinkDir, up, "doc_id", "v"))
-        finally appendDone.join()
+        catch { case e: Throwable =>
+          try appendDone.join()
+          catch { case a: java.util.concurrent.CompletionException =>
+            e.addSuppressed(Option(a.getCause).getOrElse(a)) }
+          throw e
+        }
+        appendDone.join()
         release()
         // cache lifecycle: the fused join cache (or, at v=0, bState
         // itself) backs prevState for ONE more batch; everything else

@@ -199,8 +199,7 @@ object Similarity {
     * driver's q89 binding pins the default explicitly; this derivation
     * is for operators sizing a NEW corpus, and at the driver corpus's
     * scale it returns exactly the default (SemDedupSpec pins
-    * that). Route-share evidence at sf1/sf10 lives in NOTES_r20 §8
-    * (`runMain graft.SemDedupScale`).
+    * that). Route-share evidence at sf1/sf10 lives in NOTES_r20 §8.
     */
   def semDedupSignBitsFor(n: Long, dim: Int = 64): Int = {
     val target = SemDedupMaxBucket / 2

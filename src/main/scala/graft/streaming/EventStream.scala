@@ -148,12 +148,7 @@ object EventStream {
       // this harness serializes replays; if a caller ever overlaps
       // queries on this session, skip the sweep — stale providers and
       // stray maintenance ticks are the lesser evil vs mid-run unload.
-      // SPARK_GRAFT_KEEP_STATESTORE=1 is the A/B probe knob (never set
-      // by the driver run): it skips the sweep so a re-time prices the
-      // per-replay provider/maintenance cold-start the sweep bills to
-      // its owning query (the r16->r17 q147 adjudication).
-      if (s.streams.active.isEmpty &&
-          !sys.env.get("SPARK_GRAFT_KEEP_STATESTORE").contains("1"))
+      if (s.streams.active.isEmpty)
         org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     }
     if (stateHeavy && inputBytes > RocksDbReplayBytes)

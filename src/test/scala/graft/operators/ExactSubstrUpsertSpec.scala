@@ -132,4 +132,34 @@ class ExactSubstrUpsertSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(roll == oneShotRoll, "driver rollup diverged from one-shot rollup")
   }
+
+  test("a failed sink merge is the exception thrown; a raw append that " +
+    "also failed rides along in getSuppressed instead of masking it") {
+    val store = java.nio.file.Files.createTempDirectory("graft_upsert_fail").toFile
+    // regular files where both write targets expect directories, so the
+    // sink merge AND the concurrent raw append fail (unlike a chmod,
+    // this holds when the tests run as root)
+    Seq("raw", "sink").foreach { n =>
+      java.nio.file.Files.writeString(new java.io.File(store, n).toPath, "not a directory")
+    }
+    def fromSink(t: Throwable): Boolean =
+      t.getStackTrace.exists(_.getClassName.startsWith("graft.streaming.UpsertSink"))
+    try {
+      val e = intercept[Throwable](Curation.exactSubstrUpsertReplay(
+        Seq(Seq(("s", 1L, span("a", 2 * L))).toDF("source", "doc_id", "text")),
+        keepStore = Some(store)))
+      def under(t: Throwable, dir: String): Boolean =
+        String.valueOf(t.getMessage).contains(s"${store.getName}/$dir")
+      assert(fromSink(e) && under(e, "sink"), s"thrown exception is not the sink merge's: $e")
+      assert(e.getSuppressed.exists(a => under(a, "raw") && !fromSink(a)),
+        s"raw append failure not attached to $e: ${e.getSuppressed.toSeq}")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete(): Unit
+      }
+      rm(store)
+      spark.catalog.clearCache()
+    }
+  }
 }

@@ -41,6 +41,20 @@ final case class KSV[+K, +S, +V](key: K, sort: S, value: V) extends Emit[K, S, V
   */
 class ElementCountError(msg: String) extends RuntimeException(msg)
 
+/** Raised when a [[MapReduceBase.keyPreserving]] reducer emits a key other
+  * than the key of the group it was handed: the engine skips shuffle #2
+  * on the promise that it never does.
+  */
+class KeyPreservingError(msg: String) extends RuntimeException(msg)
+
+/** Engine-private shuffle box for a `(key, sort, value)` emission on the
+  * RDD path. A `(key, value)` emission ships its bare value, so only
+  * sorted emissions pay for a wrapper. The box is unpacked before any user
+  * code sees a group, and user code cannot build one, so a user value is
+  * never mistaken for it.
+  */
+private[mr] final case class Sorted(sort: Any, value: Any)
+
 /** Shared machinery for the two reducer shapes.
   *
   * Semantics ported from `/root/reference/tinymr.py` (`MapReduce.__call__`,
@@ -53,7 +67,16 @@ class ElementCountError(msg: String) extends RuntimeException(msg)
   *  - reduce (tinymr.py:207-215)                -> per-group function
   *  - shuffle #2 on the reducer's own emitted keys (tinymr.py:217-221)
   *    -> second `groupByKey`, elided when [[keyPreserving]] (the
-  *    word-count shape: reducer re-emits the key it received)
+  *    word-count shape: reducer re-emits the key it received); the
+  *    reducer's output is then sorted and finalized in the same pass that
+  *    delivers each group, with no regrouping at all
+  *
+  * What crosses a shuffle is kept minimal. On the RDD path a `(key,
+  * value)` emission ships its bare value and only a `(key, sort, value)`
+  * emission ships an engine-private [[Sorted]] box. The Dataset path has
+  * one grouping for every shuffle: `repartition` on the encoded key +
+  * `sortWithinPartitions` + a streaming fold over adjacent equal keys
+  * (see [[dsShuffle]]).
   *
   * Sort-key selection matrix (reference docs.rst:300-307, impl
   * tinymr.py:310-330): 2-tuple + `withValue` -> sort by value; 3-tuple
@@ -95,7 +118,9 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
     * word-count shape. The reference always pays its second partition pass
     * (tinymr.py:217-221); on a cluster that is a full extra shuffle, so
     * the elision is the single most important scale optimization in this
-    * core.
+    * core. The promise is checked: a reducer that emits any other key
+    * (compared with [[keyEq]], so array and NaN keys work) fails the task
+    * with [[KeyPreservingError]] instead of being silently mis-keyed.
     */
   def keyPreserving: Boolean = false
 
@@ -103,12 +128,12 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
     * round-robin key-cycling idiom (docs.rst:373-394). One knob sizing
     * both shuffles; override [[mapParallelism]] / [[reduceParallelism]]
     * to tune the phases independently. Honored on BOTH paths: the RDD
-    * path sizes its HashPartitioners directly; the Dataset path swaps
-    * `groupByKey`'s conf-sized exchange for an explicit
-    * `repartition(n, key)` + in-partition sort + adjacent-group fold
-    * (see [[dsPartitionAndSort]]). Left at 0 the Dataset exchanges stay
-    * `spark.sql.shuffle.partitions` + AQE-coalesced — the right default
-    * at scale; set the knobs only to pin a phase's width deliberately.
+    * path sizes its HashPartitioners directly; the Dataset path pins its
+    * one grouping's exchange with `repartition(n, key)` instead of
+    * `repartition(key)` (see [[dsShuffle]]). Left at 0 the Dataset
+    * exchanges stay `spark.sql.shuffle.partitions` + AQE-coalesced — the
+    * right default at scale; set the knobs only to pin a phase's width
+    * deliberately.
     */
   def numPartitions: Int = 0
 
@@ -150,10 +175,11 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
 
   /** Optional commutative-associative combiner. When defined (and no
     * map-phase sort is requested) the map output is pre-combined per key
-    * map-side and merged with `reduceByKey`, so NO per-key value list is
-    * ever materialized — the framework-level form of the reference's
-    * in-mapper-combining idiom (docs.rst:197-283), which it can only
-    * express as user code. The reducer then receives a single
+    * map-side and merged per key (`reduceByKey` on the RDD path, the
+    * bounded [[MapReduceBase.preCombine]] + one keyed exchange on the
+    * Dataset path), so NO per-key value list is ever materialized — the
+    * framework-level form of the reference's in-mapper-combining idiom
+    * (docs.rst:197-283), which it can only express as user code. The reducer then receives a single
     * pre-combined value. Requires KV-only emissions (enforced): sort
     * semantics are meaningless under combining.
     */
@@ -225,77 +251,100 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
     sorted.iterator.map(_._2).toList
   }
 
+  /** RDD shuffle record of one emission: the bare value for `(key,
+    * value)`, a [[Sorted]] box for `(key, sort, value)`.
+    */
+  protected def shipped(e: Emit[K, S, V]): (K, Any) = e match {
+    case KSV(k, s, v) => (k, Sorted(s, v))
+    case _ => (e.key, e.value)
+  }
+
   /** One shuffle + sort pass — reference `_partition_and_sort`
-    * (tinymr.py:278-345) as `groupByKey` + in-group sort. `partitions`
-    * sizes this shuffle (per-phase: [[mapParallelism]] or
-    * [[reduceParallelism]]); 0 = Spark default.
+    * (tinymr.py:278-345) as `groupByKey` + in-group sort over
+    * [[shipped]] records. `partitions` sizes this shuffle (per-phase:
+    * [[mapParallelism]] or [[reduceParallelism]]); 0 = Spark default.
+    * A group with no [[Sorted]] box and no value sort is already in
+    * arrival order and skips the unpacking.
     */
   protected def partitionAndSort(
-      rdd: RDD[(K, SV)], withValue: Boolean, reverse: Boolean, partitions: Int)(
-      implicit kt: ClassTag[K], vt: ClassTag[V]): RDD[(K, List[V])] = {
-    implicit val svTag: ClassTag[SV] = ClassTag(classOf[Tuple2[_, _]]).asInstanceOf[ClassTag[SV]]
+      rdd: RDD[(K, Any)], withValue: Boolean, reverse: Boolean, partitions: Int)(
+      implicit kt: ClassTag[K]): RDD[(K, List[V])] = {
     val grouped =
       if (partitions > 0) rdd.groupByKey(partitions) else rdd.groupByKey()
-    grouped.mapValues { it =>
-      val buf = mutable.ArrayBuffer.empty[SV]
-      buf ++= it
-      sortValues(buf, withValue, reverse)
+    grouped.mapValues { vs =>
+      if (!withValue && !vs.exists(_.isInstanceOf[Sorted])) vs.toList.asInstanceOf[List[V]]
+      else {
+        val buf = mutable.ArrayBuffer.empty[SV]
+        vs.foreach {
+          case Sorted(s, v) => buf += ((Some(s.asInstanceOf[S]), v.asInstanceOf[V]))
+          case v => buf += ((None, v.asInstanceOf[V]))
+        }
+        sortValues(buf, withValue, reverse)
+      }
     }
   }
 
-  /** Local (no-shuffle) grouping for the keyPreserving fast path: after
-    * shuffle #1 every key lives in exactly one partition and the reducer
-    * re-emits only its own key, so regrouping is partition-local.
+  /** `e`, checked against the [[keyPreserving]] promise that a reducer
+    * handed group `key` emits only `key`.
     */
-  protected def groupLocally(
-      rdd: RDD[(K, SV)], withValue: Boolean, reverse: Boolean)(
-      implicit kt: ClassTag[K], vt: ClassTag[V]): RDD[(K, List[V])] =
-    rdd.mapPartitions(
-      it => {
-        val m = mutable.LinkedHashMap.empty[K, mutable.ArrayBuffer[SV]]
-        it.foreach { case (k, sv) => m.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += sv }
-        m.iterator.map { case (k, buf) => (k, sortValues(buf, withValue, reverse)) }
-      },
-      preservesPartitioning = true)
+  protected def keptEmit(key: K, e: Emit[K, S, V]): Emit[K, S, V] =
+    if (keyEq(e.key, key)) e
+    else throw new KeyPreservingError(
+      s"keyPreserving reducer for key $key emitted key ${e.key}")
+
+  /** The final group of `key` under [[keyPreserving]]: the reducer's
+    * emissions for the group are the whole group, so they are checked,
+    * sorted per the reduce-side flags and delivered in the same pass,
+    * with no regrouping. A reducer that emits nothing drops the key.
+    */
+  protected def keptGroup(key: K, out: IterableOnce[Emit[K, S, V]]): Iterator[(K, List[V])] = {
+    val buf = mutable.ArrayBuffer.empty[SV]
+    out.iterator.foreach { e =>
+      keptEmit(key, e)
+      buf += ((e.sortOpt, e.value))
+    }
+    if (buf.isEmpty) Iterator.empty
+    else Iterator.single((key, sortValues(buf, sortReduceWithValue, sortReduceReverse)))
+  }
+
+  private def combinable(e: Emit[K, S, V]): (K, V) = e match {
+    case _: KSV[_, _, _] => throw new ElementCountError(
+      "combiner requires (key, value) emissions — (key, sort, value) has no combine semantics")
+    case _ => (e.key, e.value)
+  }
 
   protected def mapPhase(rdd: RDD[I], mapPar: Int = mapParallelism)(
       implicit kt: ClassTag[K], vt: ClassTag[V]): RDD[(K, List[V])] =
     combiner match {
       case Some(op) if !sortMapWithValue =>
         val mapped = rdd.mapPartitions(part => instrumented(part)(i =>
-          mapper(i).iterator.map { e =>
-            if (e.sortOpt.isDefined) throw new ElementCountError(
-              "combiner requires (key, value) emissions — (key, sort, value) has no combine semantics")
-            (e.key, e.value)
-          }))
+          mapper(i).iterator.map(combinable)))
         val combined =
           if (mapPar > 0) mapped.reduceByKey(op, mapPar)
           else mapped.reduceByKey(op)
         combined.mapValues(List(_))
       case _ =>
-        val mapped: RDD[(K, SV)] =
-          rdd.mapPartitions(part => instrumented(part)(i =>
-            mapper(i).iterator.map(e => (e.key, (e.sortOpt, e.value)))))
-        partitionAndSort(mapped, sortMapWithValue, sortMapReverse, mapPar)
+        partitionAndSort(
+          rdd.mapPartitions(part => instrumented(part)(i => mapper(i).iterator.map(shipped))),
+          sortMapWithValue, sortMapReverse, mapPar)
     }
 
   // ---- Dataset (Tungsten) execution path ----------------------------
   //
   // For K/S/V with Encoders (case classes, primitives, tuples) the same
-  // lifecycle runs as Dataset.flatMap -> groupByKey -> flatMapGroups:
-  // shuffle payloads are Tungsten-encoded rows instead of Java-serialized
+  // lifecycle runs as Dataset.mapPartitions -> dsShuffle: shuffle
+  // payloads are Tungsten-encoded rows instead of Java-serialized
   // objects, so spilling, AQE partition coalescing and shuffle
   // compression all apply. The RDD path remains for opaque value types
   // (the reference's values are arbitrary objects, tinymr.py:73-76).
 
-  /** Sized keyed shuffle for the Dataset path: an explicit
-    * `repartition(parallelism, _1)` + in-partition sort on the encoded
-    * key makes equal keys contiguous, and a streaming adjacent-group
-    * fold then applies `f` per key group — one exchange of exactly the
-    * requested width, holding one group (not one partition) in memory
-    * at a time. A plain pre-`repartition` before `groupByKey` would NOT
-    * do this: the lambda key defeats exchange reuse and the groupByKey
-    * would just shuffle again.
+  /** The one Dataset shuffle: `repartition(_1)` (or `repartition(n, _1)`
+    * when `parallelism` pins a width) + in-partition sort on the encoded
+    * key makes equal keys contiguous, and `f` consumes each partition as
+    * a stream of adjacent key groups — one group (not one partition) in
+    * memory at a time. The key is a column of the shuffled rows, so the
+    * exchange needs no `AppendColumns` decode and carries the key once;
+    * at width 0 AQE still coalesces the exchange.
     *
     * Key-equality caveat (same as the RDD path's HashPartitioner):
     * grouping relies on the key's Tungsten encoding being
@@ -305,35 +354,37 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
     * Adjacent-row equality uses [[keyEq]], not JVM `==`: array-typed
     * keys need element equality (reference `==` would split every
     * group into singletons) and NaN keys need compare-equality
-    * (NaN != NaN) to match the groupByKey path's encoded-key grouping.
+    * (NaN != NaN) to keep the sorted NaN rows in one group.
     */
-  private def dsSizedGroups[O](ds: Dataset[(K, SV)], parallelism: Int)(
-      f: (K, mutable.ArrayBuffer[SV]) => O)(implicit eo: Encoder[O]): Dataset[O] =
-    ds.repartition(parallelism, col("_1"))
-      .sortWithinPartitions(col("_1"))
-      .mapPartitions { it =>
-        new Iterator[O] {
-          private var pending: Option[(K, SV)] =
-            if (it.hasNext) Some(it.next()) else None
-          def hasNext: Boolean = pending.isDefined
-          def next(): O = {
-            val (k, first) = pending.get
-            val buf = mutable.ArrayBuffer(first)
-            pending = None
-            while (pending.isEmpty && it.hasNext) {
-              val p = it.next()
-              if (keyEq(p._1, k)) buf += p._2 else pending = Some(p)
-            }
-            f(k, buf)
+  private def dsShuffle[O: Encoder](ds: Dataset[(K, SV)], parallelism: Int)(
+      f: Iterator[(K, mutable.ArrayBuffer[SV])] => Iterator[O]): Dataset[O] = {
+    val parted =
+      if (parallelism > 0) ds.repartition(parallelism, col("_1"))
+      else ds.repartition(col("_1"))
+    parted.sortWithinPartitions(col("_1")).mapPartitions { it =>
+      f(new Iterator[(K, mutable.ArrayBuffer[SV])] {
+        private var pending: Option[(K, SV)] =
+          if (it.hasNext) Some(it.next()) else None
+        def hasNext: Boolean = pending.isDefined
+        def next(): (K, mutable.ArrayBuffer[SV]) = {
+          val (k, first) = pending.get
+          val buf = mutable.ArrayBuffer(first)
+          pending = None
+          while (pending.isEmpty && it.hasNext) {
+            val p = it.next()
+            if (keyEq(p._1, k)) buf += p._2 else pending = Some(p)
           }
+          (k, buf)
         }
-      }
+      })
+    }
+  }
 
-  /** Value equality matching the Tungsten encoded-key grouping that the
-    * groupByKey path performs: arrays compare element-wise (JVM `==` on
-    * arrays is reference equality) and floating NaN compares equal to
-    * itself (Spark's NormalizeFloatingNumbers canonicalizes NaN before
-    * hashing/sorting, so NaN rows arrive adjacent and must group).
+  /** Value equality matching the encoded-key grouping of the Dataset
+    * shuffle: arrays compare element-wise (JVM `==` on arrays is
+    * reference equality) and floating NaN compares equal to itself
+    * (Spark's sort orders NaN as one value, so NaN rows arrive adjacent
+    * and must group).
     * -0.0 vs 0.0 remains the one documented divergence on both paths.
     */
   private def keyEq(a: Any, b: Any): Boolean = (a, b) match {
@@ -347,75 +398,73 @@ abstract class MapReduceBase[I, K, S, V] extends Serializable {
     case _ => a == b
   }
 
-  /** One Dataset shuffle + in-group sort pass (Tungsten analogue of
-    * [[partitionAndSort]]). `parallelism` = 0 leaves the groupByKey
-    * exchange to `spark.sql.shuffle.partitions` + AQE coalescing;
-    * > 0 pins the exchange width via [[dsSizedGroups]].
+  /** Map phase + shuffle #1 on the Dataset path. `reduce` receives each
+    * map-side group — its values sorted per the map-side flags, or the
+    * one combined value — inside the shuffle's single `mapPartitions`,
+    * under the reduce phase's [[instrumented]] lifecycle, so the groups
+    * are never encoded as `(K, Seq[V])` rows. With a [[combiner]] each
+    * input partition is pre-combined per key first (see
+    * [[MapReduceBase.preCombine]]), so the exchange carries about one row
+    * per (partition, key).
     */
-  protected def dsPartitionAndSort(
-      ds: Dataset[(K, SV)], withValue: Boolean, reverse: Boolean,
-      parallelism: Int = 0)(
-      implicit ek: Encoder[K], eout: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] = {
-    if (parallelism > 0)
-      dsSizedGroups(ds, parallelism) { (k, buf) =>
-        (k, sortValues(buf, withValue, reverse): Seq[V])
-      }
-    else
-      ds.groupByKey(_._1)
-        .flatMapGroups { (k: K, it: Iterator[(K, SV)]) =>
-          val buf = mutable.ArrayBuffer.empty[SV]
-          it.foreach(p => buf += p._2)
-          Iterator.single((k, sortValues(buf, withValue, reverse): Seq[V]))
-        }
-  }
-
-  /** Partition-local regroup for the keyPreserving elision (Dataset). */
-  protected def dsGroupLocally(
-      ds: Dataset[(K, SV)], withValue: Boolean, reverse: Boolean)(
-      implicit eout: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] =
-    ds.mapPartitions { it =>
-      val m = mutable.LinkedHashMap.empty[K, mutable.ArrayBuffer[SV]]
-      it.foreach { case (k, sv) => m.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += sv }
-      m.iterator.map { case (k, buf) => (k, sortValues(buf, withValue, reverse): Seq[V]) }
-    }
-
-  protected def dsMapPhase(ds: Dataset[I], mapPar: Int = mapParallelism)(
-      implicit ek: Encoder[K], esv: Encoder[(K, SV)],
-      eout: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] =
+  protected def dsMapPhase[O: Encoder](ds: Dataset[I], mapPar: Int)(
+      reduce: (K, List[V]) => IterableOnce[O])(
+      implicit esv: Encoder[(K, SV)]): Dataset[O] =
     combiner match {
       case Some(op) if !sortMapWithValue =>
         val mapped = ds.mapPartitions { part =>
-          instrumented(part)(i => mapper(i).iterator.map { e =>
-            if (e.sortOpt.isDefined) throw new ElementCountError(
-              "combiner requires (key, value) emissions — (key, sort, value) has no combine semantics")
-            (e.key, (e.sortOpt, e.value))
-          })
+          MapReduceBase.preCombine(instrumented(part)(i => mapper(i).iterator.map(combinable)), op)
+            .map { case (k, v) => (k, (None: Option[S], v)) }
         }
-        if (mapPar > 0)
-          // sized variant keeps the map-side combine reduceGroups would
-          // have provided: fold each scan partition locally first, so
-          // the pinned-width exchange carries one row per (partition,
-          // key), then finish the fold per key group
-          dsSizedGroups(
-            mapped.mapPartitions { it =>
-              val m = mutable.LinkedHashMap.empty[K, V]
-              it.foreach { case (k, (_, v)) =>
-                m.update(k, m.get(k).fold(v)(op(_, v)))
-              }
-              m.iterator.map { case (k, v) => (k, (None: Option[S], v)) }
-            }, mapPar) { (k, buf) =>
-            (k, Seq(buf.view.map(_._2).reduce(op)): Seq[V])
-          }
-        else
-          mapped
-            .groupByKey(_._1)
-            .reduceGroups((a: (K, SV), b: (K, SV)) => (a._1, (None, op(a._2._2, b._2._2))))
-            .map { case (k, (_, (_, v))) => (k, Seq(v)) }
+        dsShuffle(mapped, mapPar)(groups => instrumented(groups) { case (k, buf) =>
+          reduce(k, List(buf.iterator.map(_._2).reduce(op))).iterator
+        })
       case _ =>
-        dsPartitionAndSort(
-          ds.mapPartitions(part => instrumented(part)(i =>
-            mapper(i).iterator.map(e => (e.key, (e.sortOpt, e.value))))),
-          sortMapWithValue, sortMapReverse, mapPar)
+        val mapped = ds.mapPartitions(part => instrumented(part)(i =>
+          mapper(i).iterator.map(e => (e.key, (e.sortOpt, e.value)))))
+        dsShuffle(mapped, mapPar)(groups => instrumented(groups) { case (k, buf) =>
+          reduce(k, sortValues(buf, sortMapWithValue, sortMapReverse)).iterator
+        })
+    }
+
+  /** Shuffle #2 on the Dataset path: regroups the reducer's emissions by
+    * their own keys and sorts each group per the reduce-side flags.
+    */
+  protected def dsReduceShuffle[O: Encoder](reduced: Dataset[(K, SV)], reducePar: Int)(
+      f: (K, List[V]) => O): Dataset[O] =
+    dsShuffle(reduced, reducePar)(_.map { case (k, buf) =>
+      f(k, sortValues(buf, sortReduceWithValue, sortReduceReverse))
+    })
+}
+
+object MapReduceBase {
+
+  /** Distinct keys the Dataset combiner path holds per input partition
+    * before it flushes its partial results downstream.
+    */
+  private[mr] val PreCombineMaxKeys: Int = 1 << 16
+
+  /** Map-side pre-combine of one partition's `(key, value)` stream,
+    * bounded: whenever [[PreCombineMaxKeys]] distinct keys are held, the
+    * partial results are emitted and the table starts empty again. A key
+    * may then be emitted more than once per partition; the combiner is
+    * associative and commutative, so the reduce side folds the partials.
+    */
+  private[mr] def preCombine[K, V](it: Iterator[(K, V)], op: (V, V) => V): Iterator[(K, V)] =
+    new Iterator[(K, V)] {
+      private val table = mutable.LinkedHashMap.empty[K, V]
+      private var out: Iterator[(K, V)] = Iterator.empty
+      def hasNext: Boolean = out.hasNext || {
+        while (it.hasNext && table.size < PreCombineMaxKeys) {
+          val (k, v) = it.next()
+          table.update(k, table.get(k).fold(v)(op(_, v)))
+        }
+        out = table.toArray.iterator
+        table.clear()
+        out.hasNext
+      }
+      def next(): (K, V) =
+        if (hasNext) out.next() else throw new NoSuchElementException("preCombine")
     }
 }
 
@@ -446,12 +495,17 @@ abstract class MapReduce[I, K, S, V] extends MapReduceBase[I, K, S, V] {
 
   final def run(rdd: RDD[I], mapPar: Int, reducePar: Int)(
       implicit kt: ClassTag[K], vt: ClassTag[V]): RDD[(K, List[V])] = {
-    val reduced: RDD[(K, SV)] = mapPhase(rdd, mapPar).mapPartitions(part =>
-      instrumented(part) { case (k, vs) =>
-        reducer(k, vs).iterator.map(e => (e.key, (e.sortOpt, e.value)))
-      })
-    if (keyPreserving) groupLocally(reduced, sortReduceWithValue, sortReduceReverse)
-    else partitionAndSort(reduced, sortReduceWithValue, sortReduceReverse, reducePar)
+    val groups = mapPhase(rdd, mapPar)
+    if (keyPreserving)
+      groups.mapPartitions(part => instrumented(part) { case (k, vs) =>
+        keptGroup(k, reducer(k, vs))
+      }, preservesPartitioning = true)
+    else
+      partitionAndSort(
+        groups.mapPartitions(part => instrumented(part) { case (k, vs) =>
+          reducer(k, vs).iterator.map(shipped)
+        }),
+        sortReduceWithValue, sortReduceReverse, reducePar)
   }
 
   /** Small-result driver adapter — the reference's in-memory result dict
@@ -510,15 +564,14 @@ abstract class MapReduce[I, K, S, V] extends MapReduceBase[I, K, S, V] {
 
   final def runDataset(ds: Dataset[I], mapPar: Int, reducePar: Int)(
       implicit ek: Encoder[K], esv: Encoder[(K, SV)],
-      eout: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] = {
-    val reduced = dsMapPhase(ds, mapPar).mapPartitions(part =>
-      instrumented(part) { case (k, vs) =>
-        reducer(k, vs).iterator.map(e => (e.key, (e.sortOpt, e.value)))
-      })
-    if (keyPreserving) dsGroupLocally(reduced, sortReduceWithValue, sortReduceReverse)
-    else dsPartitionAndSort(reduced, sortReduceWithValue, sortReduceReverse,
-      reducePar)
-  }
+      eout: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] =
+    if (keyPreserving)
+      dsMapPhase[(K, Seq[V])](ds, mapPar)((k, vs) => keptGroup(k, reducer(k, vs)))
+    else
+      dsReduceShuffle(
+        dsMapPhase[(K, SV)](ds, mapPar)((k, vs) =>
+          reducer(k, vs).iterator.map(e => (e.key, (e.sortOpt, e.value)))),
+        reducePar)((k, vs) => (k, vs: Seq[V]))
 }
 
 /** Return-mode task: the reducer returns exactly one record. On key
@@ -544,17 +597,20 @@ abstract class MapReduce1[I, K, S, V] extends MapReduceBase[I, K, S, V] {
 
   final def run(rdd: RDD[I], mapPar: Int, reducePar: Int)(
       implicit kt: ClassTag[K], vt: ClassTag[V]): RDD[(K, V)] = {
-    val reduced: RDD[(K, SV)] = mapPhase(rdd, mapPar).mapPartitions(part =>
-      instrumented(part) { case (k, vs) =>
-        val e = reducer(k, vs)
-        Iterator.single((e.key, (e.sortOpt, e.value)))
-      })
+    val groups = mapPhase(rdd, mapPar)
     if (keyPreserving)
       // keys are unique per partition after shuffle #1, so no collision
       // and no regroup is possible — straight projection.
-      reduced.map { case (k, (_, v)) => (k, v) }
+      groups.mapPartitions(part => instrumented(part) { case (k, vs) =>
+        val e = keptEmit(k, reducer(k, vs))
+        Iterator.single((e.key, e.value))
+      }, preservesPartitioning = true)
     else
-      partitionAndSort(reduced, sortReduceWithValue, sortReduceReverse, reducePar)
+      partitionAndSort(
+        groups.mapPartitions(part => instrumented(part) { case (k, vs) =>
+          Iterator.single(shipped(reducer(k, vs)))
+        }),
+        sortReduceWithValue, sortReduceReverse, reducePar)
         .mapValues(_.head)
   }
 
@@ -597,19 +653,19 @@ abstract class MapReduce1[I, K, S, V] extends MapReduceBase[I, K, S, V] {
 
   final def runDataset(ds: Dataset[I], mapPar: Int, reducePar: Int)(
       implicit ek: Encoder[K], esv: Encoder[(K, SV)],
-      eseq: Encoder[(K, Seq[V])], ekv: Encoder[(K, V)]): Dataset[(K, V)] = {
-    val singles = dsMapPhase(ds, mapPar).mapPartitions(part =>
-      instrumented(part) { case (k, vs) =>
-        val e = reducer(k, vs)
-        Iterator.single((e.key, (e.sortOpt, e.value)))
-      })
+      eseq: Encoder[(K, Seq[V])], ekv: Encoder[(K, V)]): Dataset[(K, V)] =
     if (keyPreserving)
-      singles.map(p => (p._1, p._2._2))
+      dsMapPhase[(K, V)](ds, mapPar) { (k, vs) =>
+        val e = keptEmit(k, reducer(k, vs))
+        Iterator.single((e.key, e.value))
+      }
     else
-      dsPartitionAndSort(singles, sortReduceWithValue, sortReduceReverse,
-        reducePar)
-        .map(p => (p._1, p._2.head))
-  }
+      dsReduceShuffle(
+        dsMapPhase[(K, SV)](ds, mapPar) { (k, vs) =>
+          val e = reducer(k, vs)
+          Iterator.single((e.key, (e.sortOpt, e.value)))
+        },
+        reducePar)((k, vs) => (k, vs.head))
 }
 
 /** Arity-sniffing adapter for untyped records, kept for behavioral

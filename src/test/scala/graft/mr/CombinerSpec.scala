@@ -41,6 +41,26 @@ class CombinerSpec extends SparkSpec {
     }
   }
 
+  test("Dataset pre-combine flushes past its key bound and stays exact") {
+    import spark.implicits._
+    val keys = MapReduceBase.PreCombineMaxKeys + 1000
+    val n = 2 * keys + 500
+    val oracle = (0 until n).groupBy(_ % keys).map { case (k, is) => (k, is.size.toLong) }
+    // the bound is live: one partition of `keys` distinct keys flushes
+    // partial results more than once per key
+    val partials = MapReduceBase.preCombine[Int, Long]((0 until n).iterator.map(i => (i % keys, 1L)), _ + _).toList
+    assert(partials.size > keys)
+    assert(partials.groupMapReduce(_._1)(_._2)(_ + _) == oracle)
+    val task = new MapReduce1[Int, Int, Int, Long] {
+      def mapper(i: Int): IterableOnce[Emit[Int, Int, Long]] = Iterator.single(KV(i % keys, 1L))
+      def reducer(k: Int, vs: Seq[Long]): Emit[Int, Int, Long] = KV(k, vs.sum)
+      override def keyPreserving: Boolean = true
+      override def combiner: Option[(Long, Long) => Long] = Some(_ + _)
+    }
+    val got = task.runDataset(spark.createDataset(0 until n).coalesce(1)).collect().toMap
+    assert(got == oracle)
+  }
+
   test("combiner with sort-element emissions raises ElementCountError") {
     val e = intercept[SparkException] {
       new BadCombiner().runToMap(sc.parallelize(1 to 5, 2))

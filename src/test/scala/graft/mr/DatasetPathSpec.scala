@@ -1,11 +1,48 @@
 package graft.mr
 
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.ExplainMode
+
 /** The Dataset (Tungsten) execution path must agree exactly with the RDD
   * path on the same tasks — both reducer shapes, with and without the
-  * keyPreserving elision, and under secondary sort.
+  * keyPreserving elision, and under secondary sort — and both paths keep
+  * their shuffle shape: one keyed exchange per shuffle.
   */
 class DatasetPathSpec extends SparkSpec {
   import WordCountTasks._
+
+  private def formatted(ds: Dataset[_]): String =
+    ds.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  private def shuffleDeps(rdd: RDD[_]): Int = rdd.dependencies.map {
+    case s: ShuffleDependency[_, _, _] => 1 + shuffleDeps(s.rdd)
+    case d => shuffleDeps(d.rdd)
+  }.sum
+
+  for (kp <- Seq(true, false)) {
+    test(s"runDataset plans one keyed exchange per shuffle and no AppendColumns (keyPreserving=$kp)") {
+      import spark.implicits._
+      val input = spark.createDataset(Text)
+      val plans = Seq(
+        "yield" -> formatted(new YieldYield(0, kp).runDataset(input)),
+        "return" -> formatted(new YieldReturn(0, kp).runDataset(input)),
+        "combiner" -> formatted(new CombinerTasks.CombWordCount(kp).runDataset(input)))
+      for ((name, p) <- plans) {
+        assert(!p.contains("AppendColumns"), s"$name:\n$p")
+        val exchanges = "\\(\\d+\\) Exchange".r.findAllIn(p).size
+        assert(exchanges == (if (kp) 1 else 2), s"$name: $exchanges exchanges\n$p")
+      }
+    }
+  }
+
+  test("a keyPreserving run has exactly one ShuffleDependency in its lineage") {
+    val input = sc.parallelize(Text, 3)
+    assert(shuffleDeps(new YieldYield(0, kp = true).run(input)) == 1)
+    assert(shuffleDeps(new YieldReturn(0, kp = true).run(input)) == 1)
+    assert(shuffleDeps(new CombinerTasks.CombWordCount(kp = true).run(input)) == 1)
+  }
 
   for (kp <- Seq(true, false)) {
     test(s"yield-mode wordcount: Dataset path == RDD path (keyPreserving=$kp)") {

@@ -4,8 +4,9 @@ import org.apache.spark.SparkException
 
 /** Lifecycle semantics: second shuffle on reducer-emitted keys (S5),
   * return-mode first-wins collapse (S2, tinymr.py:222-227), keyPreserving
-  * elision equivalence, and the untyped adapter's ElementCountError
-  * contract (/root/reference/tests/test_exceptions.py).
+  * elision equivalence and its enforced key contract, and the untyped
+  * adapter's ElementCountError contract (reference
+  * tests/test_exceptions.py).
   */
 object LifecycleTasks {
 
@@ -40,6 +41,44 @@ object LifecycleTasks {
       Iterator.single(KV(item % 5, item.toLong))
     def reducer(key: Int, values: Seq[Long]): Emit[Int, Int, Long] =
       KV(key, values.sum)
+  }
+
+  /** keyPreserving reducers that break the promise: they emit the group's
+    * key with a suffix, in yield and in return mode.
+    */
+  final class RekeyYield extends MapReduce[String, String, Int, Long] {
+    override def keyPreserving: Boolean = true
+    def mapper(item: String): IterableOnce[Emit[String, Int, Long]] =
+      Iterator.single(KV(item, 1L))
+    def reducer(key: String, values: Seq[Long]): IterableOnce[Emit[String, Int, Long]] =
+      Iterator(KV(key, values.sum), KV(s"$key!", values.sum))
+  }
+
+  final class RekeyReturn extends MapReduce1[String, String, Int, Long] {
+    override def keyPreserving: Boolean = true
+    def mapper(item: String): IterableOnce[Emit[String, Int, Long]] =
+      Iterator.single(KV(item, 1L))
+    def reducer(key: String, values: Seq[Long]): Emit[String, Int, Long] =
+      KV(s"$key!", values.sum)
+  }
+
+  /** keyPreserving reducers that keep the promise with keys JVM `==`
+    * calls different: a fresh copy of an array key, and NaN.
+    */
+  final class ArrayKeyCopy extends MapReduce[Int, Array[Int], Int, Long] {
+    override def keyPreserving: Boolean = true
+    def mapper(item: Int): IterableOnce[Emit[Array[Int], Int, Long]] =
+      Iterator.single(KV(Array(item % 2, item % 3), 1L))
+    def reducer(key: Array[Int], values: Seq[Long]): IterableOnce[Emit[Array[Int], Int, Long]] =
+      Iterator.single(KV(key.clone(), values.sum))
+  }
+
+  final class NaNKeySum extends MapReduce1[Double, Double, Int, Long] {
+    override def keyPreserving: Boolean = true
+    def mapper(item: Double): IterableOnce[Emit[Double, Int, Long]] =
+      Iterator.single(KV(item, 1L))
+    def reducer(key: Double, values: Seq[Long]): Emit[Double, Int, Long] =
+      KV(Double.NaN, values.sum)
   }
 
   final class UntypedWordCount extends UntypedMapReduce[String] {
@@ -136,6 +175,33 @@ class LifecycleSpec extends SparkSpec {
   test("keyPreserving elision produces identical results to the full lifecycle") {
     val data = sc.parallelize(1 to 1000, 8)
     assert(new SumTask(kp = true).runToMap(data) == new SumTask(kp = false).runToMap(data))
+  }
+
+  test("keyPreserving reducer emitting a foreign key fails with KeyPreservingError") {
+    import spark.implicits._
+    val words = Seq("a", "b", "a")
+    val runs: Seq[(String, () => Any)] = Seq(
+      "run, yield mode" -> (() => new RekeyYield().run(sc.parallelize(words, 2)).collect()),
+      "run, return mode" -> (() => new RekeyReturn().run(sc.parallelize(words, 2)).collect()),
+      "runDataset, yield mode" -> (() => new RekeyYield().runDataset(spark.createDataset(words)).collect()),
+      "runDataset, return mode" -> (() => new RekeyReturn().runDataset(spark.createDataset(words)).collect()))
+    for ((name, job) <- runs) {
+      val e = intercept[SparkException](job())
+      assert(findCause[KeyPreservingError](e), s"$name: no KeyPreservingError in: $e")
+    }
+  }
+
+  test("keyPreserving check compares keys by value: array copies and NaN keep their group") {
+    import spark.implicits._
+    val arrays = new ArrayKeyCopy().runDataset(spark.createDataset(1 to 60).repartition(3))
+      .collect().map { case (k, vs) => k.toList -> vs.sum }.toMap
+    assert(arrays.size == 6 && arrays.values.sum == 60L)
+    val nans = Seq(Double.NaN, Double.NaN, Double.NaN)
+    val viaRdd = new NaNKeySum().run(sc.parallelize(nans, 2)).collect()
+    val viaDs = new NaNKeySum().runDataset(spark.createDataset(nans).repartition(2)).collect()
+    for (got <- Seq(viaRdd, viaDs)) {
+      assert(got.length == 1 && got.head._1.isNaN && got.head._2 == 3L, got.toList)
+    }
   }
 
   test("untyped adapter: well-formed 2-tuples work end-to-end") {

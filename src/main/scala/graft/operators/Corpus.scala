@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -124,9 +124,9 @@ object Corpus {
     // the one wide exchange carries vocabulary x docs, not tokens.
     // Lifetime: LRU eviction / clearCache (same contract as q22's
     // docGrams — a lazily returned frame has no unpersist scope)
-    val perDoc = toks.groupBy(col("tok"), col("doc_id"), col("source"))
-      .agg(count(lit(1)).as("c"))
-      .persist()
+    val perDoc = Scope.lru.persist(
+      toks.groupBy(col("tok"), col("doc_id"), col("source"))
+        .agg(count(lit(1)).as("c")))
     val tf = perDoc.groupBy(col("source"), col("tok")).agg(sum(col("c")).as("tf"))
     // (tok, doc_id) is unique in perDoc by construction (a doc has one
     // source), so document frequency is a plain count — no distinct
@@ -206,19 +206,6 @@ object Corpus {
         col("cluster_size"))
       .orderBy(col("l_partkey"))
   }
-
-  /** Release a localCheckpoint'd frame's RDD blocks. `Dataset.unpersist`
-    * is a no-op for checkpoints (they live at the RDD layer, not in the
-    * CacheManager), and waiting for the ContextCleaner means superseded
-    * label frames pin storage until a GC happens to collect them — so
-    * reach through the LogicalRDD leaf and unpersist the RDD directly.
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Min-label propagation with pointer doubling (see
     * [[q53CopurchaseClusters]] scaladoc for the per-round scale
@@ -369,7 +356,7 @@ object Corpus {
       .getOrElse(ccDistributed(nodes, edges))
 
   private[graft] def ccDistributed(
-      nodes: DataFrame, edges: DataFrame): DataFrame = {
+      nodes: DataFrame, edges: DataFrame): DataFrame = Scope { sc =>
     // the convergence invariant sums node ids — DECIMAL(38,0), not
     // BIGINT, so it cannot overflow at any realistic id range x corpus
     // size (10^12 ids of 10^12 still fit 38 digits)
@@ -386,15 +373,13 @@ object Corpus {
     // so the edge set — the largest frame in the loop — crosses the
     // wire once at persist time instead of once per round (only the
     // small label frame shuffles each round)
-    val e = edges
+    val e = sc.persist(edges
       .union(nodes.select(col("p").as("src"), col("p").as("dst")))
-      .repartition(col("src"))
-      .persist()
+      .repartition(col("src")))
     // LAZY checkpoints: the per-round convergence action is what
     // materializes them, so each round costs ONE job (propagate +
     // shortcut + checkpoint + sum fused), not one job per step
-    var labels = nodes.select(col("p"), col("p").as("lbl"))
-      .localCheckpoint(eager = false)
+    var labels = sc.checkpoint(nodes.select(col("p"), col("p").as("lbl")), eager = false)
     var lastSum = labelSum(labels)
     var converged = lastSum == null // empty node set: already at fixpoint
     var round = 0
@@ -402,27 +387,23 @@ object Corpus {
       // checkpoint BEFORE the self-join: the doubling join needs the
       // stepped frame as a leaf, and it truncates lineage so round N
       // never replays rounds 1..N-1
-      val stepped = ccPropagate(e, labels).localCheckpoint(eager = false)
+      val stepped = sc.checkpoint(ccPropagate(e, labels), eager = false)
       // pointer doubling: replace each label by that label's own label
-      val next = ccShortcut(stepped).localCheckpoint(eager = false)
+      val next = sc.checkpoint(ccShortcut(stepped), eager = false)
       val s2 = labelSum(next)
       // next is materialized now; the previous round's checkpoints
       // (labels and the intermediate stepped) are dead — release their
       // blocks instead of pinning 2 frames per round until GC
-      freeCheckpoint(labels)
-      freeCheckpoint(stepped)
+      sc.release(labels)
+      sc.release(stepped)
       converged = s2 == lastSum // labels are monotone non-increasing
       lastSum = s2
       labels = next
       round += 1
     }
-    e.unpersist(blocking = false)
-    if (!converged) {
-      freeCheckpoint(labels) // don't pin the last round's blocks on the error path
-      throw new IllegalStateException(
-        s"connectedComponents: not converged after $MaxCcIterations doubling rounds")
-    }
-    labels
+    if (!converged) throw new IllegalStateException(
+      s"connectedComponents: not converged after $MaxCcIterations doubling rounds")
+    sc.keep(labels) // the lazily returned labels: LRU lifetime
   }
 
   /** Fixed PageRank iteration count for q73 — fixed (not convergence-
@@ -523,22 +504,20 @@ object Corpus {
       .getOrElse(pageRankDistributed(nodes, edges, iterations))
 
   private[graft] def pageRankDistributed(
-      nodes: DataFrame, edges: DataFrame, iterations: Int): DataFrame = {
+      nodes: DataFrame, edges: DataFrame, iterations: Int): DataFrame = Scope.pinned { sc =>
     val base = (15L * PrScale) / 100L // (1 - d) * scale
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val e = edges.join(deg, "src")
-      .repartition(col("src"))
-      .persist()
+    val e = sc.persist(edges.join(deg, "src").repartition(col("src")))
     // the node frame appears in every iteration's left join AND seeds
     // the rank frame — persist it so each appearance reads a cached
     // (typically tiny) frame instead of re-running the caller's
     // distinct/scan lineage per iteration
-    val n = nodes.select(col("p")).persist()
+    val n = sc.persist(nodes.select(col("p")))
     var ranks = n.select(col("p"), lit(PrScale).as("r"))
     for (_ <- 1 to iterations) {
-      val next = pageRankStep(e, n, ranks, base)
-        .localCheckpoint(eager = true) // truncate: constant-depth plans
-      freeCheckpoint(ranks) // no-op on the non-checkpoint seed frame
+      // truncate: constant-depth plans
+      val next = sc.checkpoint(pageRankStep(e, n, ranks, base), eager = true)
+      sc.release(ranks) // no-op on the unowned seed frame
       ranks = next
     }
     // per-node degree read back from the PERSISTED edge frame (one row
@@ -546,20 +525,13 @@ object Corpus {
     // directly would re-run the caller's whole edge generation
     val degOut = e.select(col("src").as("p"), col("deg")).groupBy(col("p"))
       .agg(max(col("deg")).as("deg"))
-    val out = ranks
+    // pinned, so the edge/node caches and the LAST iteration's
+    // checkpoint are dropped once the result is materialized
+    ranks
       .join(degOut, Seq("p"), "left")
       .select(col("p"), coalesce(col("deg"), lit(0L)).as("degree"),
         col("r").as("rank_fp"))
       .orderBy(col("p"))
-      .persist()
-    out.count() // materialize so the edge/node caches can be dropped now
-    e.unpersist(blocking = false)
-    n.unpersist(blocking = false)
-    // the LAST iteration's checkpoint outlived the loop's free chain;
-    // `out` is materialized above, so release it here rather than
-    // pinning node-sized RDD blocks until the context cleaner runs
-    freeCheckpoint(ranks)
-    out
   }
 
   /** Driver binding (q73): PageRank over the q53 co-purchase graph —
@@ -669,36 +641,28 @@ object Corpus {
       .getOrElse(hitsDistributed(edges, iterations))
 
   private[graft] def hitsDistributed(
-      edges: DataFrame, iterations: Int): DataFrame = {
-    val e = edges.select(col("c"), col("p")).repartition(col("c")).persist()
-    var h = e.select(col("c")).distinct()
-      .select(col("c"), lit(HitsScale).as("h"))
-      .localCheckpoint(eager = true)
+      edges: DataFrame, iterations: Int): DataFrame = Scope.pinned { sc =>
+    val e = sc.persist(edges.select(col("c"), col("p")).repartition(col("c")))
+    var h = sc.checkpoint(e.select(col("c")).distinct()
+      .select(col("c"), lit(HitsScale).as("h")), eager = true)
     var a: DataFrame = null
     for (k <- 1 to iterations) {
-      val anext = hitsAuthorityStep(e, h).localCheckpoint(eager = true)
-      if (a != null) freeCheckpoint(a)
+      val anext = sc.checkpoint(hitsAuthorityStep(e, h), eager = true)
+      if (a != null) sc.release(a)
       a = anext
       if (k < iterations) {
         val hraw = e.join(a, "p").groupBy(col("c")).agg(sum(col("a")).as("hr"))
-        val hnext = hraw.crossJoin(broadcast(
+        val hnext = sc.checkpoint(hraw.crossJoin(broadcast(
             hraw.agg(greatest(max(col("hr")), lit(1L)).as("m"))))
-          .select(col("c"), expr(s"(hr * ${HitsScale}L) div m").as("h"))
-          .localCheckpoint(eager = true)
-        freeCheckpoint(h)
+          .select(col("c"), expr(s"(hr * ${HitsScale}L) div m").as("h")), eager = true)
+        sc.release(h)
         h = hnext
       }
     }
     val deg = e.groupBy(col("p")).agg(count(lit(1)).as("in_degree"))
-    val out = a.join(deg, "p")
+    a.join(deg, "p")
       .select(col("p").as("l_partkey"), col("in_degree"), col("a").as("auth_fp"))
       .orderBy(col("l_partkey"))
-      .persist()
-    out.count()
-    e.unpersist(blocking = false)
-    freeCheckpoint(h)
-    freeCheckpoint(a)
-    out
   }
 
   /** Driver binding (q166): HITS over the customer→part purchase
@@ -739,21 +703,20 @@ object Corpus {
     // consumer re-executes the whole upstream edge pipeline — the
     // un-cached form of this plan re-ran the source scan 90 times.
     // Lifetime: LRU/clearCache, the lazily-returned-frame contract.
-    val e = edges.persist()
+    val e = Scope.lru.persist(edges)
     val deg = e.select(explode(array(col("a"), col("b"))).as("p"))
       .groupBy(col("p")).agg(count(lit(1)).as("deg"))
     // (deg, id) is a total order: orient src -> dst along it, carrying
     // dst's order key so wedge endpoints can themselves be ordered
     val lowFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-    val de = e
+    val de = Scope.lru.persist(e
       .join(deg.select(col("p").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("p").as("b"), col("deg").as("db")), "b")
       .select(
         when(lowFirst, col("a")).otherwise(col("b")).as("src"),
         when(lowFirst, col("b")).otherwise(col("a")).as("dst"),
         when(lowFirst, struct(col("db").as("d"), col("b").as("i")))
-          .otherwise(struct(col("da").as("d"), col("a").as("i"))).as("dord"))
-      .persist()
+          .otherwise(struct(col("da").as("d"), col("a").as("i"))).as("dord")))
     // wedges centered at the doubly-out node; (v, w) ordered by the
     // SAME total order the orientation used, so the closing edge is
     // exactly the oriented v -> w row
@@ -899,9 +862,9 @@ object Corpus {
   val MaxBroadcastAlive = 4000000L
 
   private[graft] def kCoreLoop(
-      edges: DataFrame, k: Int, rounds: Int, toFixpoint: Boolean): DataFrame = {
+      edges: DataFrame, k: Int, rounds: Int, toFixpoint: Boolean): DataFrame = Scope.pinned { sc =>
     require(k >= 1 && rounds >= 1)
-    val e = edges.select(col("src"), col("dst")).persist()
+    val e = sc.persist(edges.select(col("src"), col("dst")))
     // the hint is applied by the caller of kCoreInduced, and only once
     // the MEASURED count fits — AQE handles the un-hinted rounds
     def induced(alive: DataFrame, n: Long): DataFrame =
@@ -916,7 +879,7 @@ object Corpus {
     // the convergence count() below reads cached node-sized blocks.
     // On a multi-executor cluster swap in reliable checkpointing if
     // executor loss during the loop must be survivable.
-    var alive = e.select(col("src").as("v")).distinct().localCheckpoint(true)
+    var alive = sc.checkpoint(e.select(col("src").as("v")).distinct(), eager = true)
     var aliveN = alive.count()
     var round = 0
     var converged = false
@@ -924,28 +887,22 @@ object Corpus {
       round += 1
       val prevN = aliveN
       val prev = alive
-      alive = induced(alive, prevN)
+      // eager: materialize + truncate lineage
+      alive = sc.checkpoint(induced(alive, prevN)
         .filter(col("deg") >= k)
-        .select(col("src").as("v"))
-        .localCheckpoint(true) // eager: materialize + truncate lineage
+        .select(col("src").as("v")), eager = true)
       aliveN = alive.count()
       // the new checkpoint is eager, so the superseded round's blocks
       // are dead NOW — release them deterministically rather than
-      // waiting for the ContextCleaner (freeCheckpoint: Dataset
-      // .unpersist is a no-op for checkpointed frames)
-      freeCheckpoint(prev)
+      // waiting for the ContextCleaner
+      sc.release(prev)
       converged = toFixpoint && aliveN == prevN
     }
-    // materialize the node-sized result BEFORE releasing the caches it
-    // reads through — an unpersist ahead of the action would silently
-    // recompute the whole upstream edge pipeline at collect time
-    val out = induced(alive, aliveN)
+    // pinned: the node-sized result is materialized BEFORE the caches
+    // it reads through are released — a release ahead of the action
+    // would silently recompute the whole upstream edge pipeline
+    induced(alive, aliveN)
       .select(col("src").as("v"), col("deg").as("core_degree"))
-      .persist()
-    out.count()
-    freeCheckpoint(alive) // checkpointed: plain unpersist is a no-op
-    e.unpersist(blocking = false)
-    out
   }
 
   /** Driver binding: depth-4 peel of the 3-core of the q53 co-purchase
@@ -1011,11 +968,10 @@ object Corpus {
     import s.implicits._
     // quantity >= 40 (not q53's 49): the support floor needs REPEATED
     // co-purchases, and the 49-cut graph is too sparse to repeat
-    val hi = Tables.lineitem(s, d)
+    val hi = Scope.lru.persist(Tables.lineitem(s, d)
       .filter(col("l_quantity") >= 40)
       .select(col("l_orderkey"), col("l_partkey"))
-      .distinct()
-      .persist() // feeds baskets AND item supports; lifetime: LRU
+      .distinct()) // feeds baskets AND item supports; lifetime: LRU
     val pairSup = hi.groupBy(col("l_orderkey"))
       .agg(collect_list(col("l_partkey")).as("items"))
       .select(col("items")).as[Seq[Long]]
@@ -1070,19 +1026,17 @@ object Corpus {
     val toks = Tables.documents(s, d)
       .select(col("source"),
         explode(filter(split(col("text"), " "), t => t =!= "")).as("tok"))
-    val st = toks.groupBy(col("source"), col("tok"))
-      .agg(count(lit(1)).as("o"))
-      .persist() // feeds the vocab ranking AND the grid join; LRU lifetime
+    val st = Scope.lru.persist(toks.groupBy(col("source"), col("tok"))
+      .agg(count(lit(1)).as("o"))) // feeds the vocab ranking AND the grid join; LRU lifetime
     val vocab = st.groupBy(col("tok")).agg(sum(col("o")).as("o_t"))
       .orderBy(col("o_t").desc, col("tok"))
       .limit(DriftVocab)
     val sources = st.select(col("source")).distinct()
     // dense grid: every (source, vocab token) cell, zeros kept
-    val grid = sources.crossJoin(broadcast(vocab))
+    val grid = Scope.lru.persist(sources.crossJoin(broadcast(vocab))
       .join(st, Seq("source", "tok"), "left")
       .select(col("source"), col("tok"), col("o_t"),
-        coalesce(col("o"), lit(0L)).as("o"))
-      .persist() // feeds totals and the statistic; LRU lifetime
+        coalesce(col("o"), lit(0L)).as("o"))) // feeds totals and the statistic; LRU lifetime
     val ns = grid.groupBy(col("source")).agg(sum(col("o")).as("n_s"))
     val n = vocab.agg(sum(col("o_t")).as("n"))
     val e = (col("n_s") * col("o_t")).cast("double") / col("n").cast("double")
@@ -1282,11 +1236,10 @@ object Corpus {
     * one-sided guarantee on EVERY token, not just the top-10).
     */
   private[operators] def cmsFreqOf(s: SparkSession, docs: DataFrame,
-      topK: Int): DataFrame = {
-    val toks = docs
+      topK: Int): DataFrame = Scope.pinned { sc =>
+    val toks = sc.persist(docs
       .select(explode(filter(split(coalesce(col("text"), lit("")), " "),
-        t => t =!= "")).as("tok"))
-      .persist()
+        t => t =!= "")).as("tok")))
     val seeds = cmsSeedsDf(s) // the ONE seed-frame builder (q167 shares it)
 
     // the sketch: one corpus pass through the NATIVE CmsSketchAgg —
@@ -1309,7 +1262,7 @@ object Corpus {
 
     // probe-side lookup: 10 tokens x depth rows join the 2048-cell
     // sketch — estimate = min over the token's cells
-    val out = probes.crossJoin(broadcast(seeds))
+    probes.crossJoin(broadcast(seeds))
       .select(col("tok"), col("exact_cnt"), col("j"),
         cmsBucket(col("tok"), col("a"), col("b"), col("c")).as("bkt"))
       .join(cells, Seq("j", "bkt"))
@@ -1318,10 +1271,6 @@ object Corpus {
       .select(col("tok"), col("exact_cnt"), col("est_cnt"),
         (col("est_cnt") - col("exact_cnt")).as("over_err"))
       .orderBy(col("exact_cnt").desc, col("tok"))
-      .persist()
-    out.count()
-    toks.unpersist(blocking = false)
-    out
   }
 
   /** Per-(source, row, bucket) CMS cell counts — the q158 sketch keyed
@@ -1375,8 +1324,8 @@ object Corpus {
     */
   private[operators] def cmsInnerOf(
       s: SparkSession, docs: DataFrame,
-      exactRider: Boolean = false): DataFrame = {
-    val cells = cmsSourceCells(s, docs).persist()
+      exactRider: Boolean = false): DataFrame = Scope.pinned { sc =>
+    val cells = sc.persist(cmsSourceCells(s, docs))
     val ip = cells.as("a").join(cells.as("b"),
         col("a.j") === col("b.j") && col("a.bkt") === col("b.bkt")
           && col("a.source") < col("b.source"))
@@ -1412,12 +1361,8 @@ object Corpus {
             coalesce(col("ip_exact"), lit(0L)).as("ip_exact"), col("ip_est"),
             (col("ip_est") - coalesce(col("ip_exact"), lit(0L))).as("over_err"))
       }
-    val out = joined
+    joined
       .orderBy(col("src_a"), col("src_b"))
-      .persist()
-    out.count()
-    cells.unpersist(blocking = false)
-    out
   }
 
   /** Register-index bits / register count of the replayable HLL (q159). */
@@ -1508,7 +1453,7 @@ object Corpus {
         col("est_raw") <= lit(2.5 * HllM) && col("v_empty") > 0)
   }
 
-  private[operators] def hllDistinctOf(docs: DataFrame): DataFrame = {
+  private[operators] def hllDistinctOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
     // ONE tokenize+explode pass (sourceTrigrams — the q162/q172/q190
     // family's shared gram rule, not a re-implementation that could
     // drift) feeds both the registers and the exact ground truth; the
@@ -1516,18 +1461,14 @@ object Corpus {
     // partial per partition-source) rather than the grouped-row
     // groupBy(source, bkt).max(rho) form, whose shuffle carries up to
     // 512 rows per source
-    val grams = sourceTrigrams(docs).persist()
+    val grams = sc.persist(sourceTrigrams(docs))
     val regs = registersOfGrams(grams)
     val exact = grams.groupBy(col("source"))
       .agg(countDistinct(col("g")).as("n_distinct_exact"))
-    val out = hllReadout(regs, Seq("source")).join(exact, "source")
+    hllReadout(regs, Seq("source")).join(exact, "source")
       .select(col("source"), col("n_distinct_exact"), col("v_empty"),
         col("s_reg"), col("est_raw"), col("small_range"))
       .orderBy(col("source"))
-      .persist()
-    out.count()
-    grams.unpersist(blocking = false)
-    out
   }
 
   /** The exploded `(source, g)` word-trigram frame the q159/q162 HLL
@@ -1591,13 +1532,13 @@ object Corpus {
     * way (SketchAlgebraSpec pins this).
     */
   private[operators] def hllOverlapOf(
-      docs: DataFrame, exactRider: Boolean = false): DataFrame = {
+      docs: DataFrame, exactRider: Boolean = false): DataFrame = Scope.pinned { sc =>
     // one tokenize+explode pass feeds registers AND (rider only) the
     // exact ground truth; estimate-only callers have a single gram
     // consumer, so nothing corpus-shaped is persisted for them
     val grams0 = sourceTrigrams(docs)
-    val grams = if (exactRider) grams0.persist() else grams0
-    val regs = registersOfGrams(grams).persist()
+    val grams = if (exactRider) sc.persist(grams0) else grams0
+    val regs = sc.persist(registersOfGrams(grams))
     val per = hllReadout(regs, Seq("source"))
       .select(col("source"), col("est_raw"))
     val srcs = regs.select(col("source")).distinct()
@@ -1633,14 +1574,9 @@ object Corpus {
     val cols = (if (exactRider) Seq(col("n_shared_exact")) else Nil) ++
       Seq(col("est_a"), col("est_b"), col("est_union"),
         (col("est_a") + col("est_b") - col("est_union")).as("est_overlap"))
-    val out = joined
+    joined
       .select(col("src_a") +: col("src_b") +: cols: _*)
       .orderBy(col("src_a"), col("src_b"))
-      .persist()
-    out.count()
-    regs.unpersist(blocking = false)
-    if (exactRider) grams.unpersist(blocking = false)
-    out
   }
 
   /** The full HLL estimator including the ln-based linear-counting
@@ -1724,28 +1660,24 @@ object Corpus {
     }
   }
 
-  private[graft] def lpaDistributed(edges: DataFrame, rounds: Int): DataFrame = {
+  private[graft] def lpaDistributed(edges: DataFrame, rounds: Int): DataFrame = Scope { sc =>
     require(rounds >= 1, s"labelPropagation: rounds must be >= 1, got $rounds")
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("dst")).persist()
-    var labels = e.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("lbl"))
-      .localCheckpoint(eager = true)
+    val e = sc.persist(edges.select(col("src"), col("dst")).repartition(col("dst")))
+    var labels = sc.checkpoint(e.select(col("src").as("v")).distinct()
+      .select(col("v"), col("v").as("lbl")), eager = true)
     for (_ <- 1 to rounds) {
-      val next = e
+      val next = sc.checkpoint(e
         .join(labels.select(col("v").as("dst"), col("lbl")), Seq("dst"))
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("cnt"))
         // argmax with min-label tie-break: struct max orders by cnt
         // first, then by -lbl (labels are non-negative node ids)
         .groupBy(col("src"))
         .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("best"))
-        .select(col("src").as("v"), (-col("best.neg")).as("lbl"))
-        .localCheckpoint(eager = true)
-      freeCheckpoint(labels)
+        .select(col("src").as("v"), (-col("best.neg")).as("lbl")), eager = true)
+      sc.release(labels)
       labels = next
     }
-    e.unpersist(blocking = false)
-    labels
+    sc.keep(labels)
   }
 
   /** Synchronous LPA rounds of the driver binding — unroll depth of the
@@ -1851,34 +1783,31 @@ object Corpus {
   }
 
   private[graft] def bfsDistributed(
-      seeds: DataFrame, edges: DataFrame, maxHops: Int): DataFrame = {
+      seeds: DataFrame, edges: DataFrame, maxHops: Int): DataFrame = Scope { sc =>
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = edges.repartition(col("src")).persist()
-    var dist = seeds.select(col("v"), lit(0L).as("hop")).localCheckpoint(true)
+    val e = sc.persist(edges.repartition(col("src")))
+    var dist = sc.checkpoint(seeds.select(col("v"), lit(0L).as("hop")), eager = true)
     var frontier = dist.select(col("v"))
     var prevNxt: DataFrame = null // round r's frontier checkpoint
     var hop = 0
     while (hop < maxHops && !frontier.isEmpty) {
       hop += 1
-      val nxt = frontier.join(e, col("v") === col("src"))
+      val nxt = sc.checkpoint(frontier.join(e, col("v") === col("src"))
         .select(col("dst").as("v")).distinct()
         .join(dist, Seq("v"), "left_anti")
-        .withColumn("hop", lit(hop.toLong))
-        .localCheckpoint(true)
-      val settled = dist.union(nxt).localCheckpoint(true)
-      freeCheckpoint(dist)
+        .withColumn("hop", lit(hop.toLong)), eager = true)
+      val settled = sc.checkpoint(dist.union(nxt), eager = true)
+      sc.release(dist)
       // the prior round's frontier checkpoint fed THIS round's join
       // (both eager checkpoints above have materialized) and is dead
       // now — without this a deep BFS pins one frontier-sized block
       // set per hop until the ContextCleaner happens to run
-      if (prevNxt != null) freeCheckpoint(prevNxt)
+      if (prevNxt != null) sc.release(prevNxt)
       prevNxt = nxt
       dist = settled
       frontier = nxt.select(col("v"))
     }
-    if (prevNxt != null) freeCheckpoint(prevNxt) // dist is independent
-    e.unpersist(blocking = false)
-    dist
+    sc.keep(dist) // independent of the last frontier, released with e
   }
 
   /** Driver binding (q135): hop distance from the recall seed set
@@ -2023,20 +1952,16 @@ object Corpus {
     kmvDistinctOf(Tables.documents(s, d))
 
   /** [[q172KmvDistinct]] over any `(source, text)` frame. */
-  private[operators] def kmvDistinctOf(docs: DataFrame): DataFrame = {
-    val grams = sourceTrigrams(docs).persist()
+  private[operators] def kmvDistinctOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
+    val grams = sc.persist(sourceTrigrams(docs))
     val sk = kmvSketches(
       grams.select(col("source"), hllKey(col("g")).as("x")))
     val exact = grams.groupBy(col("source"))
       .agg(countDistinct(col("g")).as("n_distinct_exact"))
-    val out = kmvReadout(sk).join(exact, "source")
+    kmvReadout(sk).join(exact, "source")
       .select(col("source"), col("n_distinct_exact"), col("n_kmv"),
         col("kth_min"), col("est_distinct"))
       .orderBy(col("source"))
-      .persist()
-    out.count()
-    grams.unpersist(blocking = false)
-    out
   }
 
   /** Cross-source Jaccard similarity from KMV sketches alone (q173):
@@ -2088,14 +2013,13 @@ object Corpus {
 
   /** [[q173KmvOverlap]] over any `(source, text)` frame. */
   private[operators] def kmvOverlapOf(
-      docs: DataFrame, exactRider: Boolean = false): DataFrame = {
+      docs: DataFrame, exactRider: Boolean = false): DataFrame = Scope.pinned { sc =>
     val grams0 = sourceTrigrams(docs)
-    val grams = if (exactRider) grams0.persist() else grams0
+    val grams = if (exactRider) sc.persist(grams0) else grams0
     // sketch rows: |sources| x k after ONE corpus pass
-    val rows = kmvSketches(
+    val rows = sc.persist(kmvSketches(
       grams.select(col("source"), hllKey(col("g")).as("x")))
-      .select(col("source"), explode(col("sk")).as("x"))
-      .persist()
+      .select(col("source"), explode(col("sk")).as("x")))
     val ranked = mergedKmvPairs(rows)
     val est = ranked.groupBy(col("src_a"), col("src_b"))
       .agg(count(lit(1)).as("n_merged"),
@@ -2124,14 +2048,9 @@ object Corpus {
     val cols = (if (exactRider)
         Seq(col("n_shared_exact"), col("jaccard_exact")) else Nil) ++
       Seq(col("n_merged"), col("n_both"), col("est_jaccard"))
-    val out = joined
+    joined
       .select(col("src_a") +: col("src_b") +: cols: _*)
       .orderBy(col("src_a"), col("src_b"))
-      .persist()
-    out.count()
-    rows.unpersist(blocking = false)
-    if (exactRider) grams.unpersist(blocking = false)
-    out
   }
 
   /** HLL rollup (q190): the q159 register state rolled up through
@@ -2182,20 +2101,19 @@ object Corpus {
     kmvDifferenceOf(Tables.documents(s, d))
 
   /** [[q186KmvDifference]] over any `(source, text)` frame. */
-  private[operators] def kmvDifferenceOf(docs: DataFrame): DataFrame = {
+  private[operators] def kmvDifferenceOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
     val s = docs.sparkSession
     import s.implicits._
-    val rows = kmvSketches(
+    val rows = sc.persist(kmvSketches(
       sourceTrigrams(docs).select(col("source"), hllKey(col("g")).as("x")))
-      .select(col("source"), explode(col("sk")).as("x"))
-      .persist()
+      .select(col("source"), explode(col("sk")).as("x")))
     val ranked = mergedKmvPairs(rows) // the q173-shared merge law
     val agg = ranked.groupBy(col("src_a"), col("src_b"))
       .agg(count(lit(1)).as("n_merged"),
         sum(col("ia") * (lit(1L) - col("ib"))).as("n_anotb"),
         sum(col("ib") * (lit(1L) - col("ia"))).as("n_bnota"),
         max(col("x")).as("kth"))
-    val out = agg
+    agg
       .as[(String, String, Long, Long, Long, Long)]
       .map { case (a, b, nm, nab, nba, kth) =>
         // below k union keys the merged sketch IS the union: exact
@@ -2208,10 +2126,6 @@ object Corpus {
       .toDF("src_a", "src_b", "n_merged", "n_anotb", "n_bnota",
         "est_a_not_b", "est_b_not_a")
       .orderBy(col("src_a"), col("src_b"))
-      .persist()
-    out.count()
-    rows.unpersist(blocking = false)
-    out
   }
 
   /** Exact distinct-trigram overlap per unordered source pair (q181) —
@@ -2229,8 +2143,8 @@ object Corpus {
     exactGramOverlapOf(Tables.documents(s, d))
 
   /** [[q181ExactGramOverlap]] over any `(source, text)` frame. */
-  private[operators] def exactGramOverlapOf(docs: DataFrame): DataFrame = {
-    val sg = sourceTrigrams(docs).distinct().persist()
+  private[operators] def exactGramOverlapOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
+    val sg = sc.persist(sourceTrigrams(docs).distinct())
     val per = sg.groupBy(col("source")).agg(count(lit(1)).as("n"))
     val pairs = per.as("a").crossJoin(per.as("b"))
       .filter(col("a.source") < col("b.source"))
@@ -2240,7 +2154,7 @@ object Corpus {
         col("a.g") === col("b.g") && col("a.source") < col("b.source"))
       .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
       .agg(count(lit(1)).as("n_shared_exact"))
-    val out = pairs.join(shared, Seq("src_a", "src_b"), "left")
+    pairs.join(shared, Seq("src_a", "src_b"), "left")
       .withColumn("n_shared_exact", coalesce(col("n_shared_exact"), lit(0L)))
       .select(col("src_a"), col("src_b"), col("n_a"), col("n_b"),
         col("n_shared_exact"),
@@ -2248,10 +2162,6 @@ object Corpus {
           (col("n_a") + col("n_b") - col("n_shared_exact")).cast("double"))
           .as("jaccard_exact"))
       .orderBy(col("src_a"), col("src_b"))
-      .persist()
-    out.count()
-    sg.unpersist(blocking = false)
-    out
   }
 
   /** Exact token-frequency inner product per unordered source pair
@@ -2268,13 +2178,12 @@ object Corpus {
     exactTokenInnerOf(Tables.documents(s, d))
 
   /** [[q182ExactTokenInner]] over any `(source, text)` frame. */
-  private[operators] def exactTokenInnerOf(docs: DataFrame): DataFrame = {
-    val cnt = docs
+  private[operators] def exactTokenInnerOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
+    val cnt = sc.persist(docs
       .select(col("source"),
         explode(filter(split(coalesce(col("text"), lit("")), " "),
           t => t =!= "")).as("tok"))
-      .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("n"))
-      .persist()
+      .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("n")))
     val srcs = cnt.select(col("source")).distinct()
     val pairs = srcs.as("a").crossJoin(srcs.as("b"))
       .filter(col("a.source") < col("b.source"))
@@ -2284,14 +2193,10 @@ object Corpus {
       .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
       .agg(sum(col("a.n").cast("decimal(38,0)") * col("b.n")).cast("long")
         .as("ip_exact"))
-    val out = pairs.join(exact, Seq("src_a", "src_b"), "left")
+    pairs.join(exact, Seq("src_a", "src_b"), "left")
       .select(col("src_a"), col("src_b"),
         coalesce(col("ip_exact"), lit(0L)).as("ip_exact"))
       .orderBy(col("src_a"), col("src_b"))
-      .persist()
-    out.count()
-    cnt.unpersist(blocking = false)
-    out
   }
 
   // ===== Quantile sketch (bottom-k value sample) =====
@@ -2371,18 +2276,17 @@ object Corpus {
     quantileRollupOf(Tables.documents(s, d))
 
   /** [[q199QuantileRollup]] over any `(source, doc_id, n_chars)` frame. */
-  private[graft] def quantileRollupOf(docs: DataFrame): DataFrame = {
+  private[graft] def quantileRollupOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
     val s = docs.sparkSession
     import s.implicits._
     val base = docs.select(col("source"),
       hllKey(col("doc_id").cast("string")).as("h"),
       col("n_chars").as("v"))
-    val perSrc = base.groupBy(col("source"))
+    val perSrc = sc.persist(base.groupBy(col("source"))
       .agg(
         graft.functions.SamplePairsAgg.sketch(col("h"), col("v"), SampleK)
           .as("pairs"),
-        count(lit(1)).as("n_docs"))
-      .persist()
+        count(lit(1)).as("n_docs")))
     perSrc.count()
     // sketch members back to (source, h, v) rows — sources·k of them
     val members = perSrc.select(col("source"),
@@ -2402,7 +2306,7 @@ object Corpus {
       .unionByName(perSrc
         .agg(sum(col("n_docs")).as("n_docs"))
         .select(lit("<all>").as("source"), col("n_docs")))
-    val out = leveled.join(broadcast(ns), "source")
+    leveled.join(broadcast(ns), "source")
       .select(col("lvl"), col("source"), col("pairs"), col("n_docs"))
       .as[(Long, String, Seq[Long], Long)]
       .map { case (lvl, src, pairs, nDocs) =>
@@ -2416,10 +2320,6 @@ object Corpus {
       .toDF("lvl", "source", "n_docs", "n_sample",
         "p50_chars", "p90_chars", "p99_chars")
       .orderBy(col("lvl"), col("source"))
-      .persist()
-    out.count()
-    perSrc.unpersist(blocking = false)
-    out
   }
 
   /** q202: CMS ROLLUP — per-source AND corpus-total frequency
@@ -2451,14 +2351,13 @@ object Corpus {
     * native aggregate builds (cell identity spec-pinned, hash
     * unchanged).
     */
-  private[graft] def cmsRollupOf(s: SparkSession, docs: DataFrame): DataFrame = {
-    val tokCounts = docs
+  private[graft] def cmsRollupOf(s: SparkSession, docs: DataFrame): DataFrame = Scope.pinned { sc =>
+    val tokCounts = sc.persist(docs
       .select(col("source"),
         explode(filter(split(coalesce(col("text"), lit("")), " "),
           t => t =!= "")).as("tok"))
       .groupBy(col("source"), col("tok"))
-      .agg(count(lit(1)).as("n"))
-      .persist()
+      .agg(count(lit(1)).as("n")))
     tokCounts.count() // eager: the ONE corpus-linear pass
     val seeds = cmsSeedsDf(s) // the ONE seed-frame builder (q167 shares it)
     val cells = tokCounts
@@ -2468,15 +2367,14 @@ object Corpus {
         cmsBucketFromKey(col("x"), col("a"), col("b"), col("c")).as("bkt"))
       .agg(sum(col("n")).as("c"))
     // one GROUPING SETS pass re-sums the cells at both grains
-    val leveled = cells
+    val leveled = sc.persist(cells
       .groupingSets(
         Seq(Seq(col("source"), col("j"), col("bkt")), Seq(col("j"), col("bkt"))),
         col("source"), col("j"), col("bkt"))
       .agg(sum(col("c")).as("c"), grouping(col("source")).as("lvl"))
       .select(col("lvl").cast("long").as("lvl"),
         coalesce(col("source"), lit("<all>")).as("source"),
-        col("j"), col("bkt"), col("c"))
-      .persist()
+        col("j"), col("bkt"), col("c")))
     // probe slate: global exact top-5 tokens (the q158 convention) —
     // a vocab-sized re-aggregation of the cached counts, not a pass
     val probes = tokCounts.groupBy(col("tok")).agg(sum(col("n")).as("n"))
@@ -2496,17 +2394,12 @@ object Corpus {
       .select(col("xlvl").cast("long").as("lvl"),
         coalesce(col("source"), lit("<all>")).as("source"),
         col("tok"), col("exact_cnt"))
-    val out = est.join(exacts, Seq("lvl", "source", "tok"), "left")
+    est.join(exacts, Seq("lvl", "source", "tok"), "left")
       .select(col("lvl"), col("source"), col("tok"),
         coalesce(col("exact_cnt"), lit(0L)).as("exact_cnt"),
         col("est_cnt"),
         (col("est_cnt") - coalesce(col("exact_cnt"), lit(0L))).as("over_err"))
       .orderBy(col("lvl"), col("source"), col("tok"))
-      .persist()
-    out.count()
-    tokCounts.unpersist(blocking = false)
-    leveled.unpersist(blocking = false)
-    out
   }
 
   /** q200: incremental statistics through STORAGE — the sketch-table
@@ -2532,9 +2425,8 @@ object Corpus {
       .filter(pmod(col("day"), lit(2L)) === parity)
       .groupBy(col("event_type"))
       .agg(graft.functions.KmvSketchAgg.sketch(col("x"), KmvK).as("sk"))
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_sketch_store").toFile
-    try {
+    Scope { sc =>
+      val store = sc.tempDir("graft_sketch_store")
       halfSketch(0).write.mode("overwrite")
         .parquet(new java.io.File(store, "history").toString)
       val history = s.read
@@ -2557,13 +2449,6 @@ object Corpus {
       // evicted (clearCache per the repo's LRU contract, executor loss)
       val rows = out.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(store)
     }
   }
 

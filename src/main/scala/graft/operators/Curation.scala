@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.streaming.UpsertSink
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
@@ -112,18 +112,17 @@ object Curation {
       corpus: DataFrame, benchmark: DataFrame, n: Int = DecontamN,
       maxBenchmarkGrams: Int = MaxBenchmarkGrams,
       maxBenchmarkGramBytes: Long = MaxBenchmarkGramBytes,
-      forceJoinPath: Option[Boolean] = None): DataFrame = {
+      forceJoinPath: Option[Boolean] = None): DataFrame = Scope { sc =>
     val s = corpus.sparkSession
     import s.implicits._
     // the gram frame is persisted so the guard aggregate and its
     // consumer (the collect OR the semi join) share one tokenization
-    // pass
-    val bgFrame = benchmark
+    // pass; the join path returns it lazily (LRU lifetime)
+    val bgFrame = sc.persist(benchmark
       .select(explode(graft.functions.TokenWindows.of(col("text"), n))
         .as("value"))
       .as[String]
-      .distinct()
-      .persist()
+      .distinct())
     // both gates run DISTRIBUTED over a LIMITed view: O(ceiling) rows
     // probed, never the full gram set. When the count gate passes, the
     // limit covers the whole set, so the byte sum is exact exactly
@@ -138,7 +137,6 @@ object Curation {
 
     val perSource: DataFrame = if (!joinPath) {
       val benchGrams = bgFrame.collect()
-      bgFrame.unpersist()
       val bc = s.sparkContext.broadcast(benchGrams.toSet)
       corpus
         .select(col("source"), col("text")).as[(String, String)]
@@ -163,7 +161,7 @@ object Curation {
         explode(graft.functions.TokenWindows.of(col("t"), n, distinct = true))
           .as("g"))
       val hits = cg
-        .join(bgFrame.toDF("g"), Seq("g"), "left_semi")
+        .join(sc.keep(bgFrame).toDF("g"), Seq("g"), "left_semi")
         .select(col("cid")).distinct()
         .withColumn("hit", lit(1L))
       byContent
@@ -393,27 +391,25 @@ object Curation {
     * [[Corpus.q52TermScores]]), zero wide shuffles beyond the range
     * partitioning itself.
     */
-  def packSequences(docs: DataFrame, budget: Int = PackBudget): DataFrame = {
+  def packSequences(docs: DataFrame, budget: Int = PackBudget): DataFrame = Scope { sc =>
     val s = docs.sparkSession
     import s.implicits._
     // persisted BEFORE the range exchange: the exchange's range-bound
     // sampling job plus the two passes below would otherwise each
     // re-tokenize the corpus; cached, tokenization runs once and the
     // cached frame is two longs per document — negligible storage.
-    // Lifetime contract as in [[Corpus.q52TermScores]].
-    val perDoc = docs
+    val perDoc = sc.persist(docs
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) => (id, tokenize(text).length.toLong) }
-      .toDF("doc_id", "n_tok")
-      .persist()
+      .toDF("doc_id", "n_tok"))
 
     // rangepartition + in-partition sort = globally ordered by doc_id
     // with the partition index encoding range order
-    val ordered = perDoc
+    // Lifetime contract as in [[Corpus.q52TermScores]].
+    val ordered = Scope.lru.persist(perDoc
       .repartitionByRange(col("doc_id"))
       .sortWithinPartitions(col("doc_id"))
-      .as[(Long, Long)]
-      .persist()
+      .as[(Long, Long)])
 
     val partSums = ordered
       .mapPartitions { it =>
@@ -427,7 +423,7 @@ object Curation {
     // consumed perDoc — release it rather than pinning a second copy
     // of the corpus-derived frame (a cache-evicted `ordered` partition
     // recomputes from docs; correctness unaffected)
-    perDoc.unpersist(blocking = false)
+    sc.release(perDoc)
     // exclusive prefix over the per-partition sums -> each partition's
     // global token offset
     val offsets = new Array[Long]((partSums.map(_._1).maxOption.getOrElse(-1)) + 1)
@@ -562,14 +558,14 @@ object Curation {
   def spanCoverage(docs: DataFrame, n: Int = SpanGram): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val perDocGram = docs.select(col("doc_id"),
+    val perDocGram = Scope.lru.persist(docs.select(col("doc_id"),
         posexplode(graft.functions.TokenWindows.of(col("text"), n)))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         md5(col("col").cast("binary")).as("gh"))
       .repartition(col("gh"))
       .groupBy(col("gh"), col("doc_id"))
-      .agg(count(lit(1)).as("k"), collect_list(col("pos")).as("ps"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("k"), collect_list(col("pos")).as("ps")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val totals = perDocGram.groupBy(col("gh")).agg(sum(col("k")).as("c"))
     val covered = perDocGram.join(totals, "gh")
       .filter(col("c") > 1)
@@ -734,15 +730,15 @@ object Curation {
     val s = docs.sparkSession
     import s.implicits._
     require(merges >= 1)
-    val dict = docs.select(col("text")).as[String]
+    // materialize the dict; truncate corpus lineage
+    val dict = Scope.lru.checkpoint(docs.select(col("text")).as[String]
       .flatMap(t => t.split(" ").iterator
         .filter(w => w.nonEmpty && w.forall(c => c >= 'a' && c <= 'z')))
       .toDF("w")
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .as[(String, Long)]
       .map { case (w, f) => (" " + w.map(_.toString).mkString("  ") + " ", f) }
-      .toDF("seq", "freq")
-      .localCheckpoint(true) // materialize the dict; truncate corpus lineage
+      .toDF("seq", "freq"), eager = true)
     // The merge LOOP runs over the vocab-bounded dict, never the
     // corpus — below [[BpeLocalMaxWords]] distinct words it solves in
     // the driver (identical string dynamics, see [[bpeMergeRowsLocal]])
@@ -844,9 +840,10 @@ object Curation {
         val pair = best(0).getString(0)
         acc += ((r.toLong, pair, best(0).getLong(1)))
         val Array(a, b) = pair.split(" ")
-        dict = dict
-          .withColumn("seq", replace(col("seq"), lit(s" $a  $b "), lit(s" $a$b ")))
-          .localCheckpoint(true) // per-round lineage truncation
+        // per-round lineage truncation
+        dict = Scope.lru.checkpoint(
+          dict.withColumn("seq", replace(col("seq"), lit(s" $a  $b "), lit(s" $a$b "))),
+          eager = true)
       }
     }
     acc.toSeq
@@ -945,13 +942,12 @@ object Curation {
     * deterministic (score desc, pair asc).
     */
   def pmiScores(
-      docs: DataFrame, k: Int = TopPmi, minCount: Int = PmiMinCount): DataFrame = {
+      docs: DataFrame, k: Int = TopPmi, minCount: Int = PmiMinCount): DataFrame = Scope.pinned { sc =>
     val s = docs.sparkSession
     import s.implicits._
-    val toks = docs.select(col("text")).as[String]
+    val toks = sc.persist(docs.select(col("text")).as[String]
       .flatMap(t => tokenize(t).iterator)
-      .toDF("tok")
-      .persist() // two consumers: unigram marginals and the total count
+      .toDF("tok")) // two consumers: unigram marginals and the total count
     val uni = toks.groupBy(col("tok")).agg(count(lit(1)).as("c1"))
     val total = toks.count() // N — the one scalar action; reads the cache
     val pairs = docs.select(col("text")).as[String]
@@ -962,7 +958,7 @@ object Curation {
       .toDF("x", "y")
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("cxy"))
       .filter(col("cxy") >= minCount)
-    val out = pairs
+    pairs
       .join(broadcast(uni.select(col("tok").as("x"), col("c1").as("cx"))), "x")
       .join(broadcast(uni.select(col("tok").as("y"), col("c1").as("cy"))), "y")
       // all-double arithmetic, NOT BIGINT products: N * cxy overflows
@@ -975,10 +971,6 @@ object Curation {
           (col("cx").cast("double") * col("cy").cast("double"))).as("pmi_ratio"))
       .orderBy(col("pmi_ratio").desc, col("pair").asc)
       .limit(k)
-      .persist()
-    out.count() // materialize so the token cache can be dropped now
-    toks.unpersist(blocking = false)
-    out
   }
 
   def q77PmiScores(s: SparkSession, d: String): DataFrame =
@@ -1253,26 +1245,24 @@ object Curation {
       corpus: DataFrame, benchmark: DataFrame, n: Int = ContainN,
       threshold: Double = ContainThreshold,
       maxBenchmarkGrams: Int = MaxBenchmarkGrams,
-      forceJoinPath: Option[Boolean] = None): DataFrame = {
+      forceJoinPath: Option[Boolean] = None): DataFrame = Scope { sc =>
     val s = corpus.sparkSession
     import s.implicits._
     // the gram-set frame is persisted so the size gate and its
     // consumer (the collect OR the inverted join) share one
     // tokenization pass; the gate runs DISTRIBUTED (same shape as
     // decontaminateStats') — gram sets never ship to the driver
-    // unless they fit
-    val bsFrame = benchmark
+    // unless they fit. Released on return: neither path's result reads it.
+    val bsFrame = sc.persist(benchmark
       .select(col("text")).as[String]
       .map(t => Curation.containGramSet(t, n))
-      .filter(g => g.length > 0)
-      .persist()
+      .filter(g => g.length > 0))
     val totalGrams = bsFrame.select(
       coalesce(sum(size(col("value"))), lit(0L))).as[Long].head()
     val joinPath = forceJoinPath.getOrElse(totalGrams > maxBenchmarkGrams)
 
     val perDoc: DataFrame = if (!joinPath) {
       val benchSets: Array[Array[Long]] = bsFrame.collect()
-      bsFrame.unpersist()
       val bc = s.sparkContext.broadcast(benchSets)
       corpus
         .select(col("source"), col("text")).as[(String, String)]
@@ -1323,11 +1313,10 @@ object Curation {
           }
         }
         .toDF("bid", "g", "blen")
-      val byContent = corpus
+      val byContent = Scope.lru.persist(corpus
         .select(col("source"), coalesce(col("text"), lit("")).as("t"))
         .groupBy(col("source"), col("t")).agg(count(lit(1)).as("n_copies"))
-        .withColumn("cid", md5(concat_ws("\u0000", col("source"), col("t"))))
-        .persist()
+        .withColumn("cid", md5(concat_ws("\u0000", col("source"), col("t")))))
       val cg = byContent.select(col("cid"), col("t")).as[(String, String)]
         .flatMap { case (cid, t) =>
           Curation.containGramSet(t, n).iterator.map(g => (cid, g))
@@ -1614,9 +1603,9 @@ object Curation {
     *
     * @return `(doc_id, source, n_tok, norm_tok)` ordered by doc_id.
     */
-  def quantileNormalize(stats: DataFrame): DataFrame = {
-    val rows = stats.select(col("doc_id"), col("source"), col("n_tok"))
-      .persist() // consumed by the pooled ranking AND the per-source legs
+  def quantileNormalize(stats: DataFrame): DataFrame = Scope.pinned { sc =>
+    // consumed by the pooled ranking AND the per-source legs
+    val rows = sc.persist(stats.select(col("doc_id"), col("source"), col("n_tok")))
     val n = rows.count()
     val pooled = globalRank(rows.select(col("doc_id").as("id"), col("n_tok").as("v")))
       .select(col("rank_g").as("p"), col("v").as("norm_tok"))
@@ -1625,12 +1614,9 @@ object Curation {
         .orderBy(col("n_tok"), col("doc_id"))).cast("long"))
       .withColumn("ns", count(lit(1)).over(Window.partitionBy(col("source"))))
       .withColumn("p", expr(s"(r * ${n}L + ns - 1) div ns"))
-    val out = perSource.join(pooled, Seq("p"))
+    perSource.join(pooled, Seq("p"))
       .select(col("doc_id"), col("source"), col("n_tok"), col("norm_tok"))
       .orderBy(col("doc_id"))
-    out.persist().count() // materialize eagerly before releasing the input
-    rows.unpersist(blocking = false)
-    out
   }
 
   /** Driver binding (q126): normalize token counts. */
@@ -2054,7 +2040,7 @@ object Curation {
     mixturePlanOf(Tables.documents(s, d))
 
   /** [[q205MixturePlan]] over any `(source, text)` frame. */
-  private[graft] def mixturePlanOf(docs: DataFrame): DataFrame = {
+  private[graft] def mixturePlanOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
     val perSrc = docs
       .select(col("source"),
         size(filter(split(coalesce(col("text"), lit("")), " "),
@@ -2073,11 +2059,10 @@ object Curation {
     // eagerly cached O(sources) rows: three consumers (W, T, the final
     // select) would otherwise each re-run the corpus aggregation —
     // same AQE broadcast-stage race that double-tokenized q202
-    val weighted = perSrc.withColumn("weight",
+    val weighted = sc.persist(perSrc.withColumn("weight",
       when((s0 + 1) * (s0 + 1) <= col("n_tokens"), s0 + 1)
         .when(s0 * s0 > col("n_tokens"), s0 - 1)
-        .otherwise(s0))
-      .persist()
+        .otherwise(s0)))
     weighted.count()
     val totals = weighted.agg(sum(col("weight")).as("w_sum"))
     val withW = weighted.crossJoin(broadcast(totals))
@@ -2087,7 +2072,7 @@ object Curation {
         s"""CAST(n_tokens AS DECIMAL(38,0)) * $MixtureEpochCap * w_sum
            | div weight""".stripMargin).as("t_max"))
       .agg(min(col("t_max")).as("t_budget"))
-    val out = withW.crossJoin(broadcast(budget))
+    withW.crossJoin(broadcast(budget))
       .select(col("source"), col("n_tokens"), col("weight"), col("w_sum"),
         col("t_budget"),
         expr("CAST(weight AS DECIMAL(38,0)) * t_budget div w_sum")
@@ -2101,11 +2086,6 @@ object Curation {
         (expr(s"CAST(n_tokens AS DECIMAL(38,0)) * $MixtureEpochCap * w_sum div weight")
           === col("t_budget")).as("binding"))
       .orderBy(col("source"))
-    // eagerly pin the O(sources) result, release the O(sources)
-    // intermediate — composition hygiene (the exactSubstrOf idiom)
-    out.persist().count()
-    weighted.unpersist(blocking = false)
-    out
   }
 
   /** Boilerplate document-frequency threshold, in tenths: a 3-gram
@@ -2154,7 +2134,7 @@ object Curation {
     boilerplateOf(Tables.documents(s, d))
 
   /** [[q206Boilerplate]] over any `(source, doc_id, text)` frame. */
-  private[graft] def boilerplateOf(docs: DataFrame): DataFrame = {
+  private[graft] def boilerplateOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
     val s = docs.sparkSession
     import s.implicits._
     val planted = docs.select(col("source"), col("doc_id"),
@@ -2177,16 +2157,15 @@ object Curation {
         array(lit(docMarker)))).as("gram"))
     // eagerly cached: the doc-count split and the gram stats both read
     // this aggregate — uncached, each consumer re-derives the corpus
-    val counts = gramRows.groupBy(col("source"), col("gram"))
-      .agg(count(lit(1)).as("df")) // per-doc distinct -> count = doc freq
-      .persist()
+    val counts = sc.persist(gramRows.groupBy(col("source"), col("gram"))
+      .agg(count(lit(1)).as("df"))) // per-doc distinct -> count = doc freq
     counts.count()
     val df = counts.filter(col("gram") =!= docMarker)
     val nd = counts.filter(col("gram") === docMarker)
       .select(col("source"), col("df").as("n_docs"))
     val flagged = df.join(broadcast(nd), "source")
       .withColumn("is_bp", col("df") * lit(10L) >= col("n_docs") * lit(BoilerplateDfTenths))
-    val out = flagged.groupBy(col("source"))
+    flagged.groupBy(col("source"))
       .agg(
         max(col("n_docs")).as("n_docs"), // constant per group
         count(lit(1)).as("n_distinct_grams"),
@@ -2197,11 +2176,6 @@ object Curation {
         col("n_boilerplate"), col("max_df"),
         col("top.gram").as("top_gram"))
       .orderBy(col("source"))
-    // eagerly pin the per-source result, release the vocabulary-sized
-    // gram-df cache — composition hygiene (the exactSubstrOf idiom)
-    out.persist().count()
-    counts.unpersist(blocking = false)
-    out
   }
 
   /** [[q196SplitManifest]] over any `(source, text, n_chars)` frame. */
@@ -2371,12 +2345,14 @@ object Curation {
     * operators in a longer session must not leak vocabulary-sized
     * cache blocks).
     */
-  private[graft] def exactSubstrReport(perSource0: DataFrame): DataFrame = {
-    val perSource = perSource0.persist()
+  private[graft] def exactSubstrReport(perSource0: DataFrame): DataFrame = Scope.pinned { sc =>
+    val perSource = sc.persist(perSource0)
     perSource.count() // materialize BEFORE the self-derived join reuses it
     val global = perSource.groupBy(col("k"))
       .agg(sum(col("df")).cast("long").as("total_docs"))
-    val out = perSource.join(global, "k") // vocab-sized both sides
+    // the pinned per-source result keeps an LRU lifetime; the
+    // vocabulary-sized input cache is what the scope releases
+    perSource.join(global, "k") // vocab-sized both sides
       .withColumn("is_dup", col("total_docs") >= 2L)
       .groupBy(col("source"))
       .agg(
@@ -2388,16 +2364,6 @@ object Curation {
       .select(col("source"), col("n_windows"), col("n_dup_windows"),
         col("dup_doc_mass"), col("max_docs"), col("top.win").as("top_win"))
       .orderBy(col("source"))
-    // per-source-sized (bounded) pin with deliberately LRU-only
-    // lifetime: a lazily RETURNED frame has no scope to unpersist in —
-    // the documented policy for such pins (see the Corpus.scala tf/df
-    // cache note) — so reclamation is cache eviction / clearCache; the
-    // harness clears per query, long-lived sessions evict. The
-    // vocabulary-sized input cache above is what must (and does) get
-    // an explicit release.
-    out.persist().count()
-    perSource.unpersist(blocking = false)
-    out
   }
 
   /** q210: [[q208ExactSubstr]] in its hashed (100 TB) key mode,
@@ -2496,13 +2462,8 @@ object Curation {
     * sized duplicated-window frame can be released before return.
     */
   private[graft] def exactSubstrDedupOf(
-      docs: DataFrame, hashKeys: Boolean = false): DataFrame = {
-    val (rw, release) = exactSubstrRewrite(docs, hashKeys)
-    val out = exactSubstrDedupRollup(rw)
-    out.persist().count() // pin the bounded rollup, then release
-    release()
-    out
-  }
+      docs: DataFrame, hashKeys: Boolean = false): DataFrame =
+    Scope.pinned { sc => exactSubstrDedupRollup(exactSubstrRewrite(sc, docs, hashKeys)) }
 
   /** The q209 per-source rollup over a document-grain rewrite frame —
     * shared by the one-shot transform ([[exactSubstrDedupOf]]) and the
@@ -2540,11 +2501,11 @@ object Curation {
     * instead of an ArrayIndexOutOfBounds that kills a 100 TB job
     * mid-run.
     *
-    * Returns the frame UNMATERIALIZED plus a release thunk for the
-    * one persisted intermediate (the duplicated-window frame): the
-    * caller materializes whatever bounded shape it needs (rollup,
-    * collect in a spec) and then releases — the rewrite itself is
-    * corpus-sized and must never be pinned here.
+    * Returns the frame UNMATERIALIZED; the one persisted intermediate
+    * (the duplicated-window frame) is owned by the caller's `sc`, which
+    * materializes whatever bounded shape it needs (rollup, collect in a
+    * spec) before the scope closes — the rewrite itself is corpus-sized
+    * and must never be pinned here.
     *
     * Scale shape — three corpus scans, each irreducible without an
     * O(L·corpus) occurrence cache (OnePassSpec pins exactly 3.0×):
@@ -2564,19 +2525,17 @@ object Curation {
     *      cut positions (co-partitioned shuffle on doc_id), covered
     *      tokens dropped in a single linear walk per document.
     * No step holds more than a document in memory at once; the only
-    * persisted state is the duplicated-window frame, released by the
-    * thunk. A window repeated only WITHIN one document (distinct doc
-    * count 1) is not duplicated — per-doc repeats of corpus-unique
-    * text are the q208 census rule carried over.
+    * persisted state is the duplicated-window frame, owned by `sc`
+    * (materialize the result before it closes). A window repeated only
+    * WITHIN one document (distinct doc count 1) is not duplicated —
+    * per-doc repeats of corpus-unique text are the q208 census rule
+    * carried over.
     */
   private[graft] def exactSubstrRewrite(
-      docs: DataFrame, hashKeys: Boolean = false)
-      : (DataFrame, () => Unit) = {
+      sc: Scope, docs: DataFrame, hashKeys: Boolean = false): DataFrame = {
     val planted = exactSubstrPlanted(docs)
-    val (dup, bloom, release) =
-      exactSubstrDupOf(exactSubstrOccState(docs, hashKeys))
-    val cuts = exactSubstrCuts(planted, dup, bloom, hashKeys)
-    (exactSubstrApplyCuts(planted, cuts), release)
+    val (dup, bloom) = exactSubstrDupOf(sc, exactSubstrOccState(docs, hashKeys))
+    exactSubstrApplyCuts(planted, exactSubstrCuts(planted, dup, bloom, hashKeys))
   }
 
   /** The planted `(source, doc_id, t)` document frame shared by every
@@ -2696,19 +2655,17 @@ object Curation {
     * ships as a broadcast HANDLE (the q54 discipline — a plan literal
     * would ride in every task binary); its bit array is bounded by
     * [[ExactSubstrBloomMaxBytes]] and it is None when even the clamped
-    * geometry can't prune ([[ExactSubstrBloomSkipFpp]]). Returns the
-    * release thunk for the one persisted intermediate.
+    * geometry can't prune ([[ExactSubstrBloomSkipFpp]]). The frame and
+    * the broadcast are owned by `sc`.
     */
   private[graft] def exactSubstrDupOf(
-      state: DataFrame,
+      sc: Scope, state: DataFrame,
       maxBloomBytes: Long = ExactSubstrBloomMaxBytes)
       : (DataFrame,
-         Option[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]],
-         () => Unit) = {
+         Option[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]]) = {
     val s = state.sparkSession
-    val dup = state.where(col("nd") >= 2L)
-      .select(col("k"), col("keep.doc_id").as("kd"), col("keep.pos").as("kp"))
-      .persist()
+    val dup = sc.persist(state.where(col("nd") >= 2L)
+      .select(col("k"), col("keep.doc_id").as("kd"), col("keep.pos").as("kp")))
     val nDup = dup.count() // materialize before anything probes it
     // optimal bit count for the target fpp: m = -n ln p / (ln 2)²
     val optBits =
@@ -2718,10 +2675,10 @@ object Curation {
     val capBits = maxBloomBytes * 8L
     val bcast =
       if (nDup == 0)
-        Some(s.sparkContext.broadcast(
+        Some(sc.broadcast(s,
           org.apache.spark.util.sketch.BloomFilter.create(1, ExactSubstrBloomFpp)))
       else if (optBits <= capBits)
-        Some(s.sparkContext.broadcast(
+        Some(sc.broadcast(s,
           dup.select(xxhash64(col("k")).as("kh"))
             .stat.bloomFilter("kh", nDup, ExactSubstrBloomFpp)))
       else if (bloomExpectedFpp(nDup, capBits) <= ExactSubstrBloomSkipFpp) {
@@ -2730,7 +2687,7 @@ object Curation {
           f"$nDup%d duplicated windows want ${(optBits + 7) / 8}%d bytes at " +
           f"fpp $ExactSubstrBloomFpp%.3f; degraded fpp ~" +
           f"${bloomExpectedFpp(nDup, capBits)}%.3f (prune still valid)")
-        Some(s.sparkContext.broadcast(
+        Some(sc.broadcast(s,
           dup.select(xxhash64(col("k")).as("kh"))
             .stat.bloomFilter("kh", nDup, capBits)))
       } else {
@@ -2741,7 +2698,7 @@ object Curation {
           "— census apply runs unpruned (correct, one full occurrence exchange)")
         None
       }
-    (dup, bcast, () => { dup.unpersist(blocking = false); () })
+    (dup, bcast)
   }
 
   /** Census apply: per-doc sorted cut positions of a planted batch
@@ -2884,37 +2841,31 @@ object Curation {
     * 3 passes per batch, the same 3× total as one-shot q209
     * (OnePassSpec pins it on separately-counted batch inputs). The
     * duplicated-window frame and its Bloom are built ONCE from the
-    * merged state and shared by every batch rewrite; the only persists
-    * are that frame and the bounded per-source rollup, both released
-    * here.
+    * merged state and shared by every batch rewrite; that frame is
+    * released here, once the bounded per-source rollup is pinned.
     */
   private[graft] def exactSubstrDedupIncrementalOf(
-      batches: Seq[DataFrame], hashKeys: Boolean = false): DataFrame = {
-    val (rw, release) = exactSubstrRewriteIncremental(batches, hashKeys)
-    val out = exactSubstrDedupRollup(rw)
-    out.persist().count() // pin the bounded rollup, then release
-    release()
-    out
-  }
+      batches: Seq[DataFrame], hashKeys: Boolean = false): DataFrame =
+    Scope.pinned { sc =>
+      exactSubstrDedupRollup(exactSubstrRewriteIncremental(sc, batches, hashKeys))
+    }
 
   /** The document-grain maintain-then-rewrite pipeline under
     * [[q213ExactSubstrIncDedup]] — same contract as
-    * [[exactSubstrRewrite]] (unmaterialized frame + release thunk for
-    * the shared duplicated-window persist), with the input arriving as
+    * [[exactSubstrRewrite]] (unmaterialized frame, the shared
+    * duplicated-window persist owned by `sc`), with the input arriving as
     * document-disjoint batches: states merged once, every batch
     * rewritten independently against the standing merged state.
     */
   private[graft] def exactSubstrRewriteIncremental(
-      batches: Seq[DataFrame], hashKeys: Boolean = false)
-      : (DataFrame, () => Unit) = {
+      sc: Scope, batches: Seq[DataFrame], hashKeys: Boolean = false): DataFrame = {
     require(batches.nonEmpty, "exactSubstrRewriteIncremental needs at least one batch")
     val state = exactSubstrOccMerge(batches.map(exactSubstrOccState(_, hashKeys)))
-    val (dup, bloom, release) = exactSubstrDupOf(state)
-    val rw = batches.map { b =>
+    val (dup, bloom) = exactSubstrDupOf(sc, state)
+    batches.map { b =>
       val planted = exactSubstrPlanted(b)
       exactSubstrApplyCuts(planted, exactSubstrCuts(planted, dup, bloom, hashKeys))
     }.reduce(_.unionByName(_))
-    (rw, release)
   }
 
   /** q219: the OPERATIONAL ingest loop — [[q213ExactSubstrIncDedup]]'s
@@ -2986,7 +2937,7 @@ object Curation {
     * for the merge) — fusing them halves the per-arrival state-join
     * work and the cache footprint.
     *
-    * Returns (cache handle to unpersist after the NEXT batch, merged
+    * Returns (cache handle `sc` releases after the NEXT batch, merged
     * state, changed windows). `nd` adds; `keep` is the running min
     * (`least()` skips the null side of an outer match). Changed =
     * batch-touched windows that crossed into duplication or whose
@@ -2994,13 +2945,12 @@ object Curation {
     * touched this window" (state rows never carry null nd).
     * HeavyPlanSpec pins the zero-exchange plan.
     */
-  private[graft] def exactSubstrStateMergeChanged(
+  private[graft] def exactSubstrStateMergeChanged(sc: Scope,
       prev: DataFrame, bState: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val m2 = prev.as("o").join(bState.as("b"), Seq("k"), "full_outer")
+    val m2 = sc.persist(prev.as("o").join(bState.as("b"), Seq("k"), "full_outer")
       .select(col("k"),
         col("o.nd").as("ond"), col("o.keep").as("okeep"),
-        col("b.nd").as("bnd"), col("b.keep").as("bkeep"))
-      .persist()
+        col("b.nd").as("bnd"), col("b.keep").as("bkeep")))
     val merged = m2.select(col("k"),
       (coalesce(col("ond"), lit(0L)) +
         coalesce(col("bnd"), lit(0L))).as("nd"),
@@ -3046,9 +2996,11 @@ object Curation {
       s.sparkContext.setJobDescription(label)
       try body finally s.sparkContext.setJobDescription(null)
     }
-    val store = keepStore.getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_substr_upsert").toFile)
-    try {
+    // one replay scope: the temp store plus every per-batch cache; the
+    // one-batch cache carry releases at the points below, the rest
+    // (and everything on an error path) when the scope closes
+    Scope { sc =>
+      val store = keepStore.getOrElse(sc.tempDir("graft_substr_upsert"))
       val sinkDir = new java.io.File(store, "sink").toString
       // append-only RAW originals store, partitioned by arrival batch —
       // the bronze layer a real ingest lands anyway. Repairs re-read
@@ -3066,7 +3018,7 @@ object Curation {
         // persisted (consumers: the fused state-merge join, and — at
         // v=0, where it IS the standing state — the dup build and the
         // next batch's merge)
-        val bState = exactSubstrOccState(batch, hashKeys).persist()
+        val bState = sc.persist(exactSubstrOccState(batch, hashKeys))
         // standing-state merge + changed-window set from ONE persisted
         // co-partitioned full outer join ([[exactSubstrStateMergeChanged]]
         // — HeavyPlanSpec pins the zero-exchange shape). Changed
@@ -3080,7 +3032,7 @@ object Curation {
         // counting a changed set v=0 never reads.
         val (m2Opt, merged, changedOpt) = prevState match {
           case Some(p) =>
-            val (m2, m, c) = exactSubstrStateMergeChanged(p, bState)
+            val (m2, m, c) = exactSubstrStateMergeChanged(sc, p, bState)
             (Some(m2), m, Some(c))
           case None => (None, bState, None)
         }
@@ -3107,8 +3059,8 @@ object Curation {
               orig.join(hit, Seq("doc_id"), "left_semi").unionByName(planted)
             }
         }
-        val (dup, bloom, release) = phase(s"q219 b$v: dup+bloom build")(
-          exactSubstrDupOf(merged))
+        val (dup, bloom) = phase(s"q219 b$v: dup+bloom build")(
+          exactSubstrDupOf(sc, merged))
         val up = exactSubstrApplyCuts(toRewrite,
             exactSubstrCuts(toRewrite, dup, bloom, hashKeys))
           .withColumn("v", lit(v.toLong))
@@ -3138,7 +3090,8 @@ object Curation {
           throw e
         }
         appendDone.join()
-        release()
+        sc.release(dup)
+        bloom.foreach(sc.release)
         // cache lifecycle: the fused join cache (or, at v=0, bState
         // itself) backs prevState for ONE more batch; everything else
         // from this batch is dead now. At v=0 bState must NOT be
@@ -3146,13 +3099,13 @@ object Curation {
         // silently recomputed batch 0's occurrence pass through an
         // un-partitioned plan (the co-partitioning contract lost).
         val carry = if (isLast) None else Some(m2Opt.getOrElse(bState))
-        if (m2Opt.isDefined || isLast) bState.unpersist(blocking = false)
-        m2Opt.filter(_ => isLast).foreach(_.unpersist(blocking = false))
-        prevCache.foreach(_.unpersist(blocking = false))
+        if (m2Opt.isDefined || isLast) sc.release(bState)
+        m2Opt.filter(_ => isLast).foreach(sc.release)
+        prevCache.foreach(sc.release)
         prevState = if (isLast) None else Some(merged)
         prevCache = carry
       }
-      prevCache.foreach(_.unpersist(blocking = false))
+      prevCache.foreach(sc.release)
       val fin = UpsertSink.readState(s, sinkDir).getOrElse(
         sys.error("upsert replay committed no sink state"))
       val out = exactSubstrDedupRollup(fin)
@@ -3161,15 +3114,6 @@ object Curation {
       // recompute through the deleted path on eviction)
       val rows = phase("q219: final rollup")(out.collect())
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally {
-      if (keepStore.isEmpty) {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(store)
-      }
     }
   }
 
@@ -3214,7 +3158,7 @@ object Curation {
   /** [[q216CurationRewritePipeline]] over any `(doc_id, source, text)`
     * frame (OnePassSpec pins the 3-scan contract on a counted input).
     */
-  private[graft] def curationRewritePipelineOf(docs0: DataFrame): DataFrame = {
+  private[graft] def curationRewritePipelineOf(docs0: DataFrame): DataFrame = Scope.pinned { sc =>
     val s = docs0.sparkSession
     import s.implicits._
     val docs = docs0
@@ -3226,11 +3170,11 @@ object Curation {
     val gated = docs.filter(col("n_tok").between(10L, 80L))
       .select(col("source"), col("doc_id"), col("text"))
     // stage 2: the ExactSubstr dedup transform over the gated corpus
-    val (rw, release) = exactSubstrRewrite(gated)
+    val rw = exactSubstrRewrite(sc, gated)
     // stages 3+4 fused: bounded per-source keeper set with payload
     val keep = new graft.functions.BottomKKeyedDocs[(String, String, Long, Long)](
       QuotaPerSource, x => (x._2, x._3, x._4))
-    val out = rw
+    rw
       .select(col("source"), md5(col("rewritten")).as("h"), col("doc_id"),
         (col("n_toks") - col("n_removed")).as("n_ret"))
       .as[(String, String, Long, Long)]
@@ -3242,8 +3186,5 @@ object Curation {
       }
       .toDF("source", "n_docs", "sum_tokens", "n_distinct_texts", "sig_max")
       .orderBy(col("source"))
-    out.persist().count() // pin the bounded rollup, then release
-    release()
-    out
   }
 }

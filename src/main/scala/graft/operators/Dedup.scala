@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 
 /** Deduplication operators for training-data pipelines.
@@ -214,10 +215,10 @@ object Dedup {
     graft.functions.FingerprintFunctions.register(s)
     import s.implicits._
     val docs = documents.select(col("doc_id"), col("text")).as[(Long, String)]
-    val withSh = docs.map { case (id, text) =>
+    val withSh = Scope.lru.persist(docs.map { case (id, text) =>
       val sh = shingles(if (text == null) "" else text) // crash-free on null docs
       (id, sh, minhashSignature(sh))
-    }.toDF("doc_id", "sh", "sig").cache()
+    }.toDF("doc_id", "sh", "sig"))
 
     val bands = withSh.select(col("doc_id"), col("sig"))
       .as[(Long, Array[Long])]
@@ -319,24 +320,24 @@ object Dedup {
     * Cache lifetime: the result (one row per source) is materialized
     * eagerly and persisted, and every intermediate (representative
     * signatures, hot-bucket list, candidates, benchmark signatures) is
-    * unpersisted before returning — no storage-memory residue outlives
-    * the call.
+    * released by the pinned scope before returning — no storage-memory
+    * residue outlives the call.
     */
   def crossCorpusNearDups(
       corpus: DataFrame, benchmark: DataFrame,
       threshold: Double = DupJaccardThreshold,
       bucketCap: Int = LshJoin.MaxBucket,
-      maxBroadcastCand: Long = MaxBroadcastCand): DataFrame = {
+      maxBroadcastCand: Long = MaxBroadcastCand): DataFrame = Scope.pinned { sc =>
     val s = corpus.sparkSession
     graft.functions.FingerprintFunctions.register(s) // sorted_intersect_count
     import s.implicits._
     require(bucketCap > 0, s"bucketCap must be positive, got $bucketCap")
 
-    val bsig = benchmark.select(col("doc_id"), col("text")).as[(Long, String)]
+    val bsig = sc.persist(benchmark.select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, t) =>
         val sh = shingles(if (t == null) "" else t)
         (id, sh, minhashSignature(sh))
-      }.toDF("bench_id", "bsh", "bsig").cache()
+      }.toDF("bench_id", "bsh", "bsig"))
     val bbands = bsig.select(col("bench_id"), col("bsig"))
       .as[(Long, Array[Long])]
       .flatMap { case (id, sig) =>
@@ -350,19 +351,18 @@ object Dedup {
     // re-run the md5 + groupBy + join over the full corpus
     val hashed = corpus.select(col("doc_id"), col("source"),
       md5(col("text").cast("binary")).as("h"))
-    val docRep = hashed.join(
+    val docRep = sc.persist(hashed.join(
       hashed.groupBy(col("h")).agg(min(col("doc_id")).as("rep")), "h")
-      .select(col("doc_id"), col("source"), col("rep"))
-      .persist()
+      .select(col("doc_id"), col("source"), col("rep")))
     val reps = corpus.select(col("doc_id"), col("text")).join(
       docRep.filter(col("doc_id") === col("rep")).select(col("doc_id")),
       Seq("doc_id"), "left_semi")
 
-    val rsig = reps.as[(Long, String)]
+    val rsig = sc.persist(reps.as[(Long, String)]
       .map { case (id, t) =>
         val sh = shingles(if (t == null) "" else t)
         (id, sh, minhashSignature(sh))
-      }.toDF("rep", "sh", "sig").cache()
+      }.toDF("rep", "sh", "sig"))
     val rbands = rsig.select(col("rep"), col("sig"))
       .as[(Long, Array[Long])]
       .flatMap { case (id, sig) =>
@@ -375,18 +375,16 @@ object Dedup {
     // the histogram groupBy, so only actual collisions are shuffled.
     val bKeys = bbands.select(col("band"), col("bh")).distinct()
     val probe = rbands.join(broadcast(bKeys), Seq("band", "bh"))
-    val hot = probe.groupBy(col("band"), col("bh"))
+    val hot = sc.persist(probe.groupBy(col("band"), col("bh"))
       .agg(countDistinct(col("rep")).as("n"))
-      .filter(col("n") > bucketCap)
-      .persist()
+      .filter(col("n") > bucketCap))
     val stats = hot.agg(
       count(lit(1)).as("n_dropped_buckets"),
       coalesce(sum(col("n")), lit(0L)).as("n_dropped_members"))
-    val cand = probe
+    val cand = sc.persist(probe
       .join(broadcast(hot.select(col("band"), col("bh"))), Seq("band", "bh"), "left_anti")
       .join(broadcast(bbands), Seq("band", "bh"))
-      .select(col("rep"), col("bench_id")).distinct()
-      .persist()
+      .select(col("rep"), col("bench_id")).distinct())
 
     // 3. guarded broadcast: the guard only needs to know whether cand
     // EXCEEDS the ceiling, not its exact size, so it probes
@@ -407,7 +405,7 @@ object Dedup {
       .groupBy(col("rep")).agg(max(col("j")).as("best_j"))
 
     // rollup: every doc inherits its representative's verdict
-    val out = docRep
+    docRep
       .join(sized(verified), Seq("rep"), "left")
       .select(col("source"),
         when(col("best_j") >= threshold, 1L).otherwise(0L).as("contam"),
@@ -420,14 +418,6 @@ object Dedup {
         max(col("bj")).as("max_jaccard"))
       .crossJoin(broadcast(stats))
       .orderBy(col("source"))
-      .persist()
-    out.count() // materialize the ~per-source-row result eagerly ...
-    rsig.unpersist() // ... so every intermediate can be released now
-    hot.unpersist()
-    cand.unpersist()
-    bsig.unpersist()
-    docRep.unpersist()
-    out
   }
 
   /** Driver binding for [[crossCorpusNearDups]]: the q58 stand-in eval
@@ -621,17 +611,15 @@ object Dedup {
     // assignment below — without the cache the corpus is scanned (and
     // md5'd) a third time just to re-derive a hash this frame already
     // holds. Lifetime: LRU/clearCache (the library contract).
-    val hashed = documents
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
-      .persist()
+    val hashed = Scope.lru.persist(documents
+      .select(col("doc_id"), md5(col("text").cast("binary")).as("h")))
     // persisted: feeds the representative semi-join, the node set and
     // the per-doc label attach — three consumers that would otherwise
     // each re-run the md5 + groupBy + join over the corpus. Lifetime:
     // LRU/clearCache (lazily returned frame, the library contract).
-    val docRep = hashed.join(
+    val docRep = Scope.lru.persist(hashed.join(
       hashed.groupBy(col("h")).agg(min(col("doc_id")).as("rep")), "h")
-      .select(col("doc_id"), col("rep"))
-      .persist()
+      .select(col("doc_id"), col("rep")))
     val reps = documents.join(
       docRep.filter(col("doc_id") === col("rep")).select(col("doc_id")),
       Seq("doc_id"), "left_semi")
@@ -645,9 +633,8 @@ object Dedup {
     // persisted: the sizes aggregate AND the final attach both read it,
     // and its lineage includes the whole CC iteration — recomputing that
     // is the expensive half of the query. LRU lifetime as above.
-    val docLabels = docRep.join(labels, docRep("rep") === labels("p"))
-      .select(col("doc_id"), col("lbl"))
-      .persist()
+    val docLabels = Scope.lru.persist(docRep.join(labels, docRep("rep") === labels("p"))
+      .select(col("doc_id"), col("lbl")))
     val sizes = docLabels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
     // the cluster label IS a doc_id (min-label components over min-id
     // reps), so the split hashes the LABEL doc's content — stable under
@@ -724,10 +711,10 @@ object Dedup {
     */
   def q21DedupSimhash(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val sigs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+    val sigs = Scope.lru.persist(Tables.documents(s, d).select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) => (id, simhash64(text)) }
-      .toDF("doc_id", "simhash").cache()
+      .toDF("doc_id", "simhash"))
 
     val chunks = sigs.as[(Long, Long)]
       .flatMap { case (id, sig) =>
@@ -821,11 +808,11 @@ object Dedup {
     // duplicate-evaluation trap, JVM-expression flavored — measured in
     // the q88 plan as gramhashes in both Filter and Project); filtered
     // on the CACHED column it is one size() probe per materialized row
-    val docGrams = docs.select(col("doc_id"),
+    val docGrams = Scope.lru.persist(docs.select(col("doc_id"),
         graft.functions.GramHashes.of(
           lower(coalesce(col("text"), lit(""))), 3,
-          distinct = true, sorted = true, wsSplit = true).as("grams"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          distinct = true, sorted = true, wsSplit = true).as("grams")),
+        StorageLevel.MEMORY_AND_DISK)
       .filter(size(col("grams")) > 0) // gram-free docs match nothing
 
     val dfreq = docGrams.select(explode(col("grams")).as("gram"))
@@ -838,13 +825,12 @@ object Dedup {
     // persisted: BOTH sides of the candidate self-join read this frame,
     // and its subtree (df join + rarity window) would otherwise run
     // twice. Lifetime contract as above.
-    val prefix = docGrams
+    val prefix = Scope.lru.persist(docGrams
       .select(col("doc_id"), size(col("grams")).as("n"), explode(col("grams")).as("gram"))
       .join(dfreq, "gram")
       .withColumn("r", row_number().over(byRarity))
       .filter(col("r") <= col("n") - ceil(lit(threshold) * col("n") - lit(1e-9)) + 1)
-      .select(col("gram"), col("doc_id"))
-      .persist()
+      .select(col("gram"), col("doc_id")))
 
     val cand = prefix.as("pa").join(prefix.as("pb"),
         col("pa.gram") === col("pb.gram") && col("pa.doc_id") < col("pb.doc_id"))
@@ -1048,12 +1034,12 @@ object Dedup {
     // populated by the first consumer, reclaimed by LRU eviction /
     // clearCache (a lazily returned DataFrame has no scope to
     // unpersist in).
-    val docGrams = Tables.documents(s, d)
+    val docGrams = Scope.lru.persist(Tables.documents(s, d)
       .select(col("doc_id"),
         graft.functions.GramHashes.of(
           lower(coalesce(col("text"), lit(""))), 3,
-          distinct = true, wsSplit = true).as("grams"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          distinct = true, wsSplit = true).as("grams")),
+      StorageLevel.MEMORY_AND_DISK)
 
     // drop ubiquitous grams (document frequency > MaxGramDf): per-doc
     // arrays are distinct, so this count IS the document frequency. The

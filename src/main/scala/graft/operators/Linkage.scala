@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -184,11 +184,12 @@ object Linkage {
     */
   def resolveEntities(
       probes: DataFrame, master: DataFrame, tau: Int,
-      probeIdOffset: Long): DataFrame = {
-    val matches = editDistanceJoin(probes, master, tau)
+      probeIdOffset: Long): DataFrame = Scope { sc =>
+    // consumed by nodes AND the symmetric closure; the components come
+    // back materialized, so the scope frees it on return
+    val matches = sc.persist(editDistanceJoin(probes, master, tau)
       .select((col("pid") + lit(probeIdOffset)).as("src"),
-        col("mid").as("dst"))
-      .persist() // consumed by nodes AND the symmetric closure; freed below
+        col("mid").as("dst")))
     val edges = matches.union(
       matches.select(col("dst").as("src"), col("src").as("dst")))
     val nodes = probes
@@ -196,7 +197,6 @@ object Linkage {
       .union(matches.select(col("dst").as("p")))
       .distinct()
     val labels = Corpus.connectedComponents(nodes, edges)
-    matches.unpersist(blocking = false)
     val sizes = labels.groupBy(col("lbl"))
       .agg(count(lit(1)).as("entity_size"))
     labels.join(sizes, "lbl")

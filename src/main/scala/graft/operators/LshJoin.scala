@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -80,10 +81,9 @@ object LshJoin {
     // frame has no scope to unpersist in, so reclamation is LRU
     // eviction / clearCache — the harness clears per query, long-lived
     // sessions evict
-    val hot = withB.groupBy(col("bucket"))
+    val hot = Scope.lru.persist(withB.groupBy(col("bucket"))
       .agg(countDistinct(col("id")).as("n"))
-      .filter(col("n") > cap)
-      .persist()
+      .filter(col("n") > cap))
     val stats = hot.agg(
       count(lit(1)).as("n_dropped_buckets"),
       coalesce(sum(col("n")), lit(0L)).as("n_dropped_members"))
@@ -159,24 +159,14 @@ object LshJoin {
     * Costs one extra aggregate over the (narrow) bucket frame vs the
     * single-pass generator; the hot list is tiny by construction and
     * broadcasts to both routes.
+    *
+    * The two persisted intermediates (the corpus-sized narrow bucket
+    * frame and the tiny hot-bucket list) are owned by `sc`: materialize
+    * the returned pair frame (or anything derived from it) before the
+    * scope closes — releasing earlier just re-derives the subtree.
     */
-  def exactBucketPairsRouted(
-      buckets: DataFrame, idCol: String, cap: Int, bucketCols: String*): DataFrame =
-    exactBucketPairsRoutedReleasable(buckets, idCol, cap, bucketCols: _*)._1
-
-  /** [[exactBucketPairsRouted]] plus a RELEASE THUNK for the two
-    * persisted intermediates (the corpus-sized narrow bucket frame and
-    * the tiny hot-bucket list) — the [[graft.operators.Curation]]
-    * `exactSubstrDupOf` discipline applied here: the bare overload
-    * leaves both to LRU eviction, which is fine for one-shot driver
-    * queries but accumulates pinned entries across repeated semDedup
-    * calls in a long-lived session. Call the thunk AFTER the returned
-    * pair frame (or anything derived from it) is materialized —
-    * releasing earlier just re-derives the subtree.
-    */
-  def exactBucketPairsRoutedReleasable(
-      buckets: DataFrame, idCol: String, cap: Int, bucketCols: String*)
-      : (DataFrame, () => Unit) = {
+  def exactBucketPairsRouted(sc: Scope,
+      buckets: DataFrame, idCol: String, cap: Int, bucketCols: String*): DataFrame = {
     val s = buckets.sparkSession
     buckets.schema(idCol).dataType match {
       case ByteType | ShortType | IntegerType | LongType => ()
@@ -187,18 +177,15 @@ object LshJoin {
     // route) would otherwise each re-derive the upstream subtree — for
     // semDedup that is the full embeddings scan + quantization, tripled.
     // Narrow (id + bucket), spills under MEMORY_AND_DISK; lifetime is
-    // the caller's via the returned release thunk (LRU if the caller
-    // came through the bare exactBucketPairsRouted overload)
-    val withB = buckets.select(
-      col(idCol).cast(LongType).as("id"), struct(bucketCols.map(col): _*).as("bucket"))
-      .persist()
+    // the caller's scope
+    val withB = sc.persist(buckets.select(
+      col(idCol).cast(LongType).as("id"), struct(bucketCols.map(col): _*).as("bucket")))
     // tiny by construction (<= rows/cap buckets); persisted so the
     // histogram subtree runs once for both routes
-    val hot = withB.groupBy(col("bucket"))
+    val hot = sc.persist(withB.groupBy(col("bucket"))
       .agg(countDistinct(col("id")).as("n"))
       .filter(col("n") > cap)
-      .select(col("bucket"))
-      .persist()
+      .select(col("bucket")))
     val small = withB.join(broadcast(hot), Seq("bucket"), "left_anti")
     // every surviving bucket holds <= cap distinct ids: the require can
     // only fire on a histogram/anti-join inconsistency (a real bug)
@@ -209,8 +196,7 @@ object LshJoin {
       .join(hotRows.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"))
-    (smallPairs.unionByName(hotPairs),
-      () => { withB.unpersist(blocking = false); hot.unpersist(blocking = false); () })
+    smallPairs.unionByName(hotPairs)
   }
 
   private def exactPairsCore(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -596,16 +596,15 @@ object Relational {
       .select(col("event_type"), col("value").cast("double").as("v")))
 
   /** [[q168HistMerge]] over any `(event_type, v: double)` frame. */
-  private[operators] def histMergeOf(ev: DataFrame): DataFrame = {
+  private[operators] def histMergeOf(ev: DataFrame): DataFrame = Scope.pinned { sc =>
     val b = lit(HistBins.toDouble)
     val bounds = ev.agg(min(col("v")).as("vmin"), max(col("v")).as("vmax"))
-    val binned = ev.crossJoin(broadcast(bounds))
+    val binned = sc.persist(ev.crossJoin(broadcast(bounds))
       .withColumn("bin", when(col("vmax") === col("vmin"), lit(0L))
         .otherwise(least(
           floor((col("v") - col("vmin")) * b / (col("vmax") - col("vmin"))).cast("long"),
           lit(HistBins - 1L))))
-      .groupBy(col("event_type"), col("bin")).agg(count(lit(1)).as("c"))
-      .persist()
+      .groupBy(col("event_type"), col("bin")).agg(count(lit(1)).as("c")))
     // THE MERGE: the global histogram is the cell-wise sum of the
     // per-scope histograms (shared bin space makes this exact)
     val cells = binned.select(col("event_type").as("scope"), col("bin"), col("c"))
@@ -623,14 +622,10 @@ object Relational {
       .crossJoin(broadcast(bounds))
     def edge(c: Column) =
       col("vmin") + (c + lit(1L)).cast("double") * ((col("vmax") - col("vmin")) / b)
-    val out = picks.select(col("scope"), col("n"),
+    picks.select(col("scope"), col("n"),
         edge(col("b50")).as("p50_est"), edge(col("b95")).as("p95_est"),
         edge(col("b99")).as("p99_est"))
       .orderBy(col("scope"))
-      .persist()
-    out.count()
-    binned.unpersist(blocking = false)
-    out
   }
 
   /** Correlated-style scalar-subquery filter: customers whose average
@@ -733,10 +728,9 @@ object Relational {
     require(k >= 1, s"k must be >= 1, got $k")
     val s = scored.sparkSession
     import s.implicits._
-    val ordered = scored.select(col("score"), col("id")).as[(Long, Long)]
+    val ordered = Scope.lru.persist(scored.select(col("score"), col("id")).as[(Long, Long)]
       .repartitionByRange(col("score"), col("id"))
-      .sortWithinPartitions(col("score"), col("id"))
-      .persist() // lifetime contract as in [[Curation.packSequences]]
+      .sortWithinPartitions(col("score"), col("id"))) // lifetime as in [[Curation.packSequences]]
     val partCounts = ordered
       .mapPartitions { it =>
         var n = 0L

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -111,10 +111,9 @@ object Scoring {
     // unigram marginals persist because TWO consumers need them — the
     // vocabulary count V (an action) and the scoring join — and without
     // the cache each would re-tokenize the training half
-    val uni = train.select(col("text")).as[String]
+    val uni = Scope.lru.persist(train.select(col("text")).as[String]
       .flatMap(t => tokenize(t).iterator).toDF("tok")
-      .groupBy(col("tok")).agg(count(lit(1)).as("cx"))
-      .persist()
+      .groupBy(col("tok")).agg(count(lit(1)).as("cx")))
     val vocabV = uni.count() // the one driver scalar: vocabulary-sized
     val bi = train.select(col("text")).as[String]
       .flatMap(t => bigrams(tokenize(t))).toDF("x", "y")
@@ -170,11 +169,10 @@ object Scoring {
     val train = docs.filter(isTrain)
     // (class, token) counts persist for the same two-consumer reason as
     // lmScore's uni: V needs an action, the scoring join needs the rows
-    val clsTok = train.select(col(labelCol), col("text")).as[(String, String)]
+    val clsTok = Scope.lru.persist(train.select(col(labelCol), col("text")).as[(String, String)]
       .flatMap { case (c, t) => tokenize(t).iterator.map(tok => (c, tok)) }
       .toDF("cls", "tok")
-      .groupBy(col("cls"), col("tok")).agg(count(lit(1)).as("ctc"))
-      .persist()
+      .groupBy(col("cls"), col("tok")).agg(count(lit(1)).as("ctc")))
     val vocabV = clsTok.select(col("tok")).distinct().count()
     val classes = train.groupBy(col(labelCol).as("cls")).agg(count(lit(1)).as("dc"))
     val clsTot = clsTok.groupBy(col("cls")).agg(sum(col("ctc")).as("nc"))

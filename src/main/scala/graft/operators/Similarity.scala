@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -227,21 +227,15 @@ object Similarity {
       .withColumn("bucket", bucket)
   }
 
-  def semDedup(emb: DataFrame,
-      signBits: Int = SemDedupSignBits,
-      threshold: Double = SemDedupThreshold): DataFrame =
-    semDedupReleasable(emb, signBits, threshold)._1
-
-  /** [[semDedup]] plus the release thunk for the routed pair
-    * generator's two persisted intermediates — long-lived sessions that
-    * call semDedup repeatedly should use this form and release after
-    * materializing the result, or the pinned (corpus-sized, narrow)
-    * bucket frames accumulate until LRU pressure. One-shot driver
-    * queries can keep the bare overload (JVM teardown releases).
+  /** The routed pair generator's two persisted intermediates (the
+    * corpus-sized, narrow bucket frames) are owned by `sc`: long-lived
+    * sessions that call semDedup repeatedly pass a releasing scope and
+    * materialize the result inside it; one-shot driver queries pass
+    * [[Scope.lru]].
     */
-  def semDedupReleasable(emb: DataFrame,
+  def semDedup(sc: Scope, emb: DataFrame,
       signBits: Int = SemDedupSignBits,
-      threshold: Double = SemDedupThreshold): (DataFrame, () => Unit) = {
+      threshold: Double = SemDedupThreshold): DataFrame = {
     val q = semDedupBucketed(emb, signBits)
     // pair generation through the ROUTED exact generator (the r18
     // advice item): buckets <= the cap take the collect_list fan-out,
@@ -255,7 +249,7 @@ object Similarity {
     // twice). Partition precondition (each vector has ONE sign
     // signature) pinned by SimilaritySpec, so no cross-bucket pair can
     // repeat and no pair-level dedup shuffle is needed
-    val (pr, release) = graft.operators.LshJoin.exactBucketPairsRoutedReleasable(
+    val pr = graft.operators.LshJoin.exactBucketPairsRouted(sc,
       q.select(col("vec_id"), col("bucket")),
       "vec_id", SemDedupMaxBucket, "bucket")
     val pairs = pr
@@ -267,12 +261,11 @@ object Similarity {
       .withColumn("cosine", dot(col("qa"), col("qb")).cast("double") /
         sqrt(col("na").cast("double") * col("nb").cast("double")))
       .filter(col("cosine") >= threshold)
-    val out = pairs
+    pairs
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("b")).orderBy(col("a"))))
       .filter(col("rn") === 1)
       .select(col("b").as("dropped_id"), col("a").as("kept_id"), col("cosine"))
-    (out, release)
   }
 
   /** Driver binding: the embeddings table plus planted near-copies —
@@ -290,7 +283,7 @@ object Similarity {
       .select((col("vec_id") + 10000).as("vec_id"),
         transform(col("embedding"),
           x => (x.cast("double") * lit(1.0009765625)).cast("float")).as("embedding"))
-    semDedup(emb.select(col("vec_id"), col("embedding")).unionByName(planted))
+    semDedup(Scope.lru, emb.select(col("vec_id"), col("embedding")).unionByName(planted))
       .orderBy(col("dropped_id"))
   }
 
@@ -572,39 +565,40 @@ object Similarity {
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
     if (seeds.isEmpty) return seeds
 
-    // deterministic training sample: membership is a pure function of
-    // the id, stable under repartitioning and retries; only this
-    // sample is cached for the Lloyd rounds — the corpus never is
-    val sampled = q0.filter(
-      expr("cast(conv(substring(md5(cast(cast(vec_id as string) as binary)), 1, 4), 16, 10) as bigint)")
-        % IvfSampleMod === 0).persist()
-    // tiny corpora can miss the hash range entirely — train on the
-    // full (still small) frame then
-    val train = (if (sampled.isEmpty) q0 else sampled)
-      .withColumn("qn", dot(col("q"), col("q")))
+    Scope { sc =>
+      // deterministic training sample: membership is a pure function of
+      // the id, stable under repartitioning and retries; only this
+      // sample is cached for the Lloyd rounds — the corpus never is
+      val sampled = sc.persist(q0.filter(
+        expr("cast(conv(substring(md5(cast(cast(vec_id as string) as binary)), 1, 4), 16, 10) as bigint)")
+          % IvfSampleMod === 0))
+      // tiny corpora can miss the hash range entirely — train on the
+      // full (still small) frame then
+      val train = (if (sampled.isEmpty) q0 else sampled)
+        .withColumn("qn", dot(col("q"), col("q")))
 
-    var cents = seeds
-    var it = 0
-    while (it < IvfIters) {
-      cents = train
-        .crossJoin(centFrame(s, cents))
-        .select(col("vec_id"), col("q"),
-          struct(
-            (col("qn") - lit(2L) * dot(col("q"), col("c")) + col("cn")).as("d2"),
-            col("cell")).as("dc"))
-        .groupBy(col("vec_id"))
-        .agg(min(col("dc")).as("best"), first(col("q")).as("q"))
-        .select(col("best.cell").as("cell"), col("q"))
-        .groupBy(col("cell"))
-        .agg(count(lit(1)).as("n"),
-          array((0 until EmbedDims).map(i => sum(col("q")(i))): _*).as("sums"))
-        .select(col("cell"), expr("transform(sums, s -> s div n)").as("c"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-        .sortBy(_._1)
-      it += 1
+      var cents = seeds
+      var it = 0
+      while (it < IvfIters) {
+        cents = train
+          .crossJoin(centFrame(s, cents))
+          .select(col("vec_id"), col("q"),
+            struct(
+              (col("qn") - lit(2L) * dot(col("q"), col("c")) + col("cn")).as("d2"),
+              col("cell")).as("dc"))
+          .groupBy(col("vec_id"))
+          .agg(min(col("dc")).as("best"), first(col("q")).as("q"))
+          .select(col("best.cell").as("cell"), col("q"))
+          .groupBy(col("cell"))
+          .agg(count(lit(1)).as("n"),
+            array((0 until EmbedDims).map(i => sum(col("q")(i))): _*).as("sums"))
+          .select(col("cell"), expr("transform(sums, s -> s div n)").as("c"))
+          .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+          .sortBy(_._1)
+        it += 1
+      }
+      cents
     }
-    sampled.unpersist(blocking = false)
-    cents
   }
 
   /** Full-corpus assignment against final centroids: the corpus
@@ -726,141 +720,139 @@ object Similarity {
     if (cents.isEmpty)
       return Seq.empty[(Long, Long, Long, Long)]
         .toDF("probe_id", "vec_id", "adist", "rnk")
-    val centMap = cents.toMap
-    val m = PqReplaySubspaces
-    val dsub = EmbedDims / m
+    Scope.pinned { sc =>
+      val centMap = cents.toMap
+      val m = PqReplaySubspaces
+      val dsub = EmbedDims / m
 
-    // persisted: the training cut, the encode pass, and the final
-    // candidate join all read the assignment; released after the
-    // eager materialization below
-    val assigned = assignToCells(q0, cents).persist()
+      // persisted: the training cut, the encode pass, and the final
+      // candidate join all read the assignment; released after the
+      // eager materialization below
+      val assigned = sc.persist(assignToCells(q0, cents))
 
-    // bounded training cut with assigned cells (driver-side Lloyd on
-    // PqReplayTrainCap x 64 longs, the q116 discipline — scheduling
-    // latency of distributed fits dwarfs 16-centroid integer math)
-    val cut = assigned
-      .withColumn("h", md5(col("vec_id").cast("string").cast("binary")))
-      .orderBy(col("h"), col("vec_id")).limit(PqReplayTrainCap)
-      .select(col("vec_id"), col("cell"), col("q"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toArray))
-    val resiCut: Array[(Long, Array[Long])] = cut.map { case (vid, cell, q) =>
-      val c = centMap(cell)
-      (vid, Array.tabulate(EmbedDims)(i => q(i) - c(i)))
-    }
-
-    // per-subspace integer Lloyd, mirroring the SQL chain exactly:
-    // argmin by slice squared-L2 (ties -> smaller code id), update by
-    // truncating division (Long / truncates toward zero = Spark div =
-    // the oracle's sign-CASE over //), empty codes drop
-    def lloydSub(mi: Int): Array[(Long, Array[Long])] = {
-      val lo = mi * dsub
-      def slice(r: Array[Long]) = java.util.Arrays.copyOfRange(r, lo, lo + dsub)
-      var books: Array[(Long, Array[Long])] =
-        resiCut.take(PqCodebookSize).map { case (vid, r) => (vid, slice(r)) }
-      var it = 0
-      while (it < PqReplayIters) {
-        val agg = scala.collection.mutable.LinkedHashMap[Long, (Array[Long], Long)]()
-        resiCut.foreach { case (_, r) =>
-          val sl = slice(r)
-          var bestKey = Long.MaxValue
-          var bestD = Long.MaxValue
-          books.foreach { case (key, c) =>
-            var d = 0L; var i = 0
-            while (i < dsub) { val t = sl(i) - c(i); d += t * t; i += 1 }
-            if (d < bestD || (d == bestD && key < bestKey)) { bestD = d; bestKey = key }
-          }
-          val (sums, n) = agg.getOrElseUpdate(bestKey, (new Array[Long](dsub), 0L))
-          var i = 0
-          while (i < dsub) { sums(i) += sl(i); i += 1 }
-          agg(bestKey) = (sums, n + 1)
-        }
-        books = agg.toArray.sortBy(_._1).map { case (key, (sums, n)) =>
-          (key, sums.map(_ / n))
-        }
-        it += 1
-      }
-      books
-    }
-    val books: Array[Array[(Long, Array[Long])]] =
-      Array.tabulate(m)(lloydSub)
-
-    // encode: ONE typed pass over the assigned corpus -> integer codes
-    val bcCents = s.sparkContext.broadcast(centMap)
-    val bcBooks = s.sparkContext.broadcast(books)
-    val encoded = assigned
-      .select(col("vec_id"), col("cell"), col("q"))
-      .as[(Long, Long, Seq[Long])]
-      .map { case (vid, cell, qSeq) =>
-        val q = qSeq.toArray
-        val c = bcCents.value(cell)
-        val codes = new Array[Long](m)
-        var mi = 0
-        while (mi < m) {
-          val lo = mi * dsub
-          var bestKey = Long.MaxValue
-          var bestD = Long.MaxValue
-          bcBooks.value(mi).foreach { case (key, cb) =>
-            var d = 0L; var i = 0
-            while (i < dsub) {
-              val t = (q(lo + i) - c(lo + i)) - cb(i); d += t * t; i += 1
-            }
-            if (d < bestD || (d == bestD && key < bestKey)) { bestD = d; bestKey = key }
-          }
-          codes(mi) = bestKey
-          mi += 1
-        }
-        (vid, cell, codes.toSeq)
-      }.toDF("vec_id", "cell", "codes")
-
-    // probes: bounded collect; cell ranking + integer ADC lookup
-    // tables driver-built (probes x nprobe x m x 16 longs)
-    val probes = q0.filter(col("vec_id") < 10).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val nprobe = math.min(IvfNprobe, cents.length)
-    val probeCells: Seq[(Long, Long)] = probes.toSeq.flatMap { case (pid, pq) =>
-      cents.map { case (cell, c) =>
-        var d = 0L; var i = 0
-        while (i < EmbedDims) { val t = pq(i) - c(i); d += t * t; i += 1 }
-        (d, cell)
-      }.sorted.take(nprobe).map { case (_, cell) => (pid, cell) }.toSeq
-    }
-    val lut: Map[(Long, Long, Int, Long), Long] =
-      probeCells.flatMap { case (pid, cell) =>
-        val pq = probes.find(_._1 == pid).get._2
+      // bounded training cut with assigned cells (driver-side Lloyd on
+      // PqReplayTrainCap x 64 longs, the q116 discipline — scheduling
+      // latency of distributed fits dwarfs 16-centroid integer math)
+      val cut = assigned
+        .withColumn("h", md5(col("vec_id").cast("string").cast("binary")))
+        .orderBy(col("h"), col("vec_id")).limit(PqReplayTrainCap)
+        .select(col("vec_id"), col("cell"), col("q"))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toArray))
+      val resiCut: Array[(Long, Array[Long])] = cut.map { case (vid, cell, q) =>
         val c = centMap(cell)
-        (0 until m).flatMap { mi =>
-          val lo = mi * dsub
-          books(mi).map { case (key, cb) =>
-            var d = 0L; var i = 0
-            while (i < dsub) {
-              val t = (pq(lo + i) - c(lo + i)) - cb(i); d += t * t; i += 1
-            }
-            ((pid, cell, mi, key), d)
-          }
-        }
-      }.toMap
-    val bcLut = s.sparkContext.broadcast(lut)
-    val probeCellDf = probeCells.toDF("probe_id", "cell")
+        (vid, Array.tabulate(EmbedDims)(i => q(i) - c(i)))
+      }
 
-    val out = encoded.join(broadcast(probeCellDf), Seq("cell"))
-      .filter(col("probe_id") =!= col("vec_id"))
-      .select(col("probe_id"), col("vec_id"), col("cell"), col("codes"))
-      .as[(Long, Long, Long, Seq[Long])]
-      .map { case (pid, vid, cell, codes) =>
-        var d = 0L; var mi = 0
-        while (mi < m) { d += bcLut.value((pid, cell, mi, codes(mi))); mi += 1 }
-        (pid, vid, d)
-      }.toDF("probe_id", "vec_id", "adist")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("probe_id"))
-          .orderBy(col("adist").asc, col("vec_id"))).cast("long"))
-      .filter(col("rnk") <= k)
-      .orderBy(col("probe_id"), col("rnk"))
-      .persist()
-    out.count()
-    assigned.unpersist(blocking = false)
-    out
+      // per-subspace integer Lloyd, mirroring the SQL chain exactly:
+      // argmin by slice squared-L2 (ties -> smaller code id), update by
+      // truncating division (Long / truncates toward zero = Spark div =
+      // the oracle's sign-CASE over //), empty codes drop
+      def lloydSub(mi: Int): Array[(Long, Array[Long])] = {
+        val lo = mi * dsub
+        def slice(r: Array[Long]) = java.util.Arrays.copyOfRange(r, lo, lo + dsub)
+        var books: Array[(Long, Array[Long])] =
+          resiCut.take(PqCodebookSize).map { case (vid, r) => (vid, slice(r)) }
+        var it = 0
+        while (it < PqReplayIters) {
+          val agg = scala.collection.mutable.LinkedHashMap[Long, (Array[Long], Long)]()
+          resiCut.foreach { case (_, r) =>
+            val sl = slice(r)
+            var bestKey = Long.MaxValue
+            var bestD = Long.MaxValue
+            books.foreach { case (key, c) =>
+              var d = 0L; var i = 0
+              while (i < dsub) { val t = sl(i) - c(i); d += t * t; i += 1 }
+              if (d < bestD || (d == bestD && key < bestKey)) { bestD = d; bestKey = key }
+            }
+            val (sums, n) = agg.getOrElseUpdate(bestKey, (new Array[Long](dsub), 0L))
+            var i = 0
+            while (i < dsub) { sums(i) += sl(i); i += 1 }
+            agg(bestKey) = (sums, n + 1)
+          }
+          books = agg.toArray.sortBy(_._1).map { case (key, (sums, n)) =>
+            (key, sums.map(_ / n))
+          }
+          it += 1
+        }
+        books
+      }
+      val books: Array[Array[(Long, Array[Long])]] =
+        Array.tabulate(m)(lloydSub)
+
+      // encode: ONE typed pass over the assigned corpus -> integer codes
+      val bcCents = sc.broadcast(s, centMap)
+      val bcBooks = sc.broadcast(s, books)
+      val encoded = assigned
+        .select(col("vec_id"), col("cell"), col("q"))
+        .as[(Long, Long, Seq[Long])]
+        .map { case (vid, cell, qSeq) =>
+          val q = qSeq.toArray
+          val c = bcCents.value(cell)
+          val codes = new Array[Long](m)
+          var mi = 0
+          while (mi < m) {
+            val lo = mi * dsub
+            var bestKey = Long.MaxValue
+            var bestD = Long.MaxValue
+            bcBooks.value(mi).foreach { case (key, cb) =>
+              var d = 0L; var i = 0
+              while (i < dsub) {
+                val t = (q(lo + i) - c(lo + i)) - cb(i); d += t * t; i += 1
+              }
+              if (d < bestD || (d == bestD && key < bestKey)) { bestD = d; bestKey = key }
+            }
+            codes(mi) = bestKey
+            mi += 1
+          }
+          (vid, cell, codes.toSeq)
+        }.toDF("vec_id", "cell", "codes")
+
+      // probes: bounded collect; cell ranking + integer ADC lookup
+      // tables driver-built (probes x nprobe x m x 16 longs)
+      val probes = q0.filter(col("vec_id") < 10).collect()
+        .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+      val nprobe = math.min(IvfNprobe, cents.length)
+      val probeCells: Seq[(Long, Long)] = probes.toSeq.flatMap { case (pid, pq) =>
+        cents.map { case (cell, c) =>
+          var d = 0L; var i = 0
+          while (i < EmbedDims) { val t = pq(i) - c(i); d += t * t; i += 1 }
+          (d, cell)
+        }.sorted.take(nprobe).map { case (_, cell) => (pid, cell) }.toSeq
+      }
+      val lut: Map[(Long, Long, Int, Long), Long] =
+        probeCells.flatMap { case (pid, cell) =>
+          val pq = probes.find(_._1 == pid).get._2
+          val c = centMap(cell)
+          (0 until m).flatMap { mi =>
+            val lo = mi * dsub
+            books(mi).map { case (key, cb) =>
+              var d = 0L; var i = 0
+              while (i < dsub) {
+                val t = (pq(lo + i) - c(lo + i)) - cb(i); d += t * t; i += 1
+              }
+              ((pid, cell, mi, key), d)
+            }
+          }
+        }.toMap
+      val bcLut = sc.broadcast(s, lut)
+      val probeCellDf = probeCells.toDF("probe_id", "cell")
+
+      encoded.join(broadcast(probeCellDf), Seq("cell"))
+        .filter(col("probe_id") =!= col("vec_id"))
+        .select(col("probe_id"), col("vec_id"), col("cell"), col("codes"))
+        .as[(Long, Long, Long, Seq[Long])]
+        .map { case (pid, vid, cell, codes) =>
+          var d = 0L; var mi = 0
+          while (mi < m) { d += bcLut.value((pid, cell, mi, codes(mi))); mi += 1 }
+          (pid, vid, d)
+        }.toDF("probe_id", "vec_id", "adist")
+        .withColumn("rnk", row_number().over(
+          Window.partitionBy(col("probe_id"))
+            .orderBy(col("adist").asc, col("vec_id"))).cast("long"))
+        .filter(col("rnk") <= k)
+        .orderBy(col("probe_id"), col("rnk"))
+    }
   }
 
   /** Embedding-cosine near-dup detection: hyperplane-LSH candidates,
@@ -1009,138 +1001,139 @@ object Similarity {
         Seq.empty[(Long, Long, Double, Long)].toDF("probe_id", "vec_id", "adist", "rnk"))
     }
 
-    val emb = embRaw.select(col("vec_id"), col("embedding"))
-      .withColumn("features", array_to_vector(col("embedding")))
+    Scope { sc =>
+      val emb = embRaw.select(col("vec_id"), col("embedding"))
+        .withColumn("features", array_to_vector(col("embedding")))
 
-    // coarse quantizer on the deterministic content-hash sample — the
-    // q43 idiom: only the sample is cached and iterated, the corpus
-    // streams once downstream
-    val sampled = emb
-      .filter(pmod(xxhash64(col("vec_id")), lit(4)) === 0)
-      .cache()
-    val fitSample = if (sampled.isEmpty) emb else sampled
-    val coarse = new KMeans().setK(16).setSeed(42).setMaxIter(5)
-      .setFeaturesCol("features").setPredictionCol("cell")
-      .fit(fitSample.select(col("features")))
-    val centers = coarse.clusterCenters.map(_.toArray)
-    val dim = centers(0).length
-    val m = PqSubspaces
-    require(dim % m == 0, s"dim $dim not divisible by $m subspaces")
-    val dsub = dim / m
-    val bcCenters = s.sparkContext.broadcast(centers)
+      // coarse quantizer on the deterministic content-hash sample — the
+      // q43 idiom: only the sample is cached and iterated, the corpus
+      // streams once downstream
+      val sampled = sc.persist(emb
+        .filter(pmod(xxhash64(col("vec_id")), lit(4)) === 0))
+      val fitSample = if (sampled.isEmpty) emb else sampled
+      val coarse = new KMeans().setK(16).setSeed(42).setMaxIter(5)
+        .setFeaturesCol("features").setPredictionCol("cell")
+        .fit(fitSample.select(col("features")))
+      val centers = coarse.clusterCenters.map(_.toArray)
+      val dim = centers(0).length
+      val m = PqSubspaces
+      require(dim % m == 0, s"dim $dim not divisible by $m subspaces")
+      val dsub = dim / m
+      val bcCenters = s.sparkContext.broadcast(centers)
 
-    // sub-codebooks train DRIVER-SIDE on a bounded residual sample —
-    // the FAISS convention (codebooks come from a fixed-size training
-    // sample, never the corpus): a deterministic top-k-by-id cut of
-    // the hash sample, collected once ([[PqTrainSample]] x dim doubles,
-    // ~8 MB), then plain Lloyd per subspace. The first cut of this
-    // trained each sub-codebook with MLlib KMeans: 8 sequential fits
-    // x (init + 5 iters) of distributed jobs whose SCHEDULING latency
-    // (~5 s) dwarfed the math — 16-centroid Lloyd over 16k short
-    // vectors is sub-millisecond driver work.
-    val resSample: Array[Array[Double]] = coarse.transform(fitSample)
-      .select(col("vec_id"), col("cell"), col("embedding"))
-      .orderBy(col("vec_id")) // + limit = TakeOrdered: O(sample) scan, O(cap) memory
-      .limit(PqTrainSample)
-      .as[(Long, Int, Array[Float])]
-      .collect()
-      .map { case (_, cell, e) =>
-        val c = centers(cell)
-        Array.tabulate(e.length)(i => e(i).toDouble - c(i))
+      // sub-codebooks train DRIVER-SIDE on a bounded residual sample —
+      // the FAISS convention (codebooks come from a fixed-size training
+      // sample, never the corpus): a deterministic top-k-by-id cut of
+      // the hash sample, collected once ([[PqTrainSample]] x dim doubles,
+      // ~8 MB), then plain Lloyd per subspace. The first cut of this
+      // trained each sub-codebook with MLlib KMeans: 8 sequential fits
+      // x (init + 5 iters) of distributed jobs whose SCHEDULING latency
+      // (~5 s) dwarfed the math — 16-centroid Lloyd over 16k short
+      // vectors is sub-millisecond driver work.
+      val resSample: Array[Array[Double]] = coarse.transform(fitSample)
+        .select(col("vec_id"), col("cell"), col("embedding"))
+        .orderBy(col("vec_id")) // + limit = TakeOrdered: O(sample) scan, O(cap) memory
+        .limit(PqTrainSample)
+        .as[(Long, Int, Array[Float])]
+        .collect()
+        .map { case (_, cell, e) =>
+          val c = centers(cell)
+          Array.tabulate(e.length)(i => e(i).toDouble - c(i))
+        }
+      sc.release(sampled)
+      val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m) { mi =>
+        lloyd(resSample.map(r =>
+          java.util.Arrays.copyOfRange(r, mi * dsub, (mi + 1) * dsub)),
+          PqCodebookSize, iters = 10)
       }
-    sampled.unpersist(blocking = false)
-    val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m) { mi =>
-      lloyd(resSample.map(r =>
-        java.util.Arrays.copyOfRange(r, mi * dsub, (mi + 1) * dsub)),
-        PqCodebookSize, iters = 10)
-    }
-    val bcBooks = s.sparkContext.broadcast(codebooks)
+      val bcBooks = s.sparkContext.broadcast(codebooks)
 
-    // encode: ONE typed pass over the corpus -> (vec_id, cell, codes),
-    // argmin sub-centroid per subspace (ties: lowest code, determinist)
-    val encoded = coarse.transform(emb)
-      .select(col("vec_id"), col("cell"), col("embedding"))
-      .as[(Long, Int, Array[Float])]
-      .map { case (id, cell, e) =>
-        val c = bcCenters.value(cell)
-        val books = bcBooks.value
-        val codes = new Array[Byte](m)
-        var mi = 0
-        while (mi < m) {
-          var best = 0
-          var bestD = Double.MaxValue
-          var ci = 0
-          while (ci < books(mi).length) {
-            val cb = books(mi)(ci)
+      // encode: ONE typed pass over the corpus -> (vec_id, cell, codes),
+      // argmin sub-centroid per subspace (ties: lowest code, determinist)
+      val encoded = coarse.transform(emb)
+        .select(col("vec_id"), col("cell"), col("embedding"))
+        .as[(Long, Int, Array[Float])]
+        .map { case (id, cell, e) =>
+          val c = bcCenters.value(cell)
+          val books = bcBooks.value
+          val codes = new Array[Byte](m)
+          var mi = 0
+          while (mi < m) {
+            var best = 0
+            var bestD = Double.MaxValue
+            var ci = 0
+            while (ci < books(mi).length) {
+              val cb = books(mi)(ci)
+              var dist = 0.0
+              var j = 0
+              while (j < dsub) {
+                val diff = (e(mi * dsub + j).toDouble - c(mi * dsub + j)) - cb(j)
+                dist += diff * diff
+                j += 1
+              }
+              if (dist < bestD) { bestD = dist; best = ci }
+              ci += 1
+            }
+            codes(mi) = best.toByte
+            mi += 1
+          }
+          (id, cell, codes)
+        }
+        .toDF("vec_id", "cell", "codes")
+
+      // probes: tiny pushed-down scan; cell ranking + ADC lookup tables
+      // built driver-side (probes x nprobe x M x 16 doubles)
+      val probes = emb.filter(col("vec_id") < 10)
+        .select(col("vec_id"), col("embedding"))
+        .as[(Long, Array[Float])].collect()
+      val probeCells = probes.flatMap { case (pid, q) =>
+        centers.zipWithIndex.map { case (c, ci) =>
+          var dist = 0.0
+          var i = 0
+          while (i < dim) { val df = q(i).toDouble - c(i); dist += df * df; i += 1 }
+          (dist, ci)
+        }.sorted.take(PqNProbe).map { case (_, ci) => (pid, ci) }
+      }.toSeq
+      val luts: Map[(Long, Int), Array[Array[Double]]] = probeCells.map { case (pid, ci) =>
+        val q = probes.find(_._1 == pid).get._2
+        val c = centers(ci)
+        val lut = Array.tabulate(m) { mi =>
+          codebooks(mi).map { cb =>
             var dist = 0.0
             var j = 0
             while (j < dsub) {
-              val diff = (e(mi * dsub + j).toDouble - c(mi * dsub + j)) - cb(j)
+              val diff = (q(mi * dsub + j).toDouble - c(mi * dsub + j)) - cb(j)
               dist += diff * diff
               j += 1
             }
-            if (dist < bestD) { bestD = dist; best = ci }
-            ci += 1
+            dist
           }
-          codes(mi) = best.toByte
-          mi += 1
         }
-        (id, cell, codes)
-      }
-      .toDF("vec_id", "cell", "codes")
+        (pid, ci) -> lut
+      }.toMap
+      val bcLuts = s.sparkContext.broadcast(luts)
 
-    // probes: tiny pushed-down scan; cell ranking + ADC lookup tables
-    // built driver-side (probes x nprobe x M x 16 doubles)
-    val probes = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
-    val probeCells = probes.flatMap { case (pid, q) =>
-      centers.zipWithIndex.map { case (c, ci) =>
-        var dist = 0.0
-        var i = 0
-        while (i < dim) { val df = q(i).toDouble - c(i); dist += df * df; i += 1 }
-        (dist, ci)
-      }.sorted.take(PqNProbe).map { case (_, ci) => (pid, ci) }
-    }.toSeq
-    val luts: Map[(Long, Int), Array[Array[Double]]] = probeCells.map { case (pid, ci) =>
-      val q = probes.find(_._1 == pid).get._2
-      val c = centers(ci)
-      val lut = Array.tabulate(m) { mi =>
-        codebooks(mi).map { cb =>
+      val probeCellDf = probeCells.toDF("probe_id", "cell")
+      val ranked = encoded
+        .join(broadcast(probeCellDf), Seq("cell"))
+        .filter(col("probe_id") =!= col("vec_id"))
+        .select(col("probe_id"), col("vec_id"), col("cell"), col("codes"))
+        .as[(Long, Long, Int, Array[Byte])]
+        .map { case (pid, vid, cell, codes) =>
+          val lut = bcLuts.value((pid, cell))
           var dist = 0.0
-          var j = 0
-          while (j < dsub) {
-            val diff = (q(mi * dsub + j).toDouble - c(mi * dsub + j)) - cb(j)
-            dist += diff * diff
-            j += 1
-          }
-          dist
+          var mi = 0
+          while (mi < m) { dist += lut(mi)(codes(mi) & 0xff); mi += 1 }
+          (pid, vid, dist)
         }
-      }
-      (pid, ci) -> lut
-    }.toMap
-    val bcLuts = s.sparkContext.broadcast(luts)
-
-    val probeCellDf = probeCells.toDF("probe_id", "cell")
-    val ranked = encoded
-      .join(broadcast(probeCellDf), Seq("cell"))
-      .filter(col("probe_id") =!= col("vec_id"))
-      .select(col("probe_id"), col("vec_id"), col("cell"), col("codes"))
-      .as[(Long, Long, Int, Array[Byte])]
-      .map { case (pid, vid, cell, codes) =>
-        val lut = bcLuts.value((pid, cell))
-        var dist = 0.0
-        var mi = 0
-        while (mi < m) { dist += lut(mi)(codes(mi) & 0xff); mi += 1 }
-        (pid, vid, dist)
-      }
-      .toDF("probe_id", "vec_id", "adist")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("probe_id"))
-          .orderBy(col("adist").asc, col("vec_id"))).cast("long"))
-      .filter(col("rnk") <= k)
-      .orderBy(col("probe_id"), col("rnk"))
-    IvfPqParts(encoded, ranked)
+        .toDF("probe_id", "vec_id", "adist")
+        .withColumn("rnk", row_number().over(
+          Window.partitionBy(col("probe_id"))
+            .orderBy(col("adist").asc, col("vec_id"))).cast("long"))
+        .filter(col("rnk") <= k)
+        .orderBy(col("probe_id"), col("rnk"))
+      IvfPqParts(encoded, ranked)
+    }
   }
 
   /** Embedding dimensionality of the driver corpus (TESTDATA.md). The
@@ -1213,10 +1206,10 @@ object Similarity {
     * concerns. Scale: the contingency table is |labels|² rows; the
     * kappa fold is driver-free (a 1-row aggregate).
     */
-  def q155LabelKappa(s: SparkSession, d: String): DataFrame = {
-    val asg = centroidAssignments(s, d).persist()
-    val cells = asg.groupBy(col("label"), col("pred_label"))
-      .agg(count(lit(1)).as("n")).persist()
+  def q155LabelKappa(s: SparkSession, d: String): DataFrame = Scope.pinned { sc =>
+    val asg = sc.persist(centroidAssignments(s, d))
+    val cells = sc.persist(asg.groupBy(col("label"), col("pred_label"))
+      .agg(count(lit(1)).as("n")))
     val marg = cells.groupBy(col("label")).agg(sum(col("n")).as("n_true"))
       .join(
         cells.groupBy(col("pred_label")).agg(sum(col("n")).as("n_pred"))
@@ -1228,15 +1221,10 @@ object Similarity {
     val agree = cells.filter(col("label") === col("pred_label"))
       .agg(coalesce(sum(col("n")), lit(0L)).as("a"))
     val n = asg.agg(count(lit(1)).as("n"))
-    val out = n.crossJoin(agree).crossJoin(marg)
+    n.crossJoin(agree).crossJoin(marg)
       .select(col("n"), col("a").as("n_agree"), col("s").as("s_chance"),
         ((col("n") * col("a") - col("s")).cast("double") /
           (col("n") * col("n") - col("s")).cast("double")).as("kappa"))
-      .persist()
-    out.count()
-    asg.unpersist(blocking = false)
-    cells.unpersist(blocking = false)
-    out
   }
 
   /** Vote count for the q143 k-NN classifier. */
@@ -1352,86 +1340,81 @@ object Similarity {
   /** [[q157PcaProject]] over any `(vec_id, label, embedding)` frame
     * (PcaSpec plants directional corpora through this).
     */
-  private[operators] def pcaProjectOf(emb: DataFrame): DataFrame = {
+  private[operators] def pcaProjectOf(emb: DataFrame): DataFrame = Scope.pinned { sc =>
     val s = emb.sparkSession
     import s.implicits._
-    val q = emb.select(col("vec_id"), col("label").cast("long").as("label"),
-      quantized.as("q")).persist()
+    val q = sc.persist(emb.select(col("vec_id"), col("label").cast("long").as("label"),
+      quantized.as("q")))
     // empty-corpus guard: head() on an empty frame throws — return the
     // typed empty frame like the rest of the family (knnIvfOf,
     // ivfPqBuild) instead of being the one member that hard-crashes
     val dimRow = q.select(size(col("q")).as("n")).limit(1).collect()
-    if (dimRow.isEmpty) {
-      q.unpersist(blocking = false)
-      return Seq.empty[(Long, Long, Long)].toDF("vec_id", "label", "proj1")
-    }
-    val dim = dimRow(0).getInt(0)
+    if (dimRow.isEmpty) Seq.empty[(Long, Long, Long)].toDF("vec_id", "label", "proj1")
+    else {
+      val dim = dimRow(0).getInt(0)
 
-    // Gram upper triangle: ONE tight per-partition accumulator loop
-    // over a dim*(dim+1)/2 Long array, emitting <= 2080 partial cells
-    // per partition (the explicit form of the map-side combine) — the
-    // HOF-lambda equivalent (explode(flatten(transform(...)))) is
-    // evaluated interpreted and pushed 10M struct rows through the
-    // aggregate at sf0.1, the measured 13x cost class (see q22's
-    // scaladoc). addExact makes a partition whose partial sums
-    // outgrow Long (~10^6 rows per partition at |q|<=1e6) fail
-    // loudly instead of corrupting the matrix; the cross-partition
-    // merge is exact DECIMAL(38,0).
-    val tri = q.select(col("q")).as[Array[Long]]
-      .mapPartitions { it =>
-        var acc: Array[Long] = null
-        var d = 0
-        while (it.hasNext) {
-          val v = it.next()
-          if (acc == null) { d = v.length; acc = new Array[Long](d * (d + 1) / 2) }
-          var idx = 0
-          var i = 0
-          while (i < d) {
-            val vi = v(i)
-            var j = i
-            while (j < d) {
-              acc(idx) = Math.addExact(acc(idx), vi * v(j))
-              j += 1; idx += 1
+      // Gram upper triangle: ONE tight per-partition accumulator loop
+      // over a dim*(dim+1)/2 Long array, emitting <= 2080 partial cells
+      // per partition (the explicit form of the map-side combine) — the
+      // HOF-lambda equivalent (explode(flatten(transform(...)))) is
+      // evaluated interpreted and pushed 10M struct rows through the
+      // aggregate at sf0.1, the measured 13x cost class (see q22's
+      // scaladoc). addExact makes a partition whose partial sums
+      // outgrow Long (~10^6 rows per partition at |q|<=1e6) fail
+      // loudly instead of corrupting the matrix; the cross-partition
+      // merge is exact DECIMAL(38,0).
+      val tri = q.select(col("q")).as[Array[Long]]
+        .mapPartitions { it =>
+          var acc: Array[Long] = null
+          var d = 0
+          while (it.hasNext) {
+            val v = it.next()
+            if (acc == null) { d = v.length; acc = new Array[Long](d * (d + 1) / 2) }
+            var idx = 0
+            var i = 0
+            while (i < d) {
+              val vi = v(i)
+              var j = i
+              while (j < d) {
+                acc(idx) = Math.addExact(acc(idx), vi * v(j))
+                j += 1; idx += 1
+              }
+              i += 1
             }
-            i += 1
+          }
+          if (acc == null) Iterator.empty
+          else {
+            val out = collection.mutable.ArrayBuffer.empty[(Int, Int, Long)]
+            var idx = 0
+            var i = 0
+            while (i < d) {
+              var j = i
+              while (j < d) { out += ((i, j, acc(idx))); j += 1; idx += 1 }
+              i += 1
+            }
+            out.iterator
           }
         }
-        if (acc == null) Iterator.empty
-        else {
-          val out = collection.mutable.ArrayBuffer.empty[(Int, Int, Long)]
-          var idx = 0
-          var i = 0
-          while (i < d) {
-            var j = i
-            while (j < d) { out += ((i, j, acc(idx))); j += 1; idx += 1 }
-            i += 1
-          }
-          out.iterator
-        }
+        .toDF("i", "j", "p")
+        .groupBy(col("i"), col("j"))
+        .agg(sum(col("p").cast("decimal(38,0)")).as("g"))
+
+      // bounded driver fold: dim*(dim+1)/2 cells (2080 at dim=64),
+      // independent of corpus size
+      val mat = Array.fill(dim, dim)(BigInt(0))
+      tri.collect().foreach { r =>
+        val i = r.getInt(0); val j = r.getInt(1)
+        val g = BigInt(r.getDecimal(2).toBigInteger)
+        mat(i)(j) = g
+        mat(j)(i) = g
       }
-      .toDF("i", "j", "p")
-      .groupBy(col("i"), col("j"))
-      .agg(sum(col("p").cast("decimal(38,0)")).as("g"))
 
-    // bounded driver fold: dim*(dim+1)/2 cells (2080 at dim=64),
-    // independent of corpus size
-    val mat = Array.fill(dim, dim)(BigInt(0))
-    tri.collect().foreach { r =>
-      val i = r.getInt(0); val j = r.getInt(1)
-      val g = BigInt(r.getDecimal(2).toBigInteger)
-      mat(i)(j) = g
-      mat(j)(i) = g
+      val v = powerIterate(mat)
+
+      val vLit = typedLit(v.map(_.toLong).toSeq)
+      q.select(col("vec_id"), col("label"),
+          dot(col("q"), vLit).as("proj1"))
+        .orderBy(col("vec_id"))
     }
-
-    val v = powerIterate(mat)
-
-    val vLit = typedLit(v.map(_.toLong).toSeq)
-    val out = q.select(col("vec_id"), col("label"),
-        dot(col("q"), vLit).as("proj1"))
-      .orderBy(col("vec_id"))
-      .persist()
-    out.count()
-    q.unpersist(blocking = false)
-    out
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -192,14 +192,13 @@ object Temporal {
     // and its subtree (scan + per-day window) would otherwise run
     // twice; one compact row per (key, active day). Lifetime: LRU /
     // clearCache, the lazily-returned-frame contract.
-    val perDay = events
+    val perDay = Scope.lru.persist(events
       .withColumn("d", d)
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col("key"), col("d"))
           .orderBy(col("us").desc, col("id").desc)))
       .filter(col("_rn") === 1)
-      .select(col("key"), col("d"), col("v"))
-      .persist()
+      .select(col("key"), col("d"), col("v")))
     val grid = perDay.groupBy(col("key"))
       .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
       .select(col("key"), explode(sequence(col("d0"), col("d1"))).as("d"))
@@ -223,10 +222,9 @@ object Temporal {
     * contract).
     */
   def q101ActiveUsers(s: SparkSession, d: String): DataFrame = {
-    val ud = Tables.events(s, d)
+    val ud = Scope.lru.persist(Tables.events(s, d)
       .select(col("user_id"), expr("(ts div 1000) div 86400000000").as("day"))
-      .distinct()
-      .persist() // feeds span, DAU, and WAU; lifetime: LRU/clearCache
+      .distinct()) // feeds span, DAU, and WAU; lifetime: LRU/clearCache
     val span = ud.agg(min(col("day")), max(col("day"))).head()
     if (span.isNullAt(0)) { // empty events table: empty frame, not an NPE
       import s.implicits._
@@ -255,10 +253,9 @@ object Temporal {
     * engines.
     */
   def q102RetentionCohorts(s: SparkSession, d: String): DataFrame = {
-    val uw = Tables.events(s, d)
+    val uw = Scope.lru.persist(Tables.events(s, d)
       .select(col("user_id"), expr("((ts div 1000) div 86400000000) div 7").as("week"))
-      .distinct()
-      .persist() // feeds cohort assignment and the return scan
+      .distinct()) // feeds cohort assignment and the return scan
     val cohort = uw.groupBy(col("user_id")).agg(min(col("week")).as("cohort_week"))
     val ret = uw.join(cohort, "user_id")
       .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("week_offset"))
@@ -761,16 +758,15 @@ object Temporal {
     madOutliersOf(Tables.events(s, d))
 
   /** [[q204MadOutliers]] over any `(event_type, event_id, value)` frame. */
-  private[graft] def madOutliersOf(events: DataFrame): DataFrame = {
+  private[graft] def madOutliersOf(events: DataFrame): DataFrame = Scope.pinned { sc =>
     val s = events.sparkSession
     import s.implicits._
     val k = graft.operators.Corpus.SampleK
-    val fx = events
+    val fx = sc.persist(events
       .filter(col("value").isNotNull)
       .select(col("event_type"),
         graft.operators.Corpus.hllKey(col("event_id").cast("string")).as("h"),
-        round(col("value") * lit(1e6)).cast("long").as("v"))
-      .persist()
+        round(col("value") * lit(1e6)).cast("long").as("v")))
     // sample p50 of a (event_type, h, metric) frame — the q195
     // read-out restricted to the median
     def sampleP50(df: DataFrame, metric: String): DataFrame = df
@@ -789,7 +785,7 @@ object Temporal {
       .withColumn("dev", abs(col("v") - col("med_fx")))
     val mad = sampleP50(dev.select(col("event_type"), col("h"), col("dev")),
       "dev").withColumnRenamed("dev_p50", "mad_fx")
-    val out = dev.join(broadcast(mad), "event_type")
+    dev.join(broadcast(mad), "event_type")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         max(col("med_fx")).as("med_fx"), // constant per group
@@ -803,10 +799,6 @@ object Temporal {
             > col("mad_fx").cast("decimal(19,0)") * lit(44478L).cast("decimal(5,0)"), 1L)
           .otherwise(0L)).as("n_outliers"))
       .orderBy(col("event_type"))
-      .persist()
-    out.count()
-    fx.unpersist(blocking = false)
-    out
   }
 
   /** q198: exact-arithmetic OLS trend per event_type — the drift-RATE

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -273,9 +273,9 @@ object TextOps {
         text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
           .iterator.zipWithIndex.map { case (t, i) => (t, id, i + 1L) }
       }.toDF("tok", "doc_id", "pos")
-    val perDoc = pos.groupBy(col("tok"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"), min(col("pos")).as("first_pos"))
-      .persist() // consumed twice below (stats + head), tiny rows
+    // consumed twice below (stats + head), tiny rows
+    val perDoc = Scope.lru.persist(pos.groupBy(col("tok"), col("doc_id"))
+      .agg(count(lit(1)).as("tf"), min(col("pos")).as("first_pos")))
     val stats = perDoc.groupBy(col("tok"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("n_occurrences"))
     val bottomK = new graft.functions.BottomKTriples[(String, Long, Long, Long)](
@@ -410,12 +410,11 @@ object TextOps {
     // (it is functionally dependent on doc_id), where the former
     // `sum(tf) over (partition by doc_id)` window paid a full-corpus
     // sort per index build (the sf10 canary's dominant stage)
-    val tf = docs
+    val tf = Scope.lru.persist(docs
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
         explode(col("toks")).as("tok"))
-      .groupBy(col("tok"), col("doc_id"), col("dl")).agg(count(lit(1)).as("tf"))
-      .persist()
+      .groupBy(col("tok"), col("doc_id"), col("dl")).agg(count(lit(1)).as("tf")))
     val totals = docs.agg(count(lit(1)).as("n_docs"))
       .crossJoin(tf.agg(sum(col("tf")).as("l_total")))
 
@@ -486,7 +485,7 @@ object TextOps {
       .withColumn("sterm", sterm)
 
     val (essential, candidates, hits) = if (!prune) {
-      val matched = matchedAll.persist()
+      val matched = Scope.lru.persist(matchedAll)
       (qterms.limit(0), matched.select(col("query_id"), col("doc_id")).limit(0), matched)
     } else {
       // per-term stats slate: (query_id, tok, ub) — slate-sized
@@ -559,9 +558,8 @@ object TextOps {
       tf: DataFrame, qterms: DataFrame, dfq: DataFrame,
       totals: DataFrame, sterm: Column, ess: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val cand = tf.join(broadcast(ess), "tok")
-      .select(col("query_id"), col("doc_id")).distinct()
-      .persist()
+    val cand = Scope.lru.persist(tf.join(broadcast(ess), "tok")
+      .select(col("query_id"), col("doc_id")).distinct())
     val candTerms = cand
       .join(broadcast(qterms), "query_id")
       .select(col("query_id"), col("doc_id"), col("tok"))
@@ -589,34 +587,29 @@ object TextOps {
     * rollup is |sources|² rows. The per-source gram-set sizes ride the
     * same distinct frame; nothing corpus-sized is ever joined twice.
     */
-  def q144SourceGramOverlap(s: SparkSession, d: String): DataFrame = {
+  def q144SourceGramOverlap(s: SparkSession, d: String): DataFrame = Scope.pinned { sc =>
     import s.implicits._
     // single-space split (wsSplit = false), the q126/q145 corpus
     // convention and the oracle's string_split(…, ' ') — NOT \s+, so
     // engine/oracle parity survives a corpus with tabs/newlines; the
     // native kernel replaces the corpus-scale typed flatMap's encoder
     // barrier (GramHashesSpec pins value-equality)
-    val sg = Tables.documents(s, d)
+    val sg = sc.persist(Tables.documents(s, d)
       .select(col("source"),
         explode(graft.functions.GramHashes.of(
           lower(coalesce(col("text"), lit(""))), 3)).as("gram"))
-      .distinct()
-      .persist() // sizes + both self-join sides read this one exchange
+      .distinct()) // sizes + both self-join sides read this one exchange
     val sizes = sg.groupBy(col("source")).agg(count(lit(1)).as("n"))
     val shared = sg.as("a").join(sg.as("b"),
         col("a.gram") === col("b.gram") && col("a.source") < col("b.source"))
       .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
       .agg(count(lit(1)).as("n_shared"))
-    val out = shared
+    shared
       .join(broadcast(sizes.select(col("source").as("source_a"), col("n").as("na"))), "source_a")
       .join(broadcast(sizes.select(col("source").as("source_b"), col("n").as("nb"))), "source_b")
       .select(col("source_a"), col("source_b"), col("n_shared"),
         (col("n_shared").cast("double") /
           (col("na") + col("nb") - col("n_shared")).cast("double")).as("gram_jaccard"))
       .orderBy(col("source_a"), col("source_b"))
-      .persist()
-    out.count() // materialize so the gram frame can be released now
-    sg.unpersist(blocking = false)
-    out
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Scope
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -50,10 +51,11 @@ object Sources {
     * raw scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN — the quarantine side
     * is exactly that shape), and without it the clean and quarantine
     * sinks would each re-parse the full input. One parse pass, two
-    * consumers; callers unpersist once both are written.
+    * consumers; the persist is owned by `sc`, so close the scope once
+    * both are written.
     */
-  def quarantine(df: DataFrame): (DataFrame, DataFrame) = {
-    val parsed = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def quarantine(sc: Scope, df: DataFrame): (DataFrame, DataFrame) = {
+    val parsed = sc.persist(df, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val clean = parsed.filter(col(CorruptCol).isNull).drop(CorruptCol)
     val bad = parsed.filter(col(CorruptCol).isNotNull).select(col(CorruptCol))
     (clean, bad)

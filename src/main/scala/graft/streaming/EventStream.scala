@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Scope
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -106,15 +107,52 @@ object EventStream {
   /** [[tableBytes]] of the events table under the sf dir. */
   private def eventsBytes(d: String): Long = tableBytes(s"$d/events.parquet")
 
+  /** Run `body` with each `(key, value)` session conf set, restoring
+    * (or unsetting) every key after — the conf is read at a streaming
+    * query's start and first-batch planning, which happen
+    * asynchronously after start(), so a replay's confs must hold for
+    * the query's whole lifetime, not just across start().
+    */
+  private def withConfs[A](s: SparkSession, confs: Seq[(String, String)])(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Replays that mandate the RocksDB state backend run with the
+    * provider AND changelog checkpointing on. Changelog checkpointing
+    * is the production setting for RocksDB state: each batch commit
+    * uploads only the batch's change set, and the full snapshot is
+    * written by the background maintenance thread OFF the commit path.
+    * Without it, every state partition's commit blocks on a full
+    * RocksDB snapshot+upload — the r17 census measured q147's single
+    * batch at ~1.1 s of which ~1.0 s was the 8 stores' commit time;
+    * changelog cuts the commit to the (tiny) change set. Correctness
+    * is unaffected for replays: results leave through the foreachBatch
+    * spool before commit, and the checkpoint dir is temp-scoped.
+    */
+  private val RocksDbReplay = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
+  /** Zero-data progress reporting unsuppressed — see
+    * [[drainThenAwaitNoDataFlush]]. Scoped to the replay; a production
+    * always-on stream keeps the 10 s default (the rate limit exists to
+    * keep idle streams from flooding listeners).
+    */
+  private val PromptNoDataProgress =
+    Seq("spark.sql.streaming.noDataProgressEventInterval" -> "100ms")
+
   /** Run `body` (a replay start+drain) with the state width capped at
     * max([[ReplayStateWidth]], inputBytes/[[ReplayBytesPerPartition]])
-    * — never above the session width; restores the session's width
-    * after the query STOPS — the width is read at first-batch
-    * planning, which happens asynchronously after start(), so the
-    * conf must stay lowered for the query's whole lifetime, not just
-    * across start().
-    */
-  /** `stateHeavy` marks replays whose state is RESULT-shaped rather
+    * — never above the session width — plus `extra` confs, all
+    * restored after the query STOPS.
+    *
+    * `stateHeavy` marks replays whose state is RESULT-shaped rather
     * than key-shaped (complete-mode aggregations holding every
     * session/window row, with wide per-group values): those switch to
     * the off-heap RocksDB provider past [[RocksDbReplayBytes]] of
@@ -124,95 +162,35 @@ object EventStream {
     * approach the heap ceiling once the sinks spool distributed.
     */
   private def withReplayStateWidth[A](
-      s: SparkSession, inputBytes: Long = 0L, stateHeavy: Boolean = false)(
-      body: => A): A = {
+      s: SparkSession, inputBytes: Long, stateHeavy: Boolean = false,
+      extra: Seq[(String, String)] = Nil)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
+    val prev = s.conf.get(key).toLong
     val scaled = math.max(ReplayStateWidth.toLong,
-      math.min(prev.toLong, inputBytes / ReplayBytesPerPartition))
-    s.conf.set(key,
-      math.max(1L, math.min(scaled, prev.toLong)).toString)
-    def restoreWidthThenSweep(): Unit = {
-      s.conf.set(key, prev)
-      // leave ZERO state-store residue: a bounded replay's providers
-      // otherwise stay loaded after q.stop() and the maintenance task
-      // snapshots/fs-scans them on its 60 s ticks — landing INSIDE
-      // whichever later query is running (r16 measured q137 at 8.7 s
-      // in its natural bench slot vs 4.6 s hoisted to slot 1, same
-      // code). stop() unloads every provider and parks maintenance;
-      // both restart lazily at the next replay's first store load. A
-      // production continuous stream never calls this — it is the
-      // bounded-replay harness's exit hygiene, not query semantics.
-      // stop() is JVM-GLOBAL (it would yank providers out from under
-      // any concurrently running streaming query), safe only because
-      // this harness serializes replays; if a caller ever overlaps
-      // queries on this session, skip the sweep — stale providers and
-      // stray maintenance ticks are the lesser evil vs mid-run unload.
-      if (s.streams.active.isEmpty)
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    }
-    if (stateHeavy && inputBytes > RocksDbReplayBytes)
-      withRocksDbReplay(s) { try body finally restoreWidthThenSweep() }
-    else
-      try body finally restoreWidthThenSweep()
-  }
-
-  /** Run `body` (a replay that mandates the RocksDB state backend)
-    * with the provider scoped to RocksDB AND changelog checkpointing
-    * on, both restored after. Changelog checkpointing is the
-    * production setting for RocksDB state: each batch commit uploads
-    * only the batch's change set, and the full snapshot is written by
-    * the background maintenance thread OFF the commit path. Without
-    * it, every state partition's commit blocks on a full RocksDB
-    * snapshot+upload — the r17 census measured q147's single batch at
-    * ~1.1 s of which ~1.0 s was the 8 stores' commit time; changelog
-    * cuts the commit to the (tiny) change set. Correctness is
-    * unaffected for replays: results leave through the foreachBatch
-    * spool before commit, and the checkpoint dir is temp-scoped.
-    */
-  private def withRocksDbReplay[A](s: SparkSession)(body: => A): A = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val clKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProv = s.conf.getOption(provKey)
-    val prevCl = s.conf.getOption(clKey)
-    try {
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set(clKey, "true")
-      body
-    } finally {
-      prevProv match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-      prevCl match {
-        case Some(v) => s.conf.set(clKey, v)
-        case None => s.conf.unset(clKey)
+      math.min(prev, inputBytes / ReplayBytesPerPartition))
+    val width = key -> math.max(1L, math.min(scaled, prev)).toString
+    val rocks = if (stateHeavy && inputBytes > RocksDbReplayBytes) RocksDbReplay else Nil
+    withConfs(s, width +: (rocks ++ extra)) {
+      try body
+      finally {
+        // leave ZERO state-store residue: a bounded replay's providers
+        // otherwise stay loaded after q.stop() and the maintenance task
+        // snapshots/fs-scans them on its 60 s ticks — landing INSIDE
+        // whichever later query is running (r16 measured q137 at 8.7 s
+        // in its natural bench slot vs 4.6 s hoisted to slot 1, same
+        // code). stop() unloads every provider and parks maintenance;
+        // both restart lazily at the next replay's first store load. A
+        // production continuous stream never calls this — it is the
+        // bounded-replay harness's exit hygiene, not query semantics.
+        // stop() is JVM-GLOBAL (it would yank providers out from under
+        // any concurrently running streaming query), safe only because
+        // this harness serializes replays; if a caller ever overlaps
+        // queries on this session, skip the sweep — stale providers and
+        // stray maintenance ticks are the lesser evil vs mid-run unload.
+        if (s.streams.active.isEmpty)
+          org.apache.spark.sql.execution.streaming.state.StateStore.stop()
       }
     }
-  }
-
-  /** Spool dirs are deleted by [[materializeThenSweep]] as soon as
-    * the query that drained them materializes its final frame; the
-    * shutdown hook is the backstop for a session killed mid-query, so
-    * /tmp never grows across JVMs either way.
-    */
-  private val spoolDirs =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-  private def rmTree(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(rmTree)
-    f.delete(); ()
-  }
-  private lazy val spoolCleanupHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      spoolDirs.forEach { dir => rmTree(new java.io.File(dir)) }
-    }))
-  }
-  private def registerSpoolForCleanup(dir: String): Unit = {
-    spoolCleanupHook
-    spoolDirs.add(dir); ()
   }
 
   /** Session-lifetime replay-fixture cache. A replay SOURCE dir built
@@ -222,21 +200,14 @@ object EventStream {
     * build instead of writing a fresh temp dir per pass (r16 found 87
     * leaked q137 sentinel dirs + 46 q156 fixture dirs in /tmp: the
     * per-pass dirs were also never deleted). Fixtures are INPUTS, not
-    * results, so the [[materializeThenSweep]] mid-session sweep does
-    * not apply; they live until JVM exit (shutdown hook below).
+    * results, so they are owned by [[Scope.lru]]: they live until the
+    * JVM-exit sweep.
     */
   private val fixtureDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private lazy val fixtureCleanupHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      fixtureDirs.values.forEach(dir => rmTree(new java.io.File(dir)))
-    }))
-  }
   private def cachedFixture(key: String)(build: String => Unit): String =
     fixtureDirs.computeIfAbsent(key, _ => {
-      fixtureCleanupHook
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_fixture").toString
+      val dir = Scope.lru.tempDir("graft_fixture").toString
       build(dir)
       dir
     })
@@ -254,9 +225,9 @@ object EventStream {
     * `spark.sql.streaming.noDataProgressEventInterval` (default 10 s)
     * — so a poll on recentProgress waits up to 10 s for an event whose
     * batch finished long ago (r15's q137: 7.6-15.1 s standalone, all
-    * suppression). Callers must start the query under
-    * [[withPromptNoDataProgress]] so the event lands within ~100 ms of
-    * the flush.
+    * suppression). The query must therefore start under
+    * [[PromptNoDataProgress]] so the event lands within ~100 ms of the
+    * flush; [[drainToSpool]]'s `awaitNoDataFlush` mode pairs the two.
     */
   private def drainThenAwaitNoDataFlush(
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
@@ -280,41 +251,6 @@ object EventStream {
     q.processAllAvailable()
   }
 
-  /** Run `body` (a replay whose drain awaits the no-data flush batch)
-    * with zero-data progress reporting unsuppressed — see
-    * [[drainThenAwaitNoDataFlush]]. Scoped: the conf is read at query
-    * start, so it is set for the query's whole lifetime and restored
-    * after; a production always-on stream keeps the 10 s default (the
-    * rate limit exists to keep idle streams from flooding listeners).
-    */
-  private def withPromptNoDataProgress[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.noDataProgressEventInterval"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "100ms")
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
-  /** Materialize a spool-reading query's FINAL frame (persist +
-    * count), then delete every spool dir registered so far — deletion
-    * strictly after the consumer has read the spooled bytes, so a
-    * long-lived service session releases each replay's /tmp footprint
-    * at query end instead of at JVM exit. The returned frame is
-    * persisted MEMORY_AND_DISK: later actions serve from cache, and
-    * memory pressure spills instead of recomputing through the (now
-    * deleted) spool files.
-    */
-  private def materializeThenSweep(out: DataFrame): DataFrame = {
-    out.persist()
-    out.count()
-    val dirs = spoolDirs.toArray(Array.empty[String])
-    spoolDirs.clear()
-    dirs.foreach { dir => rmTree(new java.io.File(dir)) }
-    out
-  }
-
   /** Drain a bounded replay into a distributed parquet spool and
     * return the spooled frame — the result-safe replacement for a
     * result-sized memory sink. A memory-sink TABLE holds all its rows
@@ -325,27 +261,36 @@ object EventStream {
     * drain, and append/complete both map naturally (complete
     * overwrites per trigger because it re-emits the whole answer).
     * Tiny sinks (windows x types, sketch cells) stay on the memory
-    * sink and skip the ~0.2-0.4 s write+read roundtrip.
+    * sink ([[drainToMemory]]) and skip the ~0.2-0.4 s write+read
+    * roundtrip.
+    *
+    * The spool dir is owned by `sc`: callers open it with
+    * [[Scope.pinned]], so the spool is deleted strictly after the
+    * final frame is materialized — a long-lived service session
+    * releases each replay's /tmp footprint at query end. The pinned
+    * frame is persisted MEMORY_AND_DISK: later actions serve from
+    * cache, and memory pressure spills instead of recomputing through
+    * the (deleted) spool files.
     *
     * `mapBatch` runs inside foreachBatch on each micro-batch before
     * the append — for replays whose per-batch output is safely
     * reducible (q93 appends pair-sized partial counts, not events),
     * keeping the spool partial-aggregate-sized instead of
     * result-sized. The empty-drain frame carries the MAPPED schema.
+    * `awaitNoDataFlush` drains with [[drainThenAwaitNoDataFlush]]
+    * under [[PromptNoDataProgress]].
     */
   private def drainToSpool(
-      s: SparkSession, out: DataFrame, name: String, inputBytes: Long,
+      sc: Scope, s: SparkSession, out: DataFrame, name: String, inputBytes: Long,
       complete: Boolean = false, stateHeavy: Boolean = false,
       mapBatch: DataFrame => DataFrame = identity,
-      afterDrain: org.apache.spark.sql.streaming.StreamingQuery => Unit =
-        _.processAllAvailable()): DataFrame = {
-    val spool = java.nio.file.Files
-      .createTempDirectory(s"graft_${name}_spool").toString
-    registerSpoolForCleanup(spool)
+      awaitNoDataFlush: Boolean = false): DataFrame = {
+    val spool = sc.tempDir(s"graft_${name}_spool").toString
     // analysis-only application to the (streaming) frame: yields the
     // post-map schema without starting anything
     val schema = mapBatch(out).schema
-    withReplayStateWidth(s, inputBytes, stateHeavy) {
+    val prompt = if (awaitNoDataFlush) PromptNoDataProgress else Nil
+    withReplayStateWidth(s, inputBytes, stateHeavy, prompt) {
       val w = out.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           mapBatch(batch).write.mode(if (complete) "overwrite" else "append")
@@ -353,19 +298,32 @@ object EventStream {
           ()
         }
       val q = (if (complete) w.outputMode(OutputMode.Complete) else w).start()
-      try afterDrain(q) finally q.stop()
+      try if (awaitNoDataFlush) drainThenAwaitNoDataFlush(q) else q.processAllAvailable()
+      finally q.stop()
     }
     // a drained stream that never produced a batch leaves no files —
     // surface that as a typed empty frame, not a schema-inference crash
     val hasParts = {
-      val f = new java.io.File(spool)
-      val parts = f.listFiles()
+      val parts = new java.io.File(spool).listFiles()
       parts != null && parts.exists(_.getName.endsWith(".parquet"))
     }
     if (hasParts) s.read.parquet(spool)
     else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
+  /** Drain a bounded replay of a TINY result (windows x types, sketch
+    * cells) into the memory sink `qname` and return its table. Complete
+    * mode unless `mode` says otherwise.
+    */
+  private def drainToMemory(
+      s: SparkSession, out: DataFrame, qname: String, inputBytes: Long,
+      mode: OutputMode = OutputMode.Complete): DataFrame = {
+    withReplayStateWidth(s, inputBytes) {
+      val q = out.writeStream.format("memory").queryName(qname).outputMode(mode).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    s.table(qname)
+  }
   /** Tumbling-window event counts per type with late-data eviction.
     * On a batch frame `withWatermark` is a no-op and this is an ordinary
     * windowed aggregation — one code path, two execution modes.
@@ -501,16 +459,17 @@ object EventStream {
     */
   def q147TwsSessions(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    withRocksDbReplay(s) {
+    withConfs(s, RocksDbReplay) {
       val stream = eventsStream(s, d)
         .select(col("user_id"), expr("ts div 1000").as("ts_ns")).as[SessionEvent]
       val sessions = sessionizeTws(stream, 30L * 60 * 1000000L) // gap in MICROS
       // session-sized result -> spool (see drainToSpool)
-      materializeThenSweep(
-        drainToSpool(s, sessions.toDF(), "q147", eventsBytes(d))
+      Scope.pinned { sc =>
+        drainToSpool(sc, s, sessions.toDF(), "q147", eventsBytes(d))
           .select(col("user_id"), col("start_ns").as("start_us"),
             col("end_ns").as("end_us"), col("n_events"))
-          .orderBy(col("user_id"), col("start_us")))
+          .orderBy(col("user_id"), col("start_us"))
+      }
     }
   }
 
@@ -603,7 +562,7 @@ object EventStream {
       "4x16 chunk LSH candidate generation is complete only for radius <= 3")
     val s = store.sparkSession
     import s.implicits._
-    val sigs = store.select(col("ts"), col("doc_id"), col("simhash")).persist()
+    val sigs = Scope.lru.persist(store.select(col("ts"), col("doc_id"), col("simhash")))
     val chunks = sigs.select(col("doc_id"), col("simhash")).as[(Long, Long)]
       .flatMap { case (id, sig) =>
         (0 until 4).iterator.map(c => (id, c, (sig >>> (c * 16)) & 0xffffL))
@@ -640,10 +599,9 @@ object EventStream {
     import s.implicits._
     val docs = graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
     val shift = docs.agg(max(col("doc_id")) + lit(1L)).head().getLong(0)
-    val fp = docs.as[(Long, String)]
+    val fp = Scope.lru.persist(docs.as[(Long, String)]
       .map { case (id, t) => (id, id, graft.operators.Dedup.gramHash64(t)) }
-      .toDF("ts", "doc_id", "simhash")
-      .persist() // base + two planted legs read it; LRU lifetime
+      .toDF("ts", "doc_id", "simhash")) // base + two planted legs read it; LRU lifetime
     val near = fp.filter(col("doc_id") % 13 === 0)
       .select((col("ts") + shift).as("ts"), (col("doc_id") + shift).as("doc_id"),
         col("simhash").bitwiseXOR(
@@ -774,11 +732,8 @@ object EventStream {
     // the watermark-advance NO-DATA batch that flushes the outer-null
     // rows, with zero-data progress reporting unsuppressed so the
     // wait tracks the flush itself, not the 10 s reporting rate limit
-    materializeThenSweep(
-      withPromptNoDataProgress(s) {
-        drainToSpool(s, joined, "q137", eventsBytes(d),
-          afterDrain = drainThenAwaitNoDataFlush)
-      }
+    Scope.pinned { sc =>
+      drainToSpool(sc, s, joined, "q137", eventsBytes(d), awaitNoDataFlush = true)
         .filter(col("user_id") =!= -1L)
         .groupBy(col("user_id"))
         .agg(
@@ -787,7 +742,8 @@ object EventStream {
           count(when(col("click_ts").isNull, lit(1))).as("n_unattributed"),
           sum(when(col("click_ts").isNull, col("value").cast("decimal(18,6)")))
             .cast("double").as("unattributed_value"))
-        .orderBy(col("user_id")))
+        .orderBy(col("user_id"))
+    }
   }
 
   /** Session-window aggregation with the BUILT-IN `session_window`
@@ -848,13 +804,14 @@ object EventStream {
     // suite, hence stateHeavy (RocksDB past the byte gate)
     val byUser = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("start_us"))
-    materializeThenSweep(
-      drainToSpool(s, sessions, "q70", eventsBytes(d),
+    Scope.pinned { sc =>
+      drainToSpool(sc, s, sessions, "q70", eventsBytes(d),
         complete = true, stateHeavy = true)
         .withColumn("session_id", row_number().over(byUser).cast("long"))
         .select(col("user_id"), col("session_id"), col("n_events"),
           col("start_us"), col("end_us"))
-        .orderBy(col("user_id"), col("session_id")))
+        .orderBy(col("user_id"), col("session_id"))
+    }
   }
 
   /** q76 — [[windowedCounts]] (the UNCHANGED batch/stream-unified
@@ -872,13 +829,7 @@ object EventStream {
     val stream = eventsStream(s, d)
       .select(timestamp_micros(expr("ts div 1000")).as("ts"), col("event_type"))
     val counts = windowedCounts(stream)
-    val qname = "q76_stream_windows"
-    withReplayStateWidth(s, eventsBytes(d)) {
-      val q = counts.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Complete).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(qname)
+    drainToMemory(s, counts, "q76_stream_windows", eventsBytes(d))
       .select(unix_micros(col("win_start")).as("win_start_us"),
         col("event_type"), col("n"))
       .orderBy(col("win_start_us"), col("event_type"))
@@ -898,13 +849,7 @@ object EventStream {
     val stream = eventsStream(s, d)
       .select(timestamp_micros(expr("ts div 1000")).as("ts"), col("event_type"))
     val counts = slidingCounts(stream)
-    val qname = "q127_stream_sliding"
-    withReplayStateWidth(s, eventsBytes(d)) {
-      val q = counts.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Complete).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(qname)
+    drainToMemory(s, counts, "q127_stream_sliding", eventsBytes(d))
       .select(unix_micros(col("win_start")).as("win_start_us"),
         col("event_type"), col("n"))
       .orderBy(col("win_start_us"), col("event_type"))
@@ -936,14 +881,15 @@ object EventStream {
       src.filter(col("event_type") === "view"),
       src.filter(col("event_type") === "purchase"))
     // pair-sized result -> spool, not memory sink (see drainToSpool)
-    materializeThenSweep(
-      drainToSpool(s, joined, "q83", eventsBytes(d))
+    Scope.pinned { sc =>
+      drainToSpool(sc, s, joined, "q83", eventsBytes(d))
         .groupBy(col("user_id"))
         .agg(
           count(lit(1)).as("n_pairs"),
           sum(col("value").cast("decimal(18,6)")).cast("double").as("attributed_value"),
           min(unix_micros(col("click_ts"))).as("first_click_us"))
-        .orderBy(col("user_id")))
+        .orderBy(col("user_id"))
+    }
   }
 
   /** q93 — [[dedupStream]] (dropDuplicatesWithinWatermark) replayed
@@ -983,8 +929,8 @@ object EventStream {
         col("event_type"), col("user_id"))
     val redelivered = src.union(src.filter(col("event_id") % 37 === 0))
     val deduped = dedupStream(redelivered, "event_id")
-    materializeThenSweep(
-      drainToSpool(s, deduped, "q93", eventsBytes(d),
+    Scope.pinned { sc =>
+      drainToSpool(sc, s, deduped, "q93", eventsBytes(d),
         mapBatch = _.groupBy(col("event_type"), col("user_id"))
           .agg(count(lit(1)).as("n")))
         .groupBy(col("event_type"), col("user_id"))
@@ -992,7 +938,8 @@ object EventStream {
         .groupBy(col("event_type"))
         .agg(sum(col("n")).as("n_events"),
           count(lit(1)).as("n_users"))
-        .orderBy(col("event_type")))
+        .orderBy(col("event_type"))
+    }
   }
 
   /** q103 — stream-static broadcast enrichment under the batch oracle:
@@ -1012,12 +959,13 @@ object EventStream {
     val enriched = src.join(broadcast(dim), "user_id")
     // EVENT-sized result — the largest memory sink the suite had;
     // spooled distributed (see drainToSpool)
-    materializeThenSweep(
-      drainToSpool(s, enriched, "q103", eventsBytes(d))
+    Scope.pinned { sc =>
+      drainToSpool(sc, s, enriched, "q103", eventsBytes(d))
         .groupBy(col("segment"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
-        .orderBy(col("segment")))
+        .orderBy(col("segment"))
+    }
   }
 
   /** q108 — [[sessionize]] itself (the CUSTOM `flatMapGroupsWithState`
@@ -1042,11 +990,12 @@ object EventStream {
       .select(col("user_id"), expr("ts div 1000").as("ts_ns")).as[SessionEvent]
     val sessions = sessionize(stream, 30L * 60 * 1000000L) // gap in MICROS
     // session-sized result -> spool (see drainToSpool)
-    materializeThenSweep(
-      drainToSpool(s, sessions.toDF(), "q108", eventsBytes(d))
+    Scope.pinned { sc =>
+      drainToSpool(sc, s, sessions.toDF(), "q108", eventsBytes(d))
         .select(col("user_id"), col("start_ns").as("start_us"),
           col("end_ns").as("end_us"), col("n_events"))
-        .orderBy(col("user_id"), col("start_us")))
+        .orderBy(col("user_id"), col("start_us"))
+    }
   }
 
   /** Per-user running aggregate over an event stream — value sums per
@@ -1223,18 +1172,18 @@ object EventStream {
     */
   def q156StreamRadiusDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    withRocksDbReplay(s) {
+    withConfs(s, RocksDbReplay) {
       val baseSec = 1704096000L // 2024-01-01 08:00:00 UTC
       // fingerprint + planted-leg fixture = pure function of the sf
       // dir -> built once per session (see cachedFixture); the
       // per-pass cost drops to the replay itself
-      val fixtureDir = cachedFixture(s"q156:$d") { dir =>
+      val fixtureDir = cachedFixture(s"q156:$d") { dir => Scope { sc =>
         val docs = graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
         val shift = docs.agg(max(col("doc_id")) + lit(1L)).head().getLong(0)
-        val fp = docs.as[(Long, String)]
+        // base + two planted legs read it; freed after the write
+        val fp = sc.persist(docs.as[(Long, String)]
           .map { case (id, t) => (id, id, graft.operators.Dedup.gramHash64(t)) }
-          .toDF("arrival", "doc_id", "simhash")
-          .persist() // base + two planted legs; freed after the write
+          .toDF("arrival", "doc_id", "simhash"))
         val near = fp.filter(col("doc_id") % 13 === 0)
           .select((col("arrival") + shift).as("arrival"),
             (col("doc_id") + shift).as("doc_id"),
@@ -1253,8 +1202,7 @@ object EventStream {
           .select(timestamp_micros((col("arrival") + baseSec) * 1000000L).as("ts"),
             col("doc_id"), col("simhash"))
           .write.mode("overwrite").parquet(dir)
-        fp.unpersist(blocking = false)
-      }
+      }}
       val src = s.readStream
         .schema(s.read.parquet(fixtureDir).schema)
         .parquet(fixtureDir)
@@ -1263,16 +1211,15 @@ object EventStream {
       // survivor (doc-sized) result -> spool (see drainToSpool); await
       // the watermark-advance NO-DATA batch that flushes the last
       // per-doc windows (unsuppressed — see drainThenAwaitNoDataFlush)
-      materializeThenSweep(
-        withPromptNoDataProgress(s) {
-          drainToSpool(s, survivors.toDF(), "q156", tableBytes(fixtureDir),
-            afterDrain = drainThenAwaitNoDataFlush)
-        }
+      Scope.pinned { sc =>
+        drainToSpool(sc, s, survivors.toDF(), "q156", tableBytes(fixtureDir),
+          awaitNoDataFlush = true)
           .filter(col("doc_id") >= 0L)
           .select(
             expr(s"CAST(unix_micros(ts) div 1000000 - $baseSec AS BIGINT)").as("arrival"),
             col("doc_id"))
-          .orderBy(col("doc_id")))
+          .orderBy(col("doc_id"))
+      }
     }
   }
 
@@ -1462,13 +1409,7 @@ object EventStream {
       .select(timestamp_micros(expr("ts div 1000")).as("ts"),
         col("value").cast("double").as("value"))
     val cells = histWindowCells(stream, vmin, vmax)
-    val qname = "q174_stream_hist"
-    withReplayStateWidth(s, eventsBytes(d)) {
-      val q = cells.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Complete).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val sink = s.table(qname)
+    val sink = drainToMemory(s, cells, "q174_stream_hist", eventsBytes(d))
       .select(unix_micros(col("win_start")).as("win_start_us"),
         col("bin"), col("c"))
     val ns = sink.groupBy(col("win_start_us")).agg(sum(col("c")).as("n"))
@@ -1545,13 +1486,7 @@ object EventStream {
     val stream = eventsStream(s, d)
       .select(timestamp_micros(expr("ts div 1000")).as("ts"), col("user_id"))
     val sk = kmvWindowSketch(stream)
-    val qname = "q175_stream_kmv"
-    withReplayStateWidth(s, eventsBytes(d)) {
-      val q = sk.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Complete).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val sink = s.table(qname)
+    val sink = drainToMemory(s, sk, "q175_stream_kmv", eventsBytes(d))
       .select(unix_micros(col("win_start")).as("k"), col("sk"))
     val est = graft.operators.Corpus.kmvReadoutLong(sink)
       .withColumnRenamed("k", "win_start_us")
@@ -1641,13 +1576,7 @@ object EventStream {
       .as[CusumEvent]
     val stats = cusumStream(stream, kVal,
       kVal * graft.operators.Temporal.CusumHMult)
-    val qname = "q194_stream_cusum"
-    withReplayStateWidth(s, eventsBytes(d)) {
-      val q = stats.toDF().writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Update).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(qname)
+    drainToMemory(s, stats.toDF(), "q194_stream_cusum", eventsBytes(d), OutputMode.Update)
       .select(col("user_id"), col("n_events"), col("max_cusum"),
         col("n_above"), col("first_cross_us"))
       .orderBy(col("user_id"))
@@ -1677,13 +1606,7 @@ object EventStream {
         graft.operators.Corpus.hllKey(col("user_id").cast("string")),
         graft.operators.Corpus.KmvK).as("sk"))
       .select(col("window.start").as("win_start"), col("sk"))
-    val qname = "q193_stream_sliding_kmv"
-    withReplayStateWidth(s, eventsBytes(d)) {
-      val q = sk.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Complete).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val sink = s.table(qname)
+    val sink = drainToMemory(s, sk, "q193_stream_sliding_kmv", eventsBytes(d))
       .select(unix_micros(col("win_start")).as("k"), col("sk"))
     val est = graft.operators.Corpus.kmvReadoutLong(sink)
       .withColumnRenamed("k", "win_start_us")
@@ -1746,13 +1669,7 @@ object EventStream {
       .select(timestamp_micros(expr("ts div 1000")).as("ts"),
         col("event_id"), col("value"))
     val sk = samplePairsWindow(stream)
-    val qname = "q197_stream_quantile"
-    withReplayStateWidth(s, eventsBytes(d)) {
-      val q = sk.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Complete).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val sink = s.table(qname)
+    val sink = drainToMemory(s, sk, "q197_stream_quantile", eventsBytes(d))
       .select(unix_micros(col("win_start")).as("k"), col("pairs"),
         col("n_events"))
     graft.operators.Corpus.quantileReadoutLong(sink)
@@ -1787,13 +1704,7 @@ object EventStream {
         count(lit(1)).as("n_events"))
       .select(col("window.start").as("win_start"), col("pairs"),
         col("n_events"))
-    val qname = "q203_stream_sliding_quantile"
-    withReplayStateWidth(s, eventsBytes(d)) {
-      val q = sk.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Complete).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val sink = s.table(qname)
+    val sink = drainToMemory(s, sk, "q203_stream_sliding_quantile", eventsBytes(d))
       .select(unix_micros(col("win_start")).as("k"), col("pairs"),
         col("n_events"))
     graft.operators.Corpus.quantileReadoutLong(sink)
@@ -1835,7 +1746,7 @@ object EventStream {
   def q211StreamExactSubstr(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val L = graft.operators.Curation.ExactSubstrL
-    withRocksDbReplay(s) {
+    withConfs(s, RocksDbReplay) {
       val baseSec = 1704096000L // 2024-01-01 08:00:00 UTC; % 100 == 0
       val fixtureDir = cachedFixture(s"q211:$d") { dir =>
         val docs = graft.Tables.documents(s, d)
@@ -1894,11 +1805,10 @@ object EventStream {
           expr(s"(unix_micros(window.start) div 1000000 - ${baseSec}L) div 100")
             .as("win_id"),
           col("win"), col("df"))
-      val sink = materializeThenSweep(
-        withPromptNoDataProgress(s) {
-          drainToSpool(s, cells, "q211", tableBytes(s"$d/documents.parquet"),
-            afterDrain = drainThenAwaitNoDataFlush)
-        })
+      val sink = Scope.pinned { sc =>
+        drainToSpool(sc, s, cells, "q211", tableBytes(s"$d/documents.parquet"),
+          awaitNoDataFlush = true)
+      }
       sink.groupBy(col("win_id"))
         .agg(
           count(lit(1)).as("n_dup_windows"),
@@ -1939,13 +1849,7 @@ object EventStream {
     val cells = cmsWindowCells(stream)
       .filter((col("j") * lit(w.toLong) + col("bkt"))
         .isin(probePairs: _*))
-    val qname = "q167_stream_cms"
-    withReplayStateWidth(s, eventsBytes(d)) {
-      val q = cells.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Complete).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val sink = s.table(qname)
+    val sink = drainToMemory(s, cells, "q167_stream_cms", eventsBytes(d))
       .select(unix_micros(col("win_start")).as("win_start_us"),
         col("j"), col("bkt"), col("c"))
     val ev = graft.Tables.events(s, d)
@@ -2023,12 +1927,13 @@ object EventStream {
         .groupBy(col("tier"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,6)")).as("v"))
-    materializeThenSweep(
-      drainToSpool(s, stream, "q171", eventsBytes(d), mapBatch = enrichBatch)
+    Scope.pinned { sc =>
+      drainToSpool(sc, s, stream, "q171", eventsBytes(d), mapBatch = enrichBatch)
         .groupBy(col("tier"), col("event_type"))
         .agg(sum(col("n")).as("n_events"),
           sum(col("v")).cast("double").as("total_value"))
-        .orderBy(col("tier"), col("event_type")))
+        .orderBy(col("tier"), col("event_type"))
+    }
   }
 
   /** One row of the tagged two-sided as-of input: `side` 0 = right
@@ -2165,7 +2070,7 @@ object EventStream {
     */
   def q191StreamAsofTws(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    withRocksDbReplay(s) {
+    withConfs(s, RocksDbReplay) {
       val tagged = eventsStream(s, d)
         .filter(col("event_type").isin("click", "error"))
         .select(col("user_id"), expr("ts div 1000").as("ts_us"),
@@ -2173,11 +2078,12 @@ object EventStream {
           col("event_id"))
         .as[TaggedEvent]
       val enriched = asOfStreamTws(tagged)
-      materializeThenSweep(
-        drainToSpool(s, enriched.toDF(), "q191", eventsBytes(d))
+      Scope.pinned { sc =>
+        drainToSpool(sc, s, enriched.toDF(), "q191", eventsBytes(d))
           .select(col("event_id"), col("user_id"), col("ts_us"),
             col("asof_click_us"), col("asof_click_id"))
-          .orderBy(col("event_id")))
+          .orderBy(col("event_id"))
+      }
     }
   }
 
@@ -2199,11 +2105,12 @@ object EventStream {
         col("event_id"))
       .as[TaggedEvent]
     val enriched = asOfStream(tagged)
-    materializeThenSweep(
-      drainToSpool(s, enriched.toDF(), "q187", eventsBytes(d))
+    Scope.pinned { sc =>
+      drainToSpool(sc, s, enriched.toDF(), "q187", eventsBytes(d))
         .select(col("event_id"), col("user_id"), col("ts_us"),
           col("asof_click_us"), col("asof_click_id"))
-        .orderBy(col("event_id")))
+        .orderBy(col("event_id"))
+    }
   }
 
   /** q161 — the ELEVENTH streaming shape: a windowed distinct-user
@@ -2220,13 +2127,7 @@ object EventStream {
     val stream = eventsStream(s, d)
       .select(timestamp_micros(expr("ts div 1000")).as("ts"), col("user_id"))
     val regs = hllWindowRegisters(stream)
-    val qname = "q161_stream_hll"
-    withReplayStateWidth(s, eventsBytes(d)) {
-      val q = regs.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Complete).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val sink = s.table(qname)
+    val sink = drainToMemory(s, regs, "q161_stream_hll", eventsBytes(d))
       .select(unix_micros(col("win_start")).as("win_start_us"),
         col("bkt"), col("r"))
     val exact = graft.Tables.events(s, d)

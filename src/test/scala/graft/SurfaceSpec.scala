@@ -37,6 +37,22 @@ class SurfaceSpec extends AnyFunSuite {
     assert(reads.toSet == allowed, s"rule env-knobs: declared reads missing ${allowed -- reads}")
   }
 
+  test("rule cache-lifetime: persist, cache, unpersist, localCheckpoint and " +
+    "createTempDirectory appear only in Scope") {
+    // code lines only (scaladoc may name the Spark calls); an owner's
+    // own `sc.persist(` / `Scope.lru.persist(` is the sanctioned form
+    val raw = ("""(?<!\bsc|Scope\.lru)\.persist\(|\.unpersist\(|\.localCheckpoint\(|""" +
+      """\.cache\(\)|createTempDirectory""").r
+    val hits = for {
+      (file, text) <- sources if file != "graft/Scope.scala"
+      line <- text.linesIterator.toSeq
+      code = line.split("//", 2)(0)
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      if raw.findFirstIn(code).isDefined
+    } yield s"$file: ${line.trim}"
+    assert(hits.isEmpty, s"rule cache-lifetime: caches outside graft.Scope:\n${hits.mkString("\n")}")
+  }
+
   test("rule entry-points: def main( appears only in Bench, Verify, Atlas, " +
     "MakeScale and Dev") {
     val mains = sources.collect { case (file, text) if text.contains("def main(") => file }

@@ -86,7 +86,7 @@ class DatasetPathSpec extends SparkSpec {
     assert(got == ref)
   }
 
-  test("sized Dataset path groups NaN keys like the groupByKey path") {
+  test("Dataset path groups NaN keys alike at pinned and unpinned widths") {
     import spark.implicits._
     // NaN != NaN under primitive ==, so adjacent-grouping must use
     // compare-equality or every NaN group silently splits
@@ -110,7 +110,7 @@ class DatasetPathSpec extends SparkSpec {
     assert(sized(java.lang.Double.doubleToLongBits(1.5)) == 2L)
   }
 
-  test("sized Dataset path groups array-typed keys like the groupByKey path") {
+  test("Dataset path groups array-typed keys alike at pinned and unpinned widths") {
     import spark.implicits._
     // JVM == on arrays is reference equality: without element-wise
     // comparison the sized path splits every array-key group into

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scope
 import graft.mr.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -35,20 +36,19 @@ class CurationPipelineSpec extends SparkSpec {
         size(filter(split(col("text"), " "), t => t =!= "")).cast("long"))
       .filter(col("n_tok").between(10L, 80L))
       .select(col("source"), col("doc_id"), col("text"))
-    val (rw, release) = Curation.exactSubstrRewrite(gated)
     val rk = row_number().over(Window.partitionBy(col("source"))
       .orderBy(md5(col("rewritten")), col("doc_id")))
-    val out = rw.withColumn("rk", rk)
-      .filter(col("rk") <= Curation.QuotaPerSource)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_toks") - col("n_removed")).as("sum_tokens"),
-        countDistinct(md5(col("rewritten"))).as("n_distinct_texts"),
-        max(md5(col("rewritten"))).as("sig_max"))
-      .orderBy(col("source"))
-      .collect().toSeq
-    release()
-    out
+    Scope { sc =>
+      Curation.exactSubstrRewrite(sc, gated).withColumn("rk", rk)
+        .filter(col("rk") <= Curation.QuotaPerSource)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_toks") - col("n_removed")).as("sum_tokens"),
+          countDistinct(md5(col("rewritten"))).as("n_distinct_texts"),
+          max(md5(col("rewritten"))).as("sig_max"))
+        .orderBy(col("source"))
+        .collect().toSeq
+    }
   }
 
   test("fused quota+budget == the naive window + join-back formulation " +

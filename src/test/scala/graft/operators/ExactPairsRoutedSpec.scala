@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scope
 import graft.mr.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -16,6 +17,10 @@ class ExactPairsRoutedSpec extends SparkSpec {
   private def pairsOf(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** The routed generator's pair set, collected inside its scope. */
+  private def routedPairs(df: DataFrame, cap: Int): Set[(Long, Long)] =
+    Scope { sc => pairsOf(LshJoin.exactBucketPairsRouted(sc, df, "id", cap, "bucket")) }
+
   private def brute(rows: Seq[(Long, Long)]): Set[(Long, Long)] =
     rows.groupBy(_._2).values.flatMap { bucket =>
       val ids = bucket.map(_._1).distinct.sorted
@@ -27,7 +32,7 @@ class ExactPairsRoutedSpec extends SparkSpec {
     val rnd = new scala.util.Random(7211)
     val rows = (1L to 300L).map(i => i -> rnd.nextInt(40).toLong)
     val df = rows.toDF("id", "bucket")
-    val routed = pairsOf(LshJoin.exactBucketPairsRouted(df, "id", 64, "bucket"))
+    val routed = routedPairs(df, 64)
     val unrouted = pairsOf(
       LshJoin.exactBucketPairsPartitioned(df, "id", 64, "bucket"))
     assert(routed == unrouted && routed == brute(rows))
@@ -42,7 +47,7 @@ class ExactPairsRoutedSpec extends SparkSpec {
     intercept[org.apache.spark.SparkException] {
       LshJoin.exactBucketPairsPartitioned(df, "id", 16, "bucket").count()
     }
-    val routed = pairsOf(LshJoin.exactBucketPairsRouted(df, "id", 16, "bucket"))
+    val routed = routedPairs(df, 16)
     assert(routed == brute(rows),
       "over-cap route lost or invented pairs vs brute force")
     assert(routed.size == 90 * 89 / 2 + brute(rows.drop(90)).size)
@@ -51,8 +56,7 @@ class ExactPairsRoutedSpec extends SparkSpec {
   test("duplicate (id, bucket) rows are deduped on BOTH routes") {
     val base = (1L to 30L).map(_ -> 0L) ++ (40L to 45L).map(_ -> 1L)
     val dup = base ++ base ++ base.take(5)
-    val routed = pairsOf(LshJoin.exactBucketPairsRouted(
-      dup.toDF("id", "bucket"), "id", 16, "bucket")) // bucket 0 over cap
+    val routed = routedPairs(dup.toDF("id", "bucket"), 16) // bucket 0 over cap
     assert(routed == brute(base))
   }
 
@@ -60,8 +64,7 @@ class ExactPairsRoutedSpec extends SparkSpec {
     "(no require trip), one past it routes away — same pairs either side") {
     for (n <- Seq(16L, 17L)) {
       val rows = (1L to n).map(_ -> 0L)
-      val routed = pairsOf(LshJoin.exactBucketPairsRouted(
-        rows.toDF("id", "bucket"), "id", 16, "bucket"))
+      val routed = routedPairs(rows.toDF("id", "bucket"), 16)
       assert(routed == brute(rows), s"boundary n=$n diverged")
     }
   }
@@ -70,16 +73,16 @@ class ExactPairsRoutedSpec extends SparkSpec {
     "(repeated calls in a long-lived session must not accumulate cache)") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val rows = (1L to 40L).map(i => i -> (i % 4))
-    val (pr, release) = LshJoin.exactBucketPairsRoutedReleasable(
-      rows.toDF("id", "bucket"), "id", 8, "bucket")
-    val got = pairsOf(pr) // materializes -> both persists are live
-    assert(got == brute(rows))
-    val during = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(during.size == 2,
-      s"expected exactly the bucket frame + hot list pinned, got ${during.size}")
-    release()
+    Scope { sc =>
+      val pr = LshJoin.exactBucketPairsRouted(sc, rows.toDF("id", "bucket"), "id", 8, "bucket")
+      val got = pairsOf(pr) // materializes -> both persists are live
+      assert(got == brute(rows))
+      val during = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(during.size == 2,
+        s"expected exactly the bucket frame + hot list pinned, got ${during.size}")
+    }
     val after = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(after.isEmpty,
-      s"release thunk left ${after.size} RDD(s) pinned")
+      s"closed scope left ${after.size} RDD(s) pinned")
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scope
 import graft.mr.SparkSpec
 import org.apache.spark.sql.DataFrame
 
@@ -33,11 +34,11 @@ class ExactSubstrBloomCapSpec extends SparkSpec {
 
   /** Doc-grain rewrite through a dupOf with the given byte budget. */
   private def rewriteAt(maxBytes: Long)
-      : (Map[Long, (String, Long)], Option[Long]) = {
+      : (Map[Long, (String, Long)], Option[Long]) = Scope { sc =>
     val docs = corpus
     val planted = Curation.exactSubstrPlanted(docs)
-    val (dup, bloom, release) =
-      Curation.exactSubstrDupOf(
+    val (dup, bloom) =
+      Curation.exactSubstrDupOf(sc,
         Curation.exactSubstrOccState(docs, hashKeys = false), maxBytes)
     val out = Curation.exactSubstrApplyCuts(planted,
         Curation.exactSubstrCuts(planted, dup, bloom, hashKeys = false))
@@ -45,7 +46,6 @@ class ExactSubstrBloomCapSpec extends SparkSpec {
       .map(r => r.getLong(1) -> ((r.getString(2), r.getLong(4))))
       .toMap
     val bits = bloom.map(_.value.bitSize())
-    release()
     (out, bits)
   }
 
@@ -53,9 +53,7 @@ class ExactSubstrBloomCapSpec extends SparkSpec {
     "SKIPPED probe modes; the clamp genuinely bounds the bit array") {
     // the duplicated vocabulary: windows overlapping the shared span
     val state = Curation.exactSubstrOccState(corpus, hashKeys = false)
-    val (dupFrame, _, rel0) = Curation.exactSubstrDupOf(state)
-    val nDup = dupFrame.count()
-    rel0()
+    val nDup = Scope { sc => Curation.exactSubstrDupOf(sc, state)._1.count() }
     assert(nDup > 10, s"fixture too weak: only $nDup duplicated windows")
 
     // budgets straddling the two thresholds: optimal bits ~ 9.57/key,

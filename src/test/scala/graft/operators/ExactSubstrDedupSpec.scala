@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scope
 import graft.mr.SparkSpec
 
 /** q209 — the ExactSubstr dedup TRANSFORM (Lee et al. '21 §4): byte-
@@ -21,13 +22,13 @@ class ExactSubstrDedupSpec extends SparkSpec {
   private def rewrite(rows: Seq[(String, Long, String)],
       hashKeys: Boolean = false)
       : Map[Long, (String, Long, Long, Long, Long)] = {
-    val (rw, release) = Curation.exactSubstrRewrite(
-      rows.toDF("source", "doc_id", "text"), hashKeys)
-    val got = rw.collect().map(r => r.getLong(1) ->
-      ((r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5),
-        r.getLong(6)))).toMap
-    release()
-    got
+    Scope { sc =>
+      val rw = Curation.exactSubstrRewrite(sc,
+        rows.toDF("source", "doc_id", "text"), hashKeys)
+      rw.collect().map(r => r.getLong(1) ->
+        ((r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5),
+          r.getLong(6)))).toMap
+    }
   }
 
   private def rollup(rows: Seq[(String, Long, String)]) =
@@ -136,10 +137,10 @@ class ExactSubstrDedupSpec extends SparkSpec {
       ("a", 5L, s"${span("f", 12)} $s8"), // span at pos 12..19
       ("a", 5L, span("g", L)),            // only 8 tokens
       ("b", 6L, s"x1 $s8"))               // makes the span duplicated
-    val (rw, release) = Curation.exactSubstrRewrite(
-      rows.toDF("source", "doc_id", "text"))
-    val got = rw.collect() // must not throw
-    release()
+    val got = Scope { sc =>
+      Curation.exactSubstrRewrite(sc, rows.toDF("source", "doc_id", "text"))
+        .collect() // must not throw
+    }
     assert(got.length == 3)
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scope
 import graft.mr.SparkSpec
 import org.apache.spark.sql.DataFrame
 
@@ -70,11 +71,12 @@ class ExactSubstrIncrementalSpec extends SparkSpec {
     val b1 = Seq(("a", 1L, s"pre $span")).toDF("source", "doc_id", "text")
     val b2 = Seq(("a", 2L, s"$span post"),
       ("a", 3L, s"mid $span")).toDF("source", "doc_id", "text")
-    val (rw, release) = Curation.exactSubstrRewriteIncremental(Seq(b1, b2))
-    val by = rw.select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("rewritten"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    release()
+    val by = Scope { sc =>
+      Curation.exactSubstrRewriteIncremental(sc, Seq(b1, b2))
+        .select(org.apache.spark.sql.functions.col("doc_id"),
+          org.apache.spark.sql.functions.col("rewritten"))
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    }
     assert(by(1L) == s"pre $span", "the earlier-batch keeper must survive intact")
     assert(by(2L) == "post", "the later batch must cut the duplicated span")
     assert(by(3L) == "mid", "every later occurrence is cut, not just the first")
@@ -83,16 +85,16 @@ class ExactSubstrIncrementalSpec extends SparkSpec {
   test("q213 incremental rewrite == one-shot q209 rewrite at DOCUMENT grain " +
     "for any disjoint batch split") {
     val docs = corpus(71, 60)
-    val (one, rel1) = Curation.exactSubstrRewrite(docs)
-    val oneRows = one.orderBy("doc_id").collect().toSeq
-    rel1()
+    val oneRows = Scope { sc =>
+      Curation.exactSubstrRewrite(sc, docs).orderBy("doc_id").collect().toSeq
+    }
     for (mod <- Seq(2, 3)) {
       import org.apache.spark.sql.functions.col
       val batches = (0 until mod).map(r =>
         docs.filter(col("doc_id") % mod === r.toLong))
-      val (inc, rel) = Curation.exactSubstrRewriteIncremental(batches)
-      val incRows = inc.orderBy("doc_id").collect().toSeq
-      rel()
+      val incRows = Scope { sc =>
+        Curation.exactSubstrRewriteIncremental(sc, batches).orderBy("doc_id").collect().toSeq
+      }
       assert(incRows == oneRows, s"split mod $mod diverged from one-shot q209")
     }
   }

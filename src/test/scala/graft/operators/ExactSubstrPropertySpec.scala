@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scope
 import graft.mr.SparkSpec
 
 /** Randomized differential pin for q208: the distributed window census
@@ -127,12 +128,13 @@ class ExactSubstrPropertySpec extends SparkSpec {
       }
       val want = referenceRewrite(rows)
       for (hashed <- Seq(false, true)) {
-        val (rw, release) = Curation.exactSubstrRewrite(
-          rows.toDF("source", "doc_id", "text"), hashKeys = hashed)
-        val got = rw.collect().map(r => r.getLong(1) ->
-          ((r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5),
-            r.getLong(6)))).toMap
-        release()
+        val got = Scope { sc =>
+          val rw = Curation.exactSubstrRewrite(sc,
+            rows.toDF("source", "doc_id", "text"), hashKeys = hashed)
+          rw.collect().map(r => r.getLong(1) ->
+            ((r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5),
+              r.getLong(6)))).toMap
+        }
         assert(got == want, s"trial $trial hashed=$hashed")
       }
     }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scope
 import graft.mr.SparkSpec
 import graft.streaming.UpsertSink
 
@@ -54,11 +55,10 @@ class ExactSubstrUpsertSpec extends SparkSpec {
 
   /** One-shot q209 rewrite of the union, doc grain. */
   private def oneShot(rows: Seq[(String, Long, String)]): Map[Long, String] = {
-    val (rw, release) = Curation.exactSubstrRewrite(
-      rows.toDF("source", "doc_id", "text"))
-    val got = rw.collect().map(r => r.getLong(1) -> r.getString(2)).toMap
-    release()
-    got
+    Scope { sc =>
+      val rw = Curation.exactSubstrRewrite(sc, rows.toDF("source", "doc_id", "text"))
+      rw.collect().map(r => r.getLong(1) -> r.getString(2)).toMap
+    }
   }
 
   // doc_ids avoid multiples of 17 so the global plant stays inert

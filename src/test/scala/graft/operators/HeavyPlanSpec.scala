@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scope
 import graft.mr.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
@@ -143,43 +144,44 @@ class HeavyPlanSpec extends SparkSpec {
         ("b", 2L, s"b1 b2 $span b3 b4"),
         ("c", 3L, (1 to 16).map(i => s"f$i").mkString(" ")))
         .toDF("source", "doc_id", "text")
-      val (rw, release) = Curation.exactSubstrRewrite(docs)
-      val s = shapeOf(rw)
-      // 3 shuffles, each keyed and irreducible: the occurrence stream
-      // onto the window key for the census-apply join, the cut
-      // positions onto doc_id (per-doc collapse), and the document
-      // side onto doc_id for the rewrite join (the cuts side reuses
-      // its agg partitioning). The duplicated-window census reads its
-      // cache in place (inMemScans=1 — a second scan or a 4th shuffle
-      // means the persist stopped covering the census build), and
-      // NOTHING broadcasts: at 100 TB no side of any join here is
-      // small, so the scale shape is all co-partitioned joins.
-      assert(s == Shape(3, 0, 0, 1), s"exactSubstrRewrite shape drifted: $s")
-      // the Bloom sideways pass (r18 verdict #1): the census-apply
-      // occurrence stream must be probed BELOW its exchange — inside
-      // the pre-shuffle subtree — so non-duplicated occurrences never
-      // reach the window-key exchange. The probe is a broadcast HANDLE
-      // (BloomMightContainBc), so the broadcasts=0 count above still
-      // holds: no plan-level BroadcastExchange, no per-task literal.
-      val plan = rw.queryExecution.executedPlan
-      val bloomFilters = plan.collect {
-        case f: org.apache.spark.sql.execution.FilterExec
-            if f.condition.exists(_.isInstanceOf[graft.functions.BloomMightContainBc]) => f
+      Scope { sc =>
+        val rw = Curation.exactSubstrRewrite(sc, docs)
+        val s = shapeOf(rw)
+        // 3 shuffles, each keyed and irreducible: the occurrence stream
+        // onto the window key for the census-apply join, the cut
+        // positions onto doc_id (per-doc collapse), and the document
+        // side onto doc_id for the rewrite join (the cuts side reuses
+        // its agg partitioning). The duplicated-window census reads its
+        // cache in place (inMemScans=1 — a second scan or a 4th shuffle
+        // means the persist stopped covering the census build), and
+        // NOTHING broadcasts: at 100 TB no side of any join here is
+        // small, so the scale shape is all co-partitioned joins.
+        assert(s == Shape(3, 0, 0, 1), s"exactSubstrRewrite shape drifted: $s")
+        // the Bloom sideways pass (r18 verdict #1): the census-apply
+        // occurrence stream must be probed BELOW its exchange — inside
+        // the pre-shuffle subtree — so non-duplicated occurrences never
+        // reach the window-key exchange. The probe is a broadcast HANDLE
+        // (BloomMightContainBc), so the broadcasts=0 count above still
+        // holds: no plan-level BroadcastExchange, no per-task literal.
+        val plan = rw.queryExecution.executedPlan
+        val bloomFilters = plan.collect {
+          case f: org.apache.spark.sql.execution.FilterExec
+              if f.condition.exists(_.isInstanceOf[graft.functions.BloomMightContainBc]) => f
+        }
+        // 1 probe on the occurrence side is the design; Catalyst's
+        // constraint propagation may MIRROR it onto the (vocab-sized,
+        // always-true modulo FPP) cached dup side too — harmless, so the
+        // pin allows it rather than fighting the optimizer
+        assert(bloomFilters.size == 1 || bloomFilters.size == 2,
+          s"Bloom probe count drifted: ${bloomFilters.size}")
+        val preExchange = plan.collect {
+          case e: ShuffleExchangeExec
+              if bloomFilters.exists(f => e.child.exists(_ eq f)) => e
+        }
+        assert(preExchange.nonEmpty,
+          "the Bloom probe must sit BELOW a shuffle exchange (pre-exchange pruning), " +
+            "not above the census-apply join")
       }
-      // 1 probe on the occurrence side is the design; Catalyst's
-      // constraint propagation may MIRROR it onto the (vocab-sized,
-      // always-true modulo FPP) cached dup side too — harmless, so the
-      // pin allows it rather than fighting the optimizer
-      assert(bloomFilters.size == 1 || bloomFilters.size == 2,
-        s"Bloom probe count drifted: ${bloomFilters.size}")
-      val preExchange = plan.collect {
-        case e: ShuffleExchangeExec
-            if bloomFilters.exists(f => e.child.exists(_ eq f)) => e
-      }
-      assert(preExchange.nonEmpty,
-        "the Bloom probe must sit BELOW a shuffle exchange (pre-exchange pruning), " +
-          "not above the census-apply join")
-      release()
     }
   }
 
@@ -197,34 +199,36 @@ class HeavyPlanSpec extends SparkSpec {
       }
       val prev = state(Seq(("a", 1L, s"$span x1 x2")))
       val bSt = state(Seq(("a", 2L, s"y1 y2 $span")))
-      val (m2, merged, changed) = Curation.exactSubstrStateMergeChanged(prev, bSt)
-      // m2 is itself persisted (the fusion's point), so descend into
-      // ITS cached plan to pin the join shape the cache pays for
-      val inner = m2.queryExecution.executedPlan.collectFirst {
-        case sc: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          sc.relation.cachedPlan
-      }.getOrElse(fail("fused state merge must be persisted"))
-      val innerShuffles = inner.collect { case e: ShuffleExchangeExec => e }.size
-      val innerScans = inner.collect {
-        case sc if sc.nodeName.contains("InMemoryTableScan") => sc }.size
-      assert(innerShuffles == 0,
-        s"state merge must move nothing — both sides are cached hash-partitioned aggregates; got $innerShuffles shuffles")
-      assert(innerScans == 2,
-        s"both cached states must be read in place: $innerScans in-mem scans")
-      // and it merges correctly: nd adds, keep is the running min
-      val m = merged.collect().map(r =>
-        r.getString(0) -> ((r.getLong(1), r.getStruct(2).getLong(0)))).toMap
-      assert(m(span) == ((2L, 1L)), s"shared window must merge to nd=2 keeper doc 1: $m")
-      // the changed set projects from the SAME fused join cache (the
-      // r20 fusion: one prev⋈batch join per arrival, not two) and
-      // carries exactly the batch-touched windows whose verdict moved:
-      // the shared span crossed into duplication; y-windows stay nd=1
-      val ch = shapeOf(changed)
-      assert(ch.shuffles == 0 && ch.inMemScans >= 1,
-        s"changed set must read the fused join's cache in place: $ch")
-      assert(changed.collect().map(_.getString(0)).toSeq == Seq(span),
-        "only the newly-duplicated window may enter the changed set")
-      m2.unpersist(); prev.unpersist(); bSt.unpersist()
+      Scope { sc =>
+        val (m2, merged, changed) = Curation.exactSubstrStateMergeChanged(sc, prev, bSt)
+        // m2 is itself persisted (the fusion's point), so descend into
+        // ITS cached plan to pin the join shape the cache pays for
+        val inner = m2.queryExecution.executedPlan.collectFirst {
+          case sc: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+            sc.relation.cachedPlan
+        }.getOrElse(fail("fused state merge must be persisted"))
+        val innerShuffles = inner.collect { case e: ShuffleExchangeExec => e }.size
+        val innerScans = inner.collect {
+          case sc if sc.nodeName.contains("InMemoryTableScan") => sc }.size
+        assert(innerShuffles == 0,
+          s"state merge must move nothing — both sides are cached hash-partitioned aggregates; got $innerShuffles shuffles")
+        assert(innerScans == 2,
+          s"both cached states must be read in place: $innerScans in-mem scans")
+        // and it merges correctly: nd adds, keep is the running min
+        val m = merged.collect().map(r =>
+          r.getString(0) -> ((r.getLong(1), r.getStruct(2).getLong(0)))).toMap
+        assert(m(span) == ((2L, 1L)), s"shared window must merge to nd=2 keeper doc 1: $m")
+        // the changed set projects from the SAME fused join cache (the
+        // r20 fusion: one prev⋈batch join per arrival, not two) and
+        // carries exactly the batch-touched windows whose verdict moved:
+        // the shared span crossed into duplication; y-windows stay nd=1
+        val ch = shapeOf(changed)
+        assert(ch.shuffles == 0 && ch.inMemScans >= 1,
+          s"changed set must read the fused join's cache in place: $ch")
+        assert(changed.collect().map(_.getString(0)).toSeq == Seq(span),
+          "only the newly-duplicated window may enter the changed set")
+      }
+      prev.unpersist(); bSt.unpersist()
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scope
 import graft.mr.SparkSpec
 import org.apache.spark.sql.DataFrame
 
@@ -18,10 +19,12 @@ class SemDedupSpec extends SparkSpec {
 
   private def run(rows: Seq[(Long, Seq[Float])],
       threshold: Double = 0.99): Seq[(Long, Long)] =
-    Similarity.semDedup(emb(rows), threshold = threshold)
-      .collect()
-      .map(r => r.getAs[Long]("dropped_id") -> r.getAs[Long]("kept_id"))
-      .sortBy(_._1).toSeq
+    Scope { sc =>
+      Similarity.semDedup(sc, emb(rows), threshold = threshold)
+        .collect()
+        .map(r => r.getAs[Long]("dropped_id") -> r.getAs[Long]("kept_id"))
+        .sortBy(_._1).toSeq
+    }
 
   test("scaled copies drop toward the lowest-id original") {
     val v = Seq(0.6f, 0.8f, 0.1f, 0.2f)

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import graft.Scope
 import graft.mr.SparkSpec
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
@@ -22,12 +23,14 @@ class SourcesSpec extends SparkSpec {
       """{"id": 1, "name": "a"}""",
       """{"id": broken""",
       """{"id": 3, "name": "c"}"""))
-    val (clean, bad) = Sources.quarantine(Sources.jsonl(spark, path, schema))
-    assert(clean.columns.toSeq == Seq("id", "name"))
-    assert(clean.collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      == Set((1L, "a"), (3L, "c")))
-    val quarantined = bad.collect().map(_.getString(0))
-    assert(quarantined.length == 1 && quarantined.head.contains("broken"))
+    Scope { sc =>
+      val (clean, bad) = Sources.quarantine(sc, Sources.jsonl(spark, path, schema))
+      assert(clean.columns.toSeq == Seq("id", "name"))
+      assert(clean.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+        == Set((1L, "a"), (3L, "c")))
+      val quarantined = bad.collect().map(_.getString(0))
+      assert(quarantined.length == 1 && quarantined.head.contains("broken"))
+    }
   }
 
   test("csv: a row with the wrong arity/type is quarantined with its raw line") {
@@ -36,10 +39,12 @@ class SourcesSpec extends SparkSpec {
       "1,a",
       "not_a_number,b",
       "3,c"))
-    val (clean, bad) = Sources.quarantine(Sources.csv(spark, path, schema))
-    assert(clean.collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      == Set((1L, "a"), (3L, "c")))
-    assert(bad.collect().map(_.getString(0)).toSeq == Seq("not_a_number,b"))
+    Scope { sc =>
+      val (clean, bad) = Sources.quarantine(sc, Sources.csv(spark, path, schema))
+      assert(clean.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+        == Set((1L, "a"), (3L, "c")))
+      assert(bad.collect().map(_.getString(0)).toSeq == Seq("not_a_number,b"))
+    }
   }
 
   test("orc: round-trip preserves rows; scans prune and push down like parquet") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -28,9 +29,14 @@ object Dev {
 
   /** One measured pass: `sec` is -1 for a failed pass (then `rows` is -1
     * too); `cachedBytes` is what the query's own persists left in the
-    * storage pool after its action.
+    * storage pool after its action; `compiles` is how many classes
+    * codegen compiled in the timed region — a warm pass of a repeated
+    * query should compile next to none (GraftSession sizes the cache).
     */
-  final case class Pass(sec: Double, rows: Long, cachedBytes: Long)
+  final case class Pass(sec: Double, rows: Long, cachedBytes: Long, compiles: Long)
+
+  /** Classes codegen has compiled in this JVM so far (cache misses only). */
+  def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Clear the cache, then build AND count the query inside the timed
     * region — the eager jobs a query runs while its DataFrame is built
@@ -38,12 +44,13 @@ object Dev {
     */
   def timedPass(spark: SparkSession, query: Query, sfDir: String): Pass = {
     spark.catalog.clearCache() // identical (empty) storage state per pass
+    val c0 = compiled()
     val t0 = System.nanoTime()
     val rows =
       try query(spark, sfDir).count()
-      catch { case _: Throwable => return Pass(-1.0, -1L, 0L) }
+      catch { case _: Throwable => return Pass(-1.0, -1L, 0L, compiled() - c0) }
     val sec = (System.nanoTime() - t0) / 1e9
-    Pass(sec, rows, spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum)
+    Pass(sec, rows, spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum, compiled() - c0)
   }
 
   /** Best (min) of the timed passes that succeeded; -1 if none did. */
@@ -57,7 +64,7 @@ object Dev {
     (0 to passes).map { i =>
       val p = timedPass(spark, query, sfDir)
       println(f"[dev] $name $sfDir pass $i${if (i == 0) " (warmup)" else ""}: " +
-        f"${p.sec}%.3f s, ${p.rows} rows")
+        f"${p.sec}%.3f s, ${p.compiles} compiles, ${p.rows} rows")
       p.sec
     }.drop(1)
 
@@ -76,6 +83,8 @@ object Dev {
     * after a shared warmup, so both arms sample the same host drift —
     * a fresh-JVM A/B confounds the conf with JIT state and whatever
     * co-tenants did in between. Only runtime-settable SQL confs apply.
+    * Each pass prints as `seconds/compiles`: an arm that keeps
+    * compiling is paying codegen, not running slower plans.
     */
   private def ab(spark: SparkSession, confs: Seq[(String, String)],
       queries: Seq[(String, Query)], sfDir: String, rounds: Int): Unit = {
@@ -85,14 +94,14 @@ object Dev {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
       }
-    def pass(q: Query, on: Boolean): Double = { setArm(on); timedPass(spark, q, sfDir).sec }
+    def pass(q: Query, on: Boolean): Pass = { setArm(on); timedPass(spark, q, sfDir) }
+    def passes(ps: Seq[Pass]): String = ps.map(p => f"${p.sec}%.2f/${p.compiles}").mkString(",")
     val bests = queries.map { case (name, q) =>
       pass(q, on = false) // shared warmup at the base conf
       val (offs, ons) = (1 to rounds).map(_ => (pass(q, on = false), pass(q, on = true))).unzip
-      val (off, on) = (best(offs), best(ons))
+      val (off, on) = (best(offs.map(_.sec)), best(ons.map(_.sec)))
       println(f"$name%-34s off=$off%6.3f on=$on%6.3f (${on / off * 100}%5.1f%%) " +
-        f"load1=${Bench.load1()}%.2f offs=${offs.map(t => f"$t%.2f").mkString(",")} " +
-        s"ons=${ons.map(t => f"$t%.2f").mkString(",")}")
+        f"load1=${Bench.load1()}%.2f offs=${passes(offs)} ons=${passes(ons)}")
       (off, on)
     }
     setArm(on = false)
@@ -150,7 +159,7 @@ object Dev {
     })
     val p = timedPass(spark, query, sfDir)
     Thread.sleep(300) // let trailing job-end events print
-    println(f"[total] ${p.sec}%.3f s, ${p.rows} rows ($name, $sfDir)")
+    println(f"[total] ${p.sec}%.3f s, ${p.compiles} compiles, ${p.rows} rows ($name, $sfDir)")
   }
 
   /** `explain`: the formatted plan, or with `exec` the FINAL adaptive

@@ -40,6 +40,22 @@ object GraftSession {
       // 64k in-memory groups is ≤ ~1 GB worst case against a far
       // larger sort
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+      // compiled codegen classes live in one JVM-wide cache, 100 entries
+      // by default — smaller than the engine's working set (one q219
+      // call compiles ~160 classes, a corpus/streaming pass ~385), so a
+      // repeated plan shape was evicted and recompiled (Janino) on
+      // every call. 1024 entries hold the working set; the retained
+      // bytecode costs ~19 KB of heap per entry. A static conf: it
+      // takes effect only on the builder, before the first session
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // the whole-stage codegen stage id is part of the generated class
+      // name, and AQE numbers stages in a different order from run to
+      // run — identical code (…ForCodegenStage2 vs …Stage5) then misses
+      // the cache. Without the id, equal source is one cache key
+      .config("spark.sql.codegen.useIdInClassName", "false")
+
+  /** Entries in Spark's compiled-class cache (see [[configure]]). */
+  val CodegenCacheEntries: Int = 1024
 
   /** Local harness session: `local[cpus]` with shuffle partitions = cpus.
     * `extraConf` lets a harness layer extra settings on top of the

@@ -43,6 +43,17 @@ class DevSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("a repeated timedPass of the same query compiles 0 classes") {
+    // the odd literals keep the generated code unlike any other spec's,
+    // so the first pass really compiles
+    val agg: Dev.Query = (s, _) =>
+      s.range(5000).selectExpr("id % 7919 AS k", "id * 104729 AS v").groupBy("k").sum("v")
+    val first = Dev.timedPass(spark, agg, "unused")
+    val again = (1 to 2).map(_ => Dev.timedPass(spark, agg, "unused"))
+    assert(first.rows == 5000L && first.compiles > 0L, first)
+    assert(again.map(_.compiles) == Seq(0L, 0L), again)
+  }
+
   test("bad arguments fail with the usage line before any Spark work") {
     def rejects(args: String*)(why: String): Unit = {
       val e = intercept[IllegalArgumentException](Dev.parse(args.toArray))

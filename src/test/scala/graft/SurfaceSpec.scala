@@ -6,14 +6,15 @@ import scala.jdk.CollectionConverters._
 
 /** Lexical pin on the program's outer surface (the AtlasSpec style:
   * pure JVM, reads the source tree from the repo root). Environment
-  * knobs and entry points each have one named rule; a new `sys.env`
-  * read or a new `main` must be a deliberate edit here, not a dev
-  * probe that outlives its question.
+  * knobs, entry points, cache owners and the session builder each have
+  * one named rule; a new `sys.env` read or a new `main` must be a
+  * deliberate edit here, not a dev probe that outlives its question.
   */
 class SurfaceSpec extends AnyFunSuite {
 
-  private lazy val sources: Seq[(String, String)] = {
-    val root = Paths.get("src/main/scala")
+  /** (path under `dir`, text) of every Scala file below `dir`. */
+  private def scalaFiles(dir: String): Seq[(String, String)] = {
+    val root = Paths.get(dir)
     assume(Files.isDirectory(root))
     val s = Files.walk(root)
     try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
@@ -21,6 +22,8 @@ class SurfaceSpec extends AnyFunSuite {
       .map((p: Path) => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
     finally s.close()
   }
+
+  private lazy val sources: Seq[(String, String)] = scalaFiles("src/main/scala")
 
   test("rule env-knobs: sys.env is read only for SPARK_GRAFT_CPUS in " +
     "GraftSession and Bench's six driver-facing names") {
@@ -51,6 +54,19 @@ class SurfaceSpec extends AnyFunSuite {
       if raw.findFirstIn(code).isDefined
     } yield s"$file: ${line.trim}"
     assert(hits.isEmpty, s"rule cache-lifetime: caches outside graft.Scope:\n${hits.mkString("\n")}")
+  }
+
+  test("rule session-config: SparkSession.builder appears only in " +
+    "GraftSession, in src/main and src/test") {
+    // one builder, so every entry point and every spec runs under the
+    // engine's settings (codegen cache, AQE, time zone, extensions)
+    val call = """SparkSession\s*\.\s*builder\s*\(""".r
+    val builders = for {
+      dir <- Seq("src/main/scala", "src/test/scala")
+      (file, text) <- scalaFiles(dir) if call.findFirstIn(text).isDefined
+    } yield s"$dir/$file"
+    assert(builders == Seq("src/main/scala/graft/GraftSession.scala"),
+      s"rule session-config: session builders in $builders")
   }
 
   test("rule entry-points: def main( appears only in Bench, Verify, Atlas, " +

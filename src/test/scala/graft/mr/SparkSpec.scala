@@ -1,23 +1,17 @@
 package graft.mr
 
+import graft.GraftSession
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (getOrCreate = one JVM-wide
-  * session; the forked test JVM tears it down at exit).
+  * session; the forked test JVM tears it down at exit). Built by
+  * [[GraftSession]], so every spec runs under the engine's own config.
   */
 trait SparkSpec extends AnyFunSuite {
   @transient lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -1,14 +1,10 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.graftshim.GraftColumns
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Mutable KMV (k-minimum-values) sketch state: the `n <= k` smallest
   * DISTINCT long keys seen so far, sorted ascending in a fixed
@@ -43,88 +39,47 @@ final class KmvState(val k: Int) {
   }
 }
 
-/** Native KMV bottom-k-distinct aggregate — the
-  * [[graft.functions.BottomKDistinct]] semantics (k smallest DISTINCT
-  * long keys per group, sorted ascending) as a Catalyst
-  * `TypedImperativeAggregate` over an unboxed `long[]` buffer.
-  *
-  * Why it exists when the typed `Aggregator` already does: the
-  * `udaf(...)`-registered form pays the buffer `Encoder` plus an
-  * O(k) immutable-`Vector` copy on EVERY input row — the r13 scale
-  * canary's worst streaming decade ratio (q175 sf1→sf10 = 3.1×) was
-  * entirely that per-row ser/de. This expression's per-row cost is
-  * `child.eval` + a primitive binary search; serialization (a
-  * length-prefixed `long[]` pack) happens only at partial-output and
-  * state-store boundaries. State per group stays ≤ k longs, the merge
-  * is the KMV set-union (KmvAggSpec pins agreement with the typed
-  * Aggregator row-for-row), and the aggregate remains algebraic, so
-  * streaming incremental merges are exact.
+/** Native KMV bottom-k-distinct aggregate: the k smallest DISTINCT
+  * long keys per group, sorted ascending — the semantics of the typed
+  * [[BottomKDistinct]] (KmvAggSpec pins agreement row for row) on an
+  * unboxed `long[]` buffer. The `udaf(BottomKDistinct)` form paid an
+  * Encoder round trip plus an O(k) immutable-`Vector` copy per input
+  * row; the r13 scale canary's worst streaming decade ratio (q175
+  * sf1→sf10 = 3.1×) was entirely that. The merge is the KMV set union,
+  * so streaming incremental merges are exact. Input must already be
+  * the 60-bit long key: callers hash before aggregating.
   */
 case class KmvSketchAgg(
     child: Expression,
     k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KmvState] with UnaryLike[Expression] {
+    extends LongSketchAgg[KmvState] with UnaryLike[Expression] {
 
-  // input must already be LongType (the 60-bit md5 key projection) —
-  // callers hash/cast before aggregating, same contract as the typed
-  // Aggregator this replaces
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"kmv_sketch needs a BIGINT key, got ${child.dataType.catalogString}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "kmv_sketch"
+  protected def inputTypes: Seq[DataType] = Seq(LongType)
+  protected def entryWidth: Int = 1
 
   override def createAggregationBuffer(): KmvState = new KmvState(k)
-
-  override def update(buf: KmvState, input: InternalRow): KmvState = {
-    val v = child.eval(input)
-    if (v != null) buf.insert(v.asInstanceOf[Long])
-    buf
-  }
-
+  protected def absorb(buf: KmvState, x: Any, y: Any): Unit = buf.insert(x.asInstanceOf[Long])
   override def merge(a: KmvState, b: KmvState): KmvState = a.mergeIn(b)
 
-  override def eval(buf: KmvState): Any =
-    new GenericArrayData(java.util.Arrays.copyOf(buf.keys, buf.n))
-
-  override def serialize(buf: KmvState): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 8 * buf.n)
-    bb.putInt(buf.n)
-    var i = 0
-    while (i < buf.n) { bb.putLong(buf.keys(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): KmvState = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
+  protected def longs(buf: KmvState): Array[Long] = java.util.Arrays.copyOf(buf.keys, buf.n)
+  protected def fromLongs(xs: Array[Long]): KmvState = {
     val st = new KmvState(k)
-    st.n = n
-    var i = 0
-    while (i < n) { st.keys(i) = bb.getLong; i += 1 }
+    System.arraycopy(xs, 0, st.keys, 0, xs.length)
+    st.n = xs.length
     st
   }
 
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
+  protected def withOffsets(mutable: Int, input: Int): KmvSketchAgg =
+    copy(mutableAggBufferOffset = mutable, inputAggBufferOffset = input)
   override protected def withNewChildInternal(newChild: Expression): KmvSketchAgg =
     copy(child = newChild)
 }
 
 object KmvSketchAgg {
-  /** Column form: KMV sketch of `key` (a 60-bit long hash key), the
-    * drop-in replacement for `udaf(BottomKDistinct)(key)`.
-    */
+  /** Column form: KMV sketch of `key` (a 60-bit long hash key). */
   def sketch(key: Column, k: Int): Column =
-    org.apache.spark.sql.graftshim.GraftColumns.ofExpr(
-      KmvSketchAgg(
-        org.apache.spark.sql.graftshim.GraftColumns.exprOf(key), k)
-        .toAggregateExpression())
+    KmvSketchAgg(GraftColumns.exprOf(key), k).toColumn
 }

@@ -1,15 +1,10 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.graftshim.GraftColumns
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Mutable bottom-k-by-hash PAIR sample: the `n <= k` (hash, value)
   * pairs with the smallest DISTINCT hashes seen so far, kept sorted by
@@ -61,16 +56,12 @@ final class SamplePairsState(val k: Int) {
   * sketch's state builder, completing the replayable sketch quartet
   * (KMV distinct / CMS frequency / HLL / equi-width histogram) with
   * the one read-out those cannot give: order statistics of an
-  * unbounded-domain value column.
-  *
-  * Same engineering contract as [[KmvSketchAgg]]: per-row cost is two
-  * `child.eval`s plus a primitive binary search; state per group is
-  * `2k` longs; serialization (length-prefixed pack of both arrays)
-  * only at partial-output and state-store boundaries; the merge is the
-  * bottom-k set union, so the aggregate is algebraic and streaming
-  * incremental merges are exact. Output is the interleaved pair array
-  * `[h0, v0, h1, v1, ...]` sorted by hash — still a mergeable sketch,
-  * so downstream algebra (window slides, rollups) can re-merge it.
+  * unbounded-domain value column. State per group is `2k` longs and
+  * the merge is the bottom-k set union, so streaming incremental
+  * merges are exact. Output (and serialized payload) is the
+  * interleaved pair array `[h0, v0, h1, v1, ...]` sorted by hash —
+  * still a mergeable sketch, so downstream algebra (window slides,
+  * rollups) can re-merge it.
   *
   * Replayability: the retained pairs are the k smallest md5-derived
   * hashes, so DuckDB rebuilds the identical sample with a
@@ -83,63 +74,34 @@ case class SamplePairsAgg(
     k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[SamplePairsState] with BinaryLike[Expression] {
+    extends LongSketchAgg[SamplePairsState] with BinaryLike[Expression] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sample_pairs needs (BIGINT hash, BIGINT value), got " +
-        s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "sample_pairs"
+  protected def inputTypes: Seq[DataType] = Seq(LongType, LongType)
+  protected def entryWidth: Int = 2
 
   override def createAggregationBuffer(): SamplePairsState = new SamplePairsState(k)
-
-  override def update(buf: SamplePairsState, input: InternalRow): SamplePairsState = {
-    val h = left.eval(input)
-    val v = right.eval(input)
-    if (h != null && v != null) buf.insert(h.asInstanceOf[Long], v.asInstanceOf[Long])
-    buf
-  }
-
+  protected def absorb(buf: SamplePairsState, h: Any, v: Any): Unit =
+    buf.insert(h.asInstanceOf[Long], v.asInstanceOf[Long])
   override def merge(a: SamplePairsState, b: SamplePairsState): SamplePairsState =
     a.mergeIn(b)
 
-  override def eval(buf: SamplePairsState): Any = {
+  protected def longs(buf: SamplePairsState): Array[Long] = {
     val out = new Array[Long](2 * buf.n)
     var i = 0
-    while (i < buf.n) {
-      out(2 * i) = buf.hashes(i)
-      out(2 * i + 1) = buf.vals(i)
-      i += 1
-    }
-    new GenericArrayData(out)
+    while (i < buf.n) { out(2 * i) = buf.hashes(i); out(2 * i + 1) = buf.vals(i); i += 1 }
+    out
   }
-
-  override def serialize(buf: SamplePairsState): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 16 * buf.n)
-    bb.putInt(buf.n)
-    var i = 0
-    while (i < buf.n) { bb.putLong(buf.hashes(i)); bb.putLong(buf.vals(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): SamplePairsState = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
+  protected def fromLongs(xs: Array[Long]): SamplePairsState = {
     val st = new SamplePairsState(k)
-    st.n = n
+    st.n = xs.length / 2
     var i = 0
-    while (i < n) { st.hashes(i) = bb.getLong; st.vals(i) = bb.getLong; i += 1 }
+    while (i < st.n) { st.hashes(i) = xs(2 * i); st.vals(i) = xs(2 * i + 1); i += 1 }
     st
   }
 
-  override def withNewMutableAggBufferOffset(newOffset: Int): SamplePairsAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): SamplePairsAgg =
-    copy(inputAggBufferOffset = newOffset)
+  protected def withOffsets(mutable: Int, input: Int): SamplePairsAgg =
+    copy(mutableAggBufferOffset = mutable, inputAggBufferOffset = input)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SamplePairsAgg =
     copy(left = newLeft, right = newRight)
@@ -151,11 +113,7 @@ object SamplePairsAgg {
     * fingerprint of a unique row id (the `hllKey` convention).
     */
   def sketch(hash: Column, value: Column, k: Int): Column =
-    org.apache.spark.sql.graftshim.GraftColumns.ofExpr(
-      SamplePairsAgg(
-        org.apache.spark.sql.graftshim.GraftColumns.exprOf(hash),
-        org.apache.spark.sql.graftshim.GraftColumns.exprOf(value), k)
-        .toAggregateExpression())
+    SamplePairsAgg(GraftColumns.exprOf(hash), GraftColumns.exprOf(value), k).toColumn
 
   /** The quantile read-out both engines share: with the sample's
     * values sorted ascending, quantile `q = qnum/100` is the value at

@@ -3,205 +3,54 @@ package graft.functions
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Typed top-k aggregator (SURVEY.md §7.3 milestone 6): a bounded
-  * insertion buffer that keeps only the k best (score desc, id asc)
-  * entries per group, merged associatively — the scalable form of the
-  * reference's driver-side `Counter.most_common(k)` idiom
-  * (docs.rst:57-58). Memory per group is O(k) on every executor and the
-  * partial buffers combine map-side, so a group with a billion rows
-  * still costs k entries — unlike collect_list + sort, which
-  * materializes the whole group.
+/** The bounded sorted buffer (SURVEY.md §7.3 milestone 6): the k
+  * smallest values per group under `ord`, kept sorted and merged
+  * associatively — the scalable form of the reference's driver-side
+  * `Counter.most_common(k)` idiom (docs.rst:57-58). Memory per group is
+  * O(k) on every executor and the partial buffers combine map-side, so
+  * a group with a billion rows still costs k entries, where
+  * collect_list + sort materializes the whole group and a row_number
+  * window sorts it in one task.
+  *
+  * `distinct` drops a value equal (under `ord`) to one already kept:
+  * the KMV estimator (Bar-Yossef et al. '02) is defined over the
+  * distinct key set, so duplicates die in the partial buffers instead
+  * of in a corpus-sized `distinct()` shuffle. Otherwise a new value
+  * goes before the kept values it ties with.
   *
   * Encoders are taken implicitly (product-seq ExpressionEncoders from
   * `spark.implicits`), keeping the buffer columnar-serializable rather
   * than kryo blobs.
   */
-class TopKByScore[IN](k: Int, extract: IN => (Long, Double))(
-    implicit enc: Encoder[Seq[(Long, Double)]])
-    extends Aggregator[IN, Seq[(Long, Double)], Seq[(Long, Double)]] {
+class BottomK[IN, T](k: Int, extract: IN => T, distinct: Boolean)(
+    implicit ord: Ordering[T], enc: Encoder[Seq[T]])
+    extends Aggregator[IN, Seq[T], Seq[T]] {
 
-  private def better(a: (Long, Double), b: (Long, Double)): Boolean =
-    a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)
+  def this(k: Int, extract: IN => T)(implicit ord: Ordering[T], enc: Encoder[Seq[T]]) =
+    this(k, extract, distinct = false)
 
-  private def insert(buf: Seq[(Long, Double)], x: (Long, Double)): Seq[(Long, Double)] = {
-    // buf is kept sorted best-first and bounded at k
-    if (buf.size >= k && better(buf.last, x)) buf
-    else {
-      val (before, after) = buf.span(better(_, x))
-      val merged = before ++ (x +: after)
-      if (merged.size > k) merged.take(k) else merged
-    }
-  }
-
-  def zero: Seq[(Long, Double)] = Vector.empty
-
-  def reduce(buf: Seq[(Long, Double)], x: IN): Seq[(Long, Double)] =
-    insert(buf, extract(x))
-
-  def merge(a: Seq[(Long, Double)], b: Seq[(Long, Double)]): Seq[(Long, Double)] =
-    b.foldLeft(a)(insert)
-
-  def finish(buf: Seq[(Long, Double)]): Seq[(Long, Double)] = buf
-
-  def bufferEncoder: Encoder[Seq[(Long, Double)]] = enc
-  def outputEncoder: Encoder[Seq[(Long, Double)]] = enc
-}
-
-/** Bounded bottom-k selection of (key, a, b) triples ordered ascending
-  * by the full tuple — the head of a posting list, kept at O(k) state
-  * per group with map-side partial merge. The collect_list + sort +
-  * slice form this replaces materializes a hot group's ENTIRE posting
-  * stream in one aggregation buffer; a row_number window caps it but
-  * still sorts the whole group in one task. Same bounded-buffer design
-  * as [[TopKByScore]], ascending and triple-shaped.
-  */
-class BottomKTriples[IN](k: Int, extract: IN => (Long, Long, Long))(
-    implicit enc: Encoder[Seq[(Long, Long, Long)]])
-    extends Aggregator[IN, Seq[(Long, Long, Long)], Seq[(Long, Long, Long)]] {
-
-  private val ord = Ordering[(Long, Long, Long)]
-
-  private def insert(buf: Seq[(Long, Long, Long)], x: (Long, Long, Long)): Seq[(Long, Long, Long)] = {
-    // buf is kept sorted ascending and bounded at k
+  private def insert(buf: Seq[T], x: T): Seq[T] =
     if (buf.size >= k && ord.lt(buf.last, x)) buf
     else {
       val (before, after) = buf.span(ord.lt(_, x))
-      val merged = before ++ (x +: after)
-      if (merged.size > k) merged.take(k) else merged
+      if (distinct && after.nonEmpty && ord.equiv(after.head, x)) buf
+      else (before ++ (x +: after)).take(k)
     }
-  }
 
-  def zero: Seq[(Long, Long, Long)] = Vector.empty
+  def zero: Seq[T] = Vector.empty
+  def reduce(buf: Seq[T], x: IN): Seq[T] = insert(buf, extract(x))
+  def merge(a: Seq[T], b: Seq[T]): Seq[T] = b.foldLeft(a)(insert)
+  def finish(buf: Seq[T]): Seq[T] = buf
 
-  def reduce(buf: Seq[(Long, Long, Long)], x: IN): Seq[(Long, Long, Long)] =
-    insert(buf, extract(x))
-
-  def merge(a: Seq[(Long, Long, Long)], b: Seq[(Long, Long, Long)]): Seq[(Long, Long, Long)] =
-    b.foldLeft(a)(insert)
-
-  def finish(buf: Seq[(Long, Long, Long)]): Seq[(Long, Long, Long)] = buf
-
-  def bufferEncoder: Encoder[Seq[(Long, Long, Long)]] = enc
-  def outputEncoder: Encoder[Seq[(Long, Long, Long)]] = enc
+  def bufferEncoder: Encoder[Seq[T]] = enc
+  def outputEncoder: Encoder[Seq[T]] = enc
 }
 
-/** [[BottomKTriples]] fused with the group's COUNT and the SUM of the
-  * triple's third slot — one aggregation buffer instead of a second
-  * corpus pass for the exact totals a sampler reports next to its
-  * sample (q201's n_docs/w_total, q207's n_docs). Same bounded O(k)
-  * insert; the two extra longs ride the partial merge for free.
+/** The typed KMV sketch: [[BottomK]] over distinct long keys. The
+  * native [[KmvSketchAgg]] replaces it on every query path; it stays
+  * as the reference that aggregate is checked against, and as the
+  * sketch's set-algebra law in the small: merge(sketch(A), sketch(B))
+  * == sketch(A union B).
   */
-class BottomKTriplesWithStats[IN](k: Int, extract: IN => (Long, Long, Long))(
-    implicit enc: Encoder[(Seq[(Long, Long, Long)], Long, Long)])
-    extends Aggregator[IN, (Seq[(Long, Long, Long)], Long, Long),
-      (Seq[(Long, Long, Long)], Long, Long)] {
-
-  private val ord = Ordering[(Long, Long, Long)]
-
-  private def insert(buf: Seq[(Long, Long, Long)], x: (Long, Long, Long)): Seq[(Long, Long, Long)] = {
-    if (buf.size >= k && ord.lt(buf.last, x)) buf
-    else {
-      val (before, after) = buf.span(ord.lt(_, x))
-      val merged = before ++ (x +: after)
-      if (merged.size > k) merged.take(k) else merged
-    }
-  }
-
-  def zero: (Seq[(Long, Long, Long)], Long, Long) = (Vector.empty, 0L, 0L)
-
-  def reduce(buf: (Seq[(Long, Long, Long)], Long, Long), x: IN): (Seq[(Long, Long, Long)], Long, Long) = {
-    val t = extract(x)
-    (insert(buf._1, t), buf._2 + 1L, buf._3 + t._3)
-  }
-
-  def merge(a: (Seq[(Long, Long, Long)], Long, Long), b: (Seq[(Long, Long, Long)], Long, Long)): (Seq[(Long, Long, Long)], Long, Long) =
-    (b._1.foldLeft(a._1)(insert), a._2 + b._2, a._3 + b._3)
-
-  def finish(buf: (Seq[(Long, Long, Long)], Long, Long)): (Seq[(Long, Long, Long)], Long, Long) = buf
-
-  def bufferEncoder: Encoder[(Seq[(Long, Long, Long)], Long, Long)] = enc
-  def outputEncoder: Encoder[(Seq[(Long, Long, Long)], Long, Long)] = enc
-}
-
-/** KMV (k-minimum-values) sketch accumulator: the k smallest DISTINCT
-  * long keys per group, kept sorted ascending. The bounded O(k) buffer
-  * combines map-side like [[TopKByScore]], but additionally DEDUPES on
-  * insert — the KMV estimator (Bar-Yossef et al. '02) is defined over
-  * the distinct key set, so a pre-aggregation `distinct()` (a full
-  * corpus-sized shuffle) is exactly what this aggregator exists to
-  * avoid: duplicates die in the partial buffers. The sketch is a set
-  * algebra: merge(sketch(A), sketch(B)) == sketch(A union B)
-  * (KmvSpec pins the law), which is how 1000 shards sketch
-  * independently and a coordinator folds k-sized states.
-  */
-class BottomKDistinct[IN](k: Int, extract: IN => Long)(
-    implicit enc: Encoder[Seq[Long]])
-    extends Aggregator[IN, Seq[Long], Seq[Long]] {
-
-  private def insert(buf: Seq[Long], x: Long): Seq[Long] = {
-    // full buffer and x past the end (or equal to it) — no change
-    if (buf.size >= k && buf.last <= x) buf
-    else {
-      val (before, after) = buf.span(_ < x)
-      if (after.headOption.contains(x)) buf // already present: distinct
-      else {
-        val merged = before ++ (x +: after)
-        if (merged.size > k) merged.take(k) else merged
-      }
-    }
-  }
-
-  def zero: Seq[Long] = Vector.empty
-
-  def reduce(buf: Seq[Long], x: IN): Seq[Long] = insert(buf, extract(x))
-
-  def merge(a: Seq[Long], b: Seq[Long]): Seq[Long] = b.foldLeft(a)(insert)
-
-  def finish(buf: Seq[Long]): Seq[Long] = buf
-
-  def bufferEncoder: Encoder[Seq[Long]] = enc
-  def outputEncoder: Encoder[Seq[Long]] = enc
-}
-
-/** Bounded bottom-k selection of `(key: String, id: Long, payload:
-  * Long)` rows ordered ascending by (key, id) — the fused
-  * quota-then-aggregate kernel under q216: per-source "keep the cap
-  * best (md5, doc_id) docs" where each kept row CARRIES its payload
-  * (retained-token count), so a downstream budget/witness rollup needs
-  * no join back to the (corpus-sized, possibly derived-by-three-scans)
-  * document frame. Same bounded O(k)-per-group insert and map-side
-  * partial merge as [[BottomKTriples]], string-keyed and
-  * payload-bearing.
-  */
-class BottomKKeyedDocs[IN](k: Int, extract: IN => (String, Long, Long))(
-    implicit enc: Encoder[Seq[(String, Long, Long)]])
-    extends Aggregator[IN, Seq[(String, Long, Long)], Seq[(String, Long, Long)]] {
-
-  private val ord = Ordering.Tuple2[String, Long]
-  private def key(x: (String, Long, Long)): (String, Long) = (x._1, x._2)
-
-  private def insert(buf: Seq[(String, Long, Long)],
-      x: (String, Long, Long)): Seq[(String, Long, Long)] = {
-    // buf is kept sorted ascending by (key, id) and bounded at k
-    if (buf.size >= k && ord.lt(key(buf.last), key(x))) buf
-    else {
-      val (before, after) = buf.span(e => ord.lt(key(e), key(x)))
-      val merged = before ++ (x +: after)
-      if (merged.size > k) merged.take(k) else merged
-    }
-  }
-
-  def zero: Seq[(String, Long, Long)] = Vector.empty
-
-  def reduce(buf: Seq[(String, Long, Long)], x: IN): Seq[(String, Long, Long)] =
-    insert(buf, extract(x))
-
-  def merge(a: Seq[(String, Long, Long)],
-      b: Seq[(String, Long, Long)]): Seq[(String, Long, Long)] =
-    b.foldLeft(a)(insert)
-
-  def finish(buf: Seq[(String, Long, Long)]): Seq[(String, Long, Long)] = buf
-
-  def bufferEncoder: Encoder[Seq[(String, Long, Long)]] = enc
-  def outputEncoder: Encoder[Seq[(String, Long, Long)]] = enc
-}
+class BottomKDistinct[IN](k: Int, extract: IN => Long)(implicit enc: Encoder[Seq[Long]])
+    extends BottomK[IN, Long](k, extract, distinct = true)

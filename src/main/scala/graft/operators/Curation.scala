@@ -1896,18 +1896,17 @@ object Curation {
         Corpus.hllKey(col("doc_id").cast("string")).as("h"),
         col("n_chars").as("w"))
       .withColumn("key", expr("(h + 1) div w"))
-    // ONE corpus pass: the exact totals (n_docs, Σw) ride the same
-    // aggregation buffer as the bottom-(k+1) triples — the r16 form
+    // ONE corpus pass: the exact totals (n_docs, Σw) are columns of
+    // the same aggregate as the bottom-(k+1) triples — the r16 form
     // ran a second groupBy over the uncached base for them
     // (OnePassSpec pins the single pass)
-    val bottomK = new graft.functions.BottomKTriplesWithStats[(String, Long, Long, Long)](
+    val bottomK = new graft.functions.BottomKTriples[(String, Long, Long, Long)](
       PriorityK + 1, { case (_, key, h, w) => (key, h, w) })
     val tops = base.select(col("source"), col("key"), col("h"), col("w"))
       .as[(String, Long, Long, Long)]
-      .groupByKey(_._1).agg(bottomK.toColumn.name("st"))
-      .toDF("source", "st")
-      .select(col("source"), col("st._1").as("top"),
-        col("st._2").as("n_docs"), col("st._3").as("w_total_exact"))
+      .groupByKey(_._1)
+      .agg(bottomK.toColumn, count(lit(1)).as[Long], sum(col("w")).as[Long])
+      .toDF("source", "top", "n_docs", "w_total_exact")
     val dom = BigInt(1) << 60 // the hllKey domain: u = (h+1)/2^60
     tops.as[(String, Seq[(Long, Long, Long)], Long, Long)]
       .map { case (src, top, nDocs, wTotal) =>
@@ -1946,9 +1945,9 @@ object Curation {
     * discipline: membership is stable under growth and reordering,
     * never a rand()).
     *
-    * Scale shape: ONE corpus pass — the per-source bottom-k triples,
-    * doc count and char total all ride one O(k) aggregation buffer
-    * ([[graft.functions.BottomKTriplesWithStats]]); no per-group sort,
+    * Scale shape: ONE corpus pass — the per-source bottom-k triples
+    * ([[graft.functions.BottomKTriples]]) and the doc count are columns
+    * of one O(k)-per-source aggregate; no per-group sort,
     * no window over the corpus. The apportionment runs on the
     * O(sources) aggregate (a single-partition window over rows bounded
     * by the source domain, the house's bounded-small-side stance), and
@@ -1967,26 +1966,27 @@ object Curation {
     val base = docs.select(col("source"), col("doc_id").as("id"),
       col("n_chars").as("w"),
       Corpus.hllKey(col("doc_id").cast("string")).as("h"))
-    val agg = new graft.functions.BottomKTriplesWithStats[(String, Long, Long, Long)](
+    val agg = new graft.functions.BottomKTriples[(String, Long, Long, Long)](
       k.toInt, { case (_, h, id, w) => (h, id, w) })
     val stats = base.select(col("source"), col("h"), col("id"), col("w"))
       .as[(String, Long, Long, Long)]
-      .groupByKey(_._1).agg(agg.toColumn.name("st"))
-      .toDF("source", "st")
-      .select(col("source"), col("st._1").as("top"), col("st._2").as("n"))
+      .groupByKey(_._1).agg(agg.toColumn, count(lit(1)).as[Long])
+      .toDF("source", "top", "n")
     // Hamilton apportionment over the O(sources) frame: floor quotas,
     // then +1 to the (k - Σfloor) largest remainders, ties to the
     // lexicographically-first source; quotas capped at n. k·n stays in
-    // longs for any n < 9.2e16 docs.
-    val tot = stats.agg(sum(col("n")).as("nn"))
-    val quotas = stats.crossJoin(broadcast(tot))
+    // longs for any n < 9.2e16 docs. The totals are whole-frame window
+    // sums, so `stats` has ONE consumer: a second consumer needing only
+    // `n` would get its own, pruned copy of the corpus aggregate
+    // (OnePassSpec pins the single pass).
+    val all = Window.partitionBy()
+    val ranked = stats
+      .withColumn("nn", sum(col("n")).over(all))
       .withColumn("q0", expr(s"(${k}L * n) div nn"))
       .withColumn("rem", expr(s"(${k}L * n) % nn"))
-    val leftover = quotas.agg((lit(k) - sum(col("q0"))).as("lv"))
-    val ranked = quotas.crossJoin(broadcast(leftover))
+      .withColumn("lv", lit(k) - sum(col("q0")).over(all))
       .withColumn("rr", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("rem").desc, col("source").asc)))
+        Window.orderBy(col("rem").desc, col("source").asc)))
       .withColumn("quota", least(col("n"),
         col("q0") + when(col("rr") <= col("lv"), 1L).otherwise(0L)))
     ranked.select(col("source"), col("top"), col("n"), col("quota"))
@@ -3141,8 +3141,8 @@ object Curation {
     * rewrite a second time — +3 corpus scans at 100 TB just to fetch
     * what the first pass already had in hand. Instead quota + budget
     * fuse into one bounded per-source aggregate
-    * ([[graft.functions.BottomKKeyedDocs]]): each kept (md5, doc_id)
-    * key CARRIES its retained-token payload through the map-side
+    * ([[graft.functions.BottomK]] by (md5, doc_id)): each kept key
+    * CARRIES its retained-token payload through the map-side
     * partial merge, so the rewrite stream is consumed exactly once and
     * the whole pipeline pays exactly the transform's own 3 corpus
     * scans (OnePassSpec pins 3.0×). Selection semantics are q68's
@@ -3172,8 +3172,8 @@ object Curation {
     // stage 2: the ExactSubstr dedup transform over the gated corpus
     val rw = exactSubstrRewrite(sc, gated)
     // stages 3+4 fused: bounded per-source keeper set with payload
-    val keep = new graft.functions.BottomKKeyedDocs[(String, String, Long, Long)](
-      QuotaPerSource, x => (x._2, x._3, x._4))
+    val keep = new graft.functions.BottomK[(String, String, Long, Long), (String, Long, Long)](
+      QuotaPerSource, x => (x._2, x._3, x._4))(Ordering.by(x => (x._1, x._2)), implicitly)
     rw
       .select(col("source"), md5(col("rewritten")).as("h"), col("doc_id"),
         (col("n_toks") - col("n_removed")).as("n_ret"))

@@ -984,11 +984,8 @@ object Similarity {
     * at the >= 8x compression the codes guarantee structurally.
     * (Driver binding retired in r16 — the replayable twin q169 covers
     * the driver surface; this build stays as the internal-seed variant
-    * under AnnRecallSpec.)
+    * under AnnRecallSpec, which calls it directly.)
     */
-  def q116KnnIvfPq(s: SparkSession, d: String): DataFrame =
-    ivfPqBuild(Tables.embeddings(s, d), 3).ranked
-
   private[operators] def ivfPqBuild(embRaw: DataFrame, k: Int): IvfPqParts = {
     val s = embRaw.sparkSession
     import s.implicits._

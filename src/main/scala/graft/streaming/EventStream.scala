@@ -998,20 +998,6 @@ object EventStream {
     }
   }
 
-  /** Per-user running aggregate over an event stream — value sums per
-    * user per window, the streaming analogue of the reducer-with-state
-    * idiom.
-    */
-  def userWindowSums(
-      events: DataFrame,
-      windowLen: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen), col("user_id"))
-      .agg(sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("win_start"), col("user_id"), col("sum_value"))
-
   // ---- in-stream radius near-dup (transformWithState) ----------------
 
   /** One fingerprinted arrival for [[radiusDedupStream]]. */

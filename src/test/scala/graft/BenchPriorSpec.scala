@@ -13,11 +13,7 @@ class BenchPriorSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.1"
 
-  private def tmpDir(): java.io.File = {
-    val d = Files.createTempDirectory("graft_prior").toFile
-    d.deleteOnExit()
-    d
-  }
+  private def tmpDir(): java.io.File = Scope.lru.tempDir("graft_prior")
   private def write(dir: java.io.File, name: String, body: String): String = {
     val f = new java.io.File(dir, name)
     Files.write(f.toPath, body.getBytes("UTF-8"))

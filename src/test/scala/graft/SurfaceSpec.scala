@@ -54,6 +54,28 @@ class SurfaceSpec extends AnyFunSuite {
       if raw.findFirstIn(code).isDefined
     } yield s"$file: ${line.trim}"
     assert(hits.isEmpty, s"rule cache-lifetime: caches outside graft.Scope:\n${hits.mkString("\n")}")
+    // specs spool through Scope too (`Scope.lru.tempDir`, swept at JVM
+    // exit), so a test run leaves no temp dirs behind
+    val specDirs = for {
+      (file, text) <- scalaFiles("src/test/scala") if file != "graft/SurfaceSpec.scala"
+      line <- text.linesIterator.toSeq if line.split("//", 2)(0).contains("createTempDirectory")
+    } yield s"$file: ${line.trim}"
+    assert(specDirs.isEmpty, s"rule cache-lifetime: spec temp dirs outside graft.Scope:\n${specDirs.mkString("\n")}")
+  }
+
+  test("rule sketch-kernel: one TypedImperativeAggregate base, and typed " +
+    "Aggregators only in the bounded-buffer kernel and CounterMerge") {
+    // every sketch shares LongSketchAgg's plumbing and every k-bounded
+    // buffer is BottomK, so a near-copy cannot grow back unnoticed
+    def sites(what: String): Seq[String] = for {
+      (file, text) <- sources
+      line <- text.linesIterator.toSeq if line.contains(what)
+    } yield file
+    assert(sites("extends TypedImperativeAggregate") == Seq("graft/functions/SketchAgg.scala"),
+      "rule sketch-kernel: TypedImperativeAggregate outside LongSketchAgg")
+    assert(sites("extends Aggregator[") ==
+      Seq("graft/functions/CounterMerge.scala", "graft/functions/TopK.scala"),
+      "rule sketch-kernel: typed Aggregators outside BottomK and CounterMerge")
   }
 
   test("rule session-config: SparkSession.builder appears only in " +

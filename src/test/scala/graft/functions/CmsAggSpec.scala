@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** [[CmsSketchAgg]] must produce the exact cell grid of the relational
   * seeds-crossJoin-groupBy formulation it replaces — same hash
   * arithmetic, zero row amplification — plus the linear-map merge law
-  * and the state-store serialization round-trip.
+  * and a serialization round-trip of a filled grid (SketchKernelSpec
+  * also checks the byte layout).
   */
 class CmsAggSpec extends SparkSpec {
   import spark.implicits._

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * typed [[BottomKDistinct]] Aggregator it replaces on the q172/q175
   * paths: same sketch content on randomized inputs (directly on the
   * mutable state and through a distributed groupBy), the KMV merge
-  * law, serialization round-trip (the state-store boundary), full
-  * buffer rejection, and null inputs ignored.
+  * law, full buffer rejection, serialization round-trips, and null
+  * inputs ignored (SketchKernelSpec also checks the byte layout).
   */
 class KmvAggSpec extends SparkSpec {
 

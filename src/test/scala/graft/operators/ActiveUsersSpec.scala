@@ -20,7 +20,7 @@ class ActiveUsersSpec extends SparkSpec {
   }
 
   test("WAU counts a user once across the trailing window; DAU is per-day") {
-    val dir = java.nio.file.Files.createTempDirectory("q101fix").toString
+    val dir = graft.Scope.lru.tempDir("q101fix").toString
     // user 1 active days 0 and 2 (twice on day 2); user 2 active day 8
     writeEvents(dir, Seq((1L, 0L, 1L), (1L, 2L, 1L), (1L, 2L, 2L), (2L, 8L, 1L)))
     val got = Temporal.q101ActiveUsers(spark, dir)
@@ -34,13 +34,13 @@ class ActiveUsersSpec extends SparkSpec {
   }
 
   test("empty events table yields an empty frame, not an NPE") {
-    val dir = java.nio.file.Files.createTempDirectory("q101empty").toString
+    val dir = graft.Scope.lru.tempDir("q101empty").toString
     writeEvents(dir, Seq.empty)
     assert(Temporal.q101ActiveUsers(spark, dir).collect().isEmpty)
   }
 
   test("cohort triangle: offsets, sizes, and rates") {
-    val dir = java.nio.file.Files.createTempDirectory("q102fix").toString
+    val dir = graft.Scope.lru.tempDir("q102fix").toString
     // cohort week 0: users 1,2 (user 1 returns week 1); cohort week 1: user 3
     writeEvents(dir, Seq(
       (1L, 0L, 1L), (2L, 3L, 1L),    // week 0

@@ -22,7 +22,7 @@ class Bm25Spec extends SparkSpec {
         r.getAs[Long]("doc_id"), r.getAs[Double]("score"))).toSeq
 
   test("rarer query terms dominate the ranking (idf ordering)") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25idf").toString
+    val dir = graft.Scope.lru.tempDir("bm25idf").toString
     // probe doc 0 (0 % 101 == 0) queries {rare, common}; "common"
     // appears everywhere, "rare" only in doc 1 — doc 1 must outrank
     // the common-only docs despite identical lengths
@@ -39,7 +39,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("term frequency saturates: tf 10 beats tf 1 by far less than 10x") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25tf").toString
+    val dir = graft.Scope.lru.tempDir("bm25tf").toString
     // same single query term, same doc length; tf 5 vs tf 1
     write(dir, Seq(
       (0L, "term x1 x2 x3"),
@@ -53,7 +53,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("max-score pruning: stopword-only docs never become candidates, ranking unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25wand").toString
+    val dir = graft.Scope.lru.tempDir("bm25wand").toString
     // probe 0 queries {stop, rare}: "stop" matches all 30 docs (low
     // idf), "rare" matches 8. With k=5 the θ floor from rare's own
     // postings exceeds stop's total upper bound, so stop must fall in
@@ -80,7 +80,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("per-query slates hold at most topK rows, self excluded, ranks dense") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25k").toString
+    val dir = graft.Scope.lru.tempDir("bm25k").toString
     write(dir, (0L to 20L).map(i => (i, s"shared t$i u$i v$i")))
     val got = run(dir)
     val byQ = got.groupBy(_._1)

@@ -31,7 +31,7 @@ class CorpusSpec extends SparkSpec {
 
   test("q106 top-n-gram fractions match hand-computed overlapping counts") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("q106fix").toString
+    val dir = graft.Scope.lru.tempDir("q106fix").toString
     Seq(
       // "a b a b a b": 2-grams (overlapping) -> "a b" x3 => 3*2/6 = 1.0;
       // 3-grams -> "a b a" x2 => 2*3/6 = 1.0; 4-grams -> "a b a b" x2
@@ -62,7 +62,7 @@ class CorpusSpec extends SparkSpec {
       val len = 1 + rng.nextInt(30)
       (i.toLong, (1 to len).map(_ => vocab(rng.nextInt(vocab.size))).mkString(" "))
     }
-    val dir = java.nio.file.Files.createTempDirectory("q106rand").toString
+    val dir = graft.Scope.lru.tempDir("q106rand").toString
     rows.map { case (id, t) => (id, t, "en", "s", 1L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -90,7 +90,7 @@ class CorpusSpec extends SparkSpec {
 
   test("q110 chi-squared: identical sources score ~0, a skewed one dominates") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("q110fix").toString
+    val dir = graft.Scope.lru.tempDir("q110fix").toString
     val balanced = "alpha beta gamma delta " * 25 // identical distribution
     val skewed = "alpha " * 100                   // all mass on one token
     ((1 to 5).map(i => (i.toLong, balanced.trim, "en", s"bal$i", 1L)) :+
@@ -109,7 +109,7 @@ class CorpusSpec extends SparkSpec {
 
   test("q110: a source with zero vocab-token mass scores chi2 = 0, not NaN/NULL") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("q110empty").toString
+    val dir = graft.Scope.lru.tempDir("q110empty").toString
     // 60 distinct heavy tokens crowd the top-50 vocab; the "ghost"
     // source's tokens all rank below it, so its n_s = 0 and every
     // expected count e = 0 — the 0/0 case the guard must pin to 0

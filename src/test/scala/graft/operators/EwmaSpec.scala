@@ -13,7 +13,7 @@ class EwmaSpec extends SparkSpec {
     */
   private def run(rows: Seq[(Long, Long, Long, Double)], parts: Int = 4) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ewma").toString
+    val dir = graft.Scope.lru.tempDir("graft_ewma").toString
     rows.toDF("event_id", "user_id", "ts_ms", "value")
       .repartition(parts)
       .select(org.apache.spark.sql.functions.col("event_id"),

@@ -30,8 +30,7 @@ class ExactSubstrUpsertSpec extends SparkSpec {
     */
   private def replay(batches: Seq[Seq[(String, Long, String)]])
       : (Map[Long, (Long, String)], Map[String, Long]) = {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_upsert_spec").toFile
+    val store = graft.Scope.lru.tempDir("graft_upsert_spec")
     try {
       val rollup = Curation.exactSubstrUpsertReplay(
         batches.map(_.toDF("source", "doc_id", "text")),
@@ -135,7 +134,7 @@ class ExactSubstrUpsertSpec extends SparkSpec {
 
   test("a failed sink merge is the exception thrown; a raw append that " +
     "also failed rides along in getSuppressed instead of masking it") {
-    val store = java.nio.file.Files.createTempDirectory("graft_upsert_fail").toFile
+    val store = graft.Scope.lru.tempDir("graft_upsert_fail")
     // regular files where both write targets expect directories, so the
     // sink merge AND the concurrent raw append fail (unlike a chmod,
     // this holds when the tests run as root)

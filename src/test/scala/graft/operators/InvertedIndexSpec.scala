@@ -26,7 +26,7 @@ class InvertedIndexSpec extends SparkSpec {
   test("posting heads are doc-ordered, capped, and tf/first_pos exact") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("q92fix").toString
+    val dir = graft.Scope.lru.tempDir("q92fix").toString
     // token "z" appears in 7 docs (head must cap at 5); "y" in doc 1
     // twice (tf 2, first_pos is its first slot)
     val rows = (1L to 7L).map(i => (i, if (i == 1) "z y w y" else "z w", "en", "s", 0L))

@@ -91,7 +91,7 @@ class LabelCentroidSpec extends SparkSpec {
   test("kappa is exactly 1.0 when every vector sits in its own label's cluster") {
     // write a clean two-cluster corpus through the dir-bound binding
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("kappa_perfect_").toString
+    val dir = graft.Scope.lru.tempDir("kappa_perfect_").toString
     val rows = Seq[(Long, Long, Array[Float])](
       (1L, 0L, Array.tabulate(64)(i => if (i == 0) 1f else 0f)),
       (2L, 0L, Array.tabulate(64)(i => if (i == 0) 0.9f else 0f)),

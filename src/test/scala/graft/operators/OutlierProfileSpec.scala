@@ -27,7 +27,7 @@ class OutlierProfileSpec extends SparkSpec {
     import spark.implicits._
     // mirror the binding's computation over a controlled frame by
     // writing it as a tiny parquet dir shaped like the events table
-    val dir = java.nio.file.Files.createTempDirectory("q91fix").toString
+    val dir = graft.Scope.lru.tempDir("q91fix").toString
     val base = java.time.Instant.parse("2024-01-01T00:00:00Z")
     (1L to 20L).map(i => (i, base.plusSeconds(i).toEpochMilli * 1000000L, 7L,
         "view", if (i == 20) 1000.0 else 10.0, "{}"))
@@ -41,7 +41,7 @@ class OutlierProfileSpec extends SparkSpec {
 
   test("constant series: zero variance, zero outliers") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("q91fix2").toString
+    val dir = graft.Scope.lru.tempDir("q91fix2").toString
     (1L to 5L).map(i => (i, i * 1000000000L, 3L, "view", 42.5, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -24,7 +24,7 @@ class PatternsSpec extends SparkSpec {
   test("q105: transition counts follow the per-user timeline") {
     import spark.implicits._
     val DayNs = 86400L * 1000 * 1000 * 1000
-    val dir = java.nio.file.Files.createTempDirectory("q105fix").toString
+    val dir = graft.Scope.lru.tempDir("q105fix").toString
     // user 1: view -> click -> view ; user 2: view -> view
     Seq(
       (1L, 1L * DayNs, 1L, "view"), (2L, 2L * DayNs, 1L, "click"),

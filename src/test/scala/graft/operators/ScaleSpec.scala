@@ -50,7 +50,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning reaches a partitioned-parquet fact scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp_").toString
+    val dir = graft.Scope.lru.tempDir("graft_dpp_").toString
     Tables.orders(spark, d).write
       .partitionBy("o_orderstatus").mode("overwrite").parquet(dir)
     val fact = spark.read.parquet(dir)

@@ -1,8 +1,6 @@
 package graft.operators
 
-import java.nio.file.Files
-
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.mr.SparkSpec
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
@@ -17,7 +15,7 @@ class SinksSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
   test("partitioned parquet sink round-trips and prunes partitions on read") {
-    val tmp = Files.createTempDirectory("graft_sink_").toString
+    val tmp = Scope.lru.tempDir("graft_sink_").toString
     val docs = Tables.documents(spark, d)
     docs.write.partitionBy("lang").mode("overwrite").parquet(tmp)
 
@@ -34,8 +32,8 @@ class SinksSpec extends SparkSpec {
 
   test("csv and json sinks round-trip values") {
     import spark.implicits._
-    val tmpCsv = Files.createTempDirectory("graft_csv_").toString
-    val tmpJson = Files.createTempDirectory("graft_json_").toString
+    val tmpCsv = Scope.lru.tempDir("graft_csv_").toString
+    val tmpJson = Scope.lru.tempDir("graft_json_").toString
     val df = Seq((1L, "a", 1.5), (2L, "b", -3.25)).toDF("id", "name", "v")
 
     df.write.mode("overwrite").option("header", "true").csv(tmpCsv)
@@ -52,7 +50,7 @@ class SinksSpec extends SparkSpec {
 
   test("orc sink round-trips values (columnar alternative to parquet)") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft_orc_").toString
+    val tmp = Scope.lru.tempDir("graft_orc_").toString
     val df = Seq((1L, "a", 1.5), (2L, "b", -3.25)).toDF("id", "name", "v")
     df.write.mode("overwrite").orc(tmp)
     val back = spark.read.orc(tmp).as[(Long, String, Double)].collect().toSet
@@ -60,7 +58,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("text source reads lines (the reference's file-ingestion idiom)") {
-    val tmp = Files.createTempDirectory("graft_txt_").toString
+    val tmp = Scope.lru.tempDir("graft_txt_").toString
     import spark.implicits._
     Seq("word something else", "else something word").toDF("value")
       .write.mode("overwrite").text(tmp)

@@ -116,7 +116,7 @@ class SnapshotDiffSpec extends SparkSpec {
 
   test("winsorized mean equals the hand-computed clip") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("q95fix").toString
+    val dir = graft.Scope.lru.tempDir("q95fix").toString
     // values 1..20 for flag A: p05 = 1.95, p95 = 19.05 (linear interp),
     // one value clipped low (1), one high (20)
     (1 to 20).map(i => ("A", i.toDouble))

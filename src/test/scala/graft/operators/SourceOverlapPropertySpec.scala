@@ -38,7 +38,7 @@ class SourceOverlapPropertySpec extends SparkSpec {
 
   private def engine(rows: Seq[(String, String)]): Map[(String, String), (Long, Double)] = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ovl_prop_").toString
+    val dir = graft.Scope.lru.tempDir("ovl_prop_").toString
     rows.zipWithIndex.map { case ((s, t), i) => (i.toLong, s, t) }
       .toDF("doc_id", "source", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/_d")

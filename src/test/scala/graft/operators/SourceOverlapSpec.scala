@@ -13,7 +13,7 @@ class SourceOverlapSpec extends SparkSpec {
     import spark.implicits._
     val df = rows.toDF("doc_id", "source", "text")
     // the binding is dir-bound; drive the same body through a temp dir
-    val dir = java.nio.file.Files.createTempDirectory("src_overlap_").toString
+    val dir = graft.Scope.lru.tempDir("src_overlap_").toString
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/_d")
     val part = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "_d"))
       .filter(p => p.getFileName.toString.endsWith(".parquet"))

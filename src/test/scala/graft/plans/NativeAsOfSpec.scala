@@ -89,7 +89,7 @@ class NativeAsOfSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("PushFilterThroughAsOfJoin: left-only filters reach the left scan; key filters mirror right") {
-    val dir = java.nio.file.Files.createTempDirectory("asof_push").toString
+    val dir = graft.Scope.lru.tempDir("asof_push").toString
     Seq.tabulate(100)(i => (i.toLong % 10, i.toLong, i.toLong))
       .toDF("k", "t", "lid").write.mode("overwrite").parquet(s"$dir/l")
     Seq.tabulate(100)(i => (i.toLong % 10, i.toLong, s"p$i"))
@@ -130,7 +130,7 @@ class NativeAsOfSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // exposes the key/time/tie-break attrs); this pin makes a silent
     // break impossible — if the node ever stops exposing them, the
     // right scan's ReadSchema regrows the dropped column
-    val dir = java.nio.file.Files.createTempDirectory("asof_prune").toString
+    val dir = graft.Scope.lru.tempDir("asof_prune").toString
     Seq.tabulate(60)(i => (i.toLong % 5, i.toLong, i.toLong))
       .toDF("k", "t", "lid").write.mode("overwrite").parquet(s"$dir/l")
     Seq.tabulate(60)(i => (i.toLong % 5, i.toLong, s"keep$i", s"drop$i"))

@@ -12,7 +12,7 @@ class SourcesSpec extends SparkSpec {
     .add("id", LongType).add("name", StringType)
 
   private def writeLines(prefix: String, suffix: String, lines: Seq[String]): String = {
-    val dir = Files.createTempDirectory(prefix)
+    val dir = Scope.lru.tempDir(prefix)
     Files.write(Paths.get(dir.toString, s"part-0$suffix"),
       lines.mkString("\n").getBytes("UTF-8"))
     dir.toString
@@ -50,7 +50,7 @@ class SourcesSpec extends SparkSpec {
   test("orc: round-trip preserves rows; scans prune and push down like parquet") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("orcsrc").toString + "/t"
+    val dir = Scope.lru.tempDir("orcsrc").toString + "/t"
     val rows = (1L to 100L).map(i => (i, s"name$i", i * 10L))
     Sources.writeOrc(rows.toDF("id", "name", "score"), dir)
     val schema3 = new StructType()

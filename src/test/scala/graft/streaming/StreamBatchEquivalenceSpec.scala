@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 class StreamBatchEquivalenceSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("stream_eq_").toString
+    val d = graft.Scope.lru.tempDir("stream_eq_").toString
     val base = graft.Tables.events(spark, "/root/testdata/sf0.001")
     // deterministic perturbation: +-5s timestamp jitter and a value
     // shift, both keyed off event_id — different session/window/join

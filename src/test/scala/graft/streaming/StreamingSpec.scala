@@ -343,7 +343,7 @@ class StreamingSpec extends SparkSpec {
   test("q93: an empty events input yields a typed empty frame, not a crash") {
     // an empty drain leaves no parquet parts in the spool; without the
     // drainToSpool hasParts guard this threw 'Unable to infer schema'
-    val d = java.nio.file.Files.createTempDirectory("graft_empty_sf").toString
+    val d = graft.Scope.lru.tempDir("graft_empty_sf").toString
     graft.Tables.events(spark, "/root/testdata/sf0.001").limit(0)
       .write.parquet(s"$d/events.parquet")
     val out = EventStream.q93StreamDedup(spark, d)
@@ -411,7 +411,7 @@ class StreamingSpec extends SparkSpec {
     // without replaying the job
     import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
-    val ckpt = java.nio.file.Files.createTempDirectory("state_read_").toString
+    val ckpt = graft.Scope.lru.tempDir("state_read_").toString
     val stream = spark.readStream.schema(graft.Tables.eventsRaw(spark, d).schema)
       .option("pathGlobFilter", "events.parquet").parquet(d)
       .select(col("user_id"), col("event_type"))
@@ -459,8 +459,8 @@ class StreamingSpec extends SparkSpec {
     // checkpoint — already-committed files must not be re-counted and
     // new files must be picked up
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("ckpt_src_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt_dir_").toString
+    val base = graft.Scope.lru.tempDir("ckpt_src_").toString
+    val ckpt = graft.Scope.lru.tempDir("ckpt_dir_").toString
     import spark.implicits._
     def write(part: Int, rows: Seq[(Long, String)]): Unit =
       rows.toDF("us", "event_type")

@@ -15,7 +15,7 @@ class UpsertSinkMorSpec extends SparkSpec {
   import spark.implicits._
 
   test("each merge appends only its own batch as an immutable delta") {
-    val dir = Files.createTempDirectory("graft_upsert_mor").toString
+    val dir = graft.Scope.lru.tempDir("graft_upsert_mor").toString
     val b1 = Seq((1L, 1L, 10.0), (2L, 1L, 20.0)).toDF("k", "ver", "v")
     val b2 = Seq((1L, 2L, 11.0)).toDF("k", "ver", "v")
     UpsertSink.merge(spark, dir, b1, "k", "ver")
@@ -37,7 +37,7 @@ class UpsertSinkMorSpec extends SparkSpec {
   }
 
   test("a pre-manifest bare-version _latest reads, and merges chain on it") {
-    val dir = Files.createTempDirectory("graft_upsert_legacy").toString
+    val dir = graft.Scope.lru.tempDir("graft_upsert_legacy").toString
     // hand-build the old layout: one compacted state + bare vid pointer
     Seq((1L, 1L, 10.0), (2L, 5L, 20.0)).toDF("k", "ver", "v")
       .write.parquet(Paths.get(dir, "v0").toString)

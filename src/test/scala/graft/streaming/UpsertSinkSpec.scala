@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
-
+import graft.Scope
 import graft.mr.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -16,7 +15,7 @@ class UpsertSinkSpec extends SparkSpec {
   test("foreachBatch upsert: three micro-batches land as last-writer-wins state") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_upsert").toString
+    val dir = Scope.lru.tempDir("graft_upsert").toString
     val input = MemoryStream[(Long, Long, Double)]
     val q = UpsertSink.writer(
       input.toDF().toDF("k", "ver", "v"), dir, "k", "ver").start()
@@ -34,7 +33,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("upsert merge is idempotent: replaying a batch changes nothing") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_upsert_replay").toString
+    val dir = Scope.lru.tempDir("graft_upsert_replay").toString
     val b1 = Seq((1L, 1L, 10.0), (2L, 1L, 20.0)).toDF("k", "ver", "v")
     val b2 = Seq((1L, 2L, 11.0)).toDF("k", "ver", "v")
     UpsertSink.merge(spark, dir, b1, "k", "ver")
@@ -51,7 +50,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("version wins even when the value column precedes it in the schema") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_upsert_vorder").toString
+    val dir = Scope.lru.tempDir("graft_upsert_vorder").toString
     // schema order (k, v, ver): a stale ver-1 row with the LARGER
     // value arrives after ver-2 — schema-order tie-breaking would let
     // it clobber; the contract says version orders first
@@ -66,7 +65,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("Trigger.AvailableNow drains a bounded source and terminates on its own") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_avnow").toString
+    val src = Scope.lru.tempDir("graft_avnow").toString
     Seq(
       (java.sql.Timestamp.valueOf("2024-01-01 10:00:10"), "click"),
       (java.sql.Timestamp.valueOf("2024-01-01 10:00:40"), "click"),

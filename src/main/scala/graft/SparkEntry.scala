@@ -267,11 +267,11 @@ object SparkEntry {
   private val BpeRoundsSql: String = {
     val m = Curation.BpeMerges
     val head =
-      """WITH wf AS (
+      s"""WITH wf AS (
         |  SELECT w, COUNT(*) AS freq FROM (
-        |    SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w
+        |    SELECT unnest(${Tokens.Space.sql("text")}) AS w
         |    FROM documents)
-        |  WHERE regexp_matches(w, '^[a-z]+$')
+        |  WHERE regexp_matches(w, '^[a-z]+$$')
         |  GROUP BY w),
         |w0 AS (
         |  SELECT w,
@@ -296,8 +296,8 @@ object SparkEntry {
   }
 
   private val Q58Sql =
-    """WITH tok AS (
-        |  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+    s"""WITH tok AS (
+        |  SELECT doc_id, source, ${Tokens.Space.sql("text")} AS toks
         |  FROM documents),
         |g4 AS (
         |  SELECT doc_id, source,
@@ -341,7 +341,7 @@ object SparkEntry {
         |FROM best GROUP BY label ORDER BY label""".stripMargin
 
   private val Q75Sql =
-    """WITH bench AS (SELECT doc_id AS bid, text AS btext FROM documents WHERE doc_id % 97 = 0),
+    s"""WITH bench AS (SELECT doc_id AS bid, text AS btext FROM documents WHERE doc_id % 97 = 0),
         |planted AS (
         |  SELECT c.doc_id, c.source,
         |    CASE WHEN c.doc_id % 7 = 0 AND b.bid IS NOT NULL
@@ -350,12 +350,12 @@ object SparkEntry {
         |  FROM (SELECT * FROM documents WHERE doc_id % 97 <> 0) c
         |  LEFT JOIN bench b ON b.bid = 97 * (c.doc_id % 6)),
         |tok AS (SELECT doc_id, source,
-        |  list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> x <> '') AS t FROM planted),
+        |  ${Tokens.SpaceLower.sqlOrEmpty("text")} AS t FROM planted),
         |dg AS (SELECT DISTINCT doc_id,
         |    substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]), 1, 16) AS k
         |  FROM tok, unnest(range(1, len(t) - 3)) u(i)),
         |btok AS (SELECT bid,
-        |  list_filter(string_split(lower(COALESCE(btext, '')), ' '), x -> x <> '') AS t FROM bench),
+        |  ${Tokens.SpaceLower.sqlOrEmpty("btext")} AS t FROM bench),
         |bg AS (SELECT DISTINCT bid,
         |    substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]), 1, 16) AS k
         |  FROM btok, unnest(range(1, len(t) - 3)) u(i)),
@@ -374,12 +374,11 @@ object SparkEntry {
   private val Rev =
     "CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(8,2))"
 
-  private val TokList = "list_filter(string_split(text, ' '), x -> x <> '')"
   private val StopList =
-    "list_filter(string_split(text, ' '), x -> x IN ('the', 'a', 'of', 'and'))"
+    s"list_filter(${Tokens.Space.piecesSql("text")}, x -> x IN ('the', 'a', 'of', 'and'))"
 
   private def langScore(words: Seq[String]): String =
-    s"len(list_filter(string_split(lower(text), ' '), x -> x IN (${words.map(w => s"'$w'").mkString(", ")})))"
+    s"len(list_filter(${Tokens.SpaceLower.piecesSql("text")}, x -> x IN (${words.map(w => s"'$w'").mkString(", ")})))"
 
   /** Marks every CTE in `sql` as MATERIALIZED. DuckDB 1.0 inlines
     * CTEs textually, so a chain where level k references both level
@@ -532,7 +531,7 @@ object SparkEntry {
       |  FROM documents),
       |tk AS (
       |  SELECT source, doc_id,
-      |    list_filter(string_split(t, ' '), x -> x <> '') AS toks
+      |    ${Tokens.Space.sql("t")} AS toks
       |  FROM p),
       |w AS (
       |  SELECT source, doc_id,
@@ -579,7 +578,7 @@ object SparkEntry {
       |  FROM $rel),
       |tk AS (
       |  SELECT source, doc_id,
-      |    list_filter(string_split(t, ' '), x -> x <> '') AS toks
+      |    ${Tokens.Space.sql("t")} AS toks
       |  FROM p),
       |occ AS (
       |  SELECT doc_id, u['pos'] AS pos, u['win'] AS win FROM (
@@ -741,8 +740,8 @@ object SparkEntry {
         |  SELECT o_custkey AS k FROM orders WHERE o_totalprice > 200000) t2
         |ORDER BY k""".stripMargin,
     "q14_wordcount" ->
-      """SELECT word, COUNT(*) AS cnt FROM (
-        |  SELECT unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS word
+      s"""SELECT word, COUNT(*) AS cnt FROM (
+        |  SELECT unnest(${Tokens.Alnum.piecesSql("text")}) AS word
         |  FROM documents) t
         |WHERE word <> '' GROUP BY word ORDER BY cnt DESC, word LIMIT 100""".stripMargin,
     "q15_date_agg" ->
@@ -757,8 +756,8 @@ object SparkEntry {
         |  MAX(CAST(floor(l_discount * 100) AS BIGINT)) AS max_disc_pct
         |FROM lineitem GROUP BY bucket ORDER BY bucket""".stripMargin,
     "q17_mr_wordcount" ->
-      """SELECT word, COUNT(*) AS cnt FROM (
-        |  SELECT unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS word
+      s"""SELECT word, COUNT(*) AS cnt FROM (
+        |  SELECT unnest(${Tokens.Alnum.piecesSql("text")}) AS word
         |  FROM documents) t
         |WHERE word <> '' GROUP BY word ORDER BY cnt DESC, word LIMIT 100""".stripMargin,
     "q18_mr_first_event" ->
@@ -841,9 +840,9 @@ object SparkEntry {
     // cap (> 64 dropped, with stats), and the Hamming<=3 verify — the
     // whole q21 pipeline, converting it from rows-only to hash-matched
     "q21_dedup_simhash" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id,
-        |    unnest(list_filter(regexp_split_to_array(lower(COALESCE(text, '')), '\s+'), x -> x <> '')) AS tok
+        |    unnest(${Tokens.WsLower.sqlOrEmpty("text")}) AS tok
         |  FROM documents),
         |th AS (
         |  SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 16)) AS UBIGINT) AS u FROM toks),
@@ -891,9 +890,9 @@ object SparkEntry {
     // Spark-side 64-bit key — so membership, the df-cap, and every
     // jaccard division agree bit-for-bit with the typed-map pipeline
     "q22_ngram_jaccard" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |    list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> x <> '') AS t
+        |    ${Tokens.SpaceLower.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT doc_id, substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 16) AS k
@@ -989,12 +988,12 @@ object SparkEntry {
         |FROM scored QUALIFY rnk <= 3 ORDER BY probe_id, rnk""".stripMargin,
     "q25_text_quality" ->
       s"""SELECT lang, COUNT(*) AS n_docs,
-         |  CAST(SUM(len($TokList)) AS BIGINT) AS sum_tokens,
+         |  CAST(SUM(len(${Tokens.Space.sql("text")})) AS BIGINT) AS sum_tokens,
          |  CAST(SUM(len($StopList)) AS BIGINT) AS sum_stopwords,
          |  CAST(SUM(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g'))) AS BIGINT) AS sum_punct,
          |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-         |  CAST(SUM(len($TokList)) AS DOUBLE) / COUNT(*) AS avg_tokens,
-         |  CAST(SUM(len($StopList)) AS DOUBLE) / CAST(SUM(len($TokList)) AS DOUBLE) AS stopword_ratio
+         |  CAST(SUM(len(${Tokens.Space.sql("text")})) AS DOUBLE) / COUNT(*) AS avg_tokens,
+         |  CAST(SUM(len($StopList)) AS DOUBLE) / CAST(SUM(len(${Tokens.Space.sql("text")})) AS DOUBLE) AS stopword_ratio
          |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
     "q26_token_stats" ->
       """SELECT source, COUNT(*) AS n_docs,
@@ -1123,10 +1122,10 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
     "q42_pipeline" ->
-      """WITH surv AS (
+      s"""WITH surv AS (
         |  SELECT MIN(doc_id) AS doc_id FROM documents WHERE lang = 'en' GROUP BY md5(text)),
         |tok AS (
-        |  SELECT d.source, len(list_filter(string_split(d.text, ' '), x -> x <> '')) AS n_tok
+        |  SELECT d.source, len(${Tokens.Space.sql("d.text")}) AS n_tok
         |  FROM documents d JOIN surv USING (doc_id) WHERE d.lang = 'en')
         |SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS sum_tokens
         |FROM tok WHERE n_tok >= 40 GROUP BY source ORDER BY source""".stripMargin,
@@ -1259,8 +1258,8 @@ object SparkEntry {
         |  CAST(octet_length(encode(text)) % 480 + 1 AS BIGINT) AS height
         |FROM documents ORDER BY doc_id""".stripMargin,
     "q51_quality_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id, source, unnest(string_split(text, ' ')) AS tok FROM documents),
+      s"""WITH t AS (
+        |  SELECT doc_id, source, unnest(${Tokens.Space.piecesSql("text")}) AS tok FROM documents),
         |c AS (
         |  SELECT doc_id, source, tok, COUNT(*) AS c FROM t WHERE tok <> '' GROUP BY 1, 2, 3),
         |st AS (
@@ -1275,8 +1274,8 @@ object SparkEntry {
         |   OR CAST(top_cnt AS DOUBLE) / CAST(n_tok AS DOUBLE) > 0.12
         |ORDER BY doc_id""".stripMargin,
     "q52_term_scores" ->
-      """WITH t AS (
-        |  SELECT doc_id, source, unnest(string_split(text, ' ')) AS tok FROM documents),
+      s"""WITH t AS (
+        |  SELECT doc_id, source, unnest(${Tokens.Space.piecesSql("text")}) AS tok FROM documents),
         |tt AS (SELECT doc_id, source, tok FROM t WHERE tok <> ''),
         |tf AS (SELECT source, tok, COUNT(*) AS tf FROM tt GROUP BY 1, 2),
         |df AS (SELECT tok, COUNT(DISTINCT doc_id) AS df FROM tt GROUP BY 1),
@@ -1319,8 +1318,8 @@ object SparkEntry {
         |ORDER BY doc_id""".stripMargin,
     "q58_decontaminate" -> Q58Sql,
     "q59_vocab_coverage" ->
-      """WITH t AS (
-        |  SELECT doc_id, source, unnest(string_split(text, ' ')) AS tok FROM documents),
+      s"""WITH t AS (
+        |  SELECT doc_id, source, unnest(${Tokens.Space.piecesSql("text")}) AS tok FROM documents),
         |tt AS (SELECT doc_id, source, tok FROM t WHERE tok <> ''),
         |v AS (
         |  SELECT tok FROM (
@@ -1338,8 +1337,8 @@ object SparkEntry {
         |FROM dc JOIN per ON dc.source = per.source
         |ORDER BY dc.source""".stripMargin,
     "q60_chunk" ->
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+      s"""WITH tok AS (
+        |  SELECT doc_id, ${Tokens.Space.sql("text")} AS toks
         |  FROM documents),
         |n AS (SELECT doc_id, toks, len(toks) AS n FROM tok),
         |c AS (
@@ -1360,8 +1359,8 @@ object SparkEntry {
         |  FROM documents) t
         |WHERE rk <= 15 ORDER BY doc_id""".stripMargin,
     "q62_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tok
+      s"""WITH t AS (
+        |  SELECT doc_id, len(${Tokens.Space.sql("text")}) AS n_tok
         |  FROM documents),
         |c AS (
         |  SELECT doc_id, n_tok,
@@ -1444,8 +1443,8 @@ object SparkEntry {
         |GROUP BY source
         |ORDER BY source""".stripMargin,
     "q64_span_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t FROM documents),
+      s"""WITH toks AS (
+        |  SELECT doc_id, ${Tokens.Space.sql("text")} AS t FROM documents),
         |g AS (
         |  SELECT doc_id, md5(unnest(list_transform(
         |    generate_series(1, greatest(len(t) - 15, 0)),
@@ -1464,8 +1463,8 @@ object SparkEntry {
         |  END AS dup_ratio
         |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY d.doc_id""".stripMargin,
     "q65_unigram_quality" ->
-      """WITH t AS (
-        |  SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
+      s"""WITH t AS (
+        |  SELECT doc_id, unnest(${Tokens.Space.sql("text")}) AS tok
         |  FROM documents),
         |c AS (SELECT tok, COUNT(*) AS c FROM t GROUP BY 1),
         |v AS (SELECT tok, CAST(c AS BIGINT) AS c FROM c ORDER BY c DESC, tok ASC LIMIT 25),
@@ -1477,8 +1476,8 @@ object SparkEntry {
         |  CAST(sum_freq AS DOUBLE) / CAST(n_tok AS DOUBLE) AS avg_freq
         |FROM per ORDER BY doc_id""".stripMargin,
     "q66_pair_counts" ->
-      """WITH toks AS (
-        |  SELECT list_filter(string_split(text, ' '), x -> x <> '') AS t FROM documents),
+      s"""WITH toks AS (
+        |  SELECT ${Tokens.Space.sql("text")} AS t FROM documents),
         |p AS (
         |  SELECT unnest(list_transform(generate_series(1, len(t) - 1),
         |    i -> t[i] || ' ' || t[i+1])) AS pair
@@ -1497,9 +1496,9 @@ object SparkEntry {
         |  CAST(MAX(k.k) AS DOUBLE) / 65536 AS keep_rate
         |FROM documents d JOIN k USING (lang) GROUP BY 1 ORDER BY d.lang""".stripMargin,
     "q68_curation_pipeline" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, source, text,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tok
+        |    CAST(len(${Tokens.Space.sql("text")}) AS BIGINT) AS n_tok
         |  FROM documents),
         |gated AS (SELECT * FROM t WHERE n_tok BETWEEN 10 AND 80),
         |reps AS (SELECT MIN(doc_id) AS doc_id FROM gated GROUP BY md5(text)),
@@ -1672,7 +1671,7 @@ object SparkEntry {
     // exact percentile aggregate (verified on this data)
     "q74_length_profile" ->
       s"""WITH t AS (
-         |  SELECT source, CAST(len($TokList) AS BIGINT) AS n_tok FROM documents)
+         |  SELECT source, CAST(len(${Tokens.Space.sql("text")}) AS BIGINT) AS n_tok FROM documents)
          |SELECT source, COUNT(*) AS n_docs,
          |  MIN(n_tok) AS min_tok,
          |  quantile_cont(n_tok, 0.25) AS p25_tok,
@@ -1694,13 +1693,13 @@ object SparkEntry {
     // same all-double (cxy*N)/(cx*cy) tree -> bit-identical rational
     // PMI scores; count floor and (score desc, pair asc) cut mirrored
     "q77_pmi_scores" ->
-      """WITH toks AS (
-        |  SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
+      s"""WITH toks AS (
+        |  SELECT unnest(${Tokens.Space.sql("text")}) AS tok
         |  FROM documents),
         |uni AS (SELECT tok, COUNT(*) AS c1 FROM toks GROUP BY tok),
         |n AS (SELECT COUNT(*) AS total FROM toks),
         |t2 AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
+        |  SELECT doc_id, ${Tokens.Space.sql("text")} AS t
         |  FROM documents),
         |pairs AS (
         |  SELECT t[i] AS x, t[i+1] AS y, COUNT(*) AS cxy
@@ -1737,14 +1736,14 @@ object SparkEntry {
     // representatives at t=0.5, min-label components via recursive CTE
     // (q53's pattern), split from the label doc's md5 first hex char
     "q79_cluster_split" ->
-      """WITH RECURSIVE h AS (
+      s"""WITH RECURSIVE h AS (
         |  SELECT doc_id, MIN(doc_id) OVER (PARTITION BY md5(text)) AS rep FROM documents),
         |reps AS (
         |  SELECT d.doc_id, d.text FROM documents d
         |  JOIN h ON h.doc_id = d.doc_id WHERE h.doc_id = h.rep),
         |tok AS (
         |  SELECT doc_id,
-        |    list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> x <> '') AS t
+        |    ${Tokens.SpaceLower.sqlOrEmpty("text")} AS t
         |  FROM reps),
         |g AS (
         |  SELECT DISTINCT doc_id, substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 16) AS k
@@ -1807,9 +1806,9 @@ object SparkEntry {
     // fixed-point cosine, fused as 0.5*jaccard + 0.5*cosine — every
     // stage is exact, so the two-stage ranking hash-matches end to end
     "q81_hybrid_search" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |    list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> x <> '') AS t
+        |    ${Tokens.SpaceLower.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT doc_id, substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 16) AS k
@@ -1864,8 +1863,8 @@ object SparkEntry {
     // windows over duplicated grams (position base 1 vs 0 cancels out —
     // only counts cross the oracle)
     "q82_span_coverage" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t FROM documents),
+      s"""WITH toks AS (
+        |  SELECT doc_id, ${Tokens.Space.sql("text")} AS t FROM documents),
         |g AS (
         |  SELECT doc_id, i AS pos, md5(array_to_string(t[i:i+15], ' ')) AS gh
         |  FROM toks, unnest(generate_series(1, greatest(len(t) - 15, 0))) u(i)),
@@ -1964,9 +1963,9 @@ object SparkEntry {
     // self-join must reproduce every qualifying pair exactly (gram
     // identity is the same md5-64 truncation on both sides)
     "q88_all_pairs" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |    list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> x <> '') AS t
+        |    ${Tokens.SpaceLower.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT DISTINCT doc_id, substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 16) AS k
@@ -2052,9 +2051,9 @@ object SparkEntry {
     // ordered posting-list head — list(... ORDER BY) sliced to the same
     // K as the Spark side's bounded aggregator
     "q92_inverted_index" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |    list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> x <> '') AS t
+        |    ${Tokens.SpaceLower.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |p AS (
         |  SELECT doc_id, t[i] AS tok, i AS pos
@@ -2176,9 +2175,9 @@ object SparkEntry {
          |ORDER BY detector""".stripMargin,
     // q88's brute-force pair oracle rolled to unordered source pairs
     "q98_dup_flow" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |    list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> x <> '') AS t
+        |    ${Tokens.SpaceLower.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT DISTINCT doc_id, substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 16) AS k
@@ -2340,8 +2339,8 @@ object SparkEntry {
     // Gopher A1 top-n-gram fractions: count x n / tokens per doc, one
     // double division per fraction, flag over 0.20/0.18/0.16
     "q106_gram_repetition" ->
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
+      s"""WITH tok AS (
+        |  SELECT doc_id, ${Tokens.Space.sql("text")} AS t
         |  FROM documents),
         |n AS (SELECT doc_id, len(t) AS nt FROM tok),
         |g2 AS (
@@ -2374,8 +2373,8 @@ object SparkEntry {
     // DECIMAL(20,9) order-free score sum - same determinism contract as
     // the Spark side, term for term
     "q107_bm25_search" ->
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
+      s"""WITH tok AS (
+        |  SELECT doc_id, ${Tokens.Space.sql("text")} AS t
         |  FROM documents),
         |tf AS (
         |  SELECT doc_id, tok, COUNT(*) AS tf
@@ -2440,23 +2439,23 @@ object SparkEntry {
     // sorted-adjacency prefix detection over distinct texts bucketed by
     // the first-16-token md5, planted half-length truncations included
     "q109_truncation_dups" ->
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT doc_id, source, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + (SELECT MAX(doc_id) + 1 FROM documents) AS doc_id,
         |    'planted' AS source,
         |    array_to_string(t[1:(len(t) // 2)], ' ') AS text
-        |  FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
+        |  FROM (SELECT doc_id, ${Tokens.Space.sql("text")} AS t
         |        FROM documents)
         |  WHERE doc_id % 13 = 0),
         |ct AS (
         |  SELECT doc_id, source, text,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
+        |    ${Tokens.Space.sql("text")} AS t
         |  FROM corpus),
         |dt AS (
         |  SELECT text,
         |    md5(array_to_string(
-        |      list_filter(string_split(text, ' '), x -> x <> '')[1:16], ' ')) AS bkey
+        |      ${Tokens.Space.sql("text")}[1:16], ' ')) AS bkey
         |  FROM (SELECT DISTINCT text FROM ct WHERE len(t) >= 16)),
         |fl AS (
         |  SELECT text FROM (
@@ -2471,8 +2470,8 @@ object SparkEntry {
     // chi-squared vs the corpus-global top-50 token distribution; each
     // contribution one fixed IEEE sequence, DECIMAL(25,9) order-free sum
     "q110_source_drift" ->
-      """WITH t AS (
-        |  SELECT source, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
+      s"""WITH t AS (
+        |  SELECT source, unnest(${Tokens.Space.sql("text")}) AS tok
         |  FROM documents),
         |st AS (SELECT source, tok, COUNT(*) AS o FROM t GROUP BY 1, 2),
         |vocab AS (
@@ -2546,7 +2545,7 @@ object SparkEntry {
          |  SELECT w, CAST(len(string_split(trim(seq), '  ')) AS BIGINT) AS n_sym
          |  FROM w${Curation.BpeMerges}),
          |docw AS (
-         |  SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w
+         |  SELECT doc_id, unnest(${Tokens.Space.sql("text")}) AS w
          |  FROM documents)
          |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
          |  CAST(SUM(COALESCE(d.n_sym, 1)) AS BIGINT) AS n_bpe_tokens
@@ -2636,12 +2635,12 @@ object SparkEntry {
     // DSIR-flavored acceptance: exact-integer stopword weight, md5 of
     // the doc id as a 32-bit uniform, one division/multiply/compare
     "q120_importance_resample" ->
-      """WITH st AS (
+      s"""WITH st AS (
         |  SELECT doc_id, source,
         |    CAST(len(t) AS BIGINT) AS n_tok,
         |    CAST(len(list_filter(t, x -> list_contains(['the','a','of','and'], x))) AS BIGINT) AS n_stop
         |  FROM (SELECT doc_id, source,
-        |          list_filter(string_split(text, ' '), x -> x <> '') AS t
+        |          ${Tokens.Space.sql("text")} AS t
         |        FROM documents)),
         |wt AS (
         |  SELECT doc_id, source, n_tok,
@@ -2654,9 +2653,9 @@ object SparkEntry {
         |ORDER BY doc_id""".stripMargin,
     // greedy hash-order prefix fill per source, budget in tokens
     "q121_token_budget" ->
-      """WITH rows_ AS (
+      s"""WITH rows_ AS (
         |  SELECT doc_id, source,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tok,
+        |    CAST(len(${Tokens.Space.sql("text")}) AS BIGINT) AS n_tok,
         |    md5(text) AS h
         |  FROM documents),
         |cum AS (
@@ -2756,7 +2755,7 @@ object SparkEntry {
       val k = Curation.SystematicTarget
       s"""WITH rows_ AS (
          |  SELECT doc_id,
-         |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tok,
+         |    CAST(len(${Tokens.Space.sql("text")}) AS BIGINT) AS n_tok,
          |    md5(text) AS h
          |  FROM documents),
          |t AS (SELECT CAST(SUM(n_tok) AS BIGINT) AS tot FROM rows_),
@@ -2775,9 +2774,9 @@ object SparkEntry {
     // to the pooled value at ceil(r*N/ns) — all-integer, so the
     // two-phase bucketed ranking must match this plain-window form
     "q126_quantile_normalize" ->
-      """WITH rows_ AS (
+      s"""WITH rows_ AS (
         |  SELECT doc_id, source,
-        |    CAST(len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS BIGINT) AS n_tok
+        |    CAST(len(${Tokens.Space.sqlOrEmpty("text")}) AS BIGINT) AS n_tok
         |  FROM documents),
         |n AS (SELECT COUNT(*) AS nn FROM rows_),
         |g AS (
@@ -3065,7 +3064,7 @@ object SparkEntry {
     // threshold and z in the same fixed double-op order
     "q138_mad_outliers" ->
       s"""WITH t AS (
-         |  SELECT source, doc_id, CAST(len($TokList) AS BIGINT) AS n_tok FROM documents),
+         |  SELECT source, doc_id, CAST(len(${Tokens.Space.sql("text")}) AS BIGINT) AS n_tok FROM documents),
          |med AS (SELECT source, quantile_cont(n_tok, 0.5) AS med FROM t GROUP BY source),
          |dv AS (
          |  SELECT t.source, t.doc_id, t.n_tok, med.med, ABS(t.n_tok - med.med) AS dev
@@ -3080,8 +3079,8 @@ object SparkEntry {
     // fixed-point cosine SQL (depth 20), fused by rank:
     // 1/(60+lex_rnk) + 1/(60+cos_rnk), missing list -> 0
     "q139_rrf_fusion" ->
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
+      s"""WITH tok AS (
+        |  SELECT doc_id, ${Tokens.Space.sql("text")} AS t
         |  FROM documents),
         |tf AS (
         |  SELECT doc_id, tok, COUNT(*) AS tf
@@ -3245,9 +3244,9 @@ object SparkEntry {
     // = the engine's gramHash64 bytes, so distinct counts agree even
     // under a (vanishingly unlikely) truncated-md5 collision
     "q144_source_overlap" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT source, doc_id,
-        |    list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> x <> '') AS t
+        |    ${Tokens.SpaceLower.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT DISTINCT source, substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 16) AS k
@@ -3266,9 +3265,9 @@ object SparkEntry {
     // same single-space tokenization as q126; ntile bucket assignment
     // is deterministic under the (n_tok, doc_id) total order
     "q145_curriculum" ->
-      """WITH r AS (
+      s"""WITH r AS (
         |  SELECT doc_id, source,
-        |    CAST(len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS BIGINT) AS n_tok
+        |    CAST(len(${Tokens.Space.sqlOrEmpty("text")}) AS BIGINT) AS n_tok
         |  FROM documents),
         |b AS (
         |  SELECT source, n_tok,
@@ -3528,7 +3527,7 @@ object SparkEntry {
     // q55 sketch surface with every value driver-checkable
     "q158_cms_freq" ->
       s"""WITH toks AS (
-        |  SELECT unnest(list_filter(string_split(COALESCE(text, ''), ' '), t -> t <> '')) AS tok
+        |  SELECT unnest(${Tokens.Space.sqlOrEmpty("text")}) AS tok
         |  FROM documents),
         |seeds(j, a, b, c) AS (SELECT * FROM (VALUES ${graft.operators.Corpus.cmsSeedValuesSql}) v),
         |keyed AS (
@@ -3561,7 +3560,7 @@ object SparkEntry {
     // (1-ulp ln divergence, measured) — the oracle pins its PREDICATE
     "q159_hll_distinct" ->
       s"""WITH t AS (
-        |  SELECT source, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS t
+        |  SELECT source, ${Tokens.Space.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT source, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
@@ -3669,7 +3668,7 @@ object SparkEntry {
            |    CAST(SUM(CAST(1 AS BIGINT) << CAST(52 - r AS INTEGER)) AS BIGINT) AS s_hit
            |    FROM $from GROUP BY $keys) z""".stripMargin
       s"""WITH t AS (
-        |  SELECT source, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS t
+        |  SELECT source, ${Tokens.Space.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT source, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
@@ -3708,7 +3707,7 @@ object SparkEntry {
     // missing-row-means-zero rule mirrored
     "q163_cms_inner" ->
       s"""WITH toks AS (
-        |  SELECT source, unnest(list_filter(string_split(COALESCE(text, ''), ' '), t -> t <> '')) AS tok
+        |  SELECT source, unnest(${Tokens.Space.sqlOrEmpty("text")}) AS tok
         |  FROM documents),
         |seeds(j, a, b, c) AS (SELECT * FROM (VALUES ${graft.operators.Corpus.cmsSeedValuesSql}) v),
         |keyed AS (
@@ -4028,7 +4027,7 @@ object SparkEntry {
     // toward zero on positives). Below k keys the estimate is exact.
     "q172_kmv_distinct" ->
       s"""WITH t AS (
-        |  SELECT source, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS t
+        |  SELECT source, ${Tokens.Space.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT source, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
@@ -4055,7 +4054,7 @@ object SparkEntry {
     // as its own query, q181).
     "q173_kmv_overlap" ->
       s"""WITH t AS (
-        |  SELECT source, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS t
+        |  SELECT source, ${Tokens.Space.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT source, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
@@ -4171,7 +4170,7 @@ object SparkEntry {
     // the even-doc_id half, held-out odd half scored per source.
     "q176_lm_quality" ->
       s"""WITH tr AS (
-        |  SELECT list_filter(string_split(text, ' '), x -> x <> '') AS t
+        |  SELECT ${Tokens.Space.sql("text")} AS t
         |  FROM documents WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < '8'),
         |uni AS (
         |  SELECT tok, COUNT(*) AS cx
@@ -4183,7 +4182,7 @@ object SparkEntry {
         |ep AS (
         |  SELECT doc_id, source, t[i] AS x, t[i+1] AS y, COUNT(*) AS tf
         |  FROM (SELECT doc_id, source,
-        |          list_filter(string_split(text, ' '), x -> x <> '') AS t
+        |          ${Tokens.Space.sql("text")} AS t
         |        FROM documents WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) >= '8'),
         |    unnest(range(1, len(t))) u(i)
         |  GROUP BY 1, 2, 3, 4),
@@ -4215,8 +4214,8 @@ object SparkEntry {
     // argmin class replayed as min-score-then-min-class (ties break to
     // the lexicographically smaller class in both engines).
     "q177_nb_langid" ->
-      """WITH tr AS (
-        |  SELECT lang AS cls, list_filter(string_split(text, ' '), x -> x <> '') AS t
+      s"""WITH tr AS (
+        |  SELECT lang AS cls, ${Tokens.Space.sql("text")} AS t
         |  FROM documents WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < '8'),
         |ct AS (
         |  SELECT cls, tok, COUNT(*) AS ctc
@@ -4239,7 +4238,7 @@ object SparkEntry {
         |  FROM pri2),
         |ev AS (
         |  SELECT doc_id, lang AS truth,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
+        |    ${Tokens.Space.sql("text")} AS t
         |  FROM documents WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) >= '8'),
         |tm AS (
         |  SELECT doc_id, tok, COUNT(*) AS tf
@@ -4275,15 +4274,15 @@ object SparkEntry {
     // half-split as q176/q177; docs with < 3 tokens yield no grams and
     // drop out on both sides.
     "q178_ngram_novelty" ->
-      """WITH tr AS (
-        |  SELECT list_filter(string_split(text, ' '), x -> x <> '') AS t
+      s"""WITH tr AS (
+        |  SELECT ${Tokens.Space.sql("text")} AS t
         |  FROM documents WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < '8'),
         |tg AS (
         |  SELECT DISTINCT t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
         |  FROM tr, unnest(range(1, len(t) - 1)) u(i)),
         |ev AS (
         |  SELECT doc_id, source,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
+        |    ${Tokens.Space.sql("text")} AS t
         |  FROM documents WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) >= '8'),
         |eg AS (
         |  SELECT doc_id, source, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g,
@@ -4332,8 +4331,8 @@ object SparkEntry {
     // ground truth the q162/q173 sketches estimate, as its own line;
     // zero-overlap pairs kept via the full pair frame
     "q181_exact_gram_overlap" ->
-      """WITH t AS (
-        |  SELECT source, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS t
+      s"""WITH t AS (
+        |  SELECT source, ${Tokens.Space.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT source, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
@@ -4359,8 +4358,8 @@ object SparkEntry {
     // the q163 ground truth as its own line; HUGEINT product before
     // the sum mirrors Spark's DECIMAL(38,0) widening
     "q182_exact_token_inner" ->
-      """WITH toks AS (
-        |  SELECT source, unnest(list_filter(string_split(COALESCE(text, ''), ' '), t -> t <> '')) AS tok
+      s"""WITH toks AS (
+        |  SELECT source, unnest(${Tokens.Space.sqlOrEmpty("text")}) AS tok
         |  FROM documents),
         |cnt AS (SELECT source, tok, COUNT(*) AS n FROM toks GROUP BY 1, 2),
         |srcs AS (SELECT DISTINCT source FROM cnt),
@@ -4434,7 +4433,7 @@ object SparkEntry {
     // union estimate, two-level HUGEINT floor mirrored exactly
     "q186_kmv_difference" ->
       s"""WITH t AS (
-        |  SELECT source, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS t
+        |  SELECT source, ${Tokens.Space.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT source, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
@@ -4541,7 +4540,7 @@ object SparkEntry {
     "q190_hll_rollup" -> {
       val alpha = s"CAST('${graft.operators.Corpus.HllAlphaMM}' AS DOUBLE)"
       s"""WITH t AS (
-        |  SELECT source, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS t
+        |  SELECT source, ${Tokens.Space.sqlOrEmpty("text")} AS t
         |  FROM documents),
         |g AS (
         |  SELECT source, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
@@ -4817,7 +4816,7 @@ object SparkEntry {
     "q202_cms_rollup" ->
       s"""WITH toks AS (
         |  SELECT source,
-        |    unnest(list_filter(string_split(COALESCE(text, ''), ' '), t -> t <> '')) AS tok
+        |    unnest(${Tokens.Space.sqlOrEmpty("text")}) AS tok
         |  FROM documents),
         |seeds(j, a, b, c) AS (SELECT * FROM (VALUES ${graft.operators.Corpus.cmsSeedValuesSql}) v),
         |keyed AS (
@@ -4959,8 +4958,7 @@ object SparkEntry {
     "q205_mixture_plan" ->
       s"""WITH t AS (
         |  SELECT source,
-        |    CAST(SUM(len(list_filter(string_split(COALESCE(text, ''), ' '),
-        |      x -> x <> ''))) AS BIGINT) AS n_tokens
+        |    CAST(SUM(len(${Tokens.Space.sqlOrEmpty("text")})) AS BIGINT) AS n_tokens
         |  FROM documents GROUP BY source
         |  HAVING n_tokens > 0),
         |w AS (
@@ -4998,7 +4996,7 @@ object SparkEntry {
         |  FROM documents),
         |tk AS (
         |  SELECT source, doc_id,
-        |    list_filter(string_split(t, ' '), x -> x <> '') AS toks
+        |    ${Tokens.Space.sql("t")} AS toks
         |  FROM p),
         |g AS (
         |  SELECT source, doc_id,
@@ -5101,7 +5099,7 @@ object SparkEntry {
     "q216_curation_rewrite_pipeline" ->
       s"""WITH t0 AS (
         |  SELECT doc_id, source, text,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tok
+        |    CAST(len(${Tokens.Space.sql("text")}) AS BIGINT) AS n_tok
         |  FROM documents),
         |g AS (SELECT source, doc_id, text FROM t0 WHERE n_tok BETWEEN 10 AND 80),
         |${exactSubstrRewriteCtes("g")},
@@ -5302,7 +5300,7 @@ object SparkEntry {
         |  FROM documents WHERE doc_id IS NOT NULL),
         |tk AS (
         |  SELECT win_id,
-        |    list_filter(string_split(t, ' '), x -> x <> '') AS toks
+        |    ${Tokens.Space.sql("t")} AS toks
         |  FROM p),
         |w AS (
         |  SELECT win_id,

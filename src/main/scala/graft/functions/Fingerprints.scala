@@ -120,19 +120,17 @@ object TokenWindowKeys {
     StructField("h2", LongType, nullable = false))), containsNull = false)
 
   /** All L-token window keys of `s` in one pass, ZERO window-string (or
-    * even token-string) allocation: tokens are maximal runs of
-    * non-0x20 bytes walked directly off the UTF8String (byte-identical
-    * to `Curation.tokenize` — split on single spaces, drop empties —
-    * and safe without decoding because 0x20 never occurs inside a
-    * UTF-8 multibyte sequence), each hashed to a two-seed 61-bit pair
-    * as its bytes stream past; the window keys then roll over the
-    * token-hash arrays in O(1) per slide. Token bytes are offset by +1
-    * so a leading 0x00 byte cannot vanish from the polynomial (\x00a
-    * and a must not collide in BOTH seeds); the window level needs no
-    * such guard because every window is exactly L tokens. Output rows
-    * are `(pos, h1, h2)` with `pos` the 0-based token index of the
-    * window start — the same position grain as the string-mode
-    * occurrence stream.
+    * even token-string) allocation: the tokens are
+    * [[graft.Tokens.walk]]'s single-space byte ranges (the
+    * `Tokens.Space` model), each hashed to a two-seed 61-bit pair
+    * straight off the walk's bytes; the window keys then roll
+    * over the token-hash arrays in O(1) per slide. Token bytes are
+    * offset by +1 so a leading 0x00 byte cannot vanish from the
+    * polynomial (\x00a and a must not collide in BOTH seeds); the
+    * window level needs no such guard because every window is exactly
+    * L tokens. Output rows are `(pos, h1, h2)` with `pos` the 0-based
+    * token index of the window start — the same position grain as the
+    * string-mode occurrence stream.
     */
   def keys(s: UTF8String, l: Int): ArrayData = keys(s, l, 0L, false)
 
@@ -149,29 +147,24 @@ object TokenWindowKeys {
     */
   def keys(s: UTF8String, l: Int, narrowMod: Long, single: Boolean): ArrayData = {
     import Fingerprints.{Mod, mulMod}
-    val n = s.numBytes()
-    var cap = 16
-    var t1 = new Array[Long](cap)
-    var t2 = new Array[Long](cap)
-    var nt = 0
-    var i = 0
-    while (i < n) {
-      if (s.getByte(i) == 0x20) i += 1
-      else {
-        var h1 = 0L; var h2 = 0L
-        while (i < n && s.getByte(i) != 0x20) {
-          val c = (s.getByte(i) & 0xFF).toLong + 1L
-          h1 = (mulMod(h1, TokBase1) + c) % Mod
-          h2 = (mulMod(h2, TokBase2) + c) % Mod
-          i += 1
-        }
-        if (nt == cap) {
-          cap *= 2
-          t1 = java.util.Arrays.copyOf(t1, cap)
-          t2 = java.util.Arrays.copyOf(t2, cap)
-        }
-        t1(nt) = h1; t2(nt) = h2; nt += 1
+    val w = graft.Tokens.walk(s, ws = false)
+    val bytes = w.bytes
+    val nt = w.count
+    val t1 = new Array[Long](nt)
+    val t2 = new Array[Long](nt)
+    var t = 0
+    while (t < nt) {
+      var h1 = 0L; var h2 = 0L
+      var i = w.start(t)
+      val e = i + w.len(t)
+      while (i < e) {
+        val c = (bytes(i) & 0xFF).toLong + 1L
+        h1 = (mulMod(h1, TokBase1) + c) % Mod
+        h2 = (mulMod(h2, TokBase2) + c) % Mod
+        i += 1
       }
+      t1(t) = h1; t2(t) = h2
+      t += 1
     }
     val m = nt - l + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Any])

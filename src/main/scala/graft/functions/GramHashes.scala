@@ -20,8 +20,8 @@ object GramHashes {
 
   /** Every n-token gram's 64-bit md5-prefix hash, in gram order —
     * value-identical to
-    * `grams(tokenize(t), n).map(Dedup.gramHash64)` (tokens split on
-    * single spaces, empties dropped, joined by single spaces; hash =
+    * `grams(Tokens.Space(t), n).map(Dedup.gramHash64)` (tokens of
+    * [[graft.Tokens.walk]], joined by single spaces; hash =
     * first 8 bytes of md5(utf-8(gram)), big-endian — the
     * oracle-reproducible `substr(md5(g), 1, 16)` identity), computed
     * with ZERO window-string allocation: the md5 digests each window's
@@ -32,56 +32,16 @@ object GramHashes {
     */
   def hashes(s: UTF8String, n: Int, distinct: Boolean, sorted: Boolean,
       wsSplit: Boolean): ArrayData = {
-    val all = s.getBytes
-    val nb = all.length
-    // wsSplit replicates java regex \s+ = [ \t\n\x0B\f\r] (all
-    // single-byte, so the byte walk stays UTF-8-safe); plain mode is
-    // the corpus convention's single-space split
-    def isSep(b: Byte): Boolean =
-      b == 0x20 || (wsSplit && (b == 0x09 || b == 0x0A || b == 0x0B ||
-        b == 0x0C || b == 0x0D))
-    var cap = 16
-    var starts = new Array[Int](cap)
-    var lens = new Array[Int](cap)
-    var nt = 0
-    var i = 0
-    while (i < nb) {
-      if (isSep(all(i))) i += 1
-      else {
-        val st = i
-        while (i < nb && !isSep(all(i))) i += 1
-        if (nt == cap) {
-          cap *= 2
-          starts = java.util.Arrays.copyOf(starts, cap)
-          lens = java.util.Arrays.copyOf(lens, cap)
-        }
-        starts(nt) = st; lens(nt) = i - st; nt += 1
-      }
-    }
-    val m = nt - n + 1
+    val w = graft.Tokens.walk(s, wsSplit)
+    val m = w.count - n + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Long])
-    // normalized single-space-joined token text; gram p is
-    // norm[normOff(p) ..< normOff(p+n-1)+lens(p+n-1)]
-    var normLen = nt - 1
-    i = 0
-    while (i < nt) { normLen += lens(i); i += 1 }
-    val norm = new Array[Byte](normLen)
-    val normOff = new Array[Int](nt)
-    var off = 0
-    i = 0
-    while (i < nt) {
-      if (i > 0) { norm(off) = 0x20; off += 1 }
-      normOff(i) = off
-      System.arraycopy(all, starts(i), norm, off, lens(i))
-      off += lens(i)
-      i += 1
-    }
+    val norm = w.joined()
     val md = Md5.get()
     val out = new Array[Long](m)
     var p = 0
     while (p < m) {
-      val a = normOff(p)
-      val b = normOff(p + n - 1) + lens(p + n - 1)
+      val a = w.off(p)
+      val b = w.end(p + n - 1)
       md.reset()
       md.update(norm, a, b - a)
       val d = md.digest()
@@ -125,7 +85,7 @@ object GramHashes {
   * run as scan→project inside whole-stage codegen instead of a
   * corpus-scale `Dataset.map` encoder barrier (guide §1.2 step 2),
   * with no per-token or per-window String allocation. GramHashesSpec
-  * pins value-equality with the `gramHash64(grams(tokenize))` path on
+  * pins value-equality with the `gramHash64(grams(Tokens.Space))` path on
   * adversarial corpora.
   */
 case class GramHashes(child: Expression, n: Int,

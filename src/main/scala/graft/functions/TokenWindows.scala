@@ -15,11 +15,10 @@ object TokenWindows {
   val OutType: ArrayType = ArrayType(StringType, containsNull = false)
 
   /** Every n-token window STRING of `s`, in window order —
-    * byte-identical to `Curation.grams(Curation.tokenize(t), n)`
-    * (tokens are maximal runs of non-0x20 bytes — 0x20 never occurs
-    * inside a UTF-8 multibyte sequence — joined by single spaces; no
-    * partial tail windows), built with ONE normalized byte buffer per
-    * document: every window is a contiguous slice of the
+    * byte-identical to `Curation.grams(Tokens.Space(t), n)`
+    * ([[graft.Tokens.walk]]'s single-space tokens joined by single
+    * spaces; no partial tail windows), built with ONE normalized byte
+    * buffer per document: every window is a contiguous slice of the
     * single-space-joined token text, so the returned UTF8Strings are
     * zero-copy VIEWS into that buffer (O(corpus) bytes built per doc,
     * not O(n·corpus)). `distinct = true` keeps each window's FIRST
@@ -28,54 +27,18 @@ object TokenWindows {
     * matters).
     */
   def windows(s: UTF8String, n: Int, distinct: Boolean): ArrayData = {
-    val all = s.getBytes
-    val nb = all.length
-    // token byte ranges in the RAW text
-    var cap = 16
-    var starts = new Array[Int](cap)
-    var lens = new Array[Int](cap)
-    var nt = 0
-    var i = 0
-    while (i < nb) {
-      if (all(i) == 0x20) i += 1
-      else {
-        val st = i
-        while (i < nb && all(i) != 0x20) i += 1
-        if (nt == cap) {
-          cap *= 2
-          starts = java.util.Arrays.copyOf(starts, cap)
-          lens = java.util.Arrays.copyOf(lens, cap)
-        }
-        starts(nt) = st; lens(nt) = i - st; nt += 1
-      }
-    }
-    val m = nt - n + 1
+    val w = graft.Tokens.walk(s, ws = false)
+    val m = w.count - n + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Any])
-    // normalized single-space-joined token text + each token's offset
-    // in it: window p is norm[normOff(p) ..< normOff(p+n-1)+lens(p+n-1)]
-    var normLen = nt - 1
-    i = 0
-    while (i < nt) { normLen += lens(i); i += 1 }
-    val norm = new Array[Byte](normLen)
-    val normOff = new Array[Int](nt)
-    var off = 0
-    i = 0
-    while (i < nt) {
-      if (i > 0) { norm(off) = 0x20; off += 1 }
-      normOff(i) = off
-      System.arraycopy(all, starts(i), norm, off, lens(i))
-      off += lens(i)
-      i += 1
-    }
+    val norm = w.joined()
     val out = new Array[Any](m)
     var kept = 0
     val seen = if (distinct) new java.util.HashSet[UTF8String]() else null
     var p = 0
     while (p < m) {
-      val a = normOff(p)
-      val b = normOff(p + n - 1) + lens(p + n - 1)
-      val w = UTF8String.fromBytes(norm, a, b - a)
-      if (seen == null || seen.add(w)) { out(kept) = w; kept += 1 }
+      val a = w.off(p)
+      val win = UTF8String.fromBytes(norm, a, w.end(p + n - 1) - a)
+      if (seen == null || seen.add(win)) { out(kept) = win; kept += 1 }
       p += 1
     }
     new GenericArrayData(
@@ -100,7 +63,7 @@ object TokenWindows {
   * serialize encoder barrier that also blocks fusion with the
   * downstream aggregate's partial hash map — guide §1.2 step 2).
   * TokenWindowsSpec pins byte-equality with the
-  * `grams(tokenize(t), n)` iterator on adversarial corpora.
+  * `grams(Tokens.Space(t), n)` iterator on adversarial corpora.
   */
 case class TokenWindows(child: Expression, n: Int, distinct: Boolean = false)
     extends UnaryExpression {

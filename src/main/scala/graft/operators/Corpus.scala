@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Scope, Tables}
+import graft.{Scope, Tables, Tokens}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,15 +30,12 @@ object Corpus {
     import s.implicits._
     Tables.documents(s, d).select(col("doc_id"), col("source"), col("text"))
       .as[(Long, String, String)]
-      .map { case (id, src, text0) =>
-        val text = if (text0 == null) "" else text0 // crash-free on null docs
+      .map { case (id, src, text) =>
         val counts = collection.mutable.HashMap.empty[String, Int]
         var nTok = 0L
-        text.split(" ").foreach { t =>
-          if (t.nonEmpty) {
-            nTok += 1
-            counts.update(t, counts.getOrElse(t, 0) + 1)
-          }
+        Tokens.Space(text).foreach { t =>
+          nTok += 1
+          counts.update(t, counts.getOrElse(t, 0) + 1)
         }
         val top = if (counts.isEmpty) 0L else counts.valuesIterator.max.toLong
         (id, src, nTok, counts.size.toLong, top)
@@ -79,8 +76,8 @@ object Corpus {
     import s.implicits._
     Tables.documents(s, d).select(col("doc_id"), col("text"))
       .as[(Long, String)]
-      .map { case (id, text0) =>
-        val toks = (if (text0 == null) "" else text0).split(" ").filter(_.nonEmpty)
+      .map { case (id, text) =>
+        val toks = Tokens.Space(text)
         def topFrac(n: Int): Double = {
           if (toks.length < n) 0.0
           else {
@@ -115,7 +112,7 @@ object Corpus {
   def q52TermScores(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val toks = docs.select(col("doc_id"), col("source"),
-      explode(filter(split(col("text"), " "), t => t =!= "")).as("tok"))
+      explode(Tokens.Space.col(col("text"))).as("tok"))
 
     // one tokenize+explode pass, pre-aggregated to per-(tok, doc)
     // counts and persisted: tf and df both derive from this compact
@@ -1025,7 +1022,7 @@ object Corpus {
   def q110SourceDrift(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("source"),
-        explode(filter(split(col("text"), " "), t => t =!= "")).as("tok"))
+        explode(Tokens.Space.col(col("text"))).as("tok"))
     val st = Scope.lru.persist(toks.groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("o"))) // feeds the vocab ranking AND the grid join; LRU lifetime
     val vocab = st.groupBy(col("tok")).agg(sum(col("o")).as("o_t"))
@@ -1084,7 +1081,7 @@ object Corpus {
   def q55HeavyHitters(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val toks = Tables.documents(s, d)
-      .select(explode(filter(split(col("text"), " "), t => t =!= "")).as("tok"))
+      .select(explode(Tokens.Space.col(col("text"))).as("tok"))
 
     val sketchBytes = toks
       .agg(count_min_sketch(col("tok"), lit(CmsEps), lit(0.99), lit(42)))
@@ -1238,8 +1235,7 @@ object Corpus {
   private[operators] def cmsFreqOf(s: SparkSession, docs: DataFrame,
       topK: Int): DataFrame = Scope.pinned { sc =>
     val toks = sc.persist(docs
-      .select(explode(filter(split(coalesce(col("text"), lit("")), " "),
-        t => t =!= "")).as("tok")))
+      .select(explode(Tokens.Space.colOrEmpty(col("text"))).as("tok")))
     val seeds = cmsSeedsDf(s) // the ONE seed-frame builder (q167 shares it)
 
     // the sketch: one corpus pass through the NATIVE CmsSketchAgg —
@@ -1283,8 +1279,7 @@ object Corpus {
     // — see cmsFreqOf); observed cells explode back out unchanged
     docs
       .select(col("source"),
-        explode(filter(split(coalesce(col("text"), lit("")), " "),
-          t => t =!= "")).as("tok"))
+        explode(Tokens.Space.colOrEmpty(col("text"))).as("tok"))
       .select(col("source"),
         conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long").as("x"))
       .groupBy(col("source"))
@@ -1348,8 +1343,7 @@ object Corpus {
       else {
         val cnt = docs
           .select(col("source"),
-            explode(filter(split(coalesce(col("text"), lit("")), " "),
-              t => t =!= "")).as("tok"))
+            explode(Tokens.Space.colOrEmpty(col("text"))).as("tok"))
           .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("n"))
         val exact = cnt.as("a").join(cnt.as("b"),
             col("a.tok") === col("b.tok") && col("a.source") < col("b.source"))
@@ -1478,7 +1472,7 @@ object Corpus {
   private[operators] def sourceTrigrams(docs: DataFrame): DataFrame =
     docs
       .select(col("source"),
-        filter(split(coalesce(col("text"), lit("")), " "), t => t =!= "").as("t"))
+        Tokens.Space.colOrEmpty(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("source"), explode(expr(
         "transform(sequence(0, size(t) - 3), i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"))
@@ -2181,8 +2175,7 @@ object Corpus {
   private[operators] def exactTokenInnerOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
     val cnt = sc.persist(docs
       .select(col("source"),
-        explode(filter(split(coalesce(col("text"), lit("")), " "),
-          t => t =!= "")).as("tok"))
+        explode(Tokens.Space.colOrEmpty(col("text"))).as("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("n")))
     val srcs = cnt.select(col("source")).distinct()
     val pairs = srcs.as("a").crossJoin(srcs.as("b"))
@@ -2354,8 +2347,7 @@ object Corpus {
   private[graft] def cmsRollupOf(s: SparkSession, docs: DataFrame): DataFrame = Scope.pinned { sc =>
     val tokCounts = sc.persist(docs
       .select(col("source"),
-        explode(filter(split(coalesce(col("text"), lit("")), " "),
-          t => t =!= "")).as("tok"))
+        explode(Tokens.Space.colOrEmpty(col("text"))).as("tok"))
       .groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("n")))
     tokCounts.count() // eager: the ONE corpus-linear pass

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Scope, Tables}
+import graft.{Scope, Tables, Tokens}
 import graft.streaming.UpsertSink
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
@@ -40,15 +40,10 @@ object Curation {
     */
   val BenchmarkMod = 97
 
-  private[graft] def tokenize(text0: String): Array[String] = {
-    val text = if (text0 == null) "" else text0 // crash-free on null docs
-    text.split(" ").filter(_.nonEmpty)
-  }
-
   /** Complete n-gram strings of `toks` (no partial tail windows).
-    * `private[graft]` with [[tokenize]]: the streaming ExactSubstr
-    * monitor (q211) and its pin spec must share the batch census's
-    * exact tokenization, not re-implement it.
+    * `private[graft]`: the streaming ExactSubstr monitor (q211) and its
+    * pin spec must share the batch census's exact windows over
+    * [[graft.Tokens.Space]], not re-implement them.
     */
   private[graft] def grams(toks: Array[String], n: Int): Iterator[String] =
     (0 to toks.length - n).iterator.map { i =>
@@ -141,7 +136,7 @@ object Curation {
       corpus
         .select(col("source"), col("text")).as[(String, String)]
         .map { case (src, text) =>
-          val contaminated = grams(tokenize(text), n).exists(bc.value.contains)
+          val contaminated = grams(Tokens.Space(text), n).exists(bc.value.contains)
           (src, if (contaminated) 1L else 0L)
         }
         .toDF("source", "contam")
@@ -212,7 +207,7 @@ object Curation {
     val s = docs.sparkSession
     import s.implicits._
     val vocab = docs
-      .select(explode(filter(split(col("text"), " "), t => t =!= "")).as("tok"))
+      .select(explode(Tokens.Space.col(col("text"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("tok").asc)
       .limit(vocabSize)
@@ -225,7 +220,7 @@ object Curation {
       .map { case (src, text) =>
         var nTok = 0L
         var nOov = 0L
-        tokenize(text).foreach { t =>
+        Tokens.Space(text).foreach { t =>
           nTok += 1
           if (!bc.value.contains(t)) nOov += 1
         }
@@ -270,7 +265,7 @@ object Curation {
     import s.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) =>
-        val toks = tokenize(text)
+        val toks = Tokens.Space(text)
         val n = toks.length.toLong
         val nChunks =
           if (n <= size) 1L
@@ -400,7 +395,7 @@ object Curation {
     // cached frame is two longs per document — negligible storage.
     val perDoc = sc.persist(docs
       .select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, text) => (id, tokenize(text).length.toLong) }
+      .map { case (id, text) => (id, Tokens.Space(text).length.toLong) }
       .toDF("doc_id", "n_tok"))
 
     // rangepartition + in-partition sort = globally ordered by doc_id
@@ -592,7 +587,7 @@ object Curation {
       }
       .toDF("doc_id", "n_covered")
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, t) => (id, tokenize(t).length.toLong) }
+      .map { case (id, t) => (id, Tokens.Space(t).length.toLong) }
       .toDF("doc_id", "n_tok")
       .join(covered, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tok"),
@@ -631,7 +626,7 @@ object Curation {
     val s = docs.sparkSession
     import s.implicits._
     val freqs = docs
-      .select(explode(filter(split(col("text"), " "), t => t =!= "")).as("tok"))
+      .select(explode(Tokens.Space.col(col("text"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("tok").asc)
       .limit(tableSize)
@@ -644,7 +639,7 @@ object Curation {
       .map { case (id, t) =>
         var n = 0L
         var sf = 0L
-        tokenize(t).foreach { tok =>
+        Tokens.Space(t).foreach { tok =>
           n += 1
           sf += bc.value.getOrElse(tok, 0L)
         }
@@ -679,7 +674,7 @@ object Curation {
     import s.implicits._
     docs.select(col("text")).as[String]
       .flatMap { t =>
-        val toks = tokenize(t)
+        val toks = Tokens.Space(t)
         (0 until toks.length - 1).iterator.map(i => toks(i) + " " + toks(i + 1))
       }
       .toDF("pair")
@@ -732,8 +727,8 @@ object Curation {
     require(merges >= 1)
     // materialize the dict; truncate corpus lineage
     val dict = Scope.lru.checkpoint(docs.select(col("text")).as[String]
-      .flatMap(t => t.split(" ").iterator
-        .filter(w => w.nonEmpty && w.forall(c => c >= 'a' && c <= 'z')))
+      .flatMap(t => Tokens.Space(t).iterator
+        .filter(w => w.forall(c => c >= 'a' && c <= 'z')))
       .toDF("w")
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .as[(String, Long)]
@@ -878,7 +873,7 @@ object Curation {
     val s = docs.sparkSession
     import s.implicits._
     val words = docs.select(col("text")).as[String]
-      .flatMap(t => t.split(" ").iterator.filter(_.nonEmpty))
+      .flatMap(t => Tokens.Space(t).iterator)
       .toDF("w")
       .groupBy(col("w")).agg(count(lit(1)).as("n_occ"))
     val clean = words
@@ -895,7 +890,7 @@ object Curation {
       size(split(trim(encoded), "  ")).cast("long").as("n_sym"))
 
     val docWords = docs.select(col("doc_id"),
-      explode(filter(split(col("text"), " "), x => x =!= "")).as("w"))
+      explode(Tokens.Space.col(col("text"))).as("w"))
     docWords
       .join(broadcast(dict), Seq("w"), "left")
       .groupBy(col("doc_id"))
@@ -946,13 +941,13 @@ object Curation {
     val s = docs.sparkSession
     import s.implicits._
     val toks = sc.persist(docs.select(col("text")).as[String]
-      .flatMap(t => tokenize(t).iterator)
+      .flatMap(t => Tokens.Space(t).iterator)
       .toDF("tok")) // two consumers: unigram marginals and the total count
     val uni = toks.groupBy(col("tok")).agg(count(lit(1)).as("c1"))
     val total = toks.count() // N — the one scalar action; reads the cache
     val pairs = docs.select(col("text")).as[String]
       .flatMap { t =>
-        val ts = tokenize(t)
+        val ts = Tokens.Space(t)
         (0 until ts.length - 1).iterator.map(i => (ts(i), ts(i + 1)))
       }
       .toDF("x", "y")
@@ -1064,13 +1059,10 @@ object Curation {
     val stop = TextOps.Stopwords.toSet
     val stats = docs.select(col("doc_id"), col("source"), col("text"))
       .as[(Long, String, String)]
-      .map { case (id, src, text0) =>
-        val text = if (text0 == null) "" else text0
+      .map { case (id, src, text) =>
         var nTok = 0L
         var nStop = 0L
-        text.split(" ").foreach { t =>
-          if (t.nonEmpty) { nTok += 1; if (stop(t)) nStop += 1 }
-        }
+        Tokens.Space(text).foreach { t => nTok += 1; if (stop(t)) nStop += 1 }
         (id, src, nTok, nStop)
       }
       .toDF("doc_id", "source", "n_tok", "n_stop")
@@ -1123,7 +1115,7 @@ object Curation {
           val text = if (text0 == null) "" else text0
           md.reset()
           val h = md.digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
-          (id, src, text.split(" ").count(_.nonEmpty).toLong, h)
+          (id, src, Tokens.Space(text).length.toLong, h)
         }
       }
       .toDF("doc_id", "source", "n_tok", "h")
@@ -1158,7 +1150,7 @@ object Curation {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("text"))
       .withColumn("n_tok",
-        size(filter(split(col("text"), " "), t => t =!= "")).cast("long"))
+        size(Tokens.Space.col(col("text"))).cast("long"))
 
     // stage 1: quality gate (Gopher-style length window)
     val gated = docs.filter(col("n_tok").between(10L, 80L))
@@ -1224,8 +1216,7 @@ object Curation {
     * only the gram order, never the enclosing module instance.
     */
   private[operators] def containGramSet(text: String, n: Int): Array[Long] = {
-    val toks = tokenize(
-      if (text == null) "" else text.toLowerCase(java.util.Locale.ROOT))
+    val toks = Tokens.SpaceLower(text)
     val arr = grams(toks, n).map(Dedup.gramHash64).toArray
     java.util.Arrays.sort(arr)
     if (arr.length < 2) arr
@@ -1450,7 +1441,7 @@ object Curation {
           val text = if (text0 == null) "" else text0
           md.reset()
           val h = md.digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
-          (id, text.split(" ").count(_.nonEmpty).toLong, h)
+          (id, Tokens.Space(text).length.toLong, h)
         }
       }
       .toDF("doc_id", "n_tok", "h")
@@ -1625,10 +1616,7 @@ object Curation {
     quantileNormalize(Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("text"))
       .as[(Long, String, String)]
-      .map { case (id, src, text0) =>
-        val text = if (text0 == null) "" else text0
-        (id, src, text.split(" ").count(_.nonEmpty).toLong)
-      }
+      .map { case (id, src, text) => (id, src, Tokens.Space(text).length.toLong) }
       .toDF("doc_id", "source", "n_tok"))
   }
 
@@ -1684,10 +1672,7 @@ object Curation {
     val rows = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("text"))
       .as[(Long, String, String)]
-      .map { case (id, src, text0) =>
-        val text = if (text0 == null) "" else text0
-        (id, src, text.split(" ").count(_.nonEmpty).toLong)
-      }
+      .map { case (id, src, text) => (id, src, Tokens.Space(text).length.toLong) }
       .toDF("doc_id", "source", "n_tok")
     rows
       .withColumn("bucket", ntile(CurriculumBuckets).over(
@@ -2043,8 +2028,7 @@ object Curation {
   private[graft] def mixturePlanOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
     val perSrc = docs
       .select(col("source"),
-        size(filter(split(coalesce(col("text"), lit("")), " "),
-          t => t =!= "")).cast("long").as("nt"))
+        size(Tokens.Space.colOrEmpty(col("text"))).cast("long").as("nt"))
       .groupBy(col("source"))
       .agg(sum(col("nt")).as("n_tokens"))
       // an all-empty source has weight 0 and no defined epoch budget
@@ -2742,7 +2726,7 @@ object Curation {
   private def exactSubstrWalk(t: String, cutStarts: Option[Seq[Int]])
       : (String, Long, Long, Long, Long) = {
     val L = ExactSubstrL
-    val toks = tokenize(t)
+    val toks = Tokens.Space(t)
     val covered = new Array[Boolean](toks.length)
     for (p <- cutStarts.getOrElse(Seq.empty);
          j <- math.max(p, 0) until math.min(p + L, toks.length))
@@ -3164,7 +3148,7 @@ object Curation {
     val docs = docs0
       .select(col("doc_id"), col("source"), col("text"))
       .withColumn("n_tok",
-        size(filter(split(col("text"), " "), t => t =!= "")).cast("long"))
+        size(Tokens.Space.col(col("text"))).cast("long"))
     // stage 1: quality gate (q68's Gopher-style length window, on the
     // RAW text — the plant is the rewrite's internal fixture)
     val gated = docs.filter(col("n_tok").between(10L, 80L))

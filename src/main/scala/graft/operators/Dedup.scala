@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Scope, Tables}
+import graft.{Scope, Tables, Tokens}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -128,7 +128,7 @@ object Dedup {
     * primitive array in place.
     */
   private[operators] def shingles(text: String, k: Int = 5): Array[Long] = {
-    val t = text.toLowerCase(java.util.Locale.ROOT)
+    val t = Tokens.fold(text)
     if (t.length < k) Array(windowHash(t, 0, t.length))
     else {
       val n = t.length - k + 1
@@ -216,7 +216,7 @@ object Dedup {
     import s.implicits._
     val docs = documents.select(col("doc_id"), col("text")).as[(Long, String)]
     val withSh = Scope.lru.persist(docs.map { case (id, text) =>
-      val sh = shingles(if (text == null) "" else text) // crash-free on null docs
+      val sh = shingles(text)
       (id, sh, minhashSignature(sh))
     }.toDF("doc_id", "sh", "sig"))
 
@@ -335,7 +335,7 @@ object Dedup {
 
     val bsig = sc.persist(benchmark.select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, t) =>
-        val sh = shingles(if (t == null) "" else t)
+        val sh = shingles(t)
         (id, sh, minhashSignature(sh))
       }.toDF("bench_id", "bsh", "bsig"))
     val bbands = bsig.select(col("bench_id"), col("bsig"))
@@ -360,7 +360,7 @@ object Dedup {
 
     val rsig = sc.persist(reps.as[(Long, String)]
       .map { case (id, t) =>
-        val sh = shingles(if (t == null) "" else t)
+        val sh = shingles(t)
         (id, sh, minhashSignature(sh))
       }.toDF("rep", "sh", "sig"))
     val rbands = rsig.select(col("rep"), col("sig"))
@@ -680,16 +680,13 @@ object Dedup {
     * trade [[gramHash64]] documents). Repeated tokens vote repeatedly —
     * the classic frequency-weighted formulation.
     */
-  private[graft] def simhash64(text0: String): Long = {
-    val text = if (text0 == null) "" else text0 // crash-free on null docs
+  private[graft] def simhash64(text: String): Long = {
     val counts = new Array[Int](64)
     // hash each DISTINCT token once and vote with its multiplicity —
     // identical to per-occurrence voting (votes are additive), but the
     // md5 cost drops by the repeated-token factor of natural text
     val tokCounts = new java.util.HashMap[String, Int]()
-    text.toLowerCase(java.util.Locale.ROOT).split("\\s+").foreach { tok =>
-      if (tok.nonEmpty) tokCounts.merge(tok, 1, Integer.sum _)
-    }
+    Tokens.WsLower(text).foreach(tok => tokCounts.merge(tok, 1, Integer.sum _))
     tokCounts.forEach { (tok, c) =>
       val h = gramHash64(tok)
       var b = 0
@@ -809,9 +806,8 @@ object Dedup {
     // the q88 plan as gramhashes in both Filter and Project); filtered
     // on the CACHED column it is one size() probe per materialized row
     val docGrams = Scope.lru.persist(docs.select(col("doc_id"),
-        graft.functions.GramHashes.of(
-          lower(coalesce(col("text"), lit(""))), 3,
-          distinct = true, sorted = true, wsSplit = true).as("grams")),
+        Tokens.WsLower.gramHashes(col("text"), 3,
+          distinct = true, sorted = true).as("grams")),
         StorageLevel.MEMORY_AND_DISK)
       .filter(size(col("grams")) > 0) // gram-free docs match nothing
 
@@ -899,7 +895,7 @@ object Dedup {
     * token-boundary extension sorts before char-glued extensions,
     * making the successor check's boundary test complete, not just
     * sound. Callers with untrusted whitespace should pre-normalize
-    * (`concat_ws(" ", filter(split(text, " "), _ =!= ""))`).
+    * (`concat_ws(" ", Tokens.Space.col(text))`).
     *
     * Scale shape: distinct texts bucket by the md5 of their first
     * [[MinPrefixTokens]] tokens (any prefix pair shares that key, so
@@ -912,7 +908,7 @@ object Dedup {
       documents: DataFrame, minPrefixTokens: Int = MinPrefixTokens): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(minPrefixTokens >= 1)
-    val toks = filter(split(col("text"), " "), x => x =!= "")
+    val toks = Tokens.Space.col(col("text"))
     val dt = documents.select(col("text")).distinct()
       .withColumn("t", toks)
       .filter(size(col("t")) >= minPrefixTokens)
@@ -951,7 +947,7 @@ object Dedup {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("source"), col("text"))
     val shift = docs.agg((max(col("doc_id")) + 1L).as("shift"))
     val planted = docs.filter(col("doc_id") % 13 === 0)
-      .withColumn("t", filter(split(col("text"), " "), x => x =!= ""))
+      .withColumn("t", Tokens.Space.col(col("text")))
       .crossJoin(broadcast(shift))
       .select((col("doc_id") + col("shift")).as("doc_id"), lit("planted").as("source"),
         concat_ws(" ", slice(col("t"), lit(1), expr("size(t) div 2"))).as("text"))
@@ -1036,9 +1032,8 @@ object Dedup {
     // unpersist in).
     val docGrams = Scope.lru.persist(Tables.documents(s, d)
       .select(col("doc_id"),
-        graft.functions.GramHashes.of(
-          lower(coalesce(col("text"), lit(""))), 3,
-          distinct = true, wsSplit = true).as("grams")),
+        Tokens.WsLower.gramHashes(col("text"), 3,
+          distinct = true, sorted = false).as("grams")),
       StorageLevel.MEMORY_AND_DISK)
 
     // drop ubiquitous grams (document frequency > MaxGramDf): per-doc

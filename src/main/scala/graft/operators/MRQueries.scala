@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Tables, Tokens}
 import graft.mr.{KSV, KV, MapReduce1, Emit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,8 +16,7 @@ object MRQueries {
     */
   private object WordCount extends MapReduce1[String, String, Int, Long] {
     def mapper(line: String): IterableOnce[Emit[String, Int, Long]] =
-      line.toLowerCase(java.util.Locale.ROOT).replaceAll("[^a-z0-9]+", " ").split(" ")
-        .iterator.filter(_.nonEmpty).map(w => KV(w, 1L))
+      Tokens.Alnum(line).iterator.map(w => KV(w, 1L))
     def reducer(key: String, values: Seq[Long]): Emit[String, Int, Long] =
       KV(key, values.sum)
     override def keyPreserving: Boolean = true

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Scope, Tables}
+import graft.{Scope, Tables, Tokens}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -350,7 +350,7 @@ object Relational {
     */
   def q14WordCount(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(explode(split(regexp_replace(lower(col("text")), "[^a-z0-9]+", " "), " ")).as("word"))
+      .select(explode(Tokens.Alnum.pieces(col("text"))).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))
@@ -1343,7 +1343,7 @@ object Relational {
   def q138MadOutliers(s: SparkSession, d: String): DataFrame =
     madOutliers(
       Tables.documents(s, d).select(col("source"), col("doc_id"),
-        size(filter(split(col("text"), " "), x => x =!= "")).cast("long").as("n_tok")),
+        size(Tokens.Space.col(col("text"))).cast("long").as("n_tok")),
       "source", "n_tok", k = 1.5)
       .select(col("source"), col("doc_id"), col("n_tok"),
         col("med"), col("mad"), col("z"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Scope, Tables}
+import graft.{Scope, Tables, Tokens}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -73,12 +73,6 @@ object Scoring {
     e.cast("long") * 2 + half
   }
 
-  /** The corpus tokenizer (q14/q77 convention), crash-free on nulls. */
-  private def tokenize(text0: String): Array[String] = {
-    val text = if (text0 == null) "" else text0
-    text.split(" ").filter(_.nonEmpty)
-  }
-
   private def bigrams(toks: Array[String]): Iterator[(String, String)] =
     (0 until toks.length - 1).iterator.map(i => (toks(i), toks(i + 1)))
 
@@ -112,17 +106,17 @@ object Scoring {
     // vocabulary count V (an action) and the scoring join — and without
     // the cache each would re-tokenize the training half
     val uni = Scope.lru.persist(train.select(col("text")).as[String]
-      .flatMap(t => tokenize(t).iterator).toDF("tok")
+      .flatMap(t => Tokens.Space(t).iterator).toDF("tok")
       .groupBy(col("tok")).agg(count(lit(1)).as("cx")))
     val vocabV = uni.count() // the one driver scalar: vocabulary-sized
     val bi = train.select(col("text")).as[String]
-      .flatMap(t => bigrams(tokenize(t))).toDF("x", "y")
+      .flatMap(t => bigrams(Tokens.Space(t))).toDF("x", "y")
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("cxy"))
     // held-out bigrams pre-aggregated to (doc, x, y, tf) map-side so the
     // model joins see distinct bigrams per doc, not the token stream
     val ep = docs.filter(!isTrain)
       .select(col("doc_id"), col("source"), col("text")).as[(Long, String, String)]
-      .flatMap { case (id, src, t) => bigrams(tokenize(t)).map(p => (id, src, p._1, p._2)) }
+      .flatMap { case (id, src, t) => bigrams(Tokens.Space(t)).map(p => (id, src, p._1, p._2)) }
       .toDF("doc_id", "source", "x", "y")
       .groupBy(col("doc_id"), col("source"), col("x"), col("y"))
       .agg(count(lit(1)).as("tf"))
@@ -170,7 +164,7 @@ object Scoring {
     // (class, token) counts persist for the same two-consumer reason as
     // lmScore's uni: V needs an action, the scoring join needs the rows
     val clsTok = Scope.lru.persist(train.select(col(labelCol), col("text")).as[(String, String)]
-      .flatMap { case (c, t) => tokenize(t).iterator.map(tok => (c, tok)) }
+      .flatMap { case (c, t) => Tokens.Space(t).iterator.map(tok => (c, tok)) }
       .toDF("cls", "tok")
       .groupBy(col("cls"), col("tok")).agg(count(lit(1)).as("ctc")))
     val vocabV = clsTok.select(col("tok")).distinct().count()
@@ -187,7 +181,7 @@ object Scoring {
       .select(col("doc_id"), col(labelCol).as("truth"))
     val terms = docs.filter(!isTrain)
       .select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, t) => tokenize(t).iterator.map(tok => (id, tok)) }
+      .flatMap { case (id, t) => Tokens.Space(t).iterator.map(tok => (id, tok)) }
       .toDF("doc_id", "tok")
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     // per-class token surprisal: the compact (doc, tok, tf) frame fanned

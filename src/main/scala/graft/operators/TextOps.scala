@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Scope, Tables}
+import graft.{Scope, Tables, Tokens}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
 object TextOps {
 
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and")
-
-  private def tokens(c: Column): Column =
-    filter(split(c, " "), x => x =!= "")
 
   /** Per-language corpus quality profile: token/stopword/punctuation
     * statistics, exact integer sums then double ratios.
@@ -34,11 +31,9 @@ object TextOps {
         val text = if (text0 == null) "" else text0 // crash-free on null docs
         var nTok = 0L
         var nStop = 0L
-        text.split(" ").foreach { t =>
-          if (t.nonEmpty) {
-            nTok += 1
-            if (stop(t)) nStop += 1
-          }
+        Tokens.Space(text).foreach { t =>
+          nTok += 1
+          if (stop(t)) nStop += 1
         }
         var nPunct = 0L
         var i = 0
@@ -102,18 +97,13 @@ object TextOps {
     // oracle's confusion matrix).
     val profiles = LangProfiles.map { case (l, ws) => (l, ws.toSet) }.toArray
     Tables.documents(s, d).select(col("lang"), col("text")).as[(String, String)]
-      .map { case (lang, text0) =>
-        val text = if (text0 == null) "" else text0 // crash-free on null docs
+      .map { case (lang, text) =>
         val scores = new Array[Long](profiles.length)
-        // Locale.ROOT: String.toLowerCase is locale-sensitive (Turkish
-        // dotless-i would diverge from the oracle's SQL lower())
-        text.toLowerCase(java.util.Locale.ROOT).split(" ").foreach { t =>
-          if (t.nonEmpty) {
-            var i = 0
-            while (i < profiles.length) {
-              if (profiles(i)._2.contains(t)) scores(i) += 1
-              i += 1
-            }
+        Tokens.SpaceLower(text).foreach { t =>
+          var i = 0
+          while (i < profiles.length) {
+            if (profiles(i)._2.contains(t)) scores(i) += 1
+            i += 1
           }
         }
         var best = 0L
@@ -144,7 +134,7 @@ object TextOps {
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
     docs.join(survivors, "doc_id")
-      .select(col("source"), size(tokens(col("text"))).cast("long").as("n_tok"))
+      .select(col("source"), size(Tokens.Space.col(col("text"))).cast("long").as("n_tok"))
       .filter(col("n_tok") >= 40)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("sum_tokens"))
@@ -215,7 +205,7 @@ object TextOps {
     */
   def q74LengthProfile(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(col("source"), size(tokens(col("text"))).cast("long").as("n_tok"))
+      .select(col("source"), size(Tokens.Space.col(col("text"))).cast("long").as("n_tok"))
       .groupBy(col("source"))
       .agg(
         count(lit(1)).as("n_docs"),
@@ -268,10 +258,8 @@ object TextOps {
     import s.implicits._
     val pos = Tables.documents(s, d)
       .select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text0) =>
-        val text = if (text0 == null) "" else text0
-        text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
-          .iterator.zipWithIndex.map { case (t, i) => (t, id, i + 1L) }
+      .flatMap { case (id, text) =>
+        Tokens.WsLower(text).iterator.zipWithIndex.map { case (t, i) => (t, id, i + 1L) }
       }.toDF("tok", "doc_id", "pos")
     // consumed twice below (stats + head), tiny rows
     val perDoc = Scope.lru.persist(pos.groupBy(col("tok"), col("doc_id"))
@@ -411,7 +399,7 @@ object TextOps {
     // `sum(tf) over (partition by doc_id)` window paid a full-corpus
     // sort per index build (the sf10 canary's dominant stage)
     val tf = Scope.lru.persist(docs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), Tokens.Space.col(col("text")).as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
         explode(col("toks")).as("tok"))
       .groupBy(col("tok"), col("doc_id"), col("dl")).agg(count(lit(1)).as("tf")))
@@ -421,7 +409,7 @@ object TextOps {
     val qterms = docs.filter(probeFilter)
       .select(col("doc_id").as("query_id"),
         explode(array_distinct(
-          slice(tokens(col("text")), 1, Bm25QueryTerms))).as("tok"))
+          slice(Tokens.Space.col(col("text")), 1, Bm25QueryTerms))).as("tok"))
 
     // document frequency only for the QUERY terms: semi-join the (tok,
     // doc) frame down to them first, so the df aggregate shuffles ~40
@@ -589,15 +577,13 @@ object TextOps {
     */
   def q144SourceGramOverlap(s: SparkSession, d: String): DataFrame = Scope.pinned { sc =>
     import s.implicits._
-    // single-space split (wsSplit = false), the q126/q145 corpus
-    // convention and the oracle's string_split(…, ' ') — NOT \s+, so
-    // engine/oracle parity survives a corpus with tabs/newlines; the
-    // native kernel replaces the corpus-scale typed flatMap's encoder
-    // barrier (GramHashesSpec pins value-equality)
+    // Tokens.SpaceLower, the oracle's string_split(lower(…), ' ') — NOT
+    // \s+, so engine/oracle parity survives a corpus with
+    // tabs/newlines; the native kernel replaces the corpus-scale typed
+    // flatMap's encoder barrier (GramHashesSpec pins value-equality)
     val sg = sc.persist(Tables.documents(s, d)
       .select(col("source"),
-        explode(graft.functions.GramHashes.of(
-          lower(coalesce(col("text"), lit(""))), 3)).as("gram"))
+        explode(Tokens.SpaceLower.gramHashes(col("text"), 3)).as("gram"))
       .distinct()) // sizes + both self-join sides read this one exchange
     val sizes = sg.groupBy(col("source")).agg(count(lit(1)).as("n"))
     val shared = sg.as("a").join(sg.as("b"),

@@ -1773,12 +1773,12 @@ object EventStream {
         .flatMap { doc =>
           if (doc.doc_id < 0L) Iterator.single((doc.ts, " wm"))
           else {
-            // the BATCH census's own tokenize/grams — the oracle
+            // the BATCH census's own tokens/grams — the oracle
             // equality depends on the stream window rule staying
             // byte-identical to exactSubstrWinRows, so it is shared,
             // not re-implemented
             graft.operators.Curation.grams(
-                graft.operators.Curation.tokenize(doc.text), L)
+                graft.Tokens.Space(doc.text), L)
               .toSet.iterator.map((w: String) => (doc.ts, w))
           }
         }

@@ -78,6 +78,39 @@ class SurfaceSpec extends AnyFunSuite {
       "rule sketch-kernel: typed Aggregators outside BottomK and CounterMerge")
   }
 
+  test("rule token-model: corpus text is split and case-folded only in " +
+    "graft.Tokens") {
+    // a split on " " or "\\s+", an oracle string_split or
+    // regexp_split_to_array, a toLowerCase( or a 0x20 byte test outside
+    // Tokens.scala is a hand-rolled tokenizer, unless it is one of the
+    // few splits below that do not read document text
+    val raw = ("""split\(.*"( |\\\\s\+)"|string_split\(|regexp_split_to_array\(|""" +
+      """toLowerCase\(|[=!]=\s*0x20\b""").r
+    val allowed = Seq(
+      // BPE: symbol sequences are joined by two spaces, merge pairs by one
+      ("graft/operators/Curation.scala", """val Array(a, b) = bp.split(" ")"""),
+      ("graft/operators/Curation.scala", """val Array(a, b) = pair.split(" ")"""),
+      ("graft/SparkEntry.scala", "string_split(trim(seq), '  ')"),
+      // MakeScale's generator salts token positions, empties kept
+      ("graft/MakeScale.scala", """text.split(" ", -1)"""),
+      // the UpsertSink manifest header is space-separated fields
+      ("graft/streaming/UpsertSink.scala", """split(" ", -1)"""),
+      // Bench reads the first field of /proc/loadavg
+      ("graft/Bench.scala", """split("\\s+")(0)"""))
+    val hits = for {
+      (file, text) <- sources if file != "graft/Tokens.scala"
+      line <- text.linesIterator.toSeq
+      code = line.split("//", 2)(0)
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      if raw.findFirstIn(code).isDefined
+    } yield file -> line.trim
+    val stray = hits.filterNot { case (f, l) => allowed.exists { case (af, frag) => af == f && l.contains(frag) } }
+    assert(stray.isEmpty,
+      s"rule token-model: tokenization outside graft.Tokens:\n${stray.mkString("\n")}")
+    val unused = allowed.filterNot { case (af, frag) => hits.exists { case (f, l) => af == f && l.contains(frag) } }
+    assert(unused.isEmpty, s"rule token-model: stale allow-list entries $unused")
+  }
+
   test("rule session-config: SparkSession.builder appears only in " +
     "GraftSession, in src/main and src/test") {
     // one builder, so every entry point and every spec runs under the

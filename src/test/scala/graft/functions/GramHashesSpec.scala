@@ -5,7 +5,7 @@ import graft.operators.{Curation, Dedup}
 import org.apache.spark.sql.functions._
 
 /** `gram_hashes` must be value-identical to the Scala-side
-  * `grams(tokenize(t), n).map(gramHash64)` path it replaces in the
+  * `grams(Tokens.Space(t), n).map(gramHash64)` path it replaces in the
   * similarity family's document profiles — same tokens, same joins,
   * same md5-prefix identity (the oracle's substr(md5(g), 1, 16)), and
   * the exact `.distinct` / `.distinct.sorted` shapes.
@@ -20,7 +20,7 @@ class GramHashesSpec extends SparkSpec {
       .as[Seq[Long]].head()
 
   private def viaIter(t: String, n: Int): Seq[Long] =
-    Curation.grams(Curation.tokenize(t), n).map(Dedup.gramHash64).toSeq
+    Curation.grams(graft.Tokens.Space(t), n).map(Dedup.gramHash64).toSeq
 
   private val adversarial = Seq(
     "a b c d e",

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * distinct windows — distinct keys, up to a ~2⁻¹²² two-seed
   * collision), because the rewrite's census, join and keep-first
   * tiebreak all run on the key. Tokenization must be byte-identical to
-  * `Curation.tokenize` (split on single spaces, drop empties) or the
+  * `Tokens.Space` (split on single spaces, drop empties) or the
   * two key modes would disagree about which windows even exist.
   */
 class TokenWindowKeysSpec extends SparkSpec {
@@ -29,7 +29,7 @@ class TokenWindowKeysSpec extends SparkSpec {
 
   private def gramsOf(text: String, l: Int = L): Seq[String] =
     graft.operators.Curation.grams(
-      graft.operators.Curation.tokenize(text), l).toSeq
+      graft.Tokens.Space(text), l).toSeq
 
   test("keys partition positions EXACTLY like window strings on random corpora " +
     "(small vocabulary forces heavy genuine repetition)") {

@@ -5,7 +5,7 @@ import graft.operators.Curation
 import org.apache.spark.sql.functions._
 
 /** `token_windows` must be byte-identical to the Scala-side
-  * `grams(tokenize(t), n)` iterator it replaces in the corpus-scale
+  * `grams(Tokens.Space(t), n)` iterator it replaces in the corpus-scale
   * window streams — same tokens (split on single spaces, empties
   * dropped), same single-space joins, no partial tail windows, and in
   * distinct mode per-document first-occurrence distinctness.
@@ -19,7 +19,7 @@ class TokenWindowsSpec extends SparkSpec {
       .as[Seq[String]].head()
 
   private def viaIter(t: String, n: Int): Seq[String] =
-    Curation.grams(Curation.tokenize(t), n).toSeq
+    Curation.grams(graft.Tokens.Space(t), n).toSeq
 
   private val adversarial = Seq(
     "a b c d e",

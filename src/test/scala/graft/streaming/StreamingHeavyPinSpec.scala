@@ -146,7 +146,7 @@ class StreamingHeavyPinSpec extends SparkSpec {
       .as[(Long, String)]
       .flatMap { case (w, t) =>
         graft.operators.Curation.grams(
-            graft.operators.Curation.tokenize(t), L)
+            graft.Tokens.Space(t), L)
           .toSet.iterator.map((win: String) => (w, win))
       }
       .distinct().count()

@@ -3529,7 +3529,7 @@ object SparkEntry {
       s"""WITH toks AS (
         |  SELECT unnest(${Tokens.Space.sqlOrEmpty("text")}) AS tok
         |  FROM documents),
-        |seeds(j, a, b, c) AS (SELECT * FROM (VALUES ${graft.operators.Corpus.cmsSeedValuesSql}) v),
+        |seeds(j, a, b, c) AS (SELECT * FROM (VALUES ${graft.functions.CmsSketchAgg.seedValuesSql}) v),
         |keyed AS (
         |  SELECT tok, CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS x FROM toks),
         |cells AS (
@@ -3580,9 +3580,9 @@ object SparkEntry {
         |SELECT a.source, ex.n_distinct_exact,
         |  CAST(512 - a.n_hit AS BIGINT) AS v_empty,
         |  CAST(a.s_hit + (512 - a.n_hit) * 4503599627370496 AS BIGINT) AS s_reg,
-        |  CAST('${graft.operators.Corpus.HllAlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
+        |  CAST('${graft.functions.HllRegistersAgg.AlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
         |    CAST(a.s_hit + (512 - a.n_hit) * 4503599627370496 AS DOUBLE)) AS est_raw,
-        |  (CAST('${graft.operators.Corpus.HllAlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
+        |  (CAST('${graft.functions.HllRegistersAgg.AlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
         |    CAST(a.s_hit + (512 - a.n_hit) * 4503599627370496 AS DOUBLE)) <= 1280.0
         |   AND 512 - a.n_hit > 0) AS small_range
         |FROM agg a JOIN ex ON ex.source = a.source
@@ -3648,9 +3648,9 @@ object SparkEntry {
         |SELECT a.win_start_us, ex.n_distinct_exact,
         |  CAST(512 - a.n_hit AS BIGINT) AS v_empty,
         |  CAST(a.s_hit + (512 - a.n_hit) * 4503599627370496 AS BIGINT) AS s_reg,
-        |  CAST('${graft.operators.Corpus.HllAlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
+        |  CAST('${graft.functions.HllRegistersAgg.AlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
         |    CAST(a.s_hit + (512 - a.n_hit) * 4503599627370496 AS DOUBLE)) AS est_raw,
-        |  (CAST('${graft.operators.Corpus.HllAlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
+        |  (CAST('${graft.functions.HllRegistersAgg.AlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
         |    CAST(a.s_hit + (512 - a.n_hit) * 4503599627370496 AS DOUBLE)) <= 1280.0
         |   AND 512 - a.n_hit > 0) AS small_range
         |FROM agg a JOIN ex ON ex.win_start_us = a.win_start_us
@@ -3660,7 +3660,7 @@ object SparkEntry {
     // merge algebra under a full hash-match; inclusion-exclusion is
     // one replayable double expression
     "q162_hll_overlap" -> {
-      val alpha = s"CAST('${graft.operators.Corpus.HllAlphaMM}' AS DOUBLE)"
+      val alpha = s"CAST('${graft.functions.HllRegistersAgg.AlphaMM}' AS DOUBLE)"
       def readout(from: String, keys: String) =
         s"""SELECT $keys, $alpha * (CAST(4503599627370496 AS DOUBLE) /
            |    CAST(s_hit + (512 - n_hit) * 4503599627370496 AS DOUBLE)) AS est_raw
@@ -3709,7 +3709,7 @@ object SparkEntry {
       s"""WITH toks AS (
         |  SELECT source, unnest(${Tokens.Space.sqlOrEmpty("text")}) AS tok
         |  FROM documents),
-        |seeds(j, a, b, c) AS (SELECT * FROM (VALUES ${graft.operators.Corpus.cmsSeedValuesSql}) v),
+        |seeds(j, a, b, c) AS (SELECT * FROM (VALUES ${graft.functions.CmsSketchAgg.seedValuesSql}) v),
         |keyed AS (
         |  SELECT source, CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS x FROM toks),
         |cells AS (
@@ -3812,7 +3812,7 @@ object SparkEntry {
         |    - CAST(epoch_us(ts) AS BIGINT) % 600000000 AS win_start_us,
         |    user_id
         |  FROM events),
-        |seeds(j, a, b, c) AS (SELECT * FROM (VALUES ${graft.operators.Corpus.cmsSeedValuesSql}) v),
+        |seeds(j, a, b, c) AS (SELECT * FROM (VALUES ${graft.functions.CmsSketchAgg.seedValuesSql}) v),
         |keyed AS (
         |  SELECT win_start_us, user_id,
         |    CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS x
@@ -3984,9 +3984,9 @@ object SparkEntry {
         |SELECT c.column_name, c.n_rows, c.n_nulls,
         |  CAST(512 - a.n_hit AS BIGINT) AS v_empty,
         |  CAST(a.s_hit + (512 - a.n_hit) * 4503599627370496 AS BIGINT) AS s_reg,
-        |  CAST('${graft.operators.Corpus.HllAlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
+        |  CAST('${graft.functions.HllRegistersAgg.AlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
         |    CAST(a.s_hit + (512 - a.n_hit) * 4503599627370496 AS DOUBLE)) AS est_raw,
-        |  (CAST('${graft.operators.Corpus.HllAlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
+        |  (CAST('${graft.functions.HllRegistersAgg.AlphaMM}' AS DOUBLE) * (CAST(4503599627370496 AS DOUBLE) /
         |    CAST(a.s_hit + (512 - a.n_hit) * 4503599627370496 AS DOUBLE)) <= 1280.0
         |   AND 512 - a.n_hit > 0) AS small_range
         |FROM c JOIN a USING (column_name)
@@ -4038,13 +4038,13 @@ object SparkEntry {
         |  SELECT source, x, ROW_NUMBER() OVER (PARTITION BY source ORDER BY x) AS rn FROM k),
         |sk AS (
         |  SELECT source, COUNT(*) AS n_kmv, MAX(x) AS kth_min
-        |  FROM r WHERE rn <= ${graft.operators.Corpus.KmvK} GROUP BY 1),
+        |  FROM r WHERE rn <= ${graft.functions.KmvSketchAgg.K} GROUP BY 1),
         |ex AS (SELECT source, COUNT(DISTINCT g) AS n_distinct_exact FROM g GROUP BY 1)
         |SELECT sk.source, ex.n_distinct_exact,
         |  CAST(sk.n_kmv AS BIGINT) AS n_kmv, sk.kth_min,
-        |  CAST(CASE WHEN sk.n_kmv < ${graft.operators.Corpus.KmvK} THEN sk.n_kmv
-        |    ELSE (${graft.operators.Corpus.KmvK - 1} *
-        |          CAST(${graft.operators.Corpus.KmvDomain} AS HUGEINT)) // sk.kth_min
+        |  CAST(CASE WHEN sk.n_kmv < ${graft.functions.KmvSketchAgg.K} THEN sk.n_kmv
+        |    ELSE (${graft.functions.KmvSketchAgg.K - 1} *
+        |          CAST(${graft.functions.KmvSketchAgg.Domain} AS HUGEINT)) // sk.kth_min
         |    END AS BIGINT) AS est_distinct
         |FROM sk JOIN ex ON ex.source = sk.source
         |ORDER BY sk.source""".stripMargin,
@@ -4063,7 +4063,7 @@ object SparkEntry {
         |  SELECT DISTINCT source, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) AS x FROM g),
         |r AS (
         |  SELECT source, x, ROW_NUMBER() OVER (PARTITION BY source ORDER BY x) AS rn FROM k),
-        |sk AS (SELECT source, x FROM r WHERE rn <= ${graft.operators.Corpus.KmvK}),
+        |sk AS (SELECT source, x FROM r WHERE rn <= ${graft.functions.KmvSketchAgg.K}),
         |srcs AS (SELECT DISTINCT source FROM k),
         |pairs AS (
         |  SELECT a.source AS src_a, b.source AS src_b
@@ -4081,7 +4081,7 @@ object SparkEntry {
         |est AS (
         |  SELECT src_a, src_b, COUNT(*) AS n_merged,
         |    CAST(SUM(ia * ib) AS BIGINT) AS n_both
-        |  FROM m WHERE rn <= ${graft.operators.Corpus.KmvK} GROUP BY 1, 2)
+        |  FROM m WHERE rn <= ${graft.functions.KmvSketchAgg.K} GROUP BY 1, 2)
         |SELECT src_a, src_b, n_merged, n_both,
         |  CAST(n_both AS DOUBLE) / CAST(n_merged AS DOUBLE) AS est_jaccard
         |FROM est
@@ -4151,15 +4151,15 @@ object SparkEntry {
         |  FROM k),
         |sk AS (
         |  SELECT win_start_us, COUNT(*) AS n_kmv, MAX(x) AS kth_min
-        |  FROM r WHERE rn <= ${graft.operators.Corpus.KmvK} GROUP BY 1),
+        |  FROM r WHERE rn <= ${graft.functions.KmvSketchAgg.K} GROUP BY 1),
         |ex AS (
         |  SELECT win_start_us, COUNT(DISTINCT user_id) AS n_distinct_exact
         |  FROM e GROUP BY 1)
         |SELECT sk.win_start_us, ex.n_distinct_exact,
         |  CAST(sk.n_kmv AS BIGINT) AS n_kmv, sk.kth_min,
-        |  CAST(CASE WHEN sk.n_kmv < ${graft.operators.Corpus.KmvK} THEN sk.n_kmv
-        |    ELSE (${graft.operators.Corpus.KmvK - 1} *
-        |          CAST(${graft.operators.Corpus.KmvDomain} AS HUGEINT)) // sk.kth_min
+        |  CAST(CASE WHEN sk.n_kmv < ${graft.functions.KmvSketchAgg.K} THEN sk.n_kmv
+        |    ELSE (${graft.functions.KmvSketchAgg.K - 1} *
+        |          CAST(${graft.functions.KmvSketchAgg.Domain} AS HUGEINT)) // sk.kth_min
         |    END AS BIGINT) AS est_distinct
         |FROM sk JOIN ex ON ex.win_start_us = sk.win_start_us
         |ORDER BY sk.win_start_us""".stripMargin,
@@ -4442,7 +4442,7 @@ object SparkEntry {
         |  SELECT DISTINCT source, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) AS x FROM g),
         |r AS (
         |  SELECT source, x, ROW_NUMBER() OVER (PARTITION BY source ORDER BY x) AS rn FROM k),
-        |sk AS (SELECT source, x FROM r WHERE rn <= ${graft.operators.Corpus.KmvK}),
+        |sk AS (SELECT source, x FROM r WHERE rn <= ${graft.functions.KmvSketchAgg.K}),
         |srcs AS (SELECT DISTINCT source FROM k),
         |pairs AS (
         |  SELECT a.source AS src_a, b.source AS src_b
@@ -4462,13 +4462,13 @@ object SparkEntry {
         |    CAST(SUM(ia * (1 - ib)) AS BIGINT) AS n_anotb,
         |    CAST(SUM(ib * (1 - ia)) AS BIGINT) AS n_bnota,
         |    MAX(x) AS kth
-        |  FROM m WHERE rn <= ${graft.operators.Corpus.KmvK} GROUP BY 1, 2),
+        |  FROM m WHERE rn <= ${graft.functions.KmvSketchAgg.K} GROUP BY 1, 2),
         |est AS (
         |  SELECT src_a, src_b, n_merged, n_anotb, n_bnota,
-        |    CASE WHEN n_merged < ${graft.operators.Corpus.KmvK}
+        |    CASE WHEN n_merged < ${graft.functions.KmvSketchAgg.K}
         |         THEN CAST(n_merged AS HUGEINT)
-        |         ELSE (${graft.operators.Corpus.KmvK - 1} *
-        |               CAST(${graft.operators.Corpus.KmvDomain} AS HUGEINT)) // kth
+        |         ELSE (${graft.functions.KmvSketchAgg.K - 1} *
+        |               CAST(${graft.functions.KmvSketchAgg.Domain} AS HUGEINT)) // kth
         |    END AS est_u
         |  FROM agg)
         |SELECT src_a, src_b, CAST(n_merged AS BIGINT) AS n_merged,
@@ -4538,7 +4538,7 @@ object SparkEntry {
     // HLL rollup (q190): one register build re-maxed at two grains
     // through GROUPING SETS; q162's raw read-out per level
     "q190_hll_rollup" -> {
-      val alpha = s"CAST('${graft.operators.Corpus.HllAlphaMM}' AS DOUBLE)"
+      val alpha = s"CAST('${graft.functions.HllRegistersAgg.AlphaMM}' AS DOUBLE)"
       s"""WITH t AS (
         |  SELECT source, ${Tokens.Space.sqlOrEmpty("text")} AS t
         |  FROM documents),
@@ -4611,15 +4611,15 @@ object SparkEntry {
         |  FROM k),
         |sk AS (
         |  SELECT win_start_us, COUNT(*) AS n_kmv, MAX(x) AS kth_min
-        |  FROM r WHERE rn <= ${graft.operators.Corpus.KmvK} GROUP BY 1),
+        |  FROM r WHERE rn <= ${graft.functions.KmvSketchAgg.K} GROUP BY 1),
         |ex AS (
         |  SELECT win_start_us, COUNT(DISTINCT user_id) AS n_distinct_exact
         |  FROM e GROUP BY 1)
         |SELECT sk.win_start_us, ex.n_distinct_exact,
         |  CAST(sk.n_kmv AS BIGINT) AS n_kmv, sk.kth_min,
-        |  CAST(CASE WHEN sk.n_kmv < ${graft.operators.Corpus.KmvK} THEN sk.n_kmv
-        |    ELSE (${graft.operators.Corpus.KmvK - 1} *
-        |          CAST(${graft.operators.Corpus.KmvDomain} AS HUGEINT)) // sk.kth_min
+        |  CAST(CASE WHEN sk.n_kmv < ${graft.functions.KmvSketchAgg.K} THEN sk.n_kmv
+        |    ELSE (${graft.functions.KmvSketchAgg.K - 1} *
+        |          CAST(${graft.functions.KmvSketchAgg.Domain} AS HUGEINT)) // sk.kth_min
         |    END AS BIGINT) AS est_distinct
         |FROM sk JOIN ex ON ex.win_start_us = sk.win_start_us
         |ORDER BY sk.win_start_us""".stripMargin,
@@ -4642,7 +4642,7 @@ object SparkEntry {
         |  SELECT event_type, v,
         |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY v) AS rv,
         |    COUNT(*) OVER (PARTITION BY event_type) AS ns
-        |  FROM r WHERE rh <= ${graft.operators.Corpus.SampleK}),
+        |  FROM r WHERE rh <= ${graft.functions.SamplePairsAgg.K}),
         |n AS (SELECT event_type, COUNT(*) AS n_events FROM e GROUP BY 1)
         |SELECT n.event_type, n.n_events,
         |  CAST(MAX(t.ns) AS BIGINT) AS n_sample,
@@ -4669,7 +4669,7 @@ object SparkEntry {
         |  SELECT win_start_us, v,
         |    ROW_NUMBER() OVER (PARTITION BY win_start_us ORDER BY v) AS rv,
         |    COUNT(*) OVER (PARTITION BY win_start_us) AS ns
-        |  FROM r WHERE rh <= ${graft.operators.Corpus.SampleK}),
+        |  FROM r WHERE rh <= ${graft.functions.SamplePairsAgg.K}),
         |n AS (SELECT win_start_us, COUNT(*) AS n_events FROM e GROUP BY 1)
         |SELECT n.win_start_us, n.n_events,
         |  CAST(MAX(t.ns) AS BIGINT) AS n_sample,
@@ -4715,7 +4715,7 @@ object SparkEntry {
         |  SELECT source, v,
         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY v) AS rv,
         |    COUNT(*) OVER (PARTITION BY source) AS ns
-        |  FROM r1 WHERE rh <= ${graft.operators.Corpus.SampleK}),
+        |  FROM r1 WHERE rh <= ${graft.functions.SamplePairsAgg.K}),
         |n1 AS (SELECT source, COUNT(*) AS n_docs FROM e GROUP BY 1),
         |q1 AS (
         |  SELECT CAST(0 AS BIGINT) AS lvl, n1.source, n1.n_docs,
@@ -4727,7 +4727,7 @@ object SparkEntry {
         |r2 AS (SELECT v, ROW_NUMBER() OVER (ORDER BY h) AS rh FROM g),
         |t2 AS (
         |  SELECT v, ROW_NUMBER() OVER (ORDER BY v) AS rv, COUNT(*) OVER () AS ns
-        |  FROM r2 WHERE rh <= ${graft.operators.Corpus.SampleK}),
+        |  FROM r2 WHERE rh <= ${graft.functions.SamplePairsAgg.K}),
         |n2 AS (SELECT COUNT(*) AS n_docs FROM e),
         |q2 AS (
         |  SELECT CAST(1 AS BIGINT) AS lvl, '<all>' AS source, n2.n_docs,
@@ -4755,7 +4755,7 @@ object SparkEntry {
         |  SELECT event_type, v,
         |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY v) AS rv,
         |    COUNT(*) OVER (PARTITION BY event_type) AS ns
-        |  FROM r1 WHERE rh <= ${graft.operators.Corpus.SampleK}),
+        |  FROM r1 WHERE rh <= ${graft.functions.SamplePairsAgg.K}),
         |med AS (
         |  SELECT event_type, MAX(CASE WHEN rv = (ns * 50 + 99) // 100 THEN v END) AS med_fx
         |  FROM t1 GROUP BY 1),
@@ -4771,7 +4771,7 @@ object SparkEntry {
         |  SELECT event_type, dev,
         |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY dev) AS rv,
         |    COUNT(*) OVER (PARTITION BY event_type) AS ns
-        |  FROM r2 WHERE rh <= ${graft.operators.Corpus.SampleK}),
+        |  FROM r2 WHERE rh <= ${graft.functions.SamplePairsAgg.K}),
         |mad AS (
         |  SELECT event_type, MAX(CASE WHEN rv = (ns * 50 + 99) // 100 THEN dev END) AS mad_fx
         |  FROM t2 GROUP BY 1)
@@ -4801,7 +4801,7 @@ object SparkEntry {
         |  SELECT win_start_us, v,
         |    ROW_NUMBER() OVER (PARTITION BY win_start_us ORDER BY v) AS rv,
         |    COUNT(*) OVER (PARTITION BY win_start_us) AS ns
-        |  FROM r WHERE rh <= ${graft.operators.Corpus.SampleK}),
+        |  FROM r WHERE rh <= ${graft.functions.SamplePairsAgg.K}),
         |n AS (SELECT win_start_us, COUNT(*) AS n_events FROM e GROUP BY 1)
         |SELECT n.win_start_us, n.n_events,
         |  CAST(MAX(t.ns) AS BIGINT) AS n_sample,
@@ -4818,7 +4818,7 @@ object SparkEntry {
         |  SELECT source,
         |    unnest(${Tokens.Space.sqlOrEmpty("text")}) AS tok
         |  FROM documents),
-        |seeds(j, a, b, c) AS (SELECT * FROM (VALUES ${graft.operators.Corpus.cmsSeedValuesSql}) v),
+        |seeds(j, a, b, c) AS (SELECT * FROM (VALUES ${graft.functions.CmsSketchAgg.seedValuesSql}) v),
         |keyed AS (
         |  SELECT source, tok, CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS x
         |  FROM toks),
@@ -4880,13 +4880,13 @@ object SparkEntry {
         |  FROM k),
         |sk AS (
         |  SELECT event_type, COUNT(*) AS n_kmv, MAX(x) AS kth_min
-        |  FROM r WHERE rn <= ${graft.operators.Corpus.KmvK} GROUP BY 1),
+        |  FROM r WHERE rn <= ${graft.functions.KmvSketchAgg.K} GROUP BY 1),
         |ex AS (SELECT event_type, COUNT(*) AS n_distinct_exact FROM k GROUP BY 1)
         |SELECT sk.event_type, ex.n_distinct_exact,
         |  CAST(sk.n_kmv AS BIGINT) AS n_kmv, sk.kth_min,
-        |  CAST(CASE WHEN sk.n_kmv < ${graft.operators.Corpus.KmvK} THEN sk.n_kmv
-        |    ELSE (${graft.operators.Corpus.KmvK - 1} *
-        |          CAST(${graft.operators.Corpus.KmvDomain} AS HUGEINT)) // sk.kth_min
+        |  CAST(CASE WHEN sk.n_kmv < ${graft.functions.KmvSketchAgg.K} THEN sk.n_kmv
+        |    ELSE (${graft.functions.KmvSketchAgg.K - 1} *
+        |          CAST(${graft.functions.KmvSketchAgg.Domain} AS HUGEINT)) // sk.kth_min
         |    END AS BIGINT) AS est_distinct
         |FROM sk JOIN ex ON ex.event_type = sk.event_type
         |ORDER BY sk.event_type""".stripMargin,

@@ -250,34 +250,16 @@ case class TokenWindowKeys(child: Expression, l: Int,
 }
 
 object FingerprintFunctions {
-  /** Registers the engine's native expressions (`rolling_fingerprint`,
-    * `min_window_fingerprint`, `fixed_dot`) for `expr(...)`/SQL use in
-    * the given session (idempotent; GraftExtensions does the same at
-    * session build time).
+  /** Registers the engine's native SQL functions
+    * ([[graft.GraftExtensions.functions]]) in the given session. The
+    * entries are the extension's own instances, so on a session built
+    * with `GraftExtensions` this re-registers equal entries: a no-op
+    * that logs no "replaced a previously registered function".
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "rolling_fingerprint", es => RollingFingerprint(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "min_window_fingerprint", es => MinWindowFingerprint(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "fixed_dot", es => FixedPointDot(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "fixed_quantize", es => FixedPointQuantize(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "bloom_might_contain", es => BloomMightContain(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "luhn_valid", es => LuhnValid(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_intersect_count", es => SortedIntersectCount(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "token_window_keys", TokenWindowKeys.sqlBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "png_dims", es => PngDims(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "jpeg_dims", es => JpegDims(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "pgm_stats", es => PgmStats(es.head), "built-in")
+    graft.GraftExtensions.functions.foreach { case (name, info, builder) =>
+      reg.registerFunction(name, info, builder)
+    }
   }
 }

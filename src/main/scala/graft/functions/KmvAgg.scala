@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.functions.{element_at, lit, size, when}
 import org.apache.spark.sql.graftshim.GraftColumns
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -78,8 +79,40 @@ case class KmvSketchAgg(
     copy(child = newChild)
 }
 
+/** The KMV owner: sketch size, key domain and the distinct estimate
+  * every KMV query reads out (q172, q175, q186, q193, q200).
+  */
 object KmvSketchAgg {
+  /** Sketch size: stderr of the distinct estimate ~ 1/sqrt(k-2) = 13%. */
+  val K: Int = 64
+
+  /** Key domain: the 60-bit md5 key, H = 2^60. */
+  val Domain: Long = 1L << 60
+
   /** Column form: KMV sketch of `key` (a 60-bit long hash key). */
-  def sketch(key: Column, k: Int): Column =
+  def sketch(key: Column, k: Int = K): Column =
     KmvSketchAgg(GraftColumns.exprOf(key), k).toColumn
+
+  /** Distinct estimate of a sketch holding `n` keys, the largest
+    * `kth`: below [[K]] keys the sketch IS the distinct set, so the
+    * estimate is `n` exactly; otherwise (K−1)·H / kth, floored in exact
+    * DECIMAL integer division (the oracle's HUGEINT `//`).
+    */
+  def estimate(n: Column, kth: Column): Column =
+    when(n < lit(K.toLong), n)
+      .otherwise(intDiv(lit(BigDecimal(K - 1) * BigDecimal(Domain)), kth))
+
+  /** The union-scaled size of `part` of a merged sketch's `n` members:
+    * floor(part · [[estimate]] / n) — the theta-sketch A-not-B
+    * read-out (q186), exact below [[K]] union keys.
+    */
+  def share(part: Column, n: Column, kth: Column): Column =
+    intDiv(part.cast("decimal(38,0)") * estimate(n, kth), n)
+
+  /** `(n_kmv, kth_min, est_distinct)` of a sketch column. */
+  def readout(sk: Column): Seq[Column] = {
+    val n = size(sk).cast("long")
+    val kth = element_at(sk, -1)
+    Seq(n.as("n_kmv"), kth.as("kth_min"), estimate(n, kth).as("est_distinct"))
+  }
 }

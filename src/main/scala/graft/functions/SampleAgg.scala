@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.functions.{array_sort, element_at, filter, lit, size}
 import org.apache.spark.sql.graftshim.GraftColumns
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -107,12 +108,21 @@ case class SamplePairsAgg(
     copy(left = newLeft, right = newRight)
 }
 
+/** The pair-sample owner: sample size and the percentile-disc
+  * read-out every quantile query picks with (q195, q197, q199, q203,
+  * q204; the histogram's edges rank the same way).
+  */
 object SamplePairsAgg {
+  /** Sample size: quantile rank stderr ~ sqrt(q(1-q)/k) — ±3.1% rank
+    * error at the median, ±0.6% at p99.
+    */
+  val K: Int = 256
+
   /** Column form: bottom-k (hash, value) pair sample, interleaved
     * `[h, v, ...]` sorted by hash. `hash` must be a uniform BIGINT
     * fingerprint of a unique row id (the `hllKey` convention).
     */
-  def sketch(hash: Column, value: Column, k: Int): Column =
+  def sketch(hash: Column, value: Column, k: Int = K): Column =
     SamplePairsAgg(GraftColumns.exprOf(hash), GraftColumns.exprOf(value), k).toColumn
 
   /** The quantile read-out both engines share: with the sample's
@@ -121,4 +131,18 @@ object SamplePairsAgg {
     * pure integer arithmetic, so engine and DuckDB agree bit-for-bit.
     */
   def rankOf(n: Int, qnum: Int): Int = (n * qnum + 99) / 100
+
+  /** [[rankOf]] over a BIGINT count Column. */
+  def rank(n: Column, qnum: Int): Column = intDiv(n * lit(qnum) + lit(99), lit(100))
+
+  /** The value at quantile `qnum/100` of a `pairs` sample column. */
+  def quantile(pairs: Column, qnum: Int): Column = {
+    val vals = array_sort(filter(pairs, (_, i) => i % 2 === 1))
+    element_at(vals, rank(size(vals).cast("long"), qnum).cast("int"))
+  }
+
+  /** `n_sample` and the p50/p90/p99 picks, named `p<q>_<suffix>`. */
+  def readout(pairs: Column, suffix: String): Seq[Column] =
+    intDiv(size(pairs), lit(2)).as("n_sample") +:
+      Seq(50, 90, 99).map(q => quantile(pairs, q).as(s"p${q}_$suffix"))
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Scope, Tables, Tokens}
+import graft.functions.{CmsSketchAgg, HllRegistersAgg, KmvSketchAgg, SamplePairsAgg}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -259,8 +260,10 @@ object Corpus {
     * still fires for DERIVED bounded graphs (q123's record-linkage
     * match graph scales with the dirty BATCH, not the corpus) and
     * correctly yields to the distributed loop for corpus-scale ones.
-    * Each gated operator takes a `localMax` (0 disables the local
-    * path; specs pass it explicitly).
+    * Each gated operator's `*Local` solve takes the budget (0
+    * disables the local path; GraphLocalSpec passes it explicitly);
+    * the operators themselves use this one, except
+    * `connectedComponents`, whose `localMax` GraphLocalSpec sets.
     */
   private[graft] val GraphLocalMaxRows: Long = 4L << 20
 
@@ -495,9 +498,8 @@ object Corpus {
 
   def pageRank(
       nodes: DataFrame, edges: DataFrame,
-      iterations: Int = PageRankIterations,
-      localMax: Long = GraphLocalMaxRows): DataFrame =
-    pageRankLocal(nodes, edges, iterations, localMax)
+      iterations: Int = PageRankIterations): DataFrame =
+    pageRankLocal(nodes, edges, iterations, GraphLocalMaxRows)
       .getOrElse(pageRankDistributed(nodes, edges, iterations))
 
   private[graft] def pageRankDistributed(
@@ -632,9 +634,8 @@ object Corpus {
         .toDF("l_partkey", "in_degree", "auth_fp")
     }
 
-  def hits(edges: DataFrame, iterations: Int = HitsIterations,
-      localMax: Long = GraphLocalMaxRows): DataFrame =
-    hitsLocal(edges, iterations, localMax)
+  def hits(edges: DataFrame, iterations: Int = HitsIterations): DataFrame =
+    hitsLocal(edges, iterations, GraphLocalMaxRows)
       .getOrElse(hitsDistributed(edges, iterations))
 
   private[graft] def hitsDistributed(
@@ -768,9 +769,8 @@ object Corpus {
     * @return `(v, core_degree)` for nodes surviving `rounds` peels,
     *         with degree in the surviving induced subgraph.
     */
-  def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
-      localMax: Long = GraphLocalMaxRows): DataFrame =
-    kCoreLocal(edges, k, rounds, toFixpoint = false, localMax)
+  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    kCoreLocal(edges, k, rounds, toFixpoint = false, GraphLocalMaxRows)
       .getOrElse(kCoreLoop(edges, k, rounds, toFixpoint = false))
 
   /** Fixpoint k-core: [[kCorePeel]]'s loop run to convergence (alive
@@ -782,9 +782,8 @@ object Corpus {
     * for cache-lifetime reasons doubles as the convergence test at no
     * extra cost.
     */
-  def kCoreFull(edges: DataFrame, k: Int, maxRounds: Int = 1000,
-      localMax: Long = GraphLocalMaxRows): DataFrame =
-    kCoreLocal(edges, k, maxRounds, toFixpoint = true, localMax)
+  def kCoreFull(edges: DataFrame, k: Int, maxRounds: Int = 1000): DataFrame =
+    kCoreLocal(edges, k, maxRounds, toFixpoint = true, GraphLocalMaxRows)
       .getOrElse(kCoreLoop(edges, k, maxRounds, toFixpoint = true))
 
   /** Driver-local k-core — [[kCoreLoop]]'s per-round dynamics replayed
@@ -1097,116 +1096,6 @@ object Corpus {
       .limit(10)
   }
 
-  /** Depth (hash rows) and width (buckets per row) of the REPLAYABLE
-    * count-min sketch (q158) — q55's structure, but with a published
-    * hash family instead of Spark's internal murmur seeds, so the
-    * DuckDB oracle rebuilds every cell and estimate exactly.
-    */
-  val CmsReplayDepth = 4
-  val CmsReplayWidth = 512
-
-  /** Field prime for the replayable CMS hash rows (2^31 - 1). */
-  val CmsReplayP = 2147483647L
-
-  /** Half-split mask/shift of the 60-bit md5 key: the row hash is
-    * h_j(x) = (a_j·hi(x) + b_j·lo(x) + c_j) mod p with hi/lo the two
-    * 30-bit halves — every product stays under 2^61, so plain BIGINT
-    * arithmetic replays it with no 128-bit detour on either engine.
-    */
-  val CmsReplayHalfBits = 30
-
-  private[operators] val cmsA = new Array[Long](CmsReplayDepth)
-  private[operators] val cmsB = new Array[Long](CmsReplayDepth)
-  private[operators] val cmsC = new Array[Long](CmsReplayDepth)
-  locally {
-    // the Dedup.permA discipline: fixed-seed LCG reduced into the field,
-    // published to the oracle via cmsSeedValuesSql
-    var state = 4242L
-    def next(): Long = {
-      state = state * 6364136223846793005L + 1442695040888963407L
-      state
-    }
-    var j = 0
-    while (j < CmsReplayDepth) {
-      cmsA(j) = java.lang.Long.remainderUnsigned(next(), CmsReplayP - 1) + 1
-      cmsB(j) = java.lang.Long.remainderUnsigned(next(), CmsReplayP - 1) + 1
-      cmsC(j) = java.lang.Long.remainderUnsigned(next(), CmsReplayP)
-      j += 1
-    }
-  }
-
-  /** The `(j, bkt)` cells a given key's probe touches — the plain-
-    * Scala mirror of `cmsBucketOf(cmsKey(...))`, byte-for-byte (md5 of
-    * the decimal string, first 15 hex chars, the half-split row hash).
-    * Lets a replay harness pre-compute a probe slate's cell set from
-    * the seeds alone, without reading data (q167 filters its sink to
-    * these).
-    */
-  private[graft] def cmsProbePairs(key: Long): Seq[(Long, Long)] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(key.toString.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    val x = java.lang.Long.parseLong(hex.substring(0, 15), 16)
-    val hi = x >>> CmsReplayHalfBits
-    val lo = x & ((1L << CmsReplayHalfBits) - 1)
-    cmsA.indices.map { j =>
-      (j.toLong, (cmsA(j) * hi + cmsB(j) * lo + cmsC(j)) % CmsReplayP % CmsReplayWidth)
-    }
-  }
-
-  /** Seed arrays for cross-package sketch builders (defensive copies —
-    * [[graft.functions.CmsSketchAgg]] carries them as constructor
-    * state).
-    */
-  private[graft] def cmsSeedsA: Array[Long] = cmsA.clone()
-  private[graft] def cmsSeedsB: Array[Long] = cmsB.clone()
-  private[graft] def cmsSeedsC: Array[Long] = cmsC.clone()
-
-  /** The q158 oracle's literal `(j, a, b, c)` VALUES rows — generated
-    * from the arrays above so engine and oracle can never drift.
-    */
-  private[graft] def cmsSeedValuesSql: String =
-    cmsA.indices.map(j => s"(${j}, ${cmsA(j)}, ${cmsB(j)}, ${cmsC(j)})")
-      .mkString(", ")
-
-  /** The seed rows as a broadcastable frame (shared with the streaming
-    * CMS build, q167).
-    */
-  private[graft] def cmsSeedsDf(s: SparkSession): DataFrame =
-    s.createDataFrame(
-      cmsA.indices.map(j => (j.toLong, cmsA(j), cmsB(j), cmsC(j))))
-      .toDF("j", "a", "b", "c")
-
-  /** The 60-bit md5 key of any string column (q158 convention). */
-  private[graft] def cmsKey(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
-  /** [[cmsBucketFromKey]] for cross-package callers (q167). */
-  private[graft] def cmsBucketOf(x: org.apache.spark.sql.Column,
-      a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-      c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    cmsBucketFromKey(x, a, b, c)
-
-  /** CMS row hash from a PRE-COMPUTED 60-bit key `x` — the key rides a
-    * column so the md5 is evaluated ONCE per token, not once per
-    * (token, seed) pair after the depth-way seed join (md5 dominates
-    * the bucket arithmetic; recomputing it 4x was measurable).
-    */
-  private def cmsBucketFromKey(x: org.apache.spark.sql.Column,
-      a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-      c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val hi = shiftright(x, CmsReplayHalfBits)
-    val lo = x.bitwiseAND(lit((1L << CmsReplayHalfBits) - 1))
-    ((a * hi + b * lo + c) % lit(CmsReplayP)) % lit(CmsReplayWidth.toLong)
-  }
-
-  /** The 60-bit md5-prefix token key (15 hex chars — nonnegative in a
-    * signed BIGINT on both engines), split-hashed into a CMS row.
-    */
-  private def cmsBucket(tok: org.apache.spark.sql.Column, a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column, c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    cmsBucketFromKey(conv(substring(md5(tok), 1, 15), 16, 10).cast("long"), a, b, c)
-
   /** Replayable count-min frequency estimation (q158): q55's sketched
     * heavy hitters re-seated on a PUBLISHED hash family so the driver
     * hash-matches every estimate instead of a rows-only check —
@@ -1236,7 +1125,6 @@ object Corpus {
       topK: Int): DataFrame = Scope.pinned { sc =>
     val toks = sc.persist(docs
       .select(explode(Tokens.Space.colOrEmpty(col("text"))).as("tok")))
-    val seeds = cmsSeedsDf(s) // the ONE seed-frame builder (q167 shares it)
 
     // the sketch: one corpus pass through the NATIVE CmsSketchAgg —
     // each token updates depth array slots in a single 16 KB partial
@@ -1244,26 +1132,15 @@ object Corpus {
     // the depth seed rows first: a 4x row amplification the aggregate
     // removes); observed cells explode back out, so the downstream
     // probe join and the oracle hash are unchanged
-    val cells = toks
-      .select(conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long").as("x"))
-      .agg(graft.functions.CmsSketchAgg.sketch(col("x")).as("cells"))
-      .select(posexplode(col("cells")).as(Seq("pos", "cell_cnt")))
-      .filter(col("cell_cnt") > 0)
-      .select(expr(s"CAST(pos div $CmsReplayWidth AS BIGINT)").as("j"),
-        expr(s"CAST(pos % $CmsReplayWidth AS BIGINT)").as("bkt"),
-        col("cell_cnt"))
+    val cells = CmsSketchAgg.cellRows(
+      toks.agg(CmsSketchAgg.sketch(hllKey(col("tok"))).as("cells")), Nil, col("cells"))
 
     val probes = toks.groupBy(col("tok")).agg(count(lit(1)).as("exact_cnt"))
       .orderBy(col("exact_cnt").desc, col("tok")).limit(topK)
 
     // probe-side lookup: 10 tokens x depth rows join the 2048-cell
     // sketch — estimate = min over the token's cells
-    probes.crossJoin(broadcast(seeds))
-      .select(col("tok"), col("exact_cnt"), col("j"),
-        cmsBucket(col("tok"), col("a"), col("b"), col("c")).as("bkt"))
-      .join(cells, Seq("j", "bkt"))
-      .groupBy(col("tok"), col("exact_cnt"))
-      .agg(min(col("cell_cnt")).as("est_cnt"))
+    CmsSketchAgg.estimate(probes, hllKey(col("tok")), cells, Nil)
       .select(col("tok"), col("exact_cnt"), col("est_cnt"),
         (col("est_cnt") - col("exact_cnt")).as("over_err"))
       .orderBy(col("exact_cnt").desc, col("tok"))
@@ -1274,22 +1151,15 @@ object Corpus {
     * across sources (the CMS algebra: cells are a linear map of the
     * frequency vector, so sketches add, subtract, and inner-product).
     */
-  private[operators] def cmsSourceCells(s: SparkSession, docs: DataFrame): DataFrame =
+  private[operators] def cmsSourceCells(docs: DataFrame): DataFrame =
     // native per-source grids (no seed crossJoin, no 4x amplification
     // — see cmsFreqOf); observed cells explode back out unchanged
-    docs
+    CmsSketchAgg.cellRows(docs
       .select(col("source"),
         explode(Tokens.Space.colOrEmpty(col("text"))).as("tok"))
-      .select(col("source"),
-        conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long").as("x"))
       .groupBy(col("source"))
-      .agg(graft.functions.CmsSketchAgg.sketch(col("x")).as("cells"))
-      .select(col("source"), posexplode(col("cells")).as(Seq("pos", "c")))
-      .filter(col("c") > 0)
-      .select(col("source"),
-        expr(s"CAST(pos div $CmsReplayWidth AS BIGINT)").as("j"),
-        expr(s"CAST(pos % $CmsReplayWidth AS BIGINT)").as("bkt"),
-        col("c"))
+      .agg(CmsSketchAgg.sketch(hllKey(col("tok"))).as("cells")),
+      Seq("source"), col("cells"))
 
   /** Cross-source frequency inner product from CMS cells (q163):
     * Σ_t f_A(t)·f_B(t) estimated as min_j Σ_w cellsA[j,w]·cellsB[j,w]
@@ -1320,7 +1190,7 @@ object Corpus {
   private[operators] def cmsInnerOf(
       s: SparkSession, docs: DataFrame,
       exactRider: Boolean = false): DataFrame = Scope.pinned { sc =>
-    val cells = sc.persist(cmsSourceCells(s, docs))
+    val cells = sc.persist(cmsSourceCells(docs))
     val ip = cells.as("a").join(cells.as("b"),
         col("a.j") === col("b.j") && col("a.bkt") === col("b.bkt")
           && col("a.source") < col("b.source"))
@@ -1336,7 +1206,7 @@ object Corpus {
       // is 0 (which also implies the exact inner product is 0: any
       // truly shared token populates a shared cell in EVERY row)
       .select(col("src_a"), col("src_b"),
-        when(col("nj") < lit(CmsReplayDepth.toLong), lit(0L))
+        when(col("nj") < lit(CmsSketchAgg.Depth.toLong), lit(0L))
           .otherwise(col("mn")).as("ip_est"))
     val joined =
       if (!exactRider) ip.select(col("src_a"), col("src_b"), col("ip_est"))
@@ -1359,31 +1229,6 @@ object Corpus {
       .orderBy(col("src_a"), col("src_b"))
   }
 
-  /** Register-index bits / register count of the replayable HLL (q159). */
-  val HllBits = 9
-  val HllM = 512
-
-  /** Rho ceiling: the 60-bit md5 key spends [[HllBits]] on the register
-    * index, leaving 51 suffix bits — an all-zero suffix counts as
-    * rho = 52 (the "reached the end" convention).
-    */
-  val HllMaxRho = 52
-
-  /** alpha_m · m² for m = 512 (Flajolet et al. '07 §4's bias constant),
-    * evaluated HERE once and pasted into the oracle as a literal —
-    * Scala's shortest-round-trip double printing re-parses to the same
-    * bits in DuckDB, so both engines scale by the identical double.
-    */
-  val HllAlphaMM: Double = 0.7213 / (1.0 + 1.079 / 512.0) * 512.0 * 512.0
-
-  /** 2^52 — the register-sum radix: a register value r contributes
-    * 2^(52 − r), so the classic Σ 2^(−M_j) becomes the EXACT integer
-    * Σ 2^(52 − M_j) (≤ 512·2^52 < 2^62) and the only floating step
-    * left is one final scale-and-divide. Double-summing 2^(−M_j)
-    * directly would need >53 mantissa bits and go order-dependent.
-    */
-  val HllRadix = 4503599627370496L
-
   /** Replayable HyperLogLog distinct-trigram estimation per source
     * (q159): [[q158CmsFreq]]'s program applied to the CARDINALITY
     * sketch — q37/q113's `approx_count_distinct` surface re-seated on
@@ -1402,51 +1247,19 @@ object Corpus {
     * deliberately NOT in the matched output: Java's and DuckDB's ln
     * disagree by 1 ulp on 2 of the 512 possible inputs (measured), so
     * the oracle pins `small_range` (the branch predicate) and
-    * [[hllCorrected]] + HllReplaySpec pin the corrected estimator
+    * `HllRegistersAgg.corrected` + HllReplaySpec pin the corrected estimator
     * engine-side.
     */
   def q159HllDistinct(s: SparkSession, d: String): DataFrame =
     hllDistinctOf(Tables.documents(s, d))
 
-  /** [[q159HllDistinct]] over any `(source, text)` frame. */
   /** The published 60-bit md5 key of any string column (the q158/q159
     * convention): nonnegative in a signed BIGINT on both engines.
     */
   private[graft] def hllKey(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Register index: top [[HllBits]] bits of the 60-bit key. */
-  private[graft] def hllBucket(x: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    shiftright(x, 60 - HllBits)
-
-  /** rho of the 51-bit suffix: 52 − bitlength (all-zero suffix = 52). */
-  private[graft] def hllRho(x: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val suffix = x.bitwiseAND(lit((1L << (60 - HllBits)) - 1))
-    when(suffix === 0, lit(HllMaxRho))
-      .otherwise(lit(HllMaxRho) - length(conv(suffix, 10, 2)))
-      .cast("long")
-  }
-
-  /** Fold a register frame `(groupCols..., bkt, r)` to the q159 output
-    * columns (v_empty, s_reg, est_raw, small_range) — shared by the
-    * batch (q159) and streaming (q161) sketch builds.
-    */
-  private[graft] def hllReadout(regs: DataFrame, groupCols: Seq[String]): DataFrame = {
-    val gs = groupCols.map(col)
-    regs.groupBy(gs: _*)
-      .agg(count(lit(1)).as("n_hit"),
-        // shiftleft's Scala binding takes only a literal shift — the
-        // SQL form accepts a column
-        sum(expr(s"shiftleft(CAST(1 AS BIGINT), CAST($HllMaxRho - r AS INT))"))
-          .as("s_hit"))
-      .withColumn("v_empty", lit(HllM.toLong) - col("n_hit"))
-      .withColumn("s_reg", col("s_hit") + col("v_empty") * lit(HllRadix))
-      .withColumn("est_raw",
-        lit(HllAlphaMM) * (lit(HllRadix.toDouble) / col("s_reg").cast("double")))
-      .withColumn("small_range",
-        col("est_raw") <= lit(2.5 * HllM) && col("v_empty") > 0)
-  }
-
+  /** [[q159HllDistinct]] over any `(source, text)` frame. */
   private[operators] def hllDistinctOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
     // ONE tokenize+explode pass (sourceTrigrams — the q162/q172/q190
     // family's shared gram rule, not a re-implementation that could
@@ -1459,7 +1272,7 @@ object Corpus {
     val regs = registersOfGrams(grams)
     val exact = grams.groupBy(col("source"))
       .agg(countDistinct(col("g")).as("n_distinct_exact"))
-    hllReadout(regs, Seq("source")).join(exact, "source")
+    HllRegistersAgg.readout(regs, Seq("source")).join(exact, "source")
       .select(col("source"), col("n_distinct_exact"), col("v_empty"),
         col("s_reg"), col("est_raw"), col("small_range"))
       .orderBy(col("source"))
@@ -1486,18 +1299,14 @@ object Corpus {
     registersOfGrams(sourceTrigrams(docs))
 
   /** Registers from an already-exploded `(source, g)` frame — built by
-    * the native [[graft.functions.HllRegistersAgg]] (one 4 KB array
+    * the native [[HllRegistersAgg]] (one 4 KB array
     * partial per (partition, source) instead of up to 512 grouped
     * rows), observed registers exploded back out unchanged.
     */
   private[operators] def registersOfGrams(grams: DataFrame): DataFrame =
-    grams
-      .select(col("source"), hllKey(col("g")).as("x"))
-      .groupBy(col("source"))
-      .agg(graft.functions.HllRegistersAgg.registers(col("x")).as("regs"))
-      .select(col("source"), posexplode(col("regs")).as(Seq("pos", "r")))
-      .filter(col("r") > 0)
-      .select(col("source"), col("pos").cast("long").as("bkt"), col("r"))
+    HllRegistersAgg.cellRows(grams.groupBy(col("source"))
+      .agg(HllRegistersAgg.registers(hllKey(col("g"))).as("regs")),
+      Seq("source"), col("regs"))
 
   /** Cross-source distinct-trigram overlap from HLL register UNIONS
     * (q162): for every unordered source pair, |A∪B| is estimated from
@@ -1533,7 +1342,7 @@ object Corpus {
     val grams0 = sourceTrigrams(docs)
     val grams = if (exactRider) sc.persist(grams0) else grams0
     val regs = sc.persist(registersOfGrams(grams))
-    val per = hllReadout(regs, Seq("source"))
+    val per = HllRegistersAgg.readout(regs, Seq("source"))
       .select(col("source"), col("est_raw"))
     val srcs = regs.select(col("source")).distinct()
     val pairs = srcs.select(col("source").as("src_a"))
@@ -1547,7 +1356,7 @@ object Corpus {
         .select(col("src_a"), col("src_b"), col("bkt"), col("r")))
     val unionRegs = tagged.groupBy(col("src_a"), col("src_b"), col("bkt"))
       .agg(max(col("r")).as("r"))
-    val estU = hllReadout(unionRegs, Seq("src_a", "src_b"))
+    val estU = HllRegistersAgg.readout(unionRegs, Seq("src_a", "src_b"))
       .select(col("src_a"), col("src_b"), col("est_raw").as("est_union"))
     val base = estU
       .join(per.select(col("source").as("src_a"), col("est_raw").as("est_a")), "src_a")
@@ -1571,17 +1380,6 @@ object Corpus {
     joined
       .select(col("src_a") +: col("src_b") +: cols: _*)
       .orderBy(col("src_a"), col("src_b"))
-  }
-
-  /** The full HLL estimator including the ln-based linear-counting
-    * correction (Flajolet et al. '07 §4) — the production read-out of
-    * the q159 register state. Engine-side only (ln is not bit-portable
-    * cross-engine); HllReplaySpec pins its accuracy.
-    */
-  private[graft] def hllCorrected(sReg: Long, vEmpty: Long): Double = {
-    val raw = HllAlphaMM * (HllRadix.toDouble / sReg.toDouble)
-    if (raw <= 2.5 * HllM && vEmpty > 0) HllM * math.log(HllM.toDouble / vEmpty)
-    else raw
   }
 
   /** Synchronous label propagation (Raghavan et al. '07): every node
@@ -1610,9 +1408,8 @@ object Corpus {
     * @param edges symmetric `(src, dst)`, no self-loops.
     * @return `(v, lbl)` after exactly `rounds` synchronous updates.
     */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-      localMax: Long = GraphLocalMaxRows): DataFrame =
-    lpaLocal(edges, rounds, localMax)
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame =
+    lpaLocal(edges, rounds, GraphLocalMaxRows)
       .getOrElse(lpaDistributed(edges, rounds))
 
   /** Driver-local synchronous LPA — [[lpaDistributed]]'s per-round
@@ -1726,9 +1523,8 @@ object Corpus {
     * @return `(v, hop)` for every node within maxHops of a seed
     *         (seeds at hop 0).
     */
-  def bfsHops(seeds: DataFrame, edges: DataFrame, maxHops: Int,
-      localMax: Long = GraphLocalMaxRows): DataFrame =
-    bfsLocal(seeds, edges, maxHops, localMax)
+  def bfsHops(seeds: DataFrame, edges: DataFrame, maxHops: Int): DataFrame =
+    bfsLocal(seeds, edges, maxHops, GraphLocalMaxRows)
       .getOrElse(bfsDistributed(seeds, edges, maxHops))
 
   /** Driver-local BFS — [[bfsDistributed]]'s frontier rounds over a
@@ -1882,12 +1678,6 @@ object Corpus {
   // (Bar-Yossef et al. '02; Beyer et al. '07). All arithmetic is
   // integer, so engine and oracle hash-match bit-for-bit.
 
-  /** Sketch size: stderr of the distinct estimate ~ 1/sqrt(k-2) = 13%. */
-  val KmvK: Int = 64
-
-  /** Key domain: [[hllKey]] is 60 bits, H = 2^60. */
-  val KmvDomain: Long = 1L << 60
-
   /** Per-`source` KMV sketches of a raw `(source, x: Long)` key frame
     * (duplicates welcome — the aggregator dedupes in its O(k)
     * partials; never `distinct()` a corpus-sized frame first).
@@ -1895,46 +1685,7 @@ object Corpus {
     */
   private[operators] def kmvSketches(keys: DataFrame): DataFrame =
     keys.groupBy(col("source"))
-      .agg(graft.functions.KmvSketchAgg.sketch(col("x"), KmvK).as("sk"))
-
-  /** KMV read-out: `(source, n_kmv, kth_min, est_distinct)`. Estimate
-    * in exact BigInt floor arithmetic (DuckDB replays it as HUGEINT
-    * `//`): below k observed keys the sketch IS the distinct set, so
-    * the estimate is exact by construction.
-    */
-  private[graft] def kmvReadout(sketches: DataFrame): DataFrame = {
-    val s = sketches.sparkSession
-    import s.implicits._
-    sketches.as[(String, Seq[Long])]
-      .map { case (source, sk) =>
-        val nk = sk.size.toLong
-        val kth = sk.last // a group exists only if it has rows
-        val est =
-          if (nk < KmvK) nk
-          else (BigInt(KmvK - 1) * KmvDomain / kth).toLong
-        (source, nk, kth, est)
-      }
-      .toDF("source", "n_kmv", "kth_min", "est_distinct")
-  }
-
-  /** [[kmvReadout]] for LONG-keyed sketch frames `(k: Long, sk)` —
-    * the windowed (q175) variant; callers rename `k` to their group
-    * column.
-    */
-  private[graft] def kmvReadoutLong(sketches: DataFrame): DataFrame = {
-    val s = sketches.sparkSession
-    import s.implicits._
-    sketches.as[(Long, Seq[Long])]
-      .map { case (g, sk) =>
-        val nk = sk.size.toLong
-        val kth = sk.last
-        val est =
-          if (nk < KmvK) nk
-          else (BigInt(KmvK - 1) * KmvDomain / kth).toLong
-        (g, nk, kth, est)
-      }
-      .toDF("k", "n_kmv", "kth_min", "est_distinct")
-  }
+      .agg(KmvSketchAgg.sketch(col("x")).as("sk"))
 
   /** Distinct word-trigram cardinality per source via KMV (q172) —
     * the q159 HLL question answered by the bottom-k sketch, over the
@@ -1952,7 +1703,8 @@ object Corpus {
       grams.select(col("source"), hllKey(col("g")).as("x")))
     val exact = grams.groupBy(col("source"))
       .agg(countDistinct(col("g")).as("n_distinct_exact"))
-    kmvReadout(sk).join(exact, "source")
+    sk.select(col("source") +: KmvSketchAgg.readout(col("sk")): _*)
+      .join(exact, "source")
       .select(col("source"), col("n_distinct_exact"), col("n_kmv"),
         col("kth_min"), col("est_distinct"))
       .orderBy(col("source"))
@@ -1979,7 +1731,7 @@ object Corpus {
 
   /** The merged (bottom-k of the key union) sketch for every unordered
     * source pair, membership-tagged:
-    * `(src_a, src_b, x, ia, ib)` with rn <= [[KmvK]] applied — tag both
+    * `(src_a, src_b, x, ia, ib)` with rn <= `KmvSketchAgg.K` applied — tag both
     * sides' sketch members with the pair, dedupe keys (max of the
     * tags), keep the k smallest of the union. The ONE merge law both
     * the overlap (q173) and difference (q186) estimators rank on,
@@ -2002,7 +1754,7 @@ object Corpus {
     tagged.withColumn("rn",
       row_number().over(Window.partitionBy(col("src_a"), col("src_b"))
         .orderBy(col("x"))))
-      .filter(col("rn") <= KmvK)
+      .filter(col("rn") <= KmvSketchAgg.K)
   }
 
   /** [[q173KmvOverlap]] over any `(source, text)` frame. */
@@ -2074,7 +1826,7 @@ object Corpus {
       .agg(max(col("r")).as("r"), grouping(col("source")).as("lvl"))
       .select(col("lvl"), coalesce(col("source"), lit("<all>")).as("source"),
         col("bkt"), col("r"))
-    hllReadout(leveled, Seq("lvl", "source"))
+    HllRegistersAgg.readout(leveled, Seq("lvl", "source"))
       .select(col("lvl").cast("long").as("lvl"), col("source"),
         col("n_hit"), col("est_raw"))
       .orderBy(col("lvl"), col("source"))
@@ -2096,29 +1848,18 @@ object Corpus {
 
   /** [[q186KmvDifference]] over any `(source, text)` frame. */
   private[operators] def kmvDifferenceOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
-    val s = docs.sparkSession
-    import s.implicits._
     val rows = sc.persist(kmvSketches(
       sourceTrigrams(docs).select(col("source"), hllKey(col("g")).as("x")))
       .select(col("source"), explode(col("sk")).as("x")))
     val ranked = mergedKmvPairs(rows) // the q173-shared merge law
-    val agg = ranked.groupBy(col("src_a"), col("src_b"))
+    ranked.groupBy(col("src_a"), col("src_b"))
       .agg(count(lit(1)).as("n_merged"),
         sum(col("ia") * (lit(1L) - col("ib"))).as("n_anotb"),
         sum(col("ib") * (lit(1L) - col("ia"))).as("n_bnota"),
         max(col("x")).as("kth"))
-    agg
-      .as[(String, String, Long, Long, Long, Long)]
-      .map { case (a, b, nm, nab, nba, kth) =>
-        // below k union keys the merged sketch IS the union: exact
-        val estU =
-          if (nm < KmvK) BigInt(nm)
-          else BigInt(KmvK - 1) * KmvDomain / kth
-        (a, b, nm, nab, nba,
-          (BigInt(nab) * estU / nm).toLong, (BigInt(nba) * estU / nm).toLong)
-      }
-      .toDF("src_a", "src_b", "n_merged", "n_anotb", "n_bnota",
-        "est_a_not_b", "est_b_not_a")
+      .select(col("src_a"), col("src_b"), col("n_merged"), col("n_anotb"), col("n_bnota"),
+        KmvSketchAgg.share(col("n_anotb"), col("n_merged"), col("kth")).as("est_a_not_b"),
+        KmvSketchAgg.share(col("n_bnota"), col("n_merged"), col("kth")).as("est_b_not_a"))
       .orderBy(col("src_a"), col("src_b"))
   }
 
@@ -2208,11 +1949,6 @@ object Corpus {
   // values, percentile-disc rank read-out), so engine and DuckDB
   // hash-match bit-for-bit.
 
-  /** Sample size: quantile rank stderr ~ sqrt(q(1-q)/k) — ±3.1% rank
-    * error at the median, ±0.6% at p99.
-    */
-  val SampleK: Int = 256
-
   /** Per-`event_type` value quantiles (p50/p90/p99) from a bottom-k
     * sample (q195). ONE aggregation pass: the sketch state (2k longs
     * per group) and the exact row count share the same map-side
@@ -2227,31 +1963,17 @@ object Corpus {
   /** [[q195QuantileSketch]] over any `(event_type, event_id, value)`
     * frame.
     */
-  private[operators] def quantileSketchOf(events: DataFrame): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    val fx = events
+  private[operators] def quantileSketchOf(events: DataFrame): DataFrame =
+    events
       .filter(col("value").isNotNull)
-      .select(col("event_type"),
-        hllKey(col("event_id").cast("string")).as("h"),
-        round(col("value") * lit(1e6)).cast("long").as("v"))
-    val sk = fx.groupBy(col("event_type"))
+      .groupBy(col("event_type"))
       .agg(
-        graft.functions.SamplePairsAgg.sketch(col("h"), col("v"), SampleK)
-          .as("pairs"),
+        SamplePairsAgg.sketch(hllKey(col("event_id").cast("string")),
+          round(col("value") * lit(1e6)).cast("long")).as("pairs"),
         count(lit(1)).as("n_events"))
-    sk.as[(String, Seq[Long], Long)]
-      .map { case (et, pairs, nEvents) =>
-        val vals = Array.tabulate(pairs.size / 2)(i => pairs(2 * i + 1))
-        java.util.Arrays.sort(vals)
-        val n = vals.length // a group exists only if it has rows
-        def pick(qnum: Int): Long =
-          vals(graft.functions.SamplePairsAgg.rankOf(n, qnum) - 1)
-        (et, nEvents, n.toLong, pick(50), pick(90), pick(99))
-      }
-      .toDF("event_type", "n_events", "n_sample", "p50_fx", "p90_fx", "p99_fx")
+      .select(col("event_type") +: col("n_events") +:
+        SamplePairsAgg.readout(col("pairs"), "fx"): _*)
       .orderBy(col("event_type"))
-  }
 
   /** q199: quantile-sketch ROLLUP — per-source AND corpus-total
     * document-length quantiles from ONE sketch build, the q190
@@ -2270,15 +1992,11 @@ object Corpus {
 
   /** [[q199QuantileRollup]] over any `(source, doc_id, n_chars)` frame. */
   private[graft] def quantileRollupOf(docs: DataFrame): DataFrame = Scope.pinned { sc =>
-    val s = docs.sparkSession
-    import s.implicits._
     val base = docs.select(col("source"),
       hllKey(col("doc_id").cast("string")).as("h"),
       col("n_chars").as("v"))
     val perSrc = sc.persist(base.groupBy(col("source"))
-      .agg(
-        graft.functions.SamplePairsAgg.sketch(col("h"), col("v"), SampleK)
-          .as("pairs"),
+      .agg(SamplePairsAgg.sketch(col("h"), col("v")).as("pairs"),
         count(lit(1)).as("n_docs")))
     perSrc.count()
     // sketch members back to (source, h, v) rows — sources·k of them
@@ -2289,9 +2007,7 @@ object Corpus {
     // one GROUPING SETS pass re-merges the sample at both grains
     val leveled = members
       .groupingSets(Seq(Seq(col("source")), Seq()), col("source"))
-      .agg(
-        graft.functions.SamplePairsAgg.sketch(col("h"), col("v"), SampleK)
-          .as("pairs"),
+      .agg(SamplePairsAgg.sketch(col("h"), col("v")).as("pairs"),
         grouping(col("source")).as("lvl"))
       .select(col("lvl").cast("long").as("lvl"),
         coalesce(col("source"), lit("<all>")).as("source"), col("pairs"))
@@ -2300,18 +2016,8 @@ object Corpus {
         .agg(sum(col("n_docs")).as("n_docs"))
         .select(lit("<all>").as("source"), col("n_docs")))
     leveled.join(broadcast(ns), "source")
-      .select(col("lvl"), col("source"), col("pairs"), col("n_docs"))
-      .as[(Long, String, Seq[Long], Long)]
-      .map { case (lvl, src, pairs, nDocs) =>
-        val vals = Array.tabulate(pairs.size / 2)(i => pairs(2 * i + 1))
-        java.util.Arrays.sort(vals)
-        val n = vals.length
-        def pick(qnum: Int): Long =
-          vals(graft.functions.SamplePairsAgg.rankOf(n, qnum) - 1)
-        (lvl, src, nDocs, n.toLong, pick(50), pick(90), pick(99))
-      }
-      .toDF("lvl", "source", "n_docs", "n_sample",
-        "p50_chars", "p90_chars", "p99_chars")
+      .select(col("lvl") +: col("source") +: col("n_docs") +:
+        SamplePairsAgg.readout(col("pairs"), "chars"): _*)
       .orderBy(col("lvl"), col("source"))
   }
 
@@ -2351,12 +2057,11 @@ object Corpus {
       .groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("n")))
     tokCounts.count() // eager: the ONE corpus-linear pass
-    val seeds = cmsSeedsDf(s) // the ONE seed-frame builder (q167 shares it)
     val cells = tokCounts
-      .select(col("source"), cmsKey(col("tok")).as("x"), col("n"))
-      .crossJoin(broadcast(seeds))
+      .select(col("source"), hllKey(col("tok")).as("x"), col("n"))
+      .crossJoin(broadcast(CmsSketchAgg.seeds(s)))
       .groupBy(col("source"), col("j"),
-        cmsBucketFromKey(col("x"), col("a"), col("b"), col("c")).as("bkt"))
+        CmsSketchAgg.bucket(col("x"), col("a"), col("b"), col("c")).as("bkt"))
       .agg(sum(col("n")).as("c"))
     // one GROUPING SETS pass re-sums the cells at both grains
     val leveled = sc.persist(cells
@@ -2371,14 +2076,9 @@ object Corpus {
     // a vocab-sized re-aggregation of the cached counts, not a pass
     val probes = tokCounts.groupBy(col("tok")).agg(sum(col("n")).as("n"))
       .orderBy(col("n").desc, col("tok")).limit(5).select(col("tok"))
-    val probeCells = probes.crossJoin(broadcast(seeds))
-      .select(col("tok"), col("j"),
-        cmsBucket(col("tok"), col("a"), col("b"), col("c")).as("bkt"))
     val grains = leveled.select(col("lvl"), col("source")).distinct()
-    val est = grains.crossJoin(broadcast(probeCells))
-      .join(leveled, Seq("lvl", "source", "j", "bkt"), "left")
-      .groupBy(col("lvl"), col("source"), col("tok"))
-      .agg(min(coalesce(col("c"), lit(0L))).as("est_cnt"))
+    val est = CmsSketchAgg.estimate(grains.crossJoin(broadcast(probes)),
+      hllKey(col("tok")), leveled, Seq("lvl", "source"))
     val exacts = tokCounts.join(broadcast(probes), "tok")
       .groupingSets(Seq(Seq(col("source"), col("tok")), Seq(col("tok"))),
         col("source"), col("tok"))
@@ -2408,7 +2108,6 @@ object Corpus {
     * and in flight; the store is swept after the result materializes.
     */
   def q200IncrementalSketch(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val ev = Tables.events(s, d)
       .select(col("event_type"),
         expr("(ts div 1000) div 86400000000").as("day"),
@@ -2416,7 +2115,7 @@ object Corpus {
     def halfSketch(parity: Int): DataFrame = ev
       .filter(pmod(col("day"), lit(2L)) === parity)
       .groupBy(col("event_type"))
-      .agg(graft.functions.KmvSketchAgg.sketch(col("x"), KmvK).as("sk"))
+      .agg(KmvSketchAgg.sketch(col("x")).as("sk"))
     Scope { sc =>
       val store = sc.tempDir("graft_sketch_store")
       halfSketch(0).write.mode("overwrite")
@@ -2426,11 +2125,10 @@ object Corpus {
       val members = history.unionByName(halfSketch(1))
         .select(col("event_type"), explode(col("sk")).as("x"))
       val merged = members.groupBy(col("event_type"))
-        .agg(graft.functions.KmvSketchAgg.sketch(col("x"), KmvK).as("sk"))
+        .agg(KmvSketchAgg.sketch(col("x")).as("sk"))
       val exact = ev.groupBy(col("event_type"))
         .agg(countDistinct(col("x")).as("n_distinct_exact"))
-      val out = kmvReadout(merged.withColumnRenamed("event_type", "source"))
-        .withColumnRenamed("source", "event_type")
+      val out = merged.select(col("event_type") +: KmvSketchAgg.readout(col("sk")): _*)
         .join(exact, "event_type")
         .select(col("event_type"), col("n_distinct_exact"), col("n_kmv"),
           col("kth_min"), col("est_distinct"))
@@ -2442,25 +2140,5 @@ object Corpus {
       val rows = out.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     }
-  }
-
-  /** Quantile read-out for LONG-keyed sketch frames
-    * `(k: Long, pairs, n_events)` — the windowed (q197) variant;
-    * callers rename `k` to their group column. Same integer
-    * percentile-disc arithmetic as [[quantileSketchOf]].
-    */
-  private[graft] def quantileReadoutLong(sketches: DataFrame): DataFrame = {
-    val s = sketches.sparkSession
-    import s.implicits._
-    sketches.as[(Long, Seq[Long], Long)]
-      .map { case (g, pairs, nEvents) =>
-        val vals = Array.tabulate(pairs.size / 2)(i => pairs(2 * i + 1))
-        java.util.Arrays.sort(vals)
-        val n = vals.length
-        def pick(qnum: Int): Long =
-          vals(graft.functions.SamplePairsAgg.rankOf(n, qnum) - 1)
-        (g, nEvents, n.toLong, pick(50), pick(90), pick(99))
-      }
-      .toDF("k", "n_events", "n_sample", "p50_fx", "p90_fx", "p99_fx")
   }
 }

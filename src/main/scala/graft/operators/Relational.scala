@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Scope, Tables, Tokens}
+import graft.functions.{HistogramAgg, HllRegistersAgg}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -518,16 +519,13 @@ object Relational {
         percentile_approx(col("l_extendedprice"), lit(0.95), lit(10000)).as("p95_price"))
       .orderBy(col("l_returnflag"))
 
-  /** Bin count of the replayable histogram-quantile sketch (q160). */
-  val HistBins = 64
-
   /** Replayable histogram quantile sketch (q160): q37's
     * `percentile_approx` surface re-seated on a transparent structure —
     * per-group fixed-bin histograms over the [min, max] value domain,
     * quantiles read off as bin upper edges. Completes the replayable
     * sketch trio (q158 count-min = frequency, q159 HLL = cardinality,
     * this = quantiles): exact percentiles need a full sort per group;
-    * this needs TWO map-side-combinable passes (bounds+count, then bin
+    * this needs TWO map-side-combinable passes (bounds, then bin
     * counts) with O(bins) state per group, merge = cell-wise sum —
     * the shape that survives when the per-group row count stops
     * fitting a sort. The estimate's guarantee is value-domain: the
@@ -549,33 +547,16 @@ object Relational {
     */
   private[operators] def histQuantilesOf(ev: DataFrame): DataFrame = {
     val bounds = ev.groupBy(col("event_type"))
-      .agg(min(col("v")).as("vmin"), max(col("v")).as("vmax"),
-        count(lit(1)).as("n"))
-    val b = lit(HistBins.toDouble)
+      .agg(min(col("v")).as("vmin"), max(col("v")).as("vmax"))
+    // each group bins on its own domain, so its bounds ride as keys
+    val keys = Seq("event_type", "vmin", "vmax")
     val binned = ev.join(broadcast(bounds), "event_type")
-      // constant groups (vmax == vmin) pin to bin 0 rather than 0/0
-      .withColumn("bin", when(col("vmax") === col("vmin"), lit(0L))
-        .otherwise(least(
-          floor((col("v") - col("vmin")) * b / (col("vmax") - col("vmin")))
-            .cast("long"),
-          lit(HistBins - 1L))))
-      .groupBy(col("event_type"), col("bin")).agg(count(lit(1)).as("c"))
-    // per-group cumulative over <= 64 rows, group-partitioned window
-    val cum = binned.withColumn("cum",
-        sum(col("c")).over(
-          Window.partitionBy(col("event_type")).orderBy(col("bin"))))
-      .join(broadcast(bounds), "event_type")
-    def kq(pct: Int) = expr(s"CAST((n * $pct + 99) DIV 100 AS BIGINT)")
-    def pick(pct: Int, name: String) =
-      min(when(col("cum") >= kq(pct), col("bin"))).as(name)
-    val picks = cum
-      .groupBy(col("event_type"), col("n"), col("vmin"), col("vmax"))
-      .agg(pick(50, "b50"), pick(95, "b95"), pick(99, "b99"))
-    def edge(c: Column) =
-      col("vmin") + (c + lit(1L)).cast("double") * ((col("vmax") - col("vmin")) / b)
-    picks.select(col("event_type"), col("n"), col("vmin"), col("vmax"),
-        edge(col("b50")).as("p50_est"), edge(col("b95")).as("p95_est"),
-        edge(col("b99")).as("p99_est"))
+      .groupBy(keys.map(col) :+
+        HistogramAgg.bin(col("v"), col("vmin"), col("vmax")).as("bin"): _*)
+      .agg(count(lit(1)).as("c"))
+    HistogramAgg.quantileEdges(binned, keys, col("vmin"), col("vmax"))
+      .select(col("event_type"), col("n"), col("vmin"), col("vmax"),
+        col("p50_est"), col("p95_est"), col("p99_est"))
       .orderBy(col("event_type"))
   }
 
@@ -597,34 +578,19 @@ object Relational {
 
   /** [[q168HistMerge]] over any `(event_type, v: double)` frame. */
   private[operators] def histMergeOf(ev: DataFrame): DataFrame = Scope.pinned { sc =>
-    val b = lit(HistBins.toDouble)
     val bounds = ev.agg(min(col("v")).as("vmin"), max(col("v")).as("vmax"))
     val binned = sc.persist(ev.crossJoin(broadcast(bounds))
-      .withColumn("bin", when(col("vmax") === col("vmin"), lit(0L))
-        .otherwise(least(
-          floor((col("v") - col("vmin")) * b / (col("vmax") - col("vmin"))).cast("long"),
-          lit(HistBins - 1L))))
-      .groupBy(col("event_type"), col("bin")).agg(count(lit(1)).as("c")))
+      .groupBy(col("event_type"),
+        HistogramAgg.bin(col("v"), col("vmin"), col("vmax")).as("bin"))
+      .agg(count(lit(1)).as("c")))
     // THE MERGE: the global histogram is the cell-wise sum of the
     // per-scope histograms (shared bin space makes this exact)
     val cells = binned.select(col("event_type").as("scope"), col("bin"), col("c"))
       .unionByName(binned.groupBy(col("bin")).agg(sum(col("c")).as("c"))
         .select(lit("GLOBAL").as("scope"), col("bin"), col("c")))
-    val ns = cells.groupBy(col("scope")).agg(sum(col("c")).as("n"))
-    val cum = cells.withColumn("cum",
-        sum(col("c")).over(Window.partitionBy(col("scope")).orderBy(col("bin"))))
-      .join(broadcast(ns), "scope")
-    def kq(pct: Int) = expr(s"CAST((n * $pct + 99) DIV 100 AS BIGINT)")
-    def pick(pct: Int, name: String) =
-      min(when(col("cum") >= kq(pct), col("bin"))).as(name)
-    val picks = cum.groupBy(col("scope"), col("n"))
-      .agg(pick(50, "b50"), pick(95, "b95"), pick(99, "b99"))
-      .crossJoin(broadcast(bounds))
-    def edge(c: Column) =
-      col("vmin") + (c + lit(1L)).cast("double") * ((col("vmax") - col("vmin")) / b)
-    picks.select(col("scope"), col("n"),
-        edge(col("b50")).as("p50_est"), edge(col("b95")).as("p95_est"),
-        edge(col("b99")).as("p99_est"))
+    HistogramAgg.quantileEdges(cells.crossJoin(broadcast(bounds)),
+        Seq("scope", "vmin", "vmax"), col("vmin"), col("vmax"))
+      .select(col("scope"), col("n"), col("p50_est"), col("p95_est"), col("p99_est"))
       .orderBy(col("scope"))
   }
 
@@ -1198,9 +1164,9 @@ object Relational {
     val x = Corpus.hllKey(col("val"))
     val regs = melted.filter(col("val").isNotNull)
       .select(col("column_name"),
-        Corpus.hllBucket(x).as("bkt"), Corpus.hllRho(x).as("rho"))
+        HllRegistersAgg.bucket(x).as("bkt"), HllRegistersAgg.rho(x).as("rho"))
       .groupBy(col("column_name"), col("bkt")).agg(max(col("rho")).as("r"))
-    Corpus.hllReadout(regs, Seq("column_name"))
+    HllRegistersAgg.readout(regs, Seq("column_name"))
       .join(counts, "column_name")
       .select(col("column_name"), col("n_rows"), col("n_nulls"),
         col("v_empty"), col("s_reg"), col("est_raw"), col("small_range"))

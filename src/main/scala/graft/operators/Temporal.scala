@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Scope, Tables}
+import graft.functions.SamplePairsAgg
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -759,9 +760,6 @@ object Temporal {
 
   /** [[q204MadOutliers]] over any `(event_type, event_id, value)` frame. */
   private[graft] def madOutliersOf(events: DataFrame): DataFrame = Scope.pinned { sc =>
-    val s = events.sparkSession
-    import s.implicits._
-    val k = graft.operators.Corpus.SampleK
     val fx = sc.persist(events
       .filter(col("value").isNotNull)
       .select(col("event_type"),
@@ -769,22 +767,14 @@ object Temporal {
         round(col("value") * lit(1e6)).cast("long").as("v")))
     // sample p50 of a (event_type, h, metric) frame — the q195
     // read-out restricted to the median
-    def sampleP50(df: DataFrame, metric: String): DataFrame = df
+    def sampleP50(df: DataFrame, metric: String, name: String): DataFrame = df
       .groupBy(col("event_type"))
-      .agg(graft.functions.SamplePairsAgg
-        .sketch(col("h"), col(metric), k).as("pairs"))
-      .as[(String, Seq[Long])]
-      .map { case (et, pairs) =>
-        val vals = Array.tabulate(pairs.size / 2)(i => pairs(2 * i + 1))
-        java.util.Arrays.sort(vals)
-        (et, vals(graft.functions.SamplePairsAgg.rankOf(vals.length, 50) - 1))
-      }
-      .toDF("event_type", metric + "_p50")
-    val med = sampleP50(fx, "v").withColumnRenamed("v_p50", "med_fx")
+      .agg(SamplePairsAgg.sketch(col("h"), col(metric)).as("pairs"))
+      .select(col("event_type"), SamplePairsAgg.quantile(col("pairs"), 50).as(name))
+    val med = sampleP50(fx, "v", "med_fx")
     val dev = fx.join(broadcast(med), "event_type")
       .withColumn("dev", abs(col("v") - col("med_fx")))
-    val mad = sampleP50(dev.select(col("event_type"), col("h"), col("dev")),
-      "dev").withColumnRenamed("dev_p50", "mad_fx")
+    val mad = sampleP50(dev, "dev", "mad_fx")
     dev.join(broadcast(mad), "event_type")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.Scope
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.functions.{CmsSketchAgg, HistogramAgg, HllRegistersAgg, KmvSketchAgg, SamplePairsAgg}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -384,24 +385,56 @@ object EventStream {
       .flatMapGroupsWithState[List[Long], SessionSummary](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (user: Long, it: Iterator[SessionEvent], state: GroupState[List[Long]]) =>
-          val all = (state.getOption.getOrElse(Nil) ++ it.map(_.ts_ns)).sorted
-          // split into gap-delimited sessions
-          val sessions = all.foldLeft(List.empty[List[Long]]) {
-            case (Nil, t) => List(List(t))
-            case (cur :: done, t) if t - cur.head <= gapNs => (t :: cur) :: done
-            case (acc, t) => List(t) :: acc
-          }.map(_.reverse).reverse
-          val (closed, open) = (sessions.dropRight(1), sessions.lastOption.getOrElse(Nil))
+          val (closed, open) = gapSessions(user, state.getOption.getOrElse(Nil),
+            it.map(_.ts_ns), gapNs)(SessionSummary)
           state.update(open)
-          closed.iterator.map(sess =>
-            SessionSummary(user, sess.head, sess.last, sess.length.toLong))
+          closed
       }
   }
+
+  /** The gap-session state machine every sessionizer shares: the open
+    * session `prior` plus the new event `times`, sorted and split
+    * wherever an event lands more than `gap` after the one before it.
+    * Returns the closed sessions as `summary(user, start, end, n)` rows
+    * and the still-open (last) session's times.
+    */
+  private def gapSessions[O](user: Long, prior: List[Long], times: Iterator[Long], gap: Long)(
+      summary: (Long, Long, Long, Long) => O): (Iterator[O], List[Long]) = {
+    val sessions = (prior ++ times).sorted.foldLeft(List.empty[List[Long]]) {
+      case (Nil, t) => List(List(t))
+      case (cur :: done, t) if t - cur.head <= gap => (t :: cur) :: done
+      case (acc, t) => List(t) :: acc
+    }.map(_.reverse).reverse
+    (sessions.dropRight(1).iterator.flatMap(closeSession(user, _)(summary)),
+      sessions.lastOption.getOrElse(Nil))
+  }
+
+  /** One session's `summary(user, start, end, n)` row (none if empty). */
+  private def closeSession[O](user: Long, sess: List[Long])(
+      summary: (Long, Long, Long, Long) => O): Iterator[O] =
+    if (sess.isEmpty) Iterator.empty
+    else Iterator.single(summary(user, sess.head, sess.last, sess.length.toLong))
 
   /** Open-session state for [[GapSessionProcessor]] — a case class so
     * the ValueState encoder is plain `Encoders.product` (public API).
     */
   final case class OpenSession(ts: Array[Long])
+
+  /** The `open` session ValueState both transformWithState
+    * sessionizers keep.
+    */
+  abstract class OpenSessionProcessor[I, O]
+      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, I, O] {
+    @transient protected var open: org.apache.spark.sql.streaming.ValueState[OpenSession] = _
+
+    override def init(outputMode: OutputMode,
+        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+      open = getHandle.getValueState[OpenSession]("open",
+        org.apache.spark.sql.Encoders.product[OpenSession],
+        org.apache.spark.sql.streaming.TTLConfig.NONE)
+
+    protected def openTimes: List[Long] = if (open.exists()) open.get().ts.toList else Nil
+  }
 
   /** [[sessionize]]'s rule on Spark 4's `transformWithState` API
     * (arbitrary stateful processing v2) — the designated successor of
@@ -414,28 +447,13 @@ object EventStream {
     * would only add RocksDB round trips.
     */
   final class GapSessionProcessor(gapNs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, SessionEvent, SessionSummary] {
-    @transient private var open: org.apache.spark.sql.streaming.ValueState[OpenSession] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      open = getHandle.getValueState[OpenSession]("open",
-        org.apache.spark.sql.Encoders.product[OpenSession],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
+      extends OpenSessionProcessor[SessionEvent, SessionSummary] {
     override def handleInputRows(user: Long, rows: Iterator[SessionEvent],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[SessionSummary] = {
-      val prior: List[Long] = if (open.exists()) open.get().ts.toList else Nil
-      val all = (prior ++ rows.map(_.ts_ns)).sorted
-      val sessions = all.foldLeft(List.empty[List[Long]]) {
-        case (Nil, t) => List(List(t))
-        case (cur :: done, t) if t - cur.head <= gapNs => (t :: cur) :: done
-        case (acc, t) => List(t) :: acc
-      }.map(_.reverse).reverse
-      val (closed, openSess) = (sessions.dropRight(1), sessions.lastOption.getOrElse(Nil))
+      val (closed, openSess) =
+        gapSessions(user, openTimes, rows.map(_.ts_ns), gapNs)(SessionSummary)
       if (openSess.isEmpty) open.clear() else open.update(OpenSession(openSess.toArray))
-      closed.iterator.map(sess =>
-        SessionSummary(user, sess.head, sess.last, sess.length.toLong))
+      closed
     }
   }
 
@@ -494,21 +512,14 @@ object EventStream {
             // watermark passed: flush the open session
             val open = state.getOption.getOrElse(Nil)
             state.remove()
-            if (open.isEmpty) Iterator.empty
-            else Iterator.single(SessionSummaryMs(user, open.head, open.last, open.length.toLong))
+            closeSession(user, open)(SessionSummaryMs)
           } else {
-            val all = (state.getOption.getOrElse(Nil) ++ it.map(_.ts.getTime)).sorted
-            val sessions = all.foldLeft(List.empty[List[Long]]) {
-              case (Nil, t) => List(List(t))
-              case (cur :: done, t) if t - cur.head <= gapMs => (t :: cur) :: done
-              case (acc, t) => List(t) :: acc
-            }.map(_.reverse).reverse
-            val (closed, open) = (sessions.dropRight(1), sessions.lastOption.getOrElse(Nil))
+            val (closed, open) = gapSessions(user, state.getOption.getOrElse(Nil),
+              it.map(_.ts.getTime), gapMs)(SessionSummaryMs)
             state.update(open)
             if (open.nonEmpty)
               state.setTimeoutTimestamp(open.last + gapMs)
-            closed.iterator.map(sess =>
-              SessionSummaryMs(user, sess.head, sess.last, sess.length.toLong))
+            closed
           }
       }
   }
@@ -1223,33 +1234,18 @@ object EventStream {
     * ([[SessionSummaryMs]]), the timer clock's unit.
     */
   final class GapSessionTimerProcessor(gapMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, TimedEvent, SessionSummaryMs] {
-    @transient private var open: org.apache.spark.sql.streaming.ValueState[OpenSession] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      open = getHandle.getValueState[OpenSession]("open",
-        org.apache.spark.sql.Encoders.product[OpenSession],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
+      extends OpenSessionProcessor[TimedEvent, SessionSummaryMs] {
     override def handleInputRows(user: Long, rows: Iterator[TimedEvent],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[SessionSummaryMs] = {
-      val prior: List[Long] = if (open.exists()) open.get().ts.toList else Nil
-      val all = (prior ++ rows.map(_.ts.getTime)).sorted
-      val sessions = all.foldLeft(List.empty[List[Long]]) {
-        case (Nil, t) => List(List(t))
-        case (cur :: done, t) if t - cur.head <= gapMs => (t :: cur) :: done
-        case (acc, t) => List(t) :: acc
-      }.map(_.reverse).reverse
-      val (closed, openSess) = (sessions.dropRight(1), sessions.lastOption.getOrElse(Nil))
+      val (closed, openSess) =
+        gapSessions(user, openTimes, rows.map(_.ts.getTime), gapMs)(SessionSummaryMs)
       getHandle.listTimers().foreach(getHandle.deleteTimer)
       if (openSess.isEmpty) open.clear()
       else {
         open.update(OpenSession(openSess.toArray))
         getHandle.registerTimer(openSess.last + gapMs)
       }
-      closed.iterator.map(sess =>
-        SessionSummaryMs(user, sess.head, sess.last, sess.length.toLong))
+      closed
     }
 
     override def handleExpiredTimer(user: Long,
@@ -1257,11 +1253,9 @@ object EventStream {
         info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[SessionSummaryMs] = {
       // the timer is deleted+re-registered on every input batch, so an
       // expiry always refers to the CURRENT open session
-      val sess: List[Long] = if (open.exists()) open.get().ts.toList else Nil
+      val sess = openTimes
       open.clear()
-      if (sess.isEmpty) Iterator.empty
-      else Iterator.single(
-        SessionSummaryMs(user, sess.head, sess.last, sess.length.toLong))
+      closeSession(user, sess)(SessionSummaryMs)
     }
   }
 
@@ -1277,104 +1271,73 @@ object EventStream {
         org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** Per-window HLL register build over a `(ts, user_id)` frame —
-    * batch/stream UNIFIED (the [[windowedCounts]] contract): the q159
-    * sketch's register update is `max` per (window, bucket), an
-    * algebraic aggregate, so the STREAMING incremental merge literally
-    * IS the sketch merge — no custom state processor, and state is
-    * O(m) registers per open window instead of one entry per distinct
-    * user (the whole point of sketching a cardinality monitor at
-    * 100 TB/day: `dropDuplicates`-then-count state grows with the key
-    * space; this is bounded by 512 longs x watermark-horizon windows).
+  /** Per-window sketch build over a `ts` frame — batch/stream UNIFIED
+    * (the [[windowedCounts]] contract): each `aggs` column is a native
+    * mergeable sketch (HLL registers, CMS grid, histogram bins, KMV,
+    * pair sample), so the STREAMING incremental merge literally IS the
+    * sketch merge — no custom state processor, and state is the
+    * sketch's few KB per open window instead of one entry per distinct
+    * key (the whole point of sketching a monitor at 100 TB/day:
+    * `dropDuplicates`-then-count state grows with the key space; this
+    * is bounded by the sketch size x watermark-horizon windows).
+    * Windows are `windowLen` long, tumbling, or starting every `slide`
+    * when set: sliding is where sketching pays hardest, since exact
+    * state duplicates the full per-window key set across the overlap
+    * factor while the sketch duplicates its fixed state. Returns
+    * `(win_start, <aggs>)`.
     */
-  def hllWindowRegisters(
+  def windowSketch(
       events: DataFrame,
+      aggs: Seq[Column],
       windowLen: String = "10 minutes",
+      slide: Option[String] = None,
       watermark: String = "20 minutes"): DataFrame = {
-    val x = graft.operators.Corpus.hllKey(col("user_id").cast("string"))
-    // registers build through the NATIVE HllRegistersAgg — one 4 KB
-    // long[512] state row per window, single slot max per event —
-    // where groupBy(window, bkt) held up to 512 state-store entries
-    // per window. Exploding back to observed (bkt, r>0) rows AFTER
-    // aggregation keeps the sink — and the oracle hash — identical.
-    events
-      .withWatermark("ts", watermark)
-      .select(col("ts"), x.as("x"))
-      .groupBy(window(col("ts"), windowLen))
-      .agg(graft.functions.HllRegistersAgg.registers(col("x")).as("regs"))
-      .select(col("window.start").as("win_start"),
-        posexplode(col("regs")).as(Seq("pos", "r")))
-      .filter(col("r") > 0)
-      .select(col("win_start"), col("pos").cast("long").as("bkt"), col("r"))
+    val w = slide.fold(window(col("ts"), windowLen))(window(col("ts"), windowLen, _))
+    val built = events.withWatermark("ts", watermark).groupBy(w).agg(aggs.head, aggs.tail: _*)
+    built.select(col("window.start").as("win_start") +:
+      built.columns.toSeq.filter(_ != "window").map(col): _*)
   }
 
-  /** Per-window CMS cell build over a `(ts, user_id)` frame —
-    * batch/stream unified like [[hllWindowRegisters]]: the q158
-    * sketch's cell update is `count` per (window, row, bucket), an
-    * algebraic SUM, so the streaming incremental merge IS the sketch
-    * merge. State is depth·width = 2048 cells per open window — the
-    * frequency monitor whose state does not grow with the key space.
+  /** One sketch monitor replayed over the bounded events table: the
+    * events that pass `keep` as `(ts, <inputs>)`, [[windowSketch]]
+    * over 10-minute windows (the trailing hour every 10 minutes when
+    * `sliding`), `rows` turning the sketch rows into what the sink
+    * keeps, drained to the memory sink `name`. Returns the sink keyed
+    * by `win_start_us`.
     */
-  def cmsWindowCells(
-      events: DataFrame,
-      windowLen: String = "10 minutes",
-      watermark: String = "20 minutes"): DataFrame = {
-    val w = graft.operators.Corpus.CmsReplayWidth
-    // the grid is built by the NATIVE CmsSketchAgg — one long[2048]
-    // state row per window, depth slot increments per event — where
-    // the relational form crossJoined every event with the depth seed
-    // rows (a 4x amplification through the shuffle) and held up to
-    // 2048 state-store ENTRIES per window; the r15 sf10 sweep priced
-    // that at 42 s, the suite's worst streaming constant. Exploding
-    // the grid back to (j, bkt, c>0) rows AFTER aggregation keeps the
-    // sink — and the oracle hash — identical.
-    events
-      .withWatermark("ts", watermark)
-      .select(col("ts"),
-        graft.operators.Corpus.cmsKey(col("user_id").cast("string")).as("x"))
-      .groupBy(window(col("ts"), windowLen))
-      .agg(graft.functions.CmsSketchAgg.sketch(col("x")).as("cells"))
-      .select(col("window.start").as("win_start"),
-        posexplode(col("cells")).as(Seq("pos", "c")))
-      .filter(col("c") > 0)
-      .select(col("win_start"),
-        expr(s"CAST(pos div $w AS BIGINT)").as("j"),
-        expr(s"CAST(pos % $w AS BIGINT)").as("bkt"),
-        col("c"))
+  private def sketchMonitor(
+      s: SparkSession, d: String, name: String, inputs: Seq[Column], aggs: Seq[Column],
+      sliding: Boolean = false, keep: Column = lit(true))(
+      rows: DataFrame => DataFrame = identity): DataFrame = {
+    val stream = eventsStream(s, d).filter(keep)
+      .select(timestamp_micros(expr("ts div 1000")).as("ts") +: inputs: _*)
+    val sk =
+      if (sliding) windowSketch(stream, aggs, "60 minutes", Some("10 minutes"), "80 minutes")
+      else windowSketch(stream, aggs)
+    val sink = drainToMemory(s, rows(sk), name, eventsBytes(d))
+    sink.select(unix_micros(col("win_start")).as("win_start_us") +:
+      sink.columns.toSeq.filter(_ != "win_start").map(col): _*)
   }
 
-  /** Per-window histogram cells over a `(ts, value)` frame —
-    * batch/stream unified like [[cmsWindowCells]]: the q168
-    * global-domain binning (bounds fixed ahead of the stream, the
-    * production convention for a latency monitor) makes the cell
-    * update a per-(window, bin) COUNT, an algebraic SUM, so the
-    * streaming incremental merge IS the histogram merge. State is
-    * [[graft.operators.Relational.HistBins]] cells per open window —
-    * the quantile monitor whose state does not grow with row count.
+  /** The batch events table as `(win_start_us, <cols>)`, each event at
+    * the start of its 10-minute window in epoch micros — the exact
+    * riders' grouping key, equal to a monitor's `win_start_us`.
     */
-  def histWindowCells(
-      events: DataFrame, vmin: Double, vmax: Double,
-      windowLen: String = "10 minutes",
-      watermark: String = "20 minutes"): DataFrame = {
-    // bin counts through the NATIVE HistogramAgg — one long[64] state
-    // row per window, single slot increment per event (the CmsSketchAgg
-    // discipline; bin arithmetic IEEE-identical to the Column form, so
-    // the exploded cells and the oracle hash are unchanged)
-    events
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("value").cast("double").as("v"))
-      .groupBy(window(col("ts"), windowLen))
-      .agg(graft.functions.HistogramAgg.histogram(col("v"), vmin, vmax).as("cells"))
-      .select(col("window.start").as("win_start"),
-        posexplode(col("cells")).as(Seq("pos", "c")))
-      .filter(col("c") > 0)
-      .select(col("win_start"), col("pos").cast("long").as("bin"), col("c"))
-  }
+  private def eventsByWindow(s: SparkSession, d: String, cols: Column*): DataFrame =
+    graft.Tables.events(s, d)
+      .select((expr("ts div 1000") - expr("ts div 1000") % 600000000L)
+        .as("win_start_us") +: cols: _*)
+
+  /** The 60-bit key of the events' user ids (HLL, CMS, KMV monitors). */
+  private def userKey: Column = graft.operators.Corpus.hllKey(col("user_id").cast("string"))
 
   /** q174 — the FOURTEENTH streaming shape, completing the
     * sketch-in-stream trio (q161 HLL cardinality, q167 CMS frequency,
     * q174 histogram QUANTILES): per-window latency-style percentile
-    * estimates from [[histWindowCells]] replayed over the bounded
+    * estimates from native histogram cells over the q168
+    * global-domain binning (bounds fixed ahead of the stream, the
+    * production convention for a latency monitor, so the cell update
+    * is an algebraic per-bin COUNT), replayed over the bounded
     * events table, read out in batch by the q160/q168 integer-rank +
     * bin-edge arithmetic, with exact per-window percentiles riding as
     * report-only ground truth (rank read-out of the k-th order
@@ -1391,97 +1354,57 @@ object EventStream {
         max(col("value").cast("double")).as("vmax"))
       .collect()(0)
     val (vmin, vmax) = (bounds.getDouble(0), bounds.getDouble(1))
-    val stream = eventsStream(s, d)
-      .select(timestamp_micros(expr("ts div 1000")).as("ts"),
-        col("value").cast("double").as("value"))
-    val cells = histWindowCells(stream, vmin, vmax)
-    val sink = drainToMemory(s, cells, "q174_stream_hist", eventsBytes(d))
-      .select(unix_micros(col("win_start")).as("win_start_us"),
-        col("bin"), col("c"))
-    val ns = sink.groupBy(col("win_start_us")).agg(sum(col("c")).as("n"))
-    val cum = sink.withColumn("cum",
-        sum(col("c")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("win_start_us")).orderBy(col("bin"))))
-      .join(broadcast(ns), "win_start_us")
-    def kq(pct: Int) = expr(s"CAST((n * $pct + 99) DIV 100 AS BIGINT)")
-    def pick(pct: Int, name: String) =
-      min(when(col("cum") >= kq(pct), col("bin"))).as(name)
-    val picks = cum.groupBy(col("win_start_us"), col("n"))
-      .agg(pick(50, "b50"), pick(95, "b95"), pick(99, "b99"))
-    val bw = lit((vmax - vmin) / graft.operators.Relational.HistBins.toDouble)
-    def edge(c: org.apache.spark.sql.Column) =
-      lit(vmin) + (c + lit(1L)).cast("double") * bw
-    val est = picks.select(col("win_start_us"), col("n"),
-      edge(col("b50")).as("p50_est"), edge(col("b95")).as("p95_est"),
-      edge(col("b99")).as("p99_est"))
+    val sink = sketchMonitor(s, d, "q174_stream_hist",
+      Seq(col("value").cast("double").as("v")),
+      Seq(HistogramAgg.histogram(col("v"), vmin, vmax).as("cells"))) {
+      HistogramAgg.cellRows(_, Seq("win_start"), col("cells"))
+    }
+    val est = HistogramAgg.quantileEdges(sink, Seq("win_start_us"), lit(vmin), lit(vmax))
     // exact rider: k-th order statistic per window from the batch table
-    val ev = graft.Tables.events(s, d)
-      .select((expr("ts div 1000") - expr("ts div 1000") % 600000000L)
-        .as("win_start_us"), col("value").cast("double").as("v"))
-    val ranked = ev.withColumn("rn",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("win_start_us")).orderBy(col("v"))))
-      .join(broadcast(ns), "win_start_us")
-    def exact(pct: Int, name: String) =
-      min(when(col("rn") >= kq(pct), col("v"))).as(name)
+    val ranked = eventsByWindow(s, d, col("value").cast("double").as("v"))
+      .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("win_start_us")).orderBy(col("v"))))
+      .join(broadcast(est.select(col("win_start_us"), col("n"))), "win_start_us")
+    def exact(pct: Int) =
+      min(when(col("rn") >= SamplePairsAgg.rank(col("n"), pct), col("v"))).as(s"p${pct}_exact")
     val exacts = ranked.groupBy(col("win_start_us"))
-      .agg(exact(50, "p50_exact"), exact(95, "p95_exact"),
-        exact(99, "p99_exact"))
+      .agg(exact(50), exact(95), exact(99))
     est.join(exacts, "win_start_us")
       .orderBy(col("win_start_us"))
-  }
-
-  /** Per-window KMV sketch over user ids — batch/stream unified like
-    * its three sketch-in-stream siblings: the KMV aggregate is
-    * algebraic (order-independent, mergeable), so the streaming
-    * incremental merge is literally the KMV set-union merge. State
-    * per open window is at most k=64 longs — the smallest state of
-    * the four monitors, and unlike HLL the sketch doubles as a
-    * uniform SAMPLE of the window's distinct users (minwise hashing),
-    * so the same state answers "how many" and "which ones,
-    * representatively". The aggregate is the NATIVE
-    * [[graft.functions.KmvSketchAgg]] (unboxed `long[]` buffer,
-    * serialization only at partial/state boundaries) — the
-    * `udaf(BottomKDistinct)` form it replaced paid an Encoder
-    * round-trip plus an O(k) Vector copy per input row, the r13
-    * canary's worst streaming decade ratio (q175 sf1→sf10 = 3.1×).
-    */
-  def kmvWindowSketch(
-      events: DataFrame,
-      windowLen: String = "10 minutes",
-      watermark: String = "20 minutes"): DataFrame = {
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen))
-      .agg(graft.functions.KmvSketchAgg.sketch(
-        graft.operators.Corpus.hllKey(col("user_id").cast("string")),
-        graft.operators.Corpus.KmvK).as("sk"))
-      .select(col("window.start").as("win_start"), col("sk"))
   }
 
   /** q175 — the FIFTEENTH streaming shape, making the sketch-in-stream
     * family a QUARTET (q161 HLL / q167 CMS / q174 histogram / q175
     * KMV): per-window distinct-user estimation from the q172 bottom-k
-    * sketch built IN-STREAM, read out in batch by the same BigInt
+    * sketch built IN-STREAM, read out in batch by the same
     * (k−1)·H/kth-min arithmetic, exact per-window distinct counts
-    * riding report-only. Because the sketch is order-independent, the
-    * DuckDB oracle replays the entire stream query from the batch
-    * table — the fourth sketch under full hash-match.
+    * riding report-only. State per open window is at most k=64 longs
+    * — the smallest of the monitors — and unlike HLL the sketch
+    * doubles as a uniform SAMPLE of the window's distinct users
+    * (minwise hashing). The aggregate is the NATIVE
+    * [[graft.functions.KmvSketchAgg]] (unboxed `long[]` buffer,
+    * serialization only at partial/state boundaries) — the
+    * `udaf(BottomKDistinct)` form it replaced paid an Encoder
+    * round-trip plus an O(k) Vector copy per input row, the r13
+    * canary's worst streaming decade ratio (q175 sf1→sf10 = 3.1×).
+    * Because the sketch is order-independent, the DuckDB oracle
+    * replays the entire stream query from the batch table.
     */
-  def q175StreamKmv(s: SparkSession, d: String): DataFrame = {
-    val stream = eventsStream(s, d)
-      .select(timestamp_micros(expr("ts div 1000")).as("ts"), col("user_id"))
-    val sk = kmvWindowSketch(stream)
-    val sink = drainToMemory(s, sk, "q175_stream_kmv", eventsBytes(d))
-      .select(unix_micros(col("win_start")).as("k"), col("sk"))
-    val est = graft.operators.Corpus.kmvReadoutLong(sink)
-      .withColumnRenamed("k", "win_start_us")
-    val exact = graft.Tables.events(s, d)
-      .select((expr("ts div 1000") - expr("ts div 1000") % 600000000L)
-        .as("win_start_us"), col("user_id"))
-      .groupBy(col("win_start_us"))
+  def q175StreamKmv(s: SparkSession, d: String): DataFrame =
+    kmvMonitor(s, d, "q175_stream_kmv", sliding = false,
+      eventsByWindow(s, d, col("user_id")))
+
+  /** A KMV distinct-user monitor's read-out joined to its exact rider
+    * `(win_start_us, user_id)` (q175, q193).
+    */
+  private def kmvMonitor(s: SparkSession, d: String, name: String, sliding: Boolean,
+      exactUsers: DataFrame): DataFrame = {
+    val sink = sketchMonitor(s, d, name, Seq(col("user_id")),
+      Seq(KmvSketchAgg.sketch(userKey).as("sk")), sliding)()
+    val exact = exactUsers.groupBy(col("win_start_us"))
       .agg(countDistinct(col("user_id")).as("n_distinct_exact"))
-    est.join(exact, "win_start_us")
+    sink.select(col("win_start_us") +: KmvSketchAgg.readout(col("sk")): _*)
+      .join(exact, "win_start_us")
       .select(col("win_start_us"), col("n_distinct_exact"), col("n_kmv"),
         col("kth_min"), col("est_distinct"))
       .orderBy(col("win_start_us"))
@@ -1582,58 +1505,14 @@ object EventStream {
     * replays the whole query from the batch table (the q175 program
     * with the 6-fold window expansion made explicit).
     */
-  def q193StreamSlidingKmv(s: SparkSession, d: String): DataFrame = {
-    val stream = eventsStream(s, d)
-      .select(timestamp_micros(expr("ts div 1000")).as("ts"), col("user_id"))
-    val sk = stream
-      .withWatermark("ts", "80 minutes")
-      .groupBy(window(col("ts"), "60 minutes", "10 minutes"))
-      .agg(graft.functions.KmvSketchAgg.sketch(
-        graft.operators.Corpus.hllKey(col("user_id").cast("string")),
-        graft.operators.Corpus.KmvK).as("sk"))
-      .select(col("window.start").as("win_start"), col("sk"))
-    val sink = drainToMemory(s, sk, "q193_stream_sliding_kmv", eventsBytes(d))
-      .select(unix_micros(col("win_start")).as("k"), col("sk"))
-    val est = graft.operators.Corpus.kmvReadoutLong(sink)
-      .withColumnRenamed("k", "win_start_us")
+  def q193StreamSlidingKmv(s: SparkSession, d: String): DataFrame =
     // exact rider: every event lands in its 6 slide-aligned windows
-    val ev = graft.Tables.events(s, d)
-      .select(expr("ts div 1000").as("ts_us"), col("user_id"))
-      .select(explode(sequence(lit(0L), lit(5L))).as("i"),
-        col("ts_us"), col("user_id"))
-      .select((expr("ts_us - ts_us % 600000000") - col("i") * lit(600000000L))
-        .as("win_start_us"), col("user_id"))
-    val exact = ev.groupBy(col("win_start_us"))
-      .agg(countDistinct(col("user_id")).as("n_distinct_exact"))
-    est.join(exact, "win_start_us")
-      .select(col("win_start_us"), col("n_distinct_exact"), col("n_kmv"),
-        col("kth_min"), col("est_distinct"))
-      .orderBy(col("win_start_us"))
-  }
-
-  /** Per-window bottom-k (hash, value) pair sample over a
-    * `(ts, event_id, value)` frame — batch/stream unified like its
-    * four sketch-in-stream siblings: the pair sample is algebraic
-    * (order-independent, mergeable bottom-k union), so the streaming
-    * incremental merge is exact. State per open window is 2k longs.
-    */
-  def samplePairsWindow(
-      events: DataFrame,
-      windowLen: String = "10 minutes",
-      watermark: String = "20 minutes"): DataFrame = {
-    events
-      .filter(col("value").isNotNull)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen))
-      .agg(
-        graft.functions.SamplePairsAgg.sketch(
-          graft.operators.Corpus.hllKey(col("event_id").cast("string")),
-          round(col("value") * lit(1e6)).cast("long"),
-          graft.operators.Corpus.SampleK).as("pairs"),
-        count(lit(1)).as("n_events"))
-      .select(col("window.start").as("win_start"), col("pairs"),
-        col("n_events"))
-  }
+    kmvMonitor(s, d, "q193_stream_sliding_kmv", sliding = true,
+      eventsByWindow(s, d, col("user_id"))
+        .select(explode(sequence(lit(0L), lit(5L))).as("i"),
+          col("win_start_us"), col("user_id"))
+        .select((col("win_start_us") - col("i") * lit(600000000L))
+          .as("win_start_us"), col("user_id")))
 
   /** q197 — the NINETEENTH streaming shape: a per-window VALUE-QUANTILE
     * monitor from the q195 bottom-k pair sample built in-stream,
@@ -1650,18 +1529,22 @@ object EventStream {
     * DuckDB oracle replays the whole stream query from the batch
     * table — the fifth sketch under full hash-match.
     */
-  def q197StreamQuantile(s: SparkSession, d: String): DataFrame = {
-    val stream = eventsStream(s, d)
-      .select(timestamp_micros(expr("ts div 1000")).as("ts"),
-        col("event_id"), col("value"))
-    val sk = samplePairsWindow(stream)
-    val sink = drainToMemory(s, sk, "q197_stream_quantile", eventsBytes(d))
-      .select(unix_micros(col("win_start")).as("k"), col("pairs"),
-        col("n_events"))
-    graft.operators.Corpus.quantileReadoutLong(sink)
-      .withColumnRenamed("k", "win_start_us")
+  def q197StreamQuantile(s: SparkSession, d: String): DataFrame =
+    quantileMonitor(s, d, "q197_stream_quantile", sliding = false)
+
+  /** A pair-sample value-quantile monitor over the non-null values
+    * (q197, q203): state per open window is 2k longs.
+    */
+  private def quantileMonitor(
+      s: SparkSession, d: String, name: String, sliding: Boolean): DataFrame =
+    sketchMonitor(s, d, name,
+      Seq(col("event_id"), round(col("value") * lit(1e6)).cast("long").as("v")),
+      Seq(SamplePairsAgg.sketch(
+          graft.operators.Corpus.hllKey(col("event_id").cast("string")), col("v")).as("pairs"),
+        count(lit(1)).as("n_events")), sliding, col("value").isNotNull)()
+      .select(col("win_start_us") +: col("n_events") +:
+        SamplePairsAgg.readout(col("pairs"), "fx"): _*)
       .orderBy(col("win_start_us"))
-  }
 
   /** q203 — the TWENTIETH streaming shape: the trailing-hour value
     * quantile updated every 10 minutes, i.e. [[q197StreamQuantile]]
@@ -1674,29 +1557,8 @@ object EventStream {
     * oracle family — the whole stream query replays from the batch
     * table with the 6-fold expansion explicit.
     */
-  def q203StreamSlidingQuantile(s: SparkSession, d: String): DataFrame = {
-    val stream = eventsStream(s, d)
-      .select(timestamp_micros(expr("ts div 1000")).as("ts"),
-        col("event_id"), col("value"))
-    val sk = stream
-      .filter(col("value").isNotNull)
-      .withWatermark("ts", "80 minutes")
-      .groupBy(window(col("ts"), "60 minutes", "10 minutes"))
-      .agg(
-        graft.functions.SamplePairsAgg.sketch(
-          graft.operators.Corpus.hllKey(col("event_id").cast("string")),
-          round(col("value") * lit(1e6)).cast("long"),
-          graft.operators.Corpus.SampleK).as("pairs"),
-        count(lit(1)).as("n_events"))
-      .select(col("window.start").as("win_start"), col("pairs"),
-        col("n_events"))
-    val sink = drainToMemory(s, sk, "q203_stream_sliding_quantile", eventsBytes(d))
-      .select(unix_micros(col("win_start")).as("k"), col("pairs"),
-        col("n_events"))
-    graft.operators.Corpus.quantileReadoutLong(sink)
-      .withColumnRenamed("k", "win_start_us")
-      .orderBy(col("win_start_us"))
-  }
+  def q203StreamSlidingQuantile(s: SparkSession, d: String): DataFrame =
+    quantileMonitor(s, d, "q203_stream_sliding_quantile", sliding = true)
 
   /** q211 — the TWENTY-FIRST streaming shape: the ExactSubstr census
     * (q208, Lee et al. '21) as an INGEST MONITOR. Documents arrive as
@@ -1808,7 +1670,8 @@ object EventStream {
   }
 
   /** q167 — the TWELFTH streaming shape: a per-window event-frequency
-    * monitor via the replayable CMS ([[cmsWindowCells]]) replayed over
+    * monitor via the replayable CMS (a 2048-cell grid per open window,
+    * [[windowSketch]]) replayed over
     * the bounded events table, probed in batch for the fixed probe
     * slate (user_id < 10, the q22/q23 probe convention) with exact
     * per-window counts riding along. The q161 program applied to the
@@ -1816,43 +1679,25 @@ object EventStream {
     * oracle replays the entire stream query from the batch table.
     */
   def q167StreamCms(s: SparkSession, d: String): DataFrame = {
-    val stream = eventsStream(s, d)
-      .select(timestamp_micros(expr("ts div 1000")).as("ts"), col("user_id"))
-    // the probe slate (user_id < 10, the q22/q23 convention) touches
-    // at most 10 x depth (j, bkt) pairs — all computable from the
+    // the probe slate (user_id < 10, the q22/q23 probe convention)
+    // touches at most 10 x depth grid slots — all computable from the
     // seeds alone, no data read. Filtering the emitted cells to that
     // slate BEFORE the sink cuts the materialized replay from
     // windows x 2048 dense-grid rows (8.8M at sf1 — where q167's
     // time actually went) to windows x <=40, while the state store
     // still holds the full grid: the monitor is unchanged, only the
     // bounded-replay sink stops materializing cells nothing probes.
-    val probePairs = (0L until 10L).flatMap { u =>
-      graft.operators.Corpus.cmsProbePairs(u).map { case (j, bkt) =>
-        j * graft.operators.Corpus.CmsReplayWidth + bkt
-      }
-    }.distinct.sorted
-    val w = graft.operators.Corpus.CmsReplayWidth
-    val cells = cmsWindowCells(stream)
-      .filter((col("j") * lit(w.toLong) + col("bkt"))
-        .isin(probePairs: _*))
-    val sink = drainToMemory(s, cells, "q167_stream_cms", eventsBytes(d))
-      .select(unix_micros(col("win_start")).as("win_start_us"),
-        col("j"), col("bkt"), col("c"))
-    val ev = graft.Tables.events(s, d)
-      .select((expr("ts div 1000") - expr("ts div 1000") % 600000000L)
-        .as("win_start_us"), col("user_id"))
-    val probes = ev.filter(col("user_id") < 10)
+    val probeSlots = (0L until 10L).flatMap(CmsSketchAgg.probeSlots).distinct.sorted
+    val sink = sketchMonitor(s, d, "q167_stream_cms", Seq(col("user_id")),
+      Seq(CmsSketchAgg.sketch(userKey).as("cells"))) {
+      CmsSketchAgg.cellRows(_, Seq("win_start"), col("cells"))
+        .filter((col("j") * lit(CmsSketchAgg.Width.toLong) + col("bkt")).isin(probeSlots: _*))
+    }
+    val probes = eventsByWindow(s, d, col("user_id"))
+      .filter(col("user_id") < 10)
       .groupBy(col("win_start_us"), col("user_id"))
       .agg(count(lit(1)).as("exact_cnt"))
-    val probed = probes
-      .crossJoin(broadcast(graft.operators.Corpus.cmsSeedsDf(s)))
-      .select(col("win_start_us"), col("user_id"), col("exact_cnt"), col("j"),
-        graft.operators.Corpus.cmsBucketOf(
-          graft.operators.Corpus.cmsKey(col("user_id").cast("string")),
-          col("a"), col("b"), col("c")).as("bkt"))
-    probed.join(sink, Seq("win_start_us", "j", "bkt"))
-      .groupBy(col("win_start_us"), col("user_id"), col("exact_cnt"))
-      .agg(min(col("c")).as("est_cnt"))
+    CmsSketchAgg.estimate(probes, userKey, sink, Seq("win_start_us"))
       .select(col("win_start_us"), col("user_id"), col("exact_cnt"),
         col("est_cnt"), (col("est_cnt") - col("exact_cnt")).as("over_err"))
       .orderBy(col("win_start_us"), col("user_id"))
@@ -2100,28 +1945,24 @@ object EventStream {
   }
 
   /** q161 — the ELEVENTH streaming shape: a windowed distinct-user
-    * cardinality monitor via the replayable HLL ([[hllWindowRegisters]])
-    * replayed over the bounded events table, registers folded to
-    * estimates in batch by the SAME read-out as q159
-    * (Corpus.hllReadout), exact per-window distinct counts riding
-    * along as report-only ground truth. Because the register state is
+    * cardinality monitor via the replayable HLL (one 4 KB register
+    * state per open window, [[windowSketch]]) replayed over the bounded
+    * events table, registers folded to estimates in batch by the SAME
+    * read-out as q159 (`HllRegistersAgg.readout`), exact per-window
+    * distinct counts riding along as report-only ground truth. Because the register state is
     * order-independent, the DuckDB oracle replays the whole thing from
     * the batch events table — the sketch-in-stream pattern lands under
     * a full hash-match, not a spec-only claim.
     */
   def q161StreamHll(s: SparkSession, d: String): DataFrame = {
-    val stream = eventsStream(s, d)
-      .select(timestamp_micros(expr("ts div 1000")).as("ts"), col("user_id"))
-    val regs = hllWindowRegisters(stream)
-    val sink = drainToMemory(s, regs, "q161_stream_hll", eventsBytes(d))
-      .select(unix_micros(col("win_start")).as("win_start_us"),
-        col("bkt"), col("r"))
-    val exact = graft.Tables.events(s, d)
-      .select((expr("ts div 1000") - expr("ts div 1000") % 600000000L)
-        .as("win_start_us"), col("user_id"))
+    val sink = sketchMonitor(s, d, "q161_stream_hll", Seq(col("user_id")),
+      Seq(HllRegistersAgg.registers(userKey).as("regs"))) {
+      HllRegistersAgg.cellRows(_, Seq("win_start"), col("regs"))
+    }
+    val exact = eventsByWindow(s, d, col("user_id"))
       .groupBy(col("win_start_us"))
       .agg(countDistinct(col("user_id")).as("n_distinct_exact"))
-    graft.operators.Corpus.hllReadout(sink, Seq("win_start_us"))
+    HllRegistersAgg.readout(sink, Seq("win_start_us"))
       .join(exact, "win_start_us")
       .select(col("win_start_us"), col("n_distinct_exact"), col("v_empty"),
         col("s_reg"), col("est_raw"), col("small_range"))

@@ -78,6 +78,37 @@ class SurfaceSpec extends AnyFunSuite {
       "rule sketch-kernel: typed Aggregators outside BottomK and CounterMerge")
   }
 
+  test("rule sketch-readout: sketch cells are exploded, ranked and " +
+    "estimated only beside their kernels") {
+    // a sketch's cell layout, estimator and quantile pick live in its
+    // kernel object (graft/functions); a posexplode, a rankOf( call,
+    // KMV domain arithmetic or a CMS `pos div`/`pos %` grid split
+    // anywhere else is a read-out copy, unless it is one of the
+    // non-sketch array explodes below
+    val kernels = Set("SketchAgg", "KmvAgg", "SampleAgg").map(n => s"graft/functions/$n.scala")
+    val raw = ("""posexplode\(|rankOf\(|[*/]\s*(?:[\w.]*\.)?(?:Kmv)?Domain\b|""" +
+      """\b(?:Kmv)?Domain\s*[*/]|\bpos\s+(?i:div)\b|\bpos\s*%|"pos"\)\s*[%/]""").r
+    val allowed = Seq(
+      // token windows and pattern counts are arrays, not sketches
+      ("graft/operators/Curation.scala", "posexplode(graft.functions.TokenWindows.of(col(\"text\"), n))"),
+      ("graft/operators/Curation.scala", "posexplode(graft.functions.TokenWindows.of(col(\"t\"), ExactSubstrL))"),
+      ("graft/operators/Curation.scala", "posexplode(col(\"c\")).as(Seq(\"pid\", \"n\"))"),
+      // a brand's top-k part list
+      ("graft/operators/Aggregates.scala", "posexplode(col(\"topk\"))"))
+    val hits = for {
+      (file, text) <- sources if !kernels(file)
+      line <- text.linesIterator.toSeq
+      code = line.split("//", 2)(0)
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      if raw.findFirstIn(code).isDefined
+    } yield file -> line.trim
+    val stray = hits.filterNot { case (f, l) => allowed.exists { case (af, frag) => af == f && l.contains(frag) } }
+    assert(stray.isEmpty,
+      s"rule sketch-readout: sketch read-outs outside their kernels:\n${stray.mkString("\n")}")
+    val unused = allowed.filterNot { case (af, frag) => hits.exists { case (f, l) => af == f && l.contains(frag) } }
+    assert(unused.isEmpty, s"rule sketch-readout: stale allow-list entries $unused")
+  }
+
   test("rule token-model: corpus text is split and case-folded only in " +
     "graft.Tokens") {
     // a split on " " or "\\s+", an oracle string_split or

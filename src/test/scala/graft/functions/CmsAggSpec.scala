@@ -14,12 +14,12 @@ class CmsAggSpec extends SparkSpec {
 
   private def agg = CmsSketchAgg(
     org.apache.spark.sql.graftshim.GraftColumns.exprOf(lit(0L)),
-    graft.operators.Corpus.cmsSeedsA,
-    graft.operators.Corpus.cmsSeedsB,
-    graft.operators.Corpus.cmsSeedsC,
-    graft.operators.Corpus.CmsReplayWidth,
-    graft.operators.Corpus.CmsReplayP,
-    graft.operators.Corpus.CmsReplayHalfBits)
+    CmsSketchAgg.seedsA,
+    CmsSketchAgg.seedsB,
+    CmsSketchAgg.seedsC,
+    CmsSketchAgg.Width,
+    CmsSketchAgg.P,
+    CmsSketchAgg.HalfBits)
 
   test("grid equals the relational seeds-crossJoin-groupBy formulation") {
     val rnd = new scala.util.Random(167)
@@ -29,11 +29,11 @@ class CmsAggSpec extends SparkSpec {
       .select(posexplode(col("cells")).as(Seq("pos", "c")))
       .filter(col("c") > 0)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val w = graft.operators.Corpus.CmsReplayWidth
+    val w = CmsSketchAgg.Width
     val want = df
-      .crossJoin(broadcast(graft.operators.Corpus.cmsSeedsDf(spark)))
+      .crossJoin(broadcast(CmsSketchAgg.seeds(spark)))
       .groupBy(col("j"),
-        graft.operators.Corpus.cmsBucketOf(col("x"),
+        CmsSketchAgg.bucket(col("x"),
           col("a"), col("b"), col("c")).as("bkt"))
       .agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getLong(0).toInt * w + r.getLong(1).toInt) -> r.getLong(2))

@@ -21,11 +21,8 @@ class HistAggSpec extends SparkSpec {
       .select(posexplode(col("cells")).as(Seq("pos", "c")))
       .filter(col("c") > 0)
       .collect().map(r => r.getInt(0).toLong -> r.getLong(1)).toMap
-    val b = lit(graft.operators.Relational.HistBins.toDouble)
     val want = df
-      .select(least(
-        floor((col("v") - lit(vmin)) * b / lit(vmax - vmin)).cast("long"),
-        lit(graft.operators.Relational.HistBins - 1L)).as("bin"))
+      .select(HistogramAgg.bin(col("v"), lit(vmin), lit(vmax)).as("bin"))
       .groupBy(col("bin")).agg(count(lit(1)).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want && got.nonEmpty)
@@ -34,7 +31,7 @@ class HistAggSpec extends SparkSpec {
   test("degenerate domain collapses to bin 0; merge adds element-wise") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     val agg = HistogramAgg(Literal(7.0), 7.0, 7.0,
-      graft.operators.Relational.HistBins.toInt)
+      HistogramAgg.Bins)
     val buf = agg.createAggregationBuffer()
     val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(0)
     agg.update(buf, row)

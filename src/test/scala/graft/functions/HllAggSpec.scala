@@ -19,8 +19,8 @@ class HllAggSpec extends SparkSpec {
       .filter(col("r") > 0)
       .collect().map(r => r.getInt(0).toLong -> r.getLong(1)).toMap
     val want = df
-      .select(graft.operators.Corpus.hllBucket(col("x")).as("bkt"),
-        graft.operators.Corpus.hllRho(col("x")).as("rho"))
+      .select(HllRegistersAgg.bucket(col("x")).as("bkt"),
+        HllRegistersAgg.rho(col("x")).as("rho"))
       .groupBy(col("bkt")).agg(max(col("rho")).as("r"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want && got.nonEmpty)
@@ -29,18 +29,18 @@ class HllAggSpec extends SparkSpec {
   test("all-zero suffix takes the max rho; merge is element-wise max") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     val agg = HllRegistersAgg(Literal(0L),
-      graft.operators.Corpus.HllBits, graft.operators.Corpus.HllMaxRho)
+      HllRegistersAgg.Bits, HllRegistersAgg.MaxRho)
     // key with bucket 3 and zero suffix -> rho = 52
     val buf = agg.createAggregationBuffer()
     val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-    val zeroSuffix = 3L << (60 - graft.operators.Corpus.HllBits)
+    val zeroSuffix = 3L << (60 - HllRegistersAgg.Bits)
     val one = HllRegistersAgg(Literal(zeroSuffix),
-      graft.operators.Corpus.HllBits, graft.operators.Corpus.HllMaxRho)
+      HllRegistersAgg.Bits, HllRegistersAgg.MaxRho)
     one.update(buf, row)
-    assert(buf.regs(3) == graft.operators.Corpus.HllMaxRho.toLong)
+    assert(buf.regs(3) == HllRegistersAgg.MaxRho.toLong)
     val other = agg.createAggregationBuffer()
     other.regs(3) = 10L; other.regs(7) = 4L
     val m = agg.merge(buf, other)
-    assert(m.regs(3) == graft.operators.Corpus.HllMaxRho.toLong && m.regs(7) == 4L)
+    assert(m.regs(3) == HllRegistersAgg.MaxRho.toLong && m.regs(7) == 4L)
   }
 }

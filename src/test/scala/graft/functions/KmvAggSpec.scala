@@ -102,11 +102,9 @@ class KmvAggSpec extends SparkSpec {
     val ev = graft.Tables.events(spark, d)
       .select(col("event_type"),
         graft.operators.Corpus.hllKey(col("user_id").cast("string")).as("x"))
-    val direct = graft.operators.Corpus.kmvReadout(
-        ev.groupBy(col("event_type"))
-          .agg(KmvSketchAgg.sketch(col("x"), graft.operators.Corpus.KmvK).as("sk"))
-          .withColumnRenamed("event_type", "source"))
-      .withColumnRenamed("source", "event_type")
+    val direct = ev.groupBy(col("event_type"))
+      .agg(KmvSketchAgg.sketch(col("x")).as("sk"))
+      .select(col("event_type") +: KmvSketchAgg.readout(col("sk")): _*)
       .join(ev.groupBy(col("event_type"))
         .agg(countDistinct(col("x")).as("n_distinct_exact")), "event_type")
       .select(col("event_type"), col("n_distinct_exact"), col("n_kmv"),

@@ -18,7 +18,6 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 class SketchKernelSpec extends SparkSpec {
   import spark.implicits._
 
-  private val C = graft.operators.Corpus
 
   /** One sketch: its aggregate over bound input slots, a random input
     * row (nulls included), a row count that fills the state, the
@@ -38,11 +37,11 @@ class SketchKernelSpec extends SparkSpec {
   private def small(r: scala.util.Random): Any = orNull(r, r.nextLong(40).abs)
 
   private val sketches = Seq(
-    Sketch(HllRegistersAgg(long(0), C.HllBits, C.HllMaxRho),
+    Sketch(HllRegistersAgg(long(0), HllRegistersAgg.Bits, HllRegistersAgg.MaxRho),
       r => InternalRow(key(r)), 5000, n => 8 * n,
       HllRegistersAgg.registers(col("x"))),
-    Sketch(CmsSketchAgg(long(0), C.cmsSeedsA, C.cmsSeedsB, C.cmsSeedsC,
-        C.CmsReplayWidth, C.CmsReplayP, C.CmsReplayHalfBits),
+    Sketch(CmsSketchAgg(long(0), CmsSketchAgg.seedsA, CmsSketchAgg.seedsB, CmsSketchAgg.seedsC,
+        CmsSketchAgg.Width, CmsSketchAgg.P, CmsSketchAgg.HalfBits),
       r => InternalRow(key(r)), 5000, n => 8 * n,
       CmsSketchAgg.sketch(col("x"))),
     Sketch(HistogramAgg(BoundReference(0, DoubleType, nullable = true), 0.0, 100.0, 64),

@@ -33,7 +33,7 @@ class HistQuantileSpec extends SparkSpec {
     rows.foreach { r =>
       val g = r.getString(0)
       val xs = byGroup(g)
-      val width = (xs.last - xs.head) / Relational.HistBins
+      val width = (xs.last - xs.head) / graft.functions.HistogramAgg.Bins
       Seq((50, 4), (95, 5), (99, 6)).foreach { case (pct, idx) =>
         val k = (xs.length * pct + 99) / 100 // ceil rank
         val exact = xs(k - 1)
@@ -79,7 +79,7 @@ class HistQuantileSpec extends SparkSpec {
       fixture.toDF("event_type", "v")
     }.filter(col("scope") === "GLOBAL").collect().head
     val xs = fixture.map(_._2).sorted
-    val width = (xs.last - xs.head) / Relational.HistBins
+    val width = (xs.last - xs.head) / graft.functions.HistogramAgg.Bins
     Seq((50, 2), (95, 3), (99, 4)).foreach { case (pct, idx) =>
       val k = (xs.length * pct + 99) / 100
       val exact = xs(k - 1)

@@ -32,7 +32,7 @@ class HllReplaySpec extends SparkSpec {
     // Standard error is 1.04/sqrt(512) ~ 4.6%; 3 sigma ~ 14%
     val (exact, vEmpty, sReg, _) = state(5000)
     assert(exact == 5000L)
-    val est = Corpus.hllCorrected(sReg, vEmpty)
+    val est = graft.functions.HllRegistersAgg.corrected(sReg, vEmpty)
     assert(math.abs(est - 5000.0) / 5000.0 < 0.14, s"est $est")
   }
 
@@ -41,8 +41,8 @@ class HllReplaySpec extends SparkSpec {
     // the corrected (linear-counting) estimate is within a few percent
     val (exact, vEmpty, sReg, raw) = state(100)
     assert(exact == 100L)
-    assert(raw <= 2.5 * Corpus.HllM && vEmpty > 0)
-    val est = Corpus.hllCorrected(sReg, vEmpty)
+    assert(raw <= 2.5 * graft.functions.HllRegistersAgg.M && vEmpty > 0)
+    val est = graft.functions.HllRegistersAgg.corrected(sReg, vEmpty)
     // linear counting's own sampling error at n=100, m=512 is ~3.2%;
     // the fixed-hash draw here lands at +5.1% (~1.6 sigma)
     assert(math.abs(est - 100.0) / 100.0 < 0.10, s"est $est")

@@ -53,6 +53,6 @@ class ReplayProfileSpec extends SparkSpec {
       .collect().head
     assert(got.getLong(1) == 100L && got.getLong(2) == 99L)
     // one distinct value -> exactly one register hit
-    assert(got.getLong(3) == Corpus.HllM.toLong - 1L)
+    assert(got.getLong(3) == graft.functions.HllRegistersAgg.M.toLong - 1L)
   }
 }

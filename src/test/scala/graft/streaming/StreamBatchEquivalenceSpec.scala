@@ -224,7 +224,7 @@ class StreamBatchEquivalenceSpec extends SparkSpec {
   test("q175 KMV replay equals an independent batch rank formulation") {
     // independent of the aggregator: distinct keys per window, rank,
     // take k, same BigInt estimate
-    val k = graft.operators.Corpus.KmvK
+    val k = graft.functions.KmvSketchAgg.K
     val keys = events
       .select((expr("ts div 1000") - expr("ts div 1000") % 600000000L)
         .as("win_start_us"),
@@ -239,7 +239,7 @@ class StreamBatchEquivalenceSpec extends SparkSpec {
     val batch = sk.collect().map { r =>
       val nk = r.getLong(1); val kth = r.getLong(2)
       val est = if (nk < k) nk
-        else (BigInt(k - 1) * graft.operators.Corpus.KmvDomain / kth).toLong
+        else (BigInt(k - 1) * graft.functions.KmvSketchAgg.Domain / kth).toLong
       (r.getLong(0), nk, kth, est)
     }.sortBy(_._1).toSeq
     val got = EventStream.q175StreamKmv(spark, dir)
@@ -258,7 +258,7 @@ class StreamBatchEquivalenceSpec extends SparkSpec {
       min(col("value").cast("double")), max(col("value").cast("double")))
       .collect()(0)
     val binWidth = (vs.getDouble(1) - vs.getDouble(0)) /
-      graft.operators.Relational.HistBins.toDouble
+      graft.functions.HistogramAgg.Bins.toDouble
     // the estimate is the RIGHT edge of the bin holding the exact
     // quantile: exact <= est and est - exact <= one bin width (plus
     // float slack) — the q160 value-domain guarantee, per window

@@ -2,7 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.functions.{CmsSketchAgg, HllRegistersAgg}
 import graft.mr.SparkSpec
+import graft.operators.Corpus
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 class StreamingSpec extends SparkSpec {
@@ -45,7 +49,10 @@ class StreamingSpec extends SparkSpec {
     // with repeats across batches — register max must merge exactly
     val rows = (0 until 90).map(i => (ts(i % 30), (i * 7 % 25).toLong))
     val input = MemoryStream[(Timestamp, Long)]
-    val regs = EventStream.hllWindowRegisters(input.toDF().toDF("ts", "user_id"))
+    def regsOf(df: DataFrame) = HllRegistersAgg.cellRows(EventStream.windowSketch(df,
+      Seq(HllRegistersAgg.registers(Corpus.hllKey(col("user_id").cast("string"))).as("regs"))),
+      Seq("win_start"), col("regs"))
+    val regs = regsOf(input.toDF().toDF("ts", "user_id"))
     val q = regs.writeStream.format("memory").queryName("hllregs")
       .outputMode("complete").start()
     try {
@@ -56,7 +63,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     val streamed = spark.table("hllregs")
       .as[(Timestamp, Long, Long)].collect().toSet
-    val batch = EventStream.hllWindowRegisters(rows.toDF("ts", "user_id"))
+    val batch = regsOf(rows.toDF("ts", "user_id"))
       .as[(Timestamp, Long, Long)].collect().toSet
     assert(streamed == batch && batch.nonEmpty)
   }
@@ -66,7 +73,10 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = (0 until 90).map(i => (ts(i % 30), (i * 11 % 17).toLong))
     val input = MemoryStream[(Timestamp, Long)]
-    val cells = EventStream.cmsWindowCells(input.toDF().toDF("ts", "user_id"))
+    def cellsOf(df: DataFrame) = CmsSketchAgg.cellRows(EventStream.windowSketch(df,
+      Seq(CmsSketchAgg.sketch(Corpus.hllKey(col("user_id").cast("string"))).as("cells"))),
+      Seq("win_start"), col("cells"))
+    val cells = cellsOf(input.toDF().toDF("ts", "user_id"))
     val q = cells.writeStream.format("memory").queryName("cmscells")
       .outputMode("complete").start()
     try {
@@ -77,7 +87,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     val streamed = spark.table("cmscells")
       .as[(Timestamp, Long, Long, Long)].collect().toSet
-    val batch = EventStream.cmsWindowCells(rows.toDF("ts", "user_id"))
+    val batch = cellsOf(rows.toDF("ts", "user_id"))
       .as[(Timestamp, Long, Long, Long)].collect().toSet
     assert(streamed == batch && batch.nonEmpty)
   }
@@ -632,8 +642,8 @@ class StreamingSpec extends SparkSpec {
     assert(rows.forall(_.getLong(0) % 600000000L == 0L))
     // sketch invariants: n_kmv <= k, and below k the estimate is exact
     rows.foreach { r =>
-      assert(r.getLong(2) <= graft.operators.Corpus.KmvK.toLong)
-      if (r.getLong(2) < graft.operators.Corpus.KmvK.toLong)
+      assert(r.getLong(2) <= graft.functions.KmvSketchAgg.K.toLong)
+      if (r.getLong(2) < graft.functions.KmvSketchAgg.K.toLong)
         assert(r.getLong(4) == r.getLong(1),
           s"below-k estimate not exact: $r")
     }
@@ -663,10 +673,10 @@ class StreamingSpec extends SparkSpec {
       .agg(graft.functions.SamplePairsAgg.sketch(
           graft.operators.Corpus.hllKey(col("event_id").cast("string")),
           round(col("value") * lit(1e6)).cast("long"),
-          graft.operators.Corpus.SampleK).as("pairs"),
+          graft.functions.SamplePairsAgg.K).as("pairs"),
         count(lit(1)).as("n_events"))
-    val batch = graft.operators.Corpus.quantileReadoutLong(sk)
-      .withColumnRenamed("k", "win_start_us")
+    val batch = sk.select(col("k").as("win_start_us") +: col("n_events") +:
+        graft.functions.SamplePairsAgg.readout(col("pairs"), "fx"): _*)
       .orderBy(col("win_start_us"))
       .collect().map(_.toString).toSeq
     assert(streamed.nonEmpty)
@@ -690,10 +700,10 @@ class StreamingSpec extends SparkSpec {
       .agg(graft.functions.SamplePairsAgg.sketch(
           graft.operators.Corpus.hllKey(col("event_id").cast("string")),
           round(col("value") * lit(1e6)).cast("long"),
-          graft.operators.Corpus.SampleK).as("pairs"),
+          graft.functions.SamplePairsAgg.K).as("pairs"),
         count(lit(1)).as("n_events"))
-    val batch = graft.operators.Corpus.quantileReadoutLong(sk)
-      .withColumnRenamed("k", "win_start_us")
+    val batch = sk.select(col("k").as("win_start_us") +: col("n_events") +:
+        graft.functions.SamplePairsAgg.readout(col("pairs"), "fx"): _*)
       .orderBy(col("win_start_us"))
       .collect().map(_.toString).toSeq
     assert(streamed.nonEmpty)

@@ -11,13 +11,15 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply the engine's config to any builder. */
-  def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
+  /** Apply the engine's config to any builder; `parallelism` is the
+    * number of cores the session's tasks run on. */
+  def configure(b: SparkSession.Builder, parallelism: Int): SparkSession.Builder = {
+    val pool = driverPoolThreads(parallelism).toString
     b
       // sized to the parallelism actually available — the 200 default
       // over-fragments small/medium stages; at cluster scale set to
       // 2-3x total executor cores and let AQE coalesce down
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", parallelism.toString)
       // AQE re-plans at runtime: coalesces post-shuffle partitions,
       // switches to broadcast when a side turns out small, splits skewed
       // join partitions — all three matter more, not less, at 100 TB
@@ -53,18 +55,60 @@ object GraftSession {
       // run — identical code (…ForCodegenStage2 vs …Stage5) then misses
       // the cache. Without the id, equal source is one cache key
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // the cache key also holds the task's class loader, and by default
+      // every session gets its own executor-side loader (its artifacts,
+      // isolated). Each streaming query runs in a fresh clone session,
+      // so every replay recompiled its micro-batch code (q211: 16
+      // classes per call) and pinned one more loader with its classes.
+      // graft adds no jars or artifacts to any session; with isolation
+      // off, all sessions share the executor's default loader
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // the driver runs stage submission on four thread pools (shuffle
+      // prep, query-stage results, broadcast builds, subqueries). Spark
+      // builds each with core size = max size (1024, 1024, 128, 16) and
+      // an unbounded queue, so EVERY submission starts a new thread
+      // until the cap, and an idle thread lives 60 s: one corpus/
+      // streaming pass left hundreds of idle threads, ~30 KB of heap each.
+      // More threads than [[driverPoolThreads]] add no throughput (a
+      // stage's tasks already fill the cores) and only wait in the
+      // queue. The floor stays above the parallelism because a pool
+      // thread can block on work queued in the same pool: a broadcast
+      // built inside another broadcast's build (streaming plans run
+      // without AQE), a shuffle whose prep waits on a subquery that
+      // submits its own stages. Static confs, set on the builder
+      .config("spark.sql.shuffleExchange.maxThreadThreshold", pool)
+      .config("spark.sql.resultQueryStage.maxThreadThreshold", pool)
+      .config("spark.sql.broadcastExchange.maxThreadThreshold", pool)
+      .config("spark.sql.subquery.maxThreadThreshold", pool)
+      // the status store (what the web UI and the REST API read) keeps
+      // every finished SQL execution's plan description and plan-graph
+      // metrics, up to 1000 of them (~4.5 MB per corpus pass), plus
+      // 1000 jobs, 1000 stages and 100k tasks per stage. graft runs no
+      // UI and reads none of it: perfbench and `Dev` count jobs through
+      // their own listeners. Keep a few for a debugger's look at the
+      // last query
+      .config("spark.sql.ui.retainedExecutions", "10")
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.ui.retainedTasks", "1000")
+  }
 
   /** Entries in Spark's compiled-class cache (see [[configure]]). */
   val CodegenCacheEntries: Int = 1024
 
-  /** Local harness session: `local[cpus]` with shuffle partitions = cpus.
-    * `extraConf` lets a harness layer extra settings on top of the
-    * standard config.
+  /** Threads in each of Spark's stage-submission pools (see
+    * [[configure]]): twice the parallelism, at least 8, at most the
+    * 128 Spark accepts for a broadcast pool. */
+  def driverPoolThreads(parallelism: Int): Int = (2 * parallelism).max(8).min(128)
+
+  /** Local harness session: `local[cpus]` with shuffle partitions = cpus
+    * and no web UI (the status-history caps in [[configure]] assume
+    * nobody browses it). `extraConf` lets a harness layer extra
+    * settings on top of the standard config.
     */
-  def local(cpus: Int, ui: Boolean = false,
-            extraConf: Map[String, String] = Map.empty): SparkSession = {
+  def local(cpus: Int, extraConf: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.ui.enabled", ui.toString)
+      .config("spark.ui.enabled", "false")
     val configured = configure(b, cpus)
     extraConf.foldLeft(configured) { case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()

@@ -3,9 +3,11 @@ package graft.operators
 import graft.{Scope, Tables, Tokens}
 import graft.streaming.UpsertSink
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import java.util.concurrent.ForkJoinPool
 
 /** Corpus-curation operators, batch 2: the pre-training data-prep steps
   * a 100 TB pipeline runs after filtering/dedup — benchmark
@@ -3057,8 +3059,11 @@ object Curation {
         // filters b < v anyway; the NEXT batch's repair read — and the
         // store handed to keepStore specs — happen after the join()
         // below. Job descriptions are thread-local, so each side keeps
-        // its own label.
-        val appendDone = java.util.concurrent.CompletableFuture.runAsync { () =>
+        // its own label; the append thread starts from this thread's
+        // local properties (job group, a caller's job tags) and active
+        // session, not from whatever the pool thread last carried.
+        val appendDone = SQLExecution.withThreadLocalCaptured(
+            s.asInstanceOf[classic.SparkSession], ForkJoinPool.commonPool()) {
           phase(s"q219 b$v: raw append")(
             planted.withColumn("b", lit(v.toLong))
               .write.partitionBy("b").mode("append").parquet(rawDir))

@@ -8,11 +8,12 @@ Each output is split into per-query sections at the
 own `[info]`/`[warn]`/`[success]` lines are dropped. What changes from
 run to run of the same code is masked before the sections are compared:
 expression ids (`#123`), the numeric suffixes Spark gives lambda
-variables (`lambda x_12`), exchange `plan_id`s, broadcast ids, JVM
-object identities (`$Lambda$12/0x…`, `@1a2b3c`), the random suffix of
-graft temp dirs, and the codegen and query-stage ids AQE hands out in
-the order stages finish. Prints every query whose plan still differs (with a short
-unified diff), queries present on one side only, and a summary line;
+variables (`lambda x_12`, and `lambda x_12L` for a BIGINT one), exchange
+`plan_id`s, broadcast ids, JVM object identities (`$Lambda$12/0x…`,
+`@1a2b3c`), the random suffix of graft temp dirs, and the codegen and
+query-stage ids AQE hands out in the order stages finish. Prints every
+query whose plan still differs (with a short unified diff), queries
+present on one side only, and a summary line;
 exits 1 if anything differs.
 """
 import difflib
@@ -23,7 +24,7 @@ HEADER = re.compile(r"^================ (\S+) ================$")
 SBT = re.compile(r"^\[(info|warn|success|error)\]")
 MASKS = [
     (re.compile(r"#\d+"), ""),
-    (re.compile(r"\b(lambda\s+\w+?)_\d+\b"), r"\1"),
+    (re.compile(r"\b(lambda\s+\w+?)_\d+L?\b"), r"\1"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"Broadcast\(\d+\)"), "Broadcast()"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda"),

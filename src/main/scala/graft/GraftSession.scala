@@ -82,7 +82,7 @@ object GraftSession {
       .config("spark.sql.subquery.maxThreadThreshold", pool)
       // the status store (what the web UI and the REST API read) keeps
       // every finished SQL execution's plan description and plan-graph
-      // metrics, up to 1000 of them (~4.5 MB per corpus pass), plus
+      // metrics, up to 1000 of them (MBs per corpus pass), plus
       // 1000 jobs, 1000 stages and 100k tasks per stage. graft runs no
       // UI and reads none of it: perfbench and `Dev` count jobs through
       // their own listeners. Keep a few for a debugger's look at the

@@ -11,15 +11,13 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply the engine's config to any builder; `parallelism` is the
-    * number of cores the session's tasks run on. */
-  def configure(b: SparkSession.Builder, parallelism: Int): SparkSession.Builder = {
-    val pool = driverPoolThreads(parallelism).toString
+  /** Apply the engine's config to any builder. */
+  def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b
       // sized to the parallelism actually available — the 200 default
       // over-fragments small/medium stages; at cluster scale set to
       // 2-3x total executor cores and let AQE coalesce down
-      .config("spark.sql.shuffle.partitions", parallelism.toString)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       // AQE re-plans at runtime: coalesces post-shuffle partitions,
       // switches to broadcast when a side turns out small, splits skewed
       // join partitions — all three matter more, not less, at 100 TB
@@ -69,17 +67,16 @@ object GraftSession {
       // an unbounded queue, so EVERY submission starts a new thread
       // until the cap, and an idle thread lives 60 s: one corpus/
       // streaming pass left hundreds of idle threads, ~30 KB of heap each.
-      // More threads than [[driverPoolThreads]] add no throughput (a
-      // stage's tasks already fill the cores) and only wait in the
-      // queue. The floor stays above the parallelism because a pool
-      // thread can block on work queued in the same pool: a broadcast
-      // built inside another broadcast's build (streaming plans run
-      // without AQE), a shuffle whose prep waits on a subquery that
-      // submits its own stages. Static confs, set on the builder
-      .config("spark.sql.shuffleExchange.maxThreadThreshold", pool)
-      .config("spark.sql.resultQueryStage.maxThreadThreshold", pool)
-      .config("spark.sql.broadcastExchange.maxThreadThreshold", pool)
-      .config("spark.sql.subquery.maxThreadThreshold", pool)
+      // [[DriverPoolThreads]] is a margin, not a throughput figure: a
+      // pool thread can block on work queued in the same pool (a
+      // broadcast built inside another broadcast's build, as streaming
+      // plans run without AQE; a shuffle whose prep waits on a subquery
+      // that submits its own stages), so a pool of one or two could
+      // deadlock. Static confs, set on the builder
+      .config("spark.sql.shuffleExchange.maxThreadThreshold", DriverPoolThreads.toString)
+      .config("spark.sql.resultQueryStage.maxThreadThreshold", DriverPoolThreads.toString)
+      .config("spark.sql.broadcastExchange.maxThreadThreshold", DriverPoolThreads.toString)
+      .config("spark.sql.subquery.maxThreadThreshold", DriverPoolThreads.toString)
       // the status store (what the web UI and the REST API read) keeps
       // every finished SQL execution's plan description and plan-graph
       // metrics, up to 1000 of them (MBs per corpus pass), plus
@@ -91,15 +88,12 @@ object GraftSession {
       .config("spark.ui.retainedJobs", "50")
       .config("spark.ui.retainedStages", "50")
       .config("spark.ui.retainedTasks", "1000")
-  }
 
   /** Entries in Spark's compiled-class cache (see [[configure]]). */
   val CodegenCacheEntries: Int = 1024
 
-  /** Threads in each of Spark's stage-submission pools (see
-    * [[configure]]): twice the parallelism, at least 8, at most the
-    * 128 Spark accepts for a broadcast pool. */
-  def driverPoolThreads(parallelism: Int): Int = (2 * parallelism).max(8).min(128)
+  /** Threads in each of Spark's stage-submission pools (see [[configure]]). */
+  val DriverPoolThreads: Int = 8
 
   /** Local harness session: `local[cpus]` with shuffle partitions = cpus
     * and no web UI (the status-history caps in [[configure]] assume
